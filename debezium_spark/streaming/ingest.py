@@ -2,10 +2,12 @@
 
 Re-expresses Debezium's delivery loop in Spark terms: a file-source
 change stream (stand-in for the Kafka topic), watermarked windowed
-aggregation for event-time analytics, and a foreachBatch latest-state
-merge — the exactly-once upsert sink pattern (each microbatch is
-merged into a versioned state snapshot keyed by primary key, max-seq
-wins, so replays and out-of-order batches converge to the same state).
+aggregation for event-time analytics, and one latest-state sink — the
+exactly-once manifest-commit sink below. Each microbatch is merged
+max-seq-wins per key into a hash-bucketed state and made visible by
+an atomic manifest commit, so replays, crashes between write and
+commit, out-of-order batches and compaction all converge to the same
+state.
 
 The driver-gated wrappers replay the stream to completion with
 `processAllAvailable()` so results are deterministic and comparable to
@@ -13,23 +15,29 @@ the batch oracles — streaming latest-state must equal batch
 latest-state (tested), which is the Debezium at-least-once + idempotent
 -consumer contract.
 
-At scale: the merge shuffles only on `key` (one shuffle per batch);
-state snapshots are partitioned parquet; maxFilesPerTrigger bounds
-per-batch volume. applyInPandasWithState carries per-key running
-aggregates where event-time windows can't express the semantics.
+At scale: a batch reads and rewrites only the state buckets its keys
+hash to; maxFilesPerTrigger bounds per-batch volume.
+applyInPandasWithState carries per-key running aggregates where
+event-time windows can't express the semantics.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 import tempfile
 import uuid
+from functools import reduce
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
+from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES
 from debezium_spark.sources.tables import load_table
 
 
@@ -44,16 +52,19 @@ def stage_stream_dir(spark: SparkSession, sf_dir: str, table: str,
     return out
 
 
-def read_event_stream(spark: SparkSession, sf_dir: str, workdir: str) -> DataFrame:
-    """File-source stream over the events table (stand-in for Kafka)."""
-    topic = stage_stream_dir(spark, sf_dir, "events", workdir)
-    schema = spark.read.parquet(topic).schema
+def _file_stream(spark: SparkSession, topic_dir: str) -> DataFrame:
+    """File-source stream over a staged 'topic', one file per trigger."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(spark.read.parquet(topic_dir).schema)
         .option("maxFilesPerTrigger", 1)
         .format("parquet")
-        .load(topic)
+        .load(topic_dir)
     )
+
+
+def read_event_stream(spark: SparkSession, sf_dir: str, workdir: str) -> DataFrame:
+    """File-source stream over the events table (stand-in for Kafka)."""
+    return _file_stream(spark, stage_stream_dir(spark, sf_dir, "events", workdir))
 
 
 def stream_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,190 +95,6 @@ def stream_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                    event_type, n, total_value FROM {name}"""
     ).orderBy("window_start", "event_type")
     return spark.createDataFrame(out.collect(), out.schema)
-
-
-def streaming_latest_state(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    state_root: str,
-    key: str = "key",
-    seq: str = "seq",
-) -> str:
-    """foreachBatch merge: upsert each microbatch into a versioned
-    parquet state snapshot (max-seq-wins per key, deletes drop out).
-    Returns the final snapshot path. Idempotent under batch replay."""
-    current = {"path": None, "epoch": -1}
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        snap = batch
-        if current["path"] is not None:
-            prev = batch.sparkSession.read.parquet(current["path"])
-            snap = prev.unionByName(batch)
-        w = Window.partitionBy(key).orderBy(F.desc(seq))
-        latest = (
-            snap.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        out = os.path.join(state_root, f"v{epoch_id}")
-        # keep tombstoned keys in the snapshot (op='d') so later
-        # replayed batches with lower seq cannot resurrect them;
-        # consumers filter op != 'd'.
-        latest.write.mode("overwrite").parquet(out)
-        current["path"] = out
-        current["epoch"] = epoch_id
-
-    q = stream_df.writeStream.foreachBatch(merge).outputMode("update").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return current["path"]
-
-
-def streaming_latest_state_bucketed(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    state_root: str,
-    n_buckets: int = 16,
-    key: str = "key",
-    seq: str = "seq",
-) -> str:
-    """Incremental foreachBatch merge over a hash-bucketed snapshot
-    layout: state lives in `state_root/bucket=<b>/` partitions, and a
-    microbatch touching k buckets reads (partition-pruned) and
-    rewrites ONLY those k of N bucket directories via dynamic
-    partition overwrite — O(state touched) I/O per batch instead of
-    the O(total state) full-snapshot rewrite of
-    `streaming_latest_state`. At 100 TB state this is the difference
-    between a per-batch merge bounded by the batch's key locality and
-    rewriting the world every trigger.
-
-    Max-seq-wins per key, tombstones (op='d') retained in state so
-    lower-seq replays cannot resurrect deleted keys — consumers
-    filter op != 'd'. In-place partition overwrite is per-partition
-    staged by Spark's FileOutputCommitter; a production deployment
-    would layer a transactional table format (Delta/Iceberg) over the
-    same bucketed layout for multi-partition atomicity."""
-    stats = {"batches": []}
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        sess = batch.sparkSession
-        b = batch.withColumn(
-            "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-        )
-        touched = [r["bucket"] for r in b.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        snap = b
-        if os.path.exists(state_root) and any(
-            d.startswith("bucket=") for d in os.listdir(state_root)
-        ):
-            prev = (
-                sess.read.parquet(state_root)
-                .filter(F.col("bucket").isin(touched))  # partition pruning
-            )
-            snap = prev.unionByName(b)
-        w = Window.partitionBy(key).orderBy(F.desc(seq))
-        latest = (
-            snap.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        prev_mode = sess.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # dynamic mode: only partitions present in `latest` (the
-            # touched buckets) are replaced; the other N-k are untouched
-            latest.write.mode("overwrite").partitionBy("bucket").parquet(
-                state_root
-            )
-        finally:
-            sess.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-        stats["batches"].append({"epoch": epoch_id, "touched": sorted(touched)})
-
-    q = stream_df.writeStream.foreachBatch(merge).outputMode("update").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    streaming_latest_state_bucketed.last_stats = stats  # test introspection
-    return state_root
-
-
-def stream_cdc_bucketed_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same end-to-end contract as stream_cdc_latest_state but through
-    the bucket-incremental sink — must converge to the identical batch
-    latest-state oracle."""
-    workdir = tempfile.mkdtemp(prefix="cdc_bstream_")
-    topic_dir = os.path.join(workdir, "topic")
-    state_root = os.path.join(workdir, "state")
-    try:
-        cdc = synthesize_cdc_flat(spark, sf_dir)
-        cdc.repartition(4, "key").write.mode("overwrite").parquet(topic_dir)
-        schema = spark.read.parquet(topic_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(topic_dir)
-        )
-        streaming_latest_state_bucketed(spark, stream, state_root)
-        final = (
-            spark.read.parquet(state_root)
-            .filter(F.col("op") != "d")
-            .select(
-                "key",
-                F.col("after_totalprice").alias("o_totalprice"),
-                "o_custkey",
-                "o_orderstatus",
-                "o_orderpriority",
-                "seq",
-            )
-        )
-        return spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def stream_cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end: synthesize change stream → write as a multi-file
-    'topic' → file-source readStream (one file per trigger, arbitrary
-    order) → foreachBatch merge → final materialized state. Must equal
-    the batch cdc_latest_state oracle exactly."""
-    workdir = tempfile.mkdtemp(prefix="cdc_stream_")
-    topic_dir = os.path.join(workdir, "topic")
-    state_root = os.path.join(workdir, "state")
-    try:
-        cdc = synthesize_cdc_flat(spark, sf_dir)
-        cdc.repartition(4, "key").write.mode("overwrite").parquet(topic_dir)
-        schema = spark.read.parquet(topic_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(topic_dir)
-        )
-        final_path = streaming_latest_state(spark, stream, state_root)
-        final = (
-            spark.read.parquet(final_path)
-            .filter(F.col("op") != "d")
-            .select(
-                "key",
-                F.col("after_totalprice").alias("o_totalprice"),
-                "o_custkey",
-                "o_orderstatus",
-                "o_orderpriority",
-                "seq",
-            )
-        )
-        return spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str,
@@ -314,20 +141,10 @@ ORACLES: dict[str, str] = {
         FROM events GROUP BY window_start, event_type
         ORDER BY window_start, event_type
     """,
-    # identical to the batch latest-state oracle — streaming replay
-    # must converge to the same materialization
-    "stream_cdc_latest_state": None,  # filled below to share the SQL
 }
-
-from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES  # noqa: E402
-
-ORACLES["stream_cdc_latest_state"] = _MAT_ORACLES["cdc_latest_state"]
-ORACLES["stream_cdc_bucketed_state"] = _MAT_ORACLES["cdc_latest_state"]
 
 QUERIES = {
     "stream_windowed_counts": stream_windowed_counts_q,
-    "stream_cdc_latest_state": stream_cdc_latest_state_q,
-    "stream_cdc_bucketed_state": stream_cdc_bucketed_state_q,
 }
 
 
@@ -547,13 +364,7 @@ def stream_dedup_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
         docs.repartition(4).write.mode("overwrite").parquet(topic)
         docs.repartition(3).write.mode("append").parquet(topic)
-        schema = spark.read.parquet(topic).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(topic)
-        )
+        stream = _file_stream(spark, topic)
         norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
         deduped = stream.select(
             F.md5(norm).alias("content_md5")
@@ -705,33 +516,30 @@ QUERIES_LATE["stream_sliding_counts"] = stream_sliding_counts_q
 
 
 # --------------------------------------------------------------------------
-# Exactly-once manifest-commit state sink (round 5).
+# Exactly-once manifest-commit latest-state sink.
 #
-# The bucket-incremental sink above concedes that multi-partition
-# atomicity needs a transactional table format; this sink supplies the
-# minimal one — the same commit idea Delta Lake's _delta_log and
-# Iceberg's metadata pointer use, reduced to a per-epoch JSON manifest
-# committed by atomic rename:
+# State is hash-bucketed by key and made atomic across buckets by the
+# commit idea of Delta Lake's _delta_log and Iceberg's metadata
+# pointer, reduced to a JSON manifest committed by atomic rename:
 #
-#   state_root/data/e<epoch>/         immutable per-epoch parquet
-#   state_root/_manifests/manifest-<epoch>.json
-#       {"epoch": N, "buckets": {"<bucket>": "e<dir>", ...}}
+#   state_root/data/e<batchId>/         immutable per-batch parquet
+#   state_root/_manifests/manifest-<batchId>.json
+#       {"epoch": N, "schema": {...}, "buckets": {"<bucket>": "<dir>"}}
 #
-# A batch writes its merged touched-bucket state to a NEW epoch dir,
-# then commits a manifest mapping every bucket to its current dir
-# (touched buckets point at the new dir, untouched carry forward).
-# Readers resolve the latest committed manifest and read exactly the
-# referenced (dir, bucket) pairs — a crash between data write and
-# manifest rename leaves the torn epoch invisible. On restart,
-# Structured Streaming replays the same epoch id: if its manifest
-# already exists the batch is skipped wholesale (exactly-once), else
-# the epoch dir is rewritten in place and committed. Old epoch dirs
-# referenced by no manifest entry are garbage, collected by a
-# compaction pass (not needed for correctness).
+# A manifest is named after the last batch id it applied. A batch
+# merges the buckets it touches (max-seq-wins per key; tombstones
+# op='d' stay in state so a lower-seq replay cannot resurrect a delete,
+# and consumers filter them) into a new dir, then commits a manifest
+# mapping every bucket to its current dir — touched buckets point at
+# the new dir, untouched ones carry forward. Readers resolve the latest
+# manifest and read exactly the (dir, bucket) pairs it references, so a
+# crash between data write and rename leaves the torn batch invisible.
+# On restart Structured Streaming replays the same batch id: an id at
+# or below the latest manifest's was applied and is skipped wholesale,
+# a higher one is rewritten in place and committed. Compaction rewrites
+# the state into one dir and replaces the latest manifest in place, so
+# it never claims a batch id the stream has yet to run.
 # --------------------------------------------------------------------------
-
-import json
-import re as _re
 
 
 def _latest_manifest(state_root: str) -> tuple[str | None, int]:
@@ -739,11 +547,30 @@ def _latest_manifest(state_root: str) -> tuple[str | None, int]:
     best, best_e = None, -1
     if os.path.isdir(mdir):
         for f in os.listdir(mdir):
-            m = _re.fullmatch(r"manifest-(\d+)\.json", f)
+            m = re.fullmatch(r"manifest-(\d+)\.json", f)
             if m and int(m.group(1)) > best_e:
                 best_e = int(m.group(1))
                 best = os.path.join(mdir, f)
     return best, best_e
+
+
+def _load_latest_manifest(state_root: str) -> dict:
+    mpath, _ = _latest_manifest(state_root)
+    if mpath is None:
+        raise FileNotFoundError(f"no committed manifest under {state_root}")
+    with open(mpath) as fh:
+        return json.load(fh)
+
+
+def _commit_manifest(state_root: str, manifest: dict) -> None:
+    """Atomically (re)place manifest-<epoch>.json."""
+    mpath = os.path.join(
+        state_root, "_manifests", f"manifest-{manifest['epoch']}.json"
+    )
+    tmp = mpath + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh)
+    os.replace(tmp, mpath)  # the atomic commit point
 
 
 def _manifest_merge_batch(
@@ -761,12 +588,10 @@ def _manifest_merge_batch(
     write but BEFORE the manifest rename — the crash-injection hook
     the kill/restart test uses to prove torn epochs stay invisible."""
     sess = batch.sparkSession
-    mdir = os.path.join(state_root, "_manifests")
-    os.makedirs(mdir, exist_ok=True)
-    mpath = os.path.join(mdir, f"manifest-{epoch_id}.json")
-    if os.path.exists(mpath):
-        return  # epoch already committed — replay skips wholesale
-    prev_manifest, _ = _latest_manifest(state_root)
+    os.makedirs(os.path.join(state_root, "_manifests"), exist_ok=True)
+    prev_manifest, last_epoch = _latest_manifest(state_root)
+    if epoch_id <= last_epoch:
+        return  # batch already applied — replay skips wholesale
     pointers: dict[str, str] = {}
     if prev_manifest is not None:
         with open(prev_manifest) as fh:
@@ -801,123 +626,24 @@ def _manifest_merge_batch(
             pointers[str(t)] = epoch_dir
     if crash_before_commit and epoch_id in crash_before_commit:
         raise RuntimeError(f"injected crash before commit of epoch {epoch_id}")
-    tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump({"epoch": epoch_id, "buckets": pointers}, fh)
-    os.rename(tmp, mpath)  # the atomic commit point
+    _commit_manifest(
+        state_root,
+        {"epoch": epoch_id, "schema": b.schema.jsonValue(), "buckets": pointers},
+    )
 
 
-def streaming_latest_state_manifest(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    state_root: str,
-    n_buckets: int = 16,
-    key: str = "key",
-    seq: str = "seq",
-    crash_before_commit: set[int] | None = None,
-) -> str:
-    """foreachBatch merge into the manifest-committed bucketed layout
-    (un-checkpointed convenience wrapper; use _run_manifest_stream for
-    restart semantics)."""
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        _manifest_merge_batch(
-            batch, epoch_id, state_root, n_buckets, key, seq,
-            crash_before_commit,
-        )
-
-    q = stream_df.writeStream.foreachBatch(merge).outputMode("update").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return state_root
-
-
-def read_manifest_state(spark: SparkSession, state_root: str) -> DataFrame:
-    """Resolve the latest committed manifest and read exactly the
-    (epoch dir, bucket) pairs it references — stale copies of a
-    bucket in older epoch dirs are excluded by construction."""
-    mpath, _ = _latest_manifest(state_root)
-    if mpath is None:
-        raise FileNotFoundError(f"no committed manifest under {state_root}")
-    with open(mpath) as fh:
-        man = json.load(fh)
-    by_dir: dict[str, list[int]] = {}
-    for bk, d in man["buckets"].items():
-        by_dir.setdefault(d, []).append(int(bk))
-    out = None
-    for d, bs in sorted(by_dir.items()):
-        part = spark.read.parquet(os.path.join(state_root, "data", d)).filter(
-            F.col("bucket").isin(bs)
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def manifest_commit_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end exactly-once contract under the external gate: the
-    change stream through the manifest-commit sink — including an
-    injected crash between data write and manifest commit on one
-    mid-stream epoch, and a checkpointed restart — must still
-    converge to the batch latest-state oracle with no loss and no
-    duplication."""
-    workdir = tempfile.mkdtemp(prefix="cdc_manifest_")
-    topic_dir = os.path.join(workdir, "topic")
-    state_root = os.path.join(workdir, "state")
-    ckpt = os.path.join(workdir, "ckpt")
-    try:
-        cdc = synthesize_cdc_flat(spark, sf_dir)
-        cdc.repartition(4, "key").write.mode("overwrite").parquet(topic_dir)
-        schema = spark.read.parquet(topic_dir).schema
-
-        def stream():
-            return (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .format("parquet")
-                .load(topic_dir)
-            )
-
-        # first run crashes before committing epoch 2; the restart
-        # (same checkpoint) replays it and runs to completion
-        try:
-            _run_manifest_stream(
-                spark, stream(), state_root, ckpt, crash_before_commit={2}
-            )
-        except Exception:
-            pass  # the injected crash surfaces as a stream error
-        _run_manifest_stream(spark, stream(), state_root, ckpt, None)
-        final = (
-            read_manifest_state(spark, state_root)
-            .filter(F.col("op") != "d")
-            .select(
-                "key",
-                F.col("after_totalprice").alias("o_totalprice"),
-                "o_custkey",
-                "o_orderstatus",
-                "o_orderpriority",
-                "seq",
-            )
-        )
-        return spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def _run_manifest_stream(
-    spark: SparkSession,
+def run_manifest_stream(
     stream_df: DataFrame,
     state_root: str,
     checkpoint: str,
-    crash_before_commit: set[int] | None,
+    crash_before_commit: set[int] | None = None,
     n_buckets: int = 16,
     key: str = "key",
     seq: str = "seq",
 ) -> None:
-    """Checkpointed variant of streaming_latest_state_manifest (the
-    query-facing path needs restart-with-same-epoch semantics, which
-    requires a persistent checkpoint location)."""
+    """Run `stream_df` to completion through the manifest-commit sink.
+    The checkpoint gives a restart the same batch ids, which is what
+    makes replay detection exact."""
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
         _manifest_merge_batch(
@@ -937,36 +663,124 @@ def _run_manifest_stream(
         q.stop()
 
 
-ORACLES_LATE["manifest_commit_state"] = _MAT_ORACLES["cdc_latest_state"]
-QUERIES_LATE["manifest_commit_state"] = manifest_commit_state_q
+def read_manifest_state(spark: SparkSession, state_root: str) -> DataFrame:
+    """Resolve the latest committed manifest and read exactly the
+    (epoch dir, bucket) pairs it references — stale copies of a
+    bucket in older epoch dirs are excluded by construction. A
+    manifest that references no bucket (only empty batches so far)
+    reads as zero rows with the state columns."""
+    man = _load_latest_manifest(state_root)
+    by_dir: dict[str, list[int]] = {}
+    for bk, d in man["buckets"].items():
+        by_dir.setdefault(d, []).append(int(bk))
+    parts = [
+        spark.read.parquet(os.path.join(state_root, "data", d)).filter(
+            F.col("bucket").isin(bs)
+        )
+        for d, bs in sorted(by_dir.items())
+    ]
+    if not parts:
+        return spark.createDataFrame([], StructType.fromJson(man["schema"]))
+    return reduce(DataFrame.unionByName, parts)
 
 
-def compact_manifest_state(
-    spark: SparkSession, state_root: str, n_buckets: int = 16
-) -> str:
+def compact_manifest_state(spark: SparkSession, state_root: str) -> str:
     """Compaction for the manifest layout: rewrite the current state
-    into one consolidated epoch dir, commit a manifest pointing every
-    bucket at it, and delete data dirs no longer referenced. Bounds
-    the O(epochs) dir growth of a long-running stream; correctness
-    never depends on it (readers only follow manifest pointers, and
-    the commit is the same atomic rename the sink uses)."""
-    mpath, epoch = _latest_manifest(state_root)
-    if mpath is None:
-        raise FileNotFoundError(f"no committed manifest under {state_root}")
-    state = read_manifest_state(spark, state_root)
-    compact_dir = f"compact-{epoch}"
-    state.write.mode("overwrite").parquet(
+    into one consolidated dir, atomically replace the latest manifest
+    with one pointing each of its buckets at that dir, and delete the
+    data dirs no longer referenced. The manifest keeps its batch id, so
+    a stream resuming afterwards applies its next batch normally.
+    Bounds the O(epochs) dir growth of a long-running stream;
+    correctness never depends on it. Assumes no concurrent reader: one
+    still scanning the dirs of the replaced manifest loses them."""
+    man = _load_latest_manifest(state_root)
+    compact_dir = f"compact-{man['epoch']}-{uuid.uuid4().hex[:8]}"
+    read_manifest_state(spark, state_root).write.mode("overwrite").parquet(
         os.path.join(state_root, "data", compact_dir)
     )
-    pointers = {str(b): compact_dir for b in range(n_buckets)}
-    mdir = os.path.join(state_root, "_manifests")
-    new_mpath = os.path.join(mdir, f"manifest-{epoch + 1}.json")
-    tmp = new_mpath + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump({"epoch": epoch + 1, "buckets": pointers}, fh)
-    os.rename(tmp, new_mpath)
+    _commit_manifest(
+        state_root,
+        {**man, "buckets": {b: compact_dir for b in man["buckets"]}},
+    )
     data_dir = os.path.join(state_root, "data")
     for d in os.listdir(data_dir):
         if d != compact_dir:
             shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
     return state_root
+
+
+def _cdc_state_columns(state: DataFrame) -> DataFrame:
+    """Live sink rows in the shape of the cdc_latest_state oracle."""
+    return state.filter(F.col("op") != "d").select(
+        "key",
+        F.col("after_totalprice").alias("o_totalprice"),
+        "o_custkey",
+        "o_orderstatus",
+        "o_orderpriority",
+        "seq",
+    )
+
+
+def _stream_cdc_state(
+    spark: SparkSession, sf_dir: str, faults: bool
+) -> DataFrame:
+    """Synthesize the change stream, stage it as a multi-file 'topic'
+    and replay it through the manifest-commit sink; the final state
+    must equal the batch cdc_latest_state oracle. With `faults`, half
+    the topic (even seqs) lands first and the first run crashes before
+    committing batch 2; the restart replays it, the state is compacted,
+    the other half lands and the stream resumes on the same
+    checkpoint."""
+    workdir = tempfile.mkdtemp(prefix="cdc_stream_")
+    topic_dir = os.path.join(workdir, "topic")
+    state_root = os.path.join(workdir, "state")
+    ckpt = os.path.join(workdir, "ckpt")
+    try:
+        cdc = synthesize_cdc_flat(spark, sf_dir)
+        if not faults:
+            cdc.repartition(4, "key").write.parquet(topic_dir)
+            run_manifest_stream(_file_stream(spark, topic_dir), state_root, ckpt)
+        else:
+            even = F.col("seq") % 2 == 0
+            cdc.filter(even).repartition(4, "key").write.parquet(topic_dir)
+            try:
+                run_manifest_stream(
+                    _file_stream(spark, topic_dir), state_root, ckpt,
+                    crash_before_commit={2},
+                )
+            except StreamingQueryException:
+                pass  # the injected crash
+            run_manifest_stream(_file_stream(spark, topic_dir), state_root, ckpt)
+            compact_manifest_state(spark, state_root)
+            cdc.filter(~even).repartition(2, "key").write.mode("append").parquet(
+                topic_dir
+            )
+            run_manifest_stream(_file_stream(spark, topic_dir), state_root, ckpt)
+        final = _cdc_state_columns(read_manifest_state(spark, state_root))
+        return spark.createDataFrame(final.collect(), final.schema)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def stream_cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end: change stream → file-source readStream (one file per
+    trigger) → manifest-commit sink → final materialized state. Must
+    equal the batch cdc_latest_state oracle exactly."""
+    return _stream_cdc_state(spark, sf_dir, faults=False)
+
+
+def manifest_commit_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end exactly-once contract under the external gate: the
+    same stream with an injected crash between data write and manifest
+    commit, a checkpointed restart, a mid-stream compaction and a
+    resume on newly landed files must still converge to the batch
+    latest-state oracle with no loss and no duplication."""
+    return _stream_cdc_state(spark, sf_dir, faults=True)
+
+
+# both streaming latest-state entries share the batch latest-state
+# oracle — streaming replay must converge to the same materialization
+ORACLES["stream_cdc_latest_state"] = _MAT_ORACLES["cdc_latest_state"]
+QUERIES["stream_cdc_latest_state"] = stream_cdc_latest_state_q
+ORACLES_LATE["manifest_commit_state"] = _MAT_ORACLES["cdc_latest_state"]
+QUERIES_LATE["manifest_commit_state"] = manifest_commit_state_q

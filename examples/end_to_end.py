@@ -96,9 +96,11 @@ def main() -> None:
 
     # 7. exactly-once manifest-commit sink: crash between data write
     # and manifest rename, restart from the same checkpoint, converge
+    from pyspark.errors import StreamingQueryException
+
     from debezium_spark.streaming.ingest import (
-        _run_manifest_stream,
         read_manifest_state,
+        run_manifest_stream,
     )
 
     with tempfile.TemporaryDirectory() as workdir:
@@ -117,12 +119,10 @@ def main() -> None:
             )
 
         try:
-            _run_manifest_stream(
-                spark, stream(), state_root, ckpt, crash_before_commit={2}
-            )
-        except Exception:
+            run_manifest_stream(stream(), state_root, ckpt, crash_before_commit={2})
+        except StreamingQueryException:
             pass  # the injected crash
-        _run_manifest_stream(spark, stream(), state_root, ckpt, None)
+        run_manifest_stream(stream(), state_root, ckpt)
         state = read_manifest_state(spark, state_root).filter(F.col("op") != "d")
         print(f"manifest sink after crash+restart: {state.count()} keys "
               f"(= batch latest-state: {state.count() == current.count()})")

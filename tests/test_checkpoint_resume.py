@@ -7,6 +7,9 @@ import tempfile
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+from pyspark.errors import StreamingQueryException
 
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
 from debezium_spark.cdc.materialize import latest_state
@@ -65,8 +68,8 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
     from debezium_spark.cdc.materialize import latest_state
     from debezium_spark.streaming.ingest import (
         _latest_manifest,
-        _run_manifest_stream,
         read_manifest_state,
+        run_manifest_stream,
     )
 
     cdc = synthesize_cdc_flat(spark, sf_dir)
@@ -87,8 +90,8 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
 
         # run 1: crash before committing epoch 2
         with pytest.raises(Exception, match="injected crash|FOREACH_BATCH"):
-            _run_manifest_stream(
-                spark, stream(), state_root, ckpt, crash_before_commit={2}
+            run_manifest_stream(
+                stream(), state_root, ckpt, crash_before_commit={2}
             )
         _, committed_epoch = _latest_manifest(state_root)
         assert committed_epoch == 1  # epoch 2's data write is torn
@@ -103,7 +106,7 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
 
         # run 2: same checkpoint — epoch 2 replays, commits, stream
         # finishes the remaining epochs
-        _run_manifest_stream(spark, stream(), state_root, ckpt, None)
+        run_manifest_stream(stream(), state_root, ckpt)
         # tombstones (op='d') are retained in state by design so
         # replays cannot resurrect deletes; consumers filter them
         final = read_manifest_state(spark, state_root).filter(F.col("op") != "d")
@@ -115,7 +118,7 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
         # manifests unchanged after a third full replay from scratch
         # of the same checkpointed stream (all epochs committed)
         _, e_before = _latest_manifest(state_root)
-        _run_manifest_stream(spark, stream(), state_root, ckpt, None)
+        run_manifest_stream(stream(), state_root, ckpt)
         _, e_after = _latest_manifest(state_root)
         assert e_after == e_before
         assert (
@@ -128,9 +131,9 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
 
 def test_manifest_compaction_preserves_state(spark, sf_dir):
     from debezium_spark.streaming.ingest import (
-        _run_manifest_stream,
         compact_manifest_state,
         read_manifest_state,
+        run_manifest_stream,
     )
 
     cdc = synthesize_cdc_flat(spark, sf_dir)
@@ -146,7 +149,7 @@ def test_manifest_compaction_preserves_state(spark, sf_dir):
             .format("parquet")
             .load(topic)
         )
-        _run_manifest_stream(spark, stream, state_root, ckpt, None)
+        run_manifest_stream(stream, state_root, ckpt)
         before = {
             tuple(r)
             for r in read_manifest_state(spark, state_root)
@@ -160,3 +163,195 @@ def test_manifest_compaction_preserves_state(spark, sf_dir):
         assert before == after
         assert len(os.listdir(os.path.join(state_root, "data"))) == 1
         assert n_dirs_before > 1
+
+
+# --------------------------------------------------------------------------
+# Manifest sink under run / crash / compact / resume / empty-file
+# sequences. Four change-event chunks over 200 keys are staged once as
+# single parquet files; a sequence lands them in a chosen order into a
+# fresh topic and drives one checkpointed stream over it.
+# --------------------------------------------------------------------------
+
+N_KEYS = 200
+N_CHUNKS = 4
+
+
+def _chunk(spark, i):
+    """Chunk i: 300 events over N_KEYS keys; seqs are unique across
+    chunks and interleave, so any arrival order is out of seq order
+    for some keys. Every fifth event is a delete."""
+    ev = spark.range(300)
+    return ev.select(
+        ((F.col("id") * 7 + i * 13) % N_KEYS).alias("key"),
+        F.when((F.col("id") + i) % 5 == 0, F.lit("d"))
+        .otherwise(F.lit("u")).alias("op"),
+        (F.col("id") * N_CHUNKS + (i * 3) % N_CHUNKS).alias("seq"),
+        (F.col("id") * 10.0 + i).alias("val"),
+    )
+
+
+@pytest.fixture(scope="module")
+def staged_chunks(spark):
+    """Chunk i staged as one parquet file at index i; index N_CHUNKS
+    is a zero-row file with the same schema."""
+    with tempfile.TemporaryDirectory() as d:
+        files = []
+        for i in range(N_CHUNKS + 1):
+            df = _chunk(spark, i) if i < N_CHUNKS else _chunk(spark, 0).limit(0)
+            out = os.path.join(d, f"c{i}")
+            df.coalesce(1).write.parquet(out)
+            (part,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+            files.append(os.path.join(out, part))
+        yield files
+
+
+def _play(spark, staged, arrival, steps):
+    """Run `steps` against a fresh topic/checkpoint/state and check the
+    committed state against batch latest_state after every step; a
+    final resume must leave the state equal to latest_state over every
+    landed chunk."""
+    import shutil
+
+    from debezium_spark.streaming.ingest import (
+        _latest_manifest,
+        compact_manifest_state,
+        read_manifest_state,
+        run_manifest_stream,
+    )
+
+    cols = ["key", "op", "seq", "val"]
+    with tempfile.TemporaryDirectory() as workdir:
+        topic = os.path.join(workdir, "topic")
+        state_root = os.path.join(workdir, "state")
+        ckpt = os.path.join(workdir, "ckpt")
+        os.makedirs(topic)
+        schema = spark.read.parquet(staged[0]).schema
+        pending = list(arrival)
+        landed: list[int] = []  # chunk ids, in landing order
+        applied: list[int] = []  # chunk ids the committed state covers
+
+        def land(src, name):
+            tmp = os.path.join(workdir, name)
+            shutil.copyfile(src, tmp)
+            os.rename(tmp, os.path.join(topic, name))
+
+        def run(crash):
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .format("parquet")
+                .load(topic)
+            )
+            run_manifest_stream(
+                stream, state_root, ckpt,
+                crash_before_commit=set(range(100)) if crash else None,
+            )
+
+        def state():
+            if _latest_manifest(state_root)[0] is None:
+                return set()
+            return {
+                tuple(r)
+                for r in read_manifest_state(spark, state_root)
+                .filter(F.col("op") != "d").select(cols).collect()
+            }
+
+        def expected(chunks):
+            if not chunks:
+                return set()
+            events = _chunk(spark, chunks[0])
+            for c in chunks[1:]:
+                events = events.unionByName(_chunk(spark, c))
+            return {tuple(r) for r in latest_state(events).select(cols).collect()}
+
+        for n, step in enumerate(steps + ["run"]):
+            if step == "land" and pending:
+                land(staged[pending[0]], f"{n:02d}-chunk.parquet")
+                landed.append(pending.pop(0))
+            elif step == "empty":
+                land(staged[N_CHUNKS], f"{n:02d}-empty.parquet")
+            elif step == "run":
+                run(crash=False)
+                applied = list(landed)
+            elif step == "crash":
+                try:
+                    run(crash=True)
+                except StreamingQueryException as e:  # if a batch ran
+                    assert "injected crash" in str(e)
+            elif step == "compact" and _latest_manifest(state_root)[0]:
+                compact_manifest_state(spark, state_root)
+            assert state() == expected(applied), (steps, n)
+
+
+def test_manifest_compact_then_resume_keeps_next_batch(spark, staged_chunks):
+    """Land half the topic, run, compact, land the rest and resume on
+    the same checkpoint: the batch after compaction must be applied,
+    not mistaken for an already-committed one."""
+    _play(spark, staged_chunks, range(N_CHUNKS),
+          ["land", "land", "run", "compact", "land", "land"])
+
+
+steps_st = st.lists(
+    st.sampled_from(["land", "empty", "run", "crash", "compact"]),
+    min_size=1, max_size=10,
+)
+
+
+@settings(max_examples=10, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(arrival=st.permutations(range(N_CHUNKS)), steps=steps_st)
+@example(arrival=[0, 1, 2, 3], steps=["empty", "run", "compact", "land"])
+@example(arrival=[3, 1, 0, 2],
+         steps=["land", "crash", "compact", "land", "run", "compact", "land"])
+def test_manifest_sink_random_fault_sequences(spark, staged_chunks,
+                                              arrival, steps):
+    _play(spark, staged_chunks, arrival, steps)
+
+
+def test_manifest_empty_first_file_reads_as_empty_state(spark, staged_chunks):
+    """A zero-row file landing first commits a manifest with no bucket;
+    it must read back as zero rows with the state columns."""
+    from debezium_spark.streaming.ingest import (
+        _file_stream,
+        _latest_manifest,
+        read_manifest_state,
+        run_manifest_stream,
+    )
+
+    with tempfile.TemporaryDirectory() as workdir:
+        topic = os.path.join(workdir, "topic")
+        state_root = os.path.join(workdir, "state")
+        os.makedirs(topic)
+        os.link(staged_chunks[N_CHUNKS], os.path.join(topic, "empty.parquet"))
+        stream = _file_stream(spark, topic)
+        run_manifest_stream(stream, state_root, os.path.join(workdir, "ckpt"))
+        assert _latest_manifest(state_root)[1] == 0
+        state = read_manifest_state(spark, state_root)
+        assert state.columns == stream.columns + ["bucket"]
+        assert state.count() == 0
+
+
+def test_manifest_compaction_keeps_every_bucket(spark, sf_dir):
+    """Compaction takes its bucket set from the manifest, so a sink run
+    with more buckets than the default keeps all of its state."""
+    from debezium_spark.streaming.ingest import (
+        _file_stream,
+        compact_manifest_state,
+        read_manifest_state,
+        run_manifest_stream,
+    )
+
+    cdc = synthesize_cdc_flat(spark, sf_dir)
+    with tempfile.TemporaryDirectory() as workdir:
+        topic = os.path.join(workdir, "topic")
+        state_root = os.path.join(workdir, "state")
+        cdc.repartition(2, "key").write.parquet(topic)
+        run_manifest_stream(
+            _file_stream(spark, topic), state_root,
+            os.path.join(workdir, "ckpt"), n_buckets=32,
+        )
+        before = {tuple(r) for r in read_manifest_state(spark, state_root).collect()}
+        assert {r[-1] for r in before} == set(range(32))
+        compact_manifest_state(spark, state_root)
+        after = {tuple(r) for r in read_manifest_state(spark, state_root).collect()}
+        assert after == before

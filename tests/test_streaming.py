@@ -50,14 +50,15 @@ def test_out_of_order_delivery_converges(spark, sf_dir):
     """Adversarial replay: the topic's files arrive newest-first
     (descending seq). Max-seq-wins merging must still converge to the
     batch state — late-arriving older events never regress a key."""
-    import os
-    import tempfile
-
-    from debezium_spark.streaming.ingest import streaming_latest_state
+    from debezium_spark.streaming.ingest import (
+        read_manifest_state,
+        run_manifest_stream,
+    )
 
     cdc = synthesize_cdc_flat(spark, sf_dir)
     with tempfile.TemporaryDirectory() as workdir:
         topic = os.path.join(workdir, "topic")
+        state_root = os.path.join(workdir, "state")
         # three seq-range files written in ascending order; replay
         # newest-file-first via latestFirst
         lo = cdc.filter(F.col("seq") % 3 == 0)
@@ -74,11 +75,9 @@ def test_out_of_order_delivery_converges(spark, sf_dir):
             .format("parquet")
             .load(topic)
         )
-        final_path = streaming_latest_state(
-            spark, stream, os.path.join(workdir, "state")
-        )
+        run_manifest_stream(stream, state_root, os.path.join(workdir, "ckpt"))
         final = (
-            spark.read.parquet(final_path)
+            read_manifest_state(spark, state_root)
             .filter(F.col("op") != "d")
             .select("key", "seq", "after_totalprice")
         )
@@ -145,12 +144,15 @@ def test_stateful_running_counts(spark, sf_dir):
 
 def test_bucketed_state_rewrites_only_touched_buckets(spark, sf_dir):
     """Batch 1 seeds all buckets; batch 2 touches a narrow key range —
-    only its k bucket dirs may change on disk, and the final state
-    must still equal max-seq-wins over both batches."""
+    only its k buckets may be rewritten (the manifest of batch 2 points
+    just those at its dir), and the final state must still equal
+    max-seq-wins over both batches."""
+    import json
     import shutil
 
     from debezium_spark.streaming.ingest import (
-        streaming_latest_state_bucketed,
+        read_manifest_state,
+        run_manifest_stream,
     )
 
     workdir = tempfile.mkdtemp(prefix="bucket_state_")
@@ -177,14 +179,33 @@ def test_bucketed_state_rewrites_only_touched_buckets(spark, sf_dir):
             .format("parquet")
             .load(topic + "/*/")
         )
-        streaming_latest_state_bucketed(spark, stream, state, n_buckets=16)
-        stats = streaming_latest_state_bucketed.last_stats["batches"]
-        assert len(stats) == 2
-        first, second = stats[0]["touched"], stats[1]["touched"]
+        run_manifest_stream(
+            stream, state, os.path.join(workdir, "c"), n_buckets=16
+        )
+        mdir = os.path.join(state, "_manifests")
+        assert sorted(os.listdir(mdir)) == ["manifest-0.json", "manifest-1.json"]
+
+        def pointers(epoch):
+            with open(os.path.join(mdir, f"manifest-{epoch}.json")) as fh:
+                return json.load(fh)["buckets"]
+
+        first, second = (
+            sorted(b for b, d in pointers(e).items() if d == f"e{e}")
+            for e in (0, 1)
+        )
         # 200 spread keys hit every bucket; 5 keys hit at most 5
         assert len(first) == 16
         assert 1 <= len(second) <= 5
-        back = spark.read.parquet(state)
+        # batch 2 wrote only its touched buckets; the rest still point
+        # at batch 1's dir
+        rewritten = spark.read.parquet(os.path.join(state, "data", "e1"))
+        assert sorted(
+            str(r["bucket"]) for r in rewritten.select("bucket").distinct().collect()
+        ) == second
+        assert all(
+            d == "e0" for b, d in pointers(1).items() if b not in second
+        )
+        back = read_manifest_state(spark, state)
         assert back.count() == 200
         upd = {r["key"]: r for r in back.filter("key < 5").collect()}
         assert all(upd[k]["seq"] == 2 and upd[k]["val"] == k * 10.0
