@@ -1,11 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract of the PySpark engine.
 
 `entry(spark)` — flagship query smoke check at sf0.001.
-`queries()` — every implemented operator from SURVEY.md §2, keyed by
-name; each callable is (spark, sf_dir) -> DataFrame.
+`queries()` — every operator, keyed by name; each callable is
+(spark, sf_dir) -> DataFrame.
 `oracle_sql()` — matching ANSI SQL for DuckDB (same aliases, same
-rounding). As of round 3 EVERY queries() entry carries an exact
-oracle — none are rows-only; the gate passes at sf0.01 and sf0.1.
+rounding), one per `queries()` entry.
+
+Both are the union of the `QUERIES`/`ORACLES` dicts of the modules in
+`_QUERY_MODULES`, taken in module order; that order carries no
+meaning.
 """
 
 from __future__ import annotations
@@ -34,113 +37,12 @@ from debezium_spark.sources import sinks as _sinks
 from debezium_spark.cdc import schema_history as _schema_history
 from debezium_spark.cdc import converters as _converters
 
-# Order matters for external gates that evaluate a prefix of queries()
-# under a budget: the training-data pipeline (dedup/ANN/text/quality/
-# mixture/multimodal), streaming, and the CDC core come first; the 18
-# TPC-H queries — the most redundant block, each individually verified
-# — come last so they are what falls off if anything must.
-class _Late:
-    """Registers a module's QUERIES_LATE/ORACLES_LATE at a later
-    position: operators added after round 3 slot in behind the
-    gate-critical prefix so they never displace a previously-failed
-    query from the externally evaluated window."""
-
-    def __init__(self, mod):
-        self.QUERIES = getattr(mod, "QUERIES_LATE", {})
-        self.ORACLES = getattr(mod, "ORACLES_LATE", {})
-
-
 _QUERY_MODULES = [
     _quality, _text, _dedup, _similarity, _pipeline, _multimodal,
     _streaming, _transforms, _materialize, _signals, _relational,
-    _analytics, _Late(_transforms), _Late(_materialize), _Late(_text),
-    _Late(_skew), _Late(_dialects), _Late(_schema_history),
-    _Late(_streaming), _Late(_converters), _Late(_pipeline),
-    _Late(_dedup), _Late(_similarity), _Late(_sinks),
-    _Late(_relational), _Late(_multimodal), _Late(_sketches),
-    _Late(_analytics), _tpch,
+    _analytics, _skew, _dialects, _schema_history, _converters, _sinks,
+    _sketches, _tpch,
 ]
-
-# Round-5 prefix rotation: the external gate evaluates the FIRST 50
-# queries() entries each round. Rounds 3-4 proved the training-data
-# pipeline + CDC core block (50/50 green in CORRECTNESS_r04); this
-# round the never-yet-gated surface goes first — the full 10-connector
-# dialect matrix (led by the IBM i journal normalizer, the reference
-# fork's headline), schema history/compat, the wire converters, the
-# round-4 CDC operator block, the sketch suite, and the skew/bucketing
-# strategies — so every block of the engine has produced at least one
-# driver-green row by end of round 5. Every listed query passes the
-# dtype-aware local gate (tools/check_oracle.py) at sf0.01.
-_PREFIX = [
-    # source-adapter matrix (10)
-    "ibmi_journal_roundtrip",
-    "db2_cd_roundtrip",
-    "sqlserver_cdc_roundtrip",
-    "pg_wal_roundtrip",
-    "mysql_binlog_roundtrip",
-    "mongo_change_stream_roundtrip",
-    "oracle_logminer_roundtrip",
-    "cassandra_cdc_roundtrip",
-    "vitess_vstream_roundtrip",
-    "spanner_roundtrip",
-    "ibmi_commitment_control",
-    # schema registry analogs (2)
-    "cdc_schema_history",
-    "cdc_schema_compatibility",
-    # converters (4)
-    "cdc_schema_evolution",
-    "cdc_unavailable_value_fill",
-    "cdc_decimal_handling",
-    "cdc_temporal_precision",
-    # round-4 CDC operator block (20)
-    "cdc_changed_columns",
-    "cdc_header_to_value",
-    "cdc_value_to_header",
-    "cdc_add_fields",
-    "cdc_snapshot_modes",
-    "cdc_logical_table_route",
-    "cdc_connect_smt_chain",
-    "mongo_extract_new_document",
-    "cdc_dlq_route",
-    "cdc_timestamp_router",
-    "cdc_truncate_state",
-    "cdc_composite_key_state",
-    "cdc_redelivery_dedup",
-    "cdc_pk_update_rekey",
-    "cdc_jdbc_sink_soft_delete",
-    "cdc_txn_consistent_apply",
-    "cdc_pit_join",
-    "cdc_compact_retention",
-    "cdc_incremental_agg",
-    "cdc_txn_event_order",
-    # sketches (6)
-    "cms_heavy_hitters",
-    "histogram_quantiles",
-    "hll_distinct_users",
-    "bloom_decontaminate",
-    "weighted_priority_sample",
-    "zorder_cluster_events",
-    # skew & bucketing strategies (3)
-    "salted_hot_key_agg",
-    "salted_skew_join",
-    "bucketed_join_agg",
-    # round-5 additions (5)
-    "bpe_merges",
-    "bpe_tokenize_apply",
-    "media_decode_stats",
-    "manifest_commit_state",
-]
-
-
-def _ordered(items: dict) -> dict:
-    out: dict = {}
-    for name in _PREFIX:
-        if name in items:
-            out[name] = items[name]
-    for name, val in items.items():
-        if name not in out:
-            out[name] = val
-    return out
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -169,11 +71,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _QUERY_MODULES:
         out.update({name: _utc(fn) for name, fn in mod.QUERIES.items()})
-    return _ordered(out)
+    return out
 
 
 def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
     for mod in _QUERY_MODULES:
         out.update(mod.ORACLES)
-    return _ordered(out)
+    return out

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
+from debezium_spark.cdc.materialize import latest_state
 
 UNAVAILABLE = "__debezium_unavailable_value"
 
@@ -163,10 +164,8 @@ def cdc_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_discount_pct", F.pmod(F.col("key"), F.lit(7))
     )
     merged = apply_schema_evolution(old, new)
-    w = Window.partitionBy("key").orderBy(F.desc("seq"))
     return (
-        merged.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "d"))
+        latest_state(merged)
         .select(
             "key",
             F.col("seq").alias("last_seq"),
@@ -177,7 +176,7 @@ def cdc_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
+ORACLES: dict[str, str] = {
     "cdc_schema_evolution": CDC_FLAT_SQL
     + """
         , evolved AS (
@@ -236,7 +235,7 @@ ORACLES_LATE: dict[str, str] = {
     """,
 }
 
-QUERIES_LATE = {
+QUERIES = {
     "cdc_schema_evolution": cdc_schema_evolution_q,
     "cdc_unavailable_value_fill": cdc_unavailable_value_fill_q,
     "cdc_decimal_handling": cdc_decimal_handling_q,
@@ -275,7 +274,7 @@ def cdc_binary_handling_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_binary_handling"] = CDC_FLAT_SQL + """
+ORACLES["cdc_binary_handling"] = CDC_FLAT_SQL + """
     , b AS (
         SELECT key, seq,
                from_hex(md5(CAST(key AS VARCHAR) || ':'
@@ -288,4 +287,4 @@ ORACLES_LATE["cdc_binary_handling"] = CDC_FLAT_SQL + """
            lower(hex(payload)) AS payload_hex
     FROM b ORDER BY key, seq
 """
-QUERIES_LATE["cdc_binary_handling"] = cdc_binary_handling_q
+QUERIES["cdc_binary_handling"] = cdc_binary_handling_q

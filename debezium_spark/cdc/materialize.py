@@ -29,14 +29,26 @@ STATE_COLS = ("o_totalprice", "o_custkey", "o_orderstatus", "o_orderpriority")
 # --------------------------------------------------------------------------
 # Latest-state materialization (log compaction): the row each key has
 # after replaying the log; keys whose final event is a delete vanish.
+# This is the engine's one max-seq-wins kernel: every materializer and
+# sink calls it. The window form plans as WindowGroupLimit on both
+# sides of the key exchange, so each map task already cuts a key to
+# its top row before the shuffle.
 # --------------------------------------------------------------------------
-def latest_state(cdc: DataFrame, key: str = "key", seq: str = "seq") -> DataFrame:
-    w = Window.partitionBy(key).orderBy(F.desc(seq))
-    return (
-        cdc.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("op") != "d"))
-        .drop("__rn")
-    )
+def latest_state(
+    cdc: DataFrame,
+    key: str | list[str] = "key",
+    seq: str = "seq",
+    keep_tombstones: bool = False,
+) -> DataFrame:
+    """The highest-`seq` event per `key` (one column name or a list).
+    With keep_tombstones a key whose last event is a delete keeps that
+    delete row instead of vanishing."""
+    keys = [key] if isinstance(key, str) else key
+    w = Window.partitionBy(*keys).orderBy(F.desc(seq))
+    top = F.col("__rn") == 1
+    if not keep_tombstones:
+        top = top & (F.col("op") != "d")
+    return cdc.withColumn("__rn", F.row_number().over(w)).filter(top).drop("__rn")
 
 
 def cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -454,9 +466,7 @@ def cdc_truncate_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "cdc_truncate_state": CDC_FLAT_SQL
-    + f"""
+ORACLES["cdc_truncate_state"] = CDC_FLAT_SQL + f"""
         , surv AS (SELECT * FROM cdc WHERE seq > {TRUNC_SEQ}),
         latest AS (
             SELECT * FROM (
@@ -468,12 +478,8 @@ ORACLES_LATE: dict[str, str] = {
                CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                     AS BIGINT) AS sum_after_cents
         FROM latest
-    """,
-}
-
-QUERIES_LATE = {
-    "cdc_truncate_state": cdc_truncate_state_q,
-}
+    """
+QUERIES["cdc_truncate_state"] = cdc_truncate_state_q
 
 
 def cdc_composite_key_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -483,14 +489,7 @@ def cdc_composite_key_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     one composite key, so last-write-wins genuinely differs from the
     single-key path. One hash shuffle on the composite key."""
     cdc = synthesize_cdc_flat(spark, sf_dir).filter(F.col("op") != "d")
-    w = Window.partitionBy("o_custkey", "o_orderpriority").orderBy(
-        F.desc("seq")
-    )
-    latest = (
-        cdc.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    latest = latest_state(cdc, ["o_custkey", "o_orderpriority"])
     return latest.select(
         "o_custkey",
         "o_orderpriority",
@@ -500,7 +499,7 @@ def cdc_composite_key_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_composite_key_state"] = CDC_FLAT_SQL + """
+ORACLES["cdc_composite_key_state"] = CDC_FLAT_SQL + """
     SELECT o_custkey, o_orderpriority, key, seq,
            after_totalprice AS o_totalprice
     FROM (SELECT *, row_number() OVER (
@@ -509,7 +508,7 @@ ORACLES_LATE["cdc_composite_key_state"] = CDC_FLAT_SQL + """
           FROM cdc WHERE op <> 'd')
     WHERE rn = 1
 """
-QUERIES_LATE["cdc_composite_key_state"] = cdc_composite_key_state_q
+QUERIES["cdc_composite_key_state"] = cdc_composite_key_state_q
 
 
 # --------------------------------------------------------------------------
@@ -541,7 +540,7 @@ def cdc_redelivery_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts.join(unique, "op").orderBy("op")
 
 
-ORACLES_LATE["cdc_redelivery_dedup"] = CDC_FLAT_SQL + """
+ORACLES["cdc_redelivery_dedup"] = CDC_FLAT_SQL + """
     , delivered AS (
         SELECT * FROM cdc
         UNION ALL SELECT * FROM cdc WHERE seq % 5 = 1)
@@ -549,7 +548,7 @@ ORACLES_LATE["cdc_redelivery_dedup"] = CDC_FLAT_SQL + """
            count(DISTINCT seq) AS n_unique
     FROM delivered GROUP BY op ORDER BY op
 """
-QUERIES_LATE["cdc_redelivery_dedup"] = cdc_redelivery_dedup_q
+QUERIES["cdc_redelivery_dedup"] = cdc_redelivery_dedup_q
 
 
 # --------------------------------------------------------------------------
@@ -593,14 +592,9 @@ def cdc_pk_update_rekey_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("before_totalprice", F.lit(None).cast("double"))
     )
     stream = passthrough.unionByName(old_del).unionByName(new_create)
-
-    w = Window.partitionBy("key").orderBy(F.desc("seq"))
-    latest = (
-        stream.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "d"))
-    )
     return (
-        latest.filter(F.col("key") >= REKEY_OFFSET)
+        latest_state(stream)
+        .filter(F.col("key") >= REKEY_OFFSET)
         .select(
             F.col("key").alias("new_key"),
             (F.col("key") - REKEY_OFFSET).alias("orig_key"),
@@ -611,7 +605,7 @@ def cdc_pk_update_rekey_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_pk_update_rekey"] = CDC_FLAT_SQL + f"""
+ORACLES["cdc_pk_update_rekey"] = CDC_FLAT_SQL + f"""
     , marked AS (
         SELECT *,
                1 + (key * 2654435761) % 3 AS nv,
@@ -641,7 +635,7 @@ ORACLES_LATE["cdc_pk_update_rekey"] = CDC_FLAT_SQL + f"""
            seq AS last_seq, after_totalprice AS o_totalprice
     FROM latest WHERE key >= {REKEY_OFFSET} ORDER BY new_key
 """
-QUERIES_LATE["cdc_pk_update_rekey"] = cdc_pk_update_rekey_q
+QUERIES["cdc_pk_update_rekey"] = cdc_pk_update_rekey_q
 
 
 # --------------------------------------------------------------------------
@@ -659,15 +653,9 @@ def jdbc_sink_apply(
     seq: str = "seq",
     delete_enabled: bool = True,
 ) -> DataFrame:
-    if delete_enabled:
-        return latest_state(cdc, key, seq)
-    upserts = cdc.filter(F.col("op") != "d")
-    w = Window.partitionBy(key).orderBy(F.desc(seq))
-    return (
-        upserts.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    if not delete_enabled:
+        cdc = cdc.filter(F.col("op") != "d")
+    return latest_state(cdc, key, seq)
 
 
 def cdc_jdbc_sink_soft_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,7 +683,7 @@ def cdc_jdbc_sink_soft_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_jdbc_sink_soft_delete"] = CDC_FLAT_SQL + """
+ORACLES["cdc_jdbc_sink_soft_delete"] = CDC_FLAT_SQL + """
     , ranked AS (
         SELECT key, after_totalprice, o_orderstatus, seq,
                row_number() OVER (PARTITION BY key ORDER BY seq DESC) AS rn
@@ -706,7 +694,7 @@ ORACLES_LATE["cdc_jdbc_sink_soft_delete"] = CDC_FLAT_SQL + """
     FROM ranked r LEFT JOIN deleted d ON r.key = d.key
     WHERE r.rn = 1 ORDER BY r.key
 """
-QUERIES_LATE["cdc_jdbc_sink_soft_delete"] = cdc_jdbc_sink_soft_delete_q
+QUERIES["cdc_jdbc_sink_soft_delete"] = cdc_jdbc_sink_soft_delete_q
 
 
 # --------------------------------------------------------------------------
@@ -773,7 +761,7 @@ def cdc_txn_consistent_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_txn_consistent_apply"] = CDC_FLAT_SQL + f"""
+ORACLES["cdc_txn_consistent_apply"] = CDC_FLAT_SQL + f"""
     , t AS (SELECT *, seq % {TXN_BUCKETS} AS txn_id FROM cdc),
     cut AS (SELECT CAST(floor(max(seq) * 9 / 10) AS BIGINT) AS c FROM t),
     complete AS (
@@ -797,7 +785,7 @@ ORACLES_LATE["cdc_txn_consistent_apply"] = CDC_FLAT_SQL + f"""
            count(DISTINCT txn_id) AS n_txns_in_state
     FROM state
 """
-QUERIES_LATE["cdc_txn_consistent_apply"] = cdc_txn_consistent_apply_q
+QUERIES["cdc_txn_consistent_apply"] = cdc_txn_consistent_apply_q
 
 
 # --------------------------------------------------------------------------
@@ -851,7 +839,7 @@ def cdc_pit_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_pit_join"] = CDC_FLAT_SQL + """
+ORACLES["cdc_pit_join"] = CDC_FLAT_SQL + """
     , hist AS (
         SELECT key, seq AS valid_from_seq,
                lead(seq) OVER (PARTITION BY key ORDER BY seq)
@@ -874,7 +862,7 @@ ORACLES_LATE["cdc_pit_join"] = CDC_FLAT_SQL + """
           OR probes.probe_seq < hist.valid_to_seq)
     GROUP BY off ORDER BY off
 """
-QUERIES_LATE["cdc_pit_join"] = cdc_pit_join_q
+QUERIES["cdc_pit_join"] = cdc_pit_join_q
 
 
 # --------------------------------------------------------------------------
@@ -885,29 +873,15 @@ QUERIES_LATE["cdc_pit_join"] = cdc_pit_join_q
 # Debezium topic with cleanup.policy=compact actually read.
 # --------------------------------------------------------------------------
 def cdc_compact_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-per-key via a single struct-max aggregate (one shuffle
-    on key, map-side combinable — no per-key sort), then the
+    """Latest-per-key with tombstones kept (the latest_state kernel:
+    one shuffle on key, cut to each key's top row map-side), then the
     retention cut against the stream watermark. The watermark/
     retention pair is a 1-row aggregate broadcast into the filter, so
-    at 100 TB the plan is scan → partial agg → filter; retention is
+    at 100 TB the plan is scan → window → filter; retention is
     half the stream's time span so both retained and expired
     tombstones exist at every scale factor."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    latest = (
-        cdc.groupBy("key")
-        .agg(
-            F.max(
-                F.struct("seq", "op", "after_totalprice", "ts_ms")
-            ).alias("s")
-        )
-        .select(
-            "key",
-            F.col("s.seq").cast("long").alias("seq"),
-            F.col("s.op").alias("op"),
-            F.col("s.after_totalprice").alias("after_totalprice"),
-            F.col("s.ts_ms").cast("long").alias("ts_ms"),
-        )
-    )
+    latest = latest_state(cdc, keep_tombstones=True)
     bounds = cdc.agg(
         F.max("ts_ms").alias("wm"),
         ((F.max("ts_ms") - F.min("ts_ms")) / 2).cast("long").alias("ret"),
@@ -929,7 +903,7 @@ def cdc_compact_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_compact_retention"] = CDC_FLAT_SQL + """
+ORACLES["cdc_compact_retention"] = CDC_FLAT_SQL + """
     , latest AS (
         SELECT key, seq, op, after_totalprice, ts_ms
         FROM cdc
@@ -945,7 +919,7 @@ ORACLES_LATE["cdc_compact_retention"] = CDC_FLAT_SQL + """
     WHERE op != 'd' OR ts_ms > wm - ret
     ORDER BY key
 """
-QUERIES_LATE["cdc_compact_retention"] = cdc_compact_retention_q
+QUERIES["cdc_compact_retention"] = cdc_compact_retention_q
 
 
 # --------------------------------------------------------------------------
@@ -988,7 +962,7 @@ def cdc_incremental_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_incremental_agg"] = CDC_FLAT_SQL + """
+ORACLES["cdc_incremental_agg"] = CDC_FLAT_SQL + """
     SELECT o_custkey,
            CAST(sum(CASE op WHEN 'c' THEN 1 WHEN 'd' THEN -1 ELSE 0 END)
                 AS BIGINT) AS n_live_orders,
@@ -1001,7 +975,7 @@ ORACLES_LATE["cdc_incremental_agg"] = CDC_FLAT_SQL + """
     HAVING n_live_orders > 0
     ORDER BY o_custkey
 """
-QUERIES_LATE["cdc_incremental_agg"] = cdc_incremental_agg_q
+QUERIES["cdc_incremental_agg"] = cdc_incremental_agg_q
 
 
 # --------------------------------------------------------------------------
@@ -1043,7 +1017,7 @@ def cdc_txn_event_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("seq")
 
 
-ORACLES_LATE["cdc_txn_event_order"] = CDC_FLAT_SQL + """
+ORACLES["cdc_txn_event_order"] = CDC_FLAT_SQL + """
     SELECT key, seq, seq // 100 AS txn_id,
            'orders_' || CAST(key % 3 AS VARCHAR) AS collection,
            CAST(row_number() OVER (PARTITION BY seq // 100
@@ -1053,7 +1027,7 @@ ORACLES_LATE["cdc_txn_event_order"] = CDC_FLAT_SQL + """
                AS data_collection_order
     FROM cdc ORDER BY seq
 """
-QUERIES_LATE["cdc_txn_event_order"] = cdc_txn_event_order_q
+QUERIES["cdc_txn_event_order"] = cdc_txn_event_order_q
 
 
 def cdc_rate_anomaly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,7 +1075,7 @@ def cdc_rate_anomaly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("shard", "bucket")
 
 
-ORACLES_LATE["cdc_rate_anomaly"] = CDC_FLAT_SQL + """
+ORACLES["cdc_rate_anomaly"] = CDC_FLAT_SQL + """
     , counts AS (
         SELECT key % 3 AS shard, ts_ms // 10000 AS bucket,
                CAST(count(*) AS BIGINT) AS n
@@ -1123,4 +1097,4 @@ ORACLES_LATE["cdc_rate_anomaly"] = CDC_FLAT_SQL + """
                > hist_buckets * hist_sumsq - hist_sum * hist_sum AS spike
     FROM hist ORDER BY shard, bucket
 """
-QUERIES_LATE["cdc_rate_anomaly"] = cdc_rate_anomaly_q
+QUERIES["cdc_rate_anomaly"] = cdc_rate_anomaly_q

@@ -98,7 +98,7 @@ _FLAT_SIG = (
     "o_orderpriority:string,__op:string,__ts_ms:bigint,__table:string"
 )
 
-ORACLES_LATE: dict[str, str] = {
+ORACLES: dict[str, str] = {
     "cdc_schema_history": f"""
         WITH v(version, "table", columns) AS (VALUES
             (0, 'orders.envelope', '{_ENVELOPE_SIG}'),
@@ -109,7 +109,7 @@ ORACLES_LATE: dict[str, str] = {
     """,
 }
 
-QUERIES_LATE = {
+QUERIES = {
     "cdc_schema_history": cdc_schema_history_q,
 }
 
@@ -285,7 +285,7 @@ _SIG5 = _SIG4.replace("o_orderpriority:string:n,", "")
 _SIG6 = _SIG5.replace("o_totalprice:double:n", "o_totalprice:double:r")
 _SIG7 = _SIG6.replace("source_system:string:r", "source_system:string:n")
 
-ORACLES_LATE["cdc_schema_compatibility"] = f"""
+ORACLES["cdc_schema_compatibility"] = f"""
     WITH v(version, columns) AS (VALUES
         (0, '{_SIG0}'), (1, '{_SIG1}'), (2, '{_SIG2}'),
         (3, '{_SIG3}'), (4, '{_SIG4}'), (5, '{_SIG5}'),
@@ -334,4 +334,4 @@ ORACLES_LATE["cdc_schema_compatibility"] = f"""
                 ELSE 'NONE' END AS compat
     FROM agg ORDER BY from_version
 """
-QUERIES_LATE["cdc_schema_compatibility"] = cdc_schema_compatibility_q
+QUERIES["cdc_schema_compatibility"] = cdc_schema_compatibility_q

@@ -376,34 +376,6 @@ def cdc_changed_columns_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "cdc_changed_columns": CDC_FLAT_SQL
-    + """
-        SELECT concat_ws(',',
-                   CASE WHEN before_totalprice IS DISTINCT FROM after_totalprice
-                        THEN 'o_totalprice' END,
-                   CASE WHEN o_orderstatus IS DISTINCT FROM o_orderstatus
-                        THEN 'o_orderstatus' END,
-                   CASE WHEN o_orderpriority IS DISTINCT FROM o_orderpriority
-                        THEN 'o_orderpriority' END) AS changed,
-               concat_ws(',',
-                   CASE WHEN before_totalprice IS NOT DISTINCT FROM after_totalprice
-                        THEN 'o_totalprice' END,
-                   CASE WHEN o_orderstatus IS NOT DISTINCT FROM o_orderstatus
-                        THEN 'o_orderstatus' END,
-                   CASE WHEN o_orderpriority IS NOT DISTINCT FROM o_orderpriority
-                        THEN 'o_orderpriority' END) AS unchanged,
-               count(*) AS n_events,
-               count(DISTINCT key) AS n_keys
-        FROM cdc WHERE op = 'u'
-        GROUP BY changed, unchanged ORDER BY changed
-    """,
-}
-
-QUERIES_LATE = {
-    "cdc_changed_columns": cdc_changed_columns_q,
-}
-
 ORACLES: dict[str, str] = {
     "cdc_stream_sample": CDC_FLAT_SQL
     + """
@@ -465,6 +437,27 @@ ORACLES: dict[str, str] = {
                count(DISTINCT CAST(user_id AS VARCHAR)) AS n_aggregates
         FROM events GROUP BY topic ORDER BY topic
     """,
+    "cdc_changed_columns": CDC_FLAT_SQL
+    + """
+        SELECT concat_ws(',',
+                   CASE WHEN before_totalprice IS DISTINCT FROM after_totalprice
+                        THEN 'o_totalprice' END,
+                   CASE WHEN o_orderstatus IS DISTINCT FROM o_orderstatus
+                        THEN 'o_orderstatus' END,
+                   CASE WHEN o_orderpriority IS DISTINCT FROM o_orderpriority
+                        THEN 'o_orderpriority' END) AS changed,
+               concat_ws(',',
+                   CASE WHEN before_totalprice IS NOT DISTINCT FROM after_totalprice
+                        THEN 'o_totalprice' END,
+                   CASE WHEN o_orderstatus IS NOT DISTINCT FROM o_orderstatus
+                        THEN 'o_orderstatus' END,
+                   CASE WHEN o_orderpriority IS NOT DISTINCT FROM o_orderpriority
+                        THEN 'o_orderpriority' END) AS unchanged,
+               count(*) AS n_events,
+               count(DISTINCT key) AS n_keys
+        FROM cdc WHERE op = 'u'
+        GROUP BY changed, unchanged ORDER BY changed
+    """,
 }
 
 QUERIES = {
@@ -477,6 +470,7 @@ QUERIES = {
     "cdc_partition_route": cdc_partition_route_q,
     "cdc_tz_convert": cdc_tz_convert_q,
     "cdc_outbox_route": cdc_outbox_route_q,
+    "cdc_changed_columns": cdc_changed_columns_q,
 }
 
 
@@ -496,12 +490,12 @@ def cdc_header_to_value_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_header_to_value"] = CDC_FLAT_SQL + """
+ORACLES["cdc_header_to_value"] = CDC_FLAT_SQL + """
     SELECT op AS __op, count(*) AS n,
            min(ts_ms) AS min_ts, max(ts_ms) AS max_ts
     FROM cdc GROUP BY op ORDER BY op
 """
-QUERIES_LATE["cdc_header_to_value"] = cdc_header_to_value_q
+QUERIES["cdc_header_to_value"] = cdc_header_to_value_q
 
 
 def cdc_snapshot_modes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,7 +524,7 @@ def cdc_snapshot_modes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("mode")
 
 
-ORACLES_LATE["cdc_snapshot_modes"] = CDC_FLAT_SQL + """
+ORACLES["cdc_snapshot_modes"] = CDC_FLAT_SQL + """
     , snap AS (
         SELECT o_orderkey AS key, 'r' AS op
         FROM orders WHERE (o_orderkey * 40503) % 10 <> 0),
@@ -550,7 +544,7 @@ ORACLES_LATE["cdc_snapshot_modes"] = CDC_FLAT_SQL + """
                CAST(0 AS BIGINT), count(DISTINCT key) FROM cdc)
     SELECT mode, n_events, n_snapshot, n_keys FROM m ORDER BY mode
 """
-QUERIES_LATE["cdc_snapshot_modes"] = cdc_snapshot_modes_q
+QUERIES["cdc_snapshot_modes"] = cdc_snapshot_modes_q
 
 
 def cdc_logical_table_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,13 +567,13 @@ def cdc_logical_table_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_logical_table_route"] = CDC_FLAT_SQL + """
+ORACLES["cdc_logical_table_route"] = CDC_FLAT_SQL + """
     SELECT 'orders_0' || CAST(key % 3 AS VARCHAR) AS __physical_table,
            'cdc.orders' AS __logical_topic,
            count(*) AS n_events, count(DISTINCT key) AS n_keys
     FROM cdc GROUP BY 1, 2 ORDER BY __physical_table
 """
-QUERIES_LATE["cdc_logical_table_route"] = cdc_logical_table_route_q
+QUERIES["cdc_logical_table_route"] = cdc_logical_table_route_q
 
 
 # --------------------------------------------------------------------------
@@ -656,14 +650,14 @@ def cdc_connect_smt_chain_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_connect_smt_chain"] = CDC_FLAT_SQL + """
+ORACLES["cdc_connect_smt_chain"] = CDC_FLAT_SQL + """
     SELECT key, seq, op, o_orderpriority AS priority,
            CAST(trunc(after_totalprice) AS BIGINT) AS amount,
            CAST(o_custkey AS VARCHAR) AS o_custkey,
            'erp' AS source_system, seq AS __offset
     FROM cdc WHERE key < 2000 AND op <> 'd'
 """
-QUERIES_LATE["cdc_connect_smt_chain"] = cdc_connect_smt_chain_q
+QUERIES["cdc_connect_smt_chain"] = cdc_connect_smt_chain_q
 
 
 def extract_new_document_state(
@@ -731,7 +725,7 @@ def mongo_extract_new_document_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mongo_extract_new_document"] = CDC_FLAT_SQL + """
+ORACLES["mongo_extract_new_document"] = CDC_FLAT_SQL + """
     SELECT key AS id,
            CASE WHEN op <> 'd'
                 THEN round(after_totalprice + 1e-9, 2) END AS o_totalprice,
@@ -739,7 +733,7 @@ ORACLES_LATE["mongo_extract_new_document"] = CDC_FLAT_SQL + """
            op AS __op, ts_ms AS __ts_ms, op = 'd' AS __deleted
     FROM cdc WHERE key < 2000
 """
-QUERIES_LATE["mongo_extract_new_document"] = mongo_extract_new_document_q
+QUERIES["mongo_extract_new_document"] = mongo_extract_new_document_q
 
 
 # --------------------------------------------------------------------------
@@ -791,7 +785,7 @@ def cdc_dlq_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_dlq_route"] = """
+ORACLES["cdc_dlq_route"] = """
     WITH c AS (
         SELECT event_type, event_id,
                CASE WHEN event_id % 37 = 0 THEN 'x' || props ELSE props END
@@ -807,7 +801,7 @@ ORACLES_LATE["cdc_dlq_route"] = """
            max(CASE WHEN dlq THEN event_id END) AS max_dlq_offset
     FROM tagged GROUP BY event_type ORDER BY event_type
 """
-QUERIES_LATE["cdc_dlq_route"] = cdc_dlq_route_q
+QUERIES["cdc_dlq_route"] = cdc_dlq_route_q
 
 
 # --------------------------------------------------------------------------
@@ -851,12 +845,12 @@ def cdc_value_to_header_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_value_to_header"] = CDC_FLAT_SQL + """
+ORACLES["cdc_value_to_header"] = CDC_FLAT_SQL + """
     SELECT o_orderpriority AS hdr_priority, op AS hdr_op, count(*) AS n,
            min(seq) AS min_seq, max(seq) AS max_seq
     FROM cdc GROUP BY 1, 2 ORDER BY hdr_priority, hdr_op
 """
-QUERIES_LATE["cdc_value_to_header"] = cdc_value_to_header_q
+QUERIES["cdc_value_to_header"] = cdc_value_to_header_q
 
 
 # --------------------------------------------------------------------------
@@ -905,13 +899,13 @@ def cdc_add_fields_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Spark's double→long cast truncates toward zero; seq > 0 so floor()
 # reproduces it in DuckDB (a bare CAST would round half-even).
-ORACLES_LATE["cdc_add_fields"] = CDC_FLAT_SQL + """
+ORACLES["cdc_add_fields"] = CDC_FLAT_SQL + """
     SELECT op AS __op, 'orders' AS __source_table, count(*) AS n,
            min(seq) AS min_seq, max(seq) AS max_seq,
            count(DISTINCT CAST(floor(seq / 100.0) AS BIGINT)) AS n_txn
     FROM cdc WHERE op <> 'd' GROUP BY op ORDER BY op
 """
-QUERIES_LATE["cdc_add_fields"] = cdc_add_fields_q
+QUERIES["cdc_add_fields"] = cdc_add_fields_q
 
 
 # --------------------------------------------------------------------------
@@ -960,7 +954,7 @@ def cdc_timestamp_router_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_timestamp_router"] = CDC_FLAT_SQL + """
+ORACLES["cdc_timestamp_router"] = CDC_FLAT_SQL + """
     SELECT 'orders.' || strftime(o_orderdate, '%Y%m') AS topic,
            'orders/year=' || strftime(o_orderdate, '%Y') ||
            '/month=' || strftime(o_orderdate, '%m') AS path,
@@ -973,7 +967,7 @@ ORACLES_LATE["cdc_timestamp_router"] = CDC_FLAT_SQL + """
     GROUP BY topic, path
     ORDER BY topic
 """
-QUERIES_LATE["cdc_timestamp_router"] = cdc_timestamp_router_q
+QUERIES["cdc_timestamp_router"] = cdc_timestamp_router_q
 
 
 # --------------------------------------------------------------------------
@@ -1063,7 +1057,7 @@ def cdc_smt_predicates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("key", "seq")
 
 
-ORACLES_LATE["cdc_smt_predicates"] = CDC_FLAT_SQL + """
+ORACLES["cdc_smt_predicates"] = CDC_FLAT_SQL + """
     SELECT key, seq, op,
            CASE WHEN after_totalprice >= 300000
                 THEN 'cdc.orders.high' ELSE 'cdc.orders.std' END AS topic,
@@ -1073,7 +1067,7 @@ ORACLES_LATE["cdc_smt_predicates"] = CDC_FLAT_SQL + """
            op <> 'c' AS __unsourced
     FROM cdc WHERE key < 3000 ORDER BY key, seq
 """
-QUERIES_LATE["cdc_smt_predicates"] = cdc_smt_predicates_q
+QUERIES["cdc_smt_predicates"] = cdc_smt_predicates_q
 
 
 # --------------------------------------------------------------------------
@@ -1128,7 +1122,7 @@ def cdc_flatten_envelope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("key", "seq")
 
 
-ORACLES_LATE["cdc_flatten_envelope"] = CDC_FLAT_SQL + """
+ORACLES["cdc_flatten_envelope"] = CDC_FLAT_SQL + """
     SELECT key, seq, op,
            before_totalprice AS before_o_totalprice,
            after_totalprice AS after_o_totalprice,
@@ -1137,4 +1131,4 @@ ORACLES_LATE["cdc_flatten_envelope"] = CDC_FLAT_SQL + """
            seq // 100 AS transaction_id
     FROM cdc WHERE key < 3000 ORDER BY key, seq
 """
-QUERIES_LATE["cdc_flatten_envelope"] = cdc_flatten_envelope_q
+QUERIES["cdc_flatten_envelope"] = cdc_flatten_envelope_q

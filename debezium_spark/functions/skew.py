@@ -64,7 +64,7 @@ def salted_hot_key_agg_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
+ORACLES: dict[str, str] = {
     "salted_hot_key_agg": """
         SELECT event_type,
                CAST(sum(CAST(round(value * 100 + 1e-9) AS BIGINT)) AS BIGINT)
@@ -74,7 +74,7 @@ ORACLES_LATE: dict[str, str] = {
     """,
 }
 
-QUERIES_LATE = {
+QUERIES = {
     "salted_hot_key_agg": salted_hot_key_agg_q,
 }
 
@@ -136,7 +136,7 @@ def salted_skew_join_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["salted_skew_join"] = """
+ORACLES["salted_skew_join"] = """
     WITH e AS (SELECT event_type, user_id,
                       CAST(round(value * 100 + 1e-9) AS BIGINT) AS cents
                FROM events),
@@ -149,4 +149,4 @@ ORACLES_LATE["salted_skew_join"] = """
     FROM e JOIN dim USING (event_type)
     GROUP BY e.event_type, dim.type_tag ORDER BY e.event_type
 """
-QUERIES_LATE["salted_skew_join"] = salted_skew_join_q
+QUERIES["salted_skew_join"] = salted_skew_join_q

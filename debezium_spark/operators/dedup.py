@@ -565,9 +565,6 @@ QUERIES = {
     "dedup_embedding_cosine": dedup_embedding_cosine_q,
 }
 
-QUERIES_LATE: dict = {}
-ORACLES_LATE: dict = {}
-
 
 # --------------------------------------------------------------------------
 # Near-dup clustering: pairwise LSH output → connected components →
@@ -653,7 +650,7 @@ def dedup_cluster_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["dedup_cluster_components"] = f"""
+ORACLES["dedup_cluster_components"] = f"""
     WITH RECURSIVE pairs AS ({_sql_minhash_lsh()}),
     nodes AS (
         SELECT doc_a AS node FROM pairs
@@ -671,7 +668,7 @@ ORACLES_LATE["dedup_cluster_components"] = f"""
            count(*) - 1 AS n_dropped
     FROM comps GROUP BY comp HAVING count(*) >= 2 ORDER BY cluster_id
 """
-QUERIES_LATE["dedup_cluster_components"] = dedup_cluster_components_q
+QUERIES["dedup_cluster_components"] = dedup_cluster_components_q
 
 
 # --------------------------------------------------------------------------
@@ -741,7 +738,7 @@ def dedup_segments_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return segment_dedup(load_table(spark, sf_dir, "documents"))
 
 
-ORACLES_LATE["dedup_segments"] = f"""
+ORACLES["dedup_segments"] = f"""
     WITH words AS (
         SELECT doc_id,
                unnest(range(len(arr))) AS pos,
@@ -768,7 +765,7 @@ ORACLES_LATE["dedup_segments"] = f"""
                     % {_SEG_MOD} ELSE 0 END) AS BIGINT) AS kept_hash_sum
     FROM ranked GROUP BY doc_id ORDER BY doc_id
 """
-QUERIES_LATE["dedup_segments"] = dedup_segments_q
+QUERIES["dedup_segments"] = dedup_segments_q
 
 
 # --------------------------------------------------------------------------
@@ -845,7 +842,7 @@ def dedup_substring_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_span_report(load_table(spark, sf_dir, "documents"))
 
 
-ORACLES_LATE["dedup_substring_spans"] = f"""
+ORACLES["dedup_substring_spans"] = f"""
     WITH toks AS (
         SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
         FROM documents),
@@ -881,7 +878,7 @@ ORACLES_LATE["dedup_substring_spans"] = f"""
     FROM toks t LEFT JOIN per_doc_dups d USING (doc_id)
     ORDER BY t.doc_id
 """
-QUERIES_LATE["dedup_substring_spans"] = dedup_substring_spans_q
+QUERIES["dedup_substring_spans"] = dedup_substring_spans_q
 
 
 # --------------------------------------------------------------------------
@@ -993,5 +990,5 @@ def _sql_semdedup() -> str:
     """
 
 
-ORACLES_LATE["dedup_semantic"] = _sql_semdedup()
-QUERIES_LATE["dedup_semantic"] = dedup_semantic_q
+ORACLES["dedup_semantic"] = _sql_semdedup()
+QUERIES["dedup_semantic"] = dedup_semantic_q

@@ -198,8 +198,7 @@ def media_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "media_frame_sample": """
+ORACLES["media_frame_sample"] = """
         SELECT doc_id AS media_id,
                CAST(n_chars % 100 + 1 AS INT) AS n_frames,
                CAST((n_chars % 100) // 10 + 1 AS BIGINT) AS n_sampled,
@@ -207,9 +206,8 @@ ORACLES_LATE: dict[str, str] = {
                CAST(((n_chars % 100) // 10) * 10 AS INT) AS last_idx
         FROM documents WHERE doc_id % 3 = 2
         ORDER BY media_id
-    """,
-}
-QUERIES_LATE = {"media_frame_sample": media_frame_sample_q}
+    """
+QUERIES["media_frame_sample"] = media_frame_sample_q
 
 
 # --------------------------------------------------------------------------
@@ -418,7 +416,7 @@ def media_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["media_decode_stats"] = """
+ORACLES["media_decode_stats"] = """
     WITH img AS (
         SELECT doc_id, n_chars % 16 + 4 AS w, n_chars % 12 + 4 AS h
         FROM documents WHERE doc_id % 3 = 0
@@ -464,7 +462,7 @@ ORACLES_LATE["media_decode_stats"] = """
            CAST(poswt_sum AS BIGINT) AS poswt_sum
     FROM per_kind ORDER BY kind
 """
-QUERIES_LATE["media_decode_stats"] = media_decode_stats_q
+QUERIES["media_decode_stats"] = media_decode_stats_q
 
 
 # --------------------------------------------------------------------------
@@ -550,7 +548,7 @@ def image_dhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_hash, schema).orderBy("media_id")
 
 
-ORACLES_LATE["image_dhash"] = f"""
+ORACLES["image_dhash"] = f"""
     WITH img AS (
         SELECT doc_id, CAST(n_chars % 16 + 4 AS INT) AS w,
                CAST(n_chars % 12 + 4 AS INT) AS h
@@ -584,7 +582,7 @@ ORACLES_LATE["image_dhash"] = f"""
     GROUP BY doc_id, w, h
     ORDER BY media_id
 """
-QUERIES_LATE["image_dhash"] = image_dhash_q
+QUERIES["image_dhash"] = image_dhash_q
 
 
 # --------------------------------------------------------------------------
@@ -663,7 +661,7 @@ def audio_contour_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_hash, schema).orderBy("media_id")
 
 
-ORACLES_LATE["audio_contour"] = f"""
+ORACLES["audio_contour"] = f"""
     WITH aud AS (
         SELECT doc_id, CAST(n_chars % 256 + 16 AS INT) AS n
         FROM documents WHERE doc_id % 3 = 1
@@ -712,7 +710,7 @@ ORACLES_LATE["audio_contour"] = f"""
            CAST(sum(bit) AS INT) AS contour_hash
     FROM bits GROUP BY doc_id, n ORDER BY media_id
 """
-QUERIES_LATE["audio_contour"] = audio_contour_q
+QUERIES["audio_contour"] = audio_contour_q
 
 
 # --------------------------------------------------------------------------
@@ -796,7 +794,7 @@ def media_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_resize, schema).orderBy("media_id")
 
 
-ORACLES_LATE["media_resize"] = f"""
+ORACLES["media_resize"] = f"""
     WITH img AS (
         SELECT doc_id, CAST(n_chars % 16 + 4 AS INT) AS w,
                CAST(n_chars % 12 + 4 AS INT) AS h
@@ -818,4 +816,4 @@ ORACLES_LATE["media_resize"] = f"""
            CAST(sum(pos * r) AS BIGINT) AS r_poswt
     FROM px GROUP BY doc_id ORDER BY media_id
 """
-QUERIES_LATE["media_resize"] = media_resize_q
+QUERIES["media_resize"] = media_resize_q

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.cdc.materialize import latest_state
 from debezium_spark.operators.text import STOPWORDS as _LANG_STOPWORDS
 from debezium_spark.operators.text import stopword_hit_count
 from debezium_spark.sources.tables import load_table
@@ -266,7 +267,46 @@ def sequence_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
+ORACLES: dict[str, str] = {
+    "stratified_sample": f"""
+        SELECT source, count(*) AS n_sampled,
+               CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS sampled_tokens,
+               min(doc_id) AS first_doc
+        FROM documents
+        WHERE (doc_id * 2654435761) % 4294967296 % 100 < {SAMPLE_PCT}
+        GROUP BY source ORDER BY source
+    """,
+    "training_mixture": f"""
+        WITH scored AS (
+            SELECT doc_id, source,
+                   CAST(len(w) AS INT) AS n_tokens,
+                   0.5 * least(len(w) / 200.0, 1.0)
+                   + 0.3 * (1.0 - len(list_filter(w, x -> x IN
+                         ('the','a','of','and','to','in','is'))) * 1.0 / len(w))
+                   + 0.2 * least(((length(text) - (len(w) - 1)) * 1.0 / len(w)) / 8.0, 1.0)
+                       AS q,
+                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5
+            FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS w FROM documents)
+        ), filtered AS (
+            SELECT * FROM scored WHERE q >= {QUALITY_THRESHOLD}
+        ), canonical AS (
+            SELECT * FROM (
+                SELECT *, row_number() OVER (PARTITION BY content_md5
+                                             ORDER BY doc_id) AS rn
+                FROM filtered)
+            WHERE rn = 1
+        ), kept AS (
+            SELECT * FROM (
+                SELECT *, sum(n_tokens) OVER (ORDER BY doc_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                       AS cum_tokens
+                FROM canonical)
+            WHERE cum_tokens <= {TOKEN_BUDGET}
+        )
+        SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+               round(avg(q) + 1e-9, 4) AS avg_quality
+        FROM kept GROUP BY source ORDER BY source
+    """,
     "decontaminate_ngram_overlap": f"""
         WITH toks AS (
             SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
@@ -321,57 +361,11 @@ ORACLES_LATE: dict[str, str] = {
     """,
 }
 
-QUERIES_LATE = {
-    "decontaminate_ngram_overlap": decontaminate_q,
-    "sequence_pack": sequence_pack_q,
-}
-
-
-ORACLES: dict[str, str] = {
-    "stratified_sample": f"""
-        SELECT source, count(*) AS n_sampled,
-               CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS sampled_tokens,
-               min(doc_id) AS first_doc
-        FROM documents
-        WHERE (doc_id * 2654435761) % 4294967296 % 100 < {SAMPLE_PCT}
-        GROUP BY source ORDER BY source
-    """,
-    "training_mixture": f"""
-        WITH scored AS (
-            SELECT doc_id, source,
-                   CAST(len(w) AS INT) AS n_tokens,
-                   0.5 * least(len(w) / 200.0, 1.0)
-                   + 0.3 * (1.0 - len(list_filter(w, x -> x IN
-                         ('the','a','of','and','to','in','is'))) * 1.0 / len(w))
-                   + 0.2 * least(((length(text) - (len(w) - 1)) * 1.0 / len(w)) / 8.0, 1.0)
-                       AS q,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5
-            FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS w FROM documents)
-        ), filtered AS (
-            SELECT * FROM scored WHERE q >= {QUALITY_THRESHOLD}
-        ), canonical AS (
-            SELECT * FROM (
-                SELECT *, row_number() OVER (PARTITION BY content_md5
-                                             ORDER BY doc_id) AS rn
-                FROM filtered)
-            WHERE rn = 1
-        ), kept AS (
-            SELECT * FROM (
-                SELECT *, sum(n_tokens) OVER (ORDER BY doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cum_tokens
-                FROM canonical)
-            WHERE cum_tokens <= {TOKEN_BUDGET}
-        )
-        SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-               round(avg(q) + 1e-9, 4) AS avg_quality
-        FROM kept GROUP BY source ORDER BY source
-    """,
-}
-
 QUERIES = {
     "training_mixture": training_mixture_q,
     "stratified_sample": stratified_sample_q,
+    "decontaminate_ngram_overlap": decontaminate_q,
+    "sequence_pack": sequence_pack_q,
 }
 
 
@@ -417,7 +411,7 @@ def mixture_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mixture_weights"] = f"""
+ORACLES["mixture_weights"] = f"""
     WITH per AS (
         SELECT source, count(*) AS n_docs,
                CAST(sum(len(string_split_regex(trim(text), '\\s+')))
@@ -434,7 +428,7 @@ ORACLES_LATE["mixture_weights"] = f"""
                AS upsample_factor
     FROM w CROSS JOIN tot ORDER BY source
 """
-QUERIES_LATE["mixture_weights"] = mixture_weights_q
+QUERIES["mixture_weights"] = mixture_weights_q
 
 
 # --------------------------------------------------------------------------
@@ -448,8 +442,6 @@ QUERIES_LATE["mixture_weights"] = mixture_weights_q
 # window, one groupBy(source).
 # --------------------------------------------------------------------------
 def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     d = load_table(spark, sf_dir, "documents")
     k = F.col("doc_id")
     # same generation law as the orders stream (envelope.py): 1-3
@@ -486,11 +478,8 @@ def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("after_text"),
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("seq"))
-    live = (
-        cdc.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("op") != "d"))
-        .select("doc_id", "source", F.col("after_text").alias("text"))
+    live = latest_state(cdc, "doc_id").select(
+        "doc_id", "source", F.col("after_text").alias("text")
     )
     toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
     return (
@@ -506,7 +495,7 @@ def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cdc_document_pipeline"] = """
+ORACLES["cdc_document_pipeline"] = """
     WITH base AS (
         SELECT doc_id, source, text,
                1 + (doc_id * 2654435761) % 3 AS nv,
@@ -538,7 +527,7 @@ ORACLES_LATE["cdc_document_pipeline"] = """
            CAST(sum(length(text)) AS BIGINT) AS total_chars
     FROM live GROUP BY source ORDER BY source
 """
-QUERIES_LATE["cdc_document_pipeline"] = cdc_document_pipeline_q
+QUERIES["cdc_document_pipeline"] = cdc_document_pipeline_q
 
 
 # --------------------------------------------------------------------------
@@ -585,7 +574,7 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["chunk_documents"] = f"""
+ORACLES["chunk_documents"] = f"""
     WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
                FROM documents),
     s AS (SELECT doc_id, w, len(w) AS n_words,
@@ -606,7 +595,7 @@ ORACLES_LATE["chunk_documents"] = f"""
            md5(array_to_string(toks, ' ')) AS chunk_md5
     FROM c ORDER BY doc_id, chunk_id
 """
-QUERIES_LATE["chunk_documents"] = chunk_documents_q
+QUERIES["chunk_documents"] = chunk_documents_q
 
 
 # --------------------------------------------------------------------------
@@ -681,7 +670,7 @@ def dsir_importance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["dsir_importance"] = f"""
+ORACLES["dsir_importance"] = f"""
     WITH w AS (
         SELECT doc_id, lang,
                CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)
@@ -709,4 +698,4 @@ ORACLES_LATE["dsir_importance"] = f"""
     GROUP BY doc_id
     ORDER BY weight_micro DESC, doc_id LIMIT {DSIR_TOP}
 """
-QUERIES_LATE["dsir_importance"] = dsir_importance_q
+QUERIES["dsir_importance"] = dsir_importance_q

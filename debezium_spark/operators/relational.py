@@ -180,8 +180,7 @@ def cube_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "cube_revenue": """
+ORACLES["cube_revenue"] = """
         SELECT l_returnflag, l_linestatus, count(*) AS n,
                CAST(grouping(l_returnflag) AS INT) AS g_flag,
                CAST(grouping(l_linestatus) AS INT) AS g_status,
@@ -190,9 +189,8 @@ ORACLES_LATE: dict[str, str] = {
         GROUP BY CUBE (l_returnflag, l_linestatus)
         ORDER BY g_flag, g_status,
                  l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-    """,
-}
-QUERIES_LATE = {"cube_revenue": cube_revenue_q}
+    """
+QUERIES["cube_revenue"] = cube_revenue_q
 
 
 # --------------------------------------------------------------------------
@@ -220,7 +218,7 @@ def grouping_sets_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["grouping_sets_revenue"] = """
+ORACLES["grouping_sets_revenue"] = """
     SELECT l_returnflag, l_linestatus, count(*) AS n,
            CAST(grouping(l_returnflag) AS INT) AS g_flag,
            CAST(grouping(l_linestatus) AS INT) AS g_status,
@@ -230,4 +228,4 @@ ORACLES_LATE["grouping_sets_revenue"] = """
     ORDER BY g_flag, g_status,
              l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """
-QUERIES_LATE["grouping_sets_revenue"] = grouping_sets_revenue_q
+QUERIES["grouping_sets_revenue"] = grouping_sets_revenue_q

@@ -412,10 +412,8 @@ _QDOT_SQL = (
     "(acc, x) -> acc + x)"
 )
 
-ORACLES_LATE: dict[str, str] = {}
-QUERIES_LATE: dict = {}
 
-ORACLES_LATE["ann_quantized_topk"] = f"""
+ORACLES["ann_quantized_topk"] = f"""
     WITH n AS (SELECT vec_id, embedding,
                       sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
                FROM embeddings),
@@ -438,7 +436,7 @@ ORACLES_LATE["ann_quantized_topk"] = f"""
     WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
 """
-QUERIES_LATE["ann_quantized_topk"] = ann_quantized_topk_q
+QUERIES["ann_quantized_topk"] = ann_quantized_topk_q
 
 
 def ann_ivf_quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,7 +492,7 @@ def ann_ivf_quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["ann_ivf_quantized_topk"] = f"""
+ORACLES["ann_ivf_quantized_topk"] = f"""
     WITH n AS (SELECT vec_id, embedding,
                       sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
                FROM embeddings),
@@ -535,4 +533,4 @@ ORACLES_LATE["ann_ivf_quantized_topk"] = f"""
     WHERE rank <= 5
     ORDER BY query_id, rank
 """
-QUERIES_LATE["ann_ivf_quantized_topk"] = ann_ivf_quantized_topk_q
+QUERIES["ann_ivf_quantized_topk"] = ann_ivf_quantized_topk_q

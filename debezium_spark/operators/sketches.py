@@ -55,7 +55,7 @@ def _h60(col: Column) -> Column:
 
 _HLL_M = 256  # 2^8 registers
 # alpha_m * m^2 * 2^53 assembled from the same literals in both
-# engines (see ORACLES_LATE) so the double arithmetic is bit-identical.
+# engines (see ORACLES) so the double arithmetic is bit-identical.
 
 def hll_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog cardinality of events.user_id with integer-exact
@@ -300,13 +300,13 @@ def weighted_priority_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE = {
+QUERIES = {
     "hll_distinct_users": hll_distinct_users_q,
     "bloom_decontaminate": bloom_decontaminate_q,
     "weighted_priority_sample": weighted_priority_sample_q,
 }
 
-ORACLES_LATE: dict[str, str] = {
+ORACLES: dict[str, str] = {
     "hll_distinct_users": f"""
         WITH hashed AS (
             SELECT CAST(('0x' || substr(md5('u' || CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
@@ -471,7 +471,7 @@ def zorder_cluster_events_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["zorder_cluster_events"] = """
+ORACLES["zorder_cluster_events"] = """
     WITH keyed AS (
         SELECT user_id % 65536 AS k1,
                least(CAST(floor(value * 10) AS BIGINT), 65535) AS k2
@@ -491,7 +491,7 @@ ORACLES_LATE["zorder_cluster_events"] = """
     FROM zed
     GROUP BY z_block ORDER BY z_block
 """
-QUERIES_LATE["zorder_cluster_events"] = zorder_cluster_events_q
+QUERIES["zorder_cluster_events"] = zorder_cluster_events_q
 
 
 # --------------------------------------------------------------------------
@@ -595,7 +595,7 @@ _CMS_CELL_SQL = (
     "|| CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) % {w}"
 )
 
-ORACLES_LATE["cms_heavy_hitters"] = f"""
+ORACLES["cms_heavy_hitters"] = f"""
     WITH hits AS (
         SELECT r, {_CMS_CELL_SQL.format(r='r', w=_CMS_W)} AS c
         FROM events CROSS JOIN (SELECT unnest(range({_CMS_D})) AS r)
@@ -621,7 +621,7 @@ ORACLES_LATE["cms_heavy_hitters"] = f"""
     WHERE rank <= {_CMS_TOP}
     ORDER BY rank
 """
-QUERIES_LATE["cms_heavy_hitters"] = cms_heavy_hitters_q
+QUERIES["cms_heavy_hitters"] = cms_heavy_hitters_q
 
 
 # --------------------------------------------------------------------------
@@ -718,7 +718,7 @@ def histogram_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "q_label")
 
 
-ORACLES_LATE["histogram_quantiles"] = f"""
+ORACLES["histogram_quantiles"] = f"""
     WITH stats AS (SELECT min(value) AS mn, max(value) AS mx FROM events),
     binned AS (
         SELECT event_type, mn, mx,
@@ -759,4 +759,4 @@ ORACLES_LATE["histogram_quantiles"] = f"""
     FROM hit WHERE rn = 1
     ORDER BY event_type, q_label
 """
-QUERIES_LATE["histogram_quantiles"] = histogram_quantiles_q
+QUERIES["histogram_quantiles"] = histogram_quantiles_q

@@ -285,7 +285,76 @@ def pii_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-ORACLES_LATE: dict[str, str] = {
+_STOP_EN = ",".join(f"'{w}'" for w in STOPWORDS["en"])
+
+ORACLES: dict[str, str] = {
+    "token_count": f"""
+        SELECT doc_id,
+               CAST(len({_sql_words()}) AS INT) AS n_words,
+               CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_subword_est,
+               CAST(length(text) AS INT) AS n_chars_actual
+        FROM documents ORDER BY doc_id
+    """,
+    "quality_score": f"""
+        WITH q AS (
+            SELECT doc_id,
+                   CAST(len(w) AS DOUBLE) AS n_words,
+                   CAST(len(list_filter(w, x -> x IN ({_STOP_EN}))) AS DOUBLE) AS stop_hits,
+                   CAST(length(text) AS DOUBLE) AS n_chars
+            FROM (SELECT doc_id, text, {_sql_words()} AS w FROM documents)
+        )
+        SELECT doc_id,
+               CAST(n_words AS INT) AS n_words,
+               round(stop_hits / n_words, 4) AS stopword_ratio,
+               round((n_chars - (n_words - 1)) / n_words, 4) AS mean_word_len,
+               round(0.5 * least(n_words / 200.0, 1.0)
+                     + 0.3 * (1.0 - stop_hits / n_words)
+                     + 0.2 * least(((n_chars - (n_words - 1)) / n_words) / 8.0, 1.0)
+                     + 1e-9, 4)
+                   AS quality_score
+        FROM q ORDER BY doc_id
+    """,
+    "language_id": """
+        WITH w AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS words
+                   FROM documents),
+        hits AS (
+            SELECT doc_id, lang,
+                   len(list_filter(words, x -> x IN ('the','a','of','and','to','in','is'))) AS h_en,
+                   len(list_filter(words, x -> x IN ('der','die','das','und','ist','ein'))) AS h_de,
+                   len(list_filter(words, x -> x IN ('le','la','les','et','est','un'))) AS h_fr,
+                   len(list_filter(words, x -> x IN ('el','la','los','y','es','un'))) AS h_es
+            FROM w),
+        pred AS (
+            SELECT doc_id, lang,
+                   CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'unk'
+                        WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
+                        WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
+                        WHEN h_es = greatest(h_en, h_de, h_fr, h_es) THEN 'es'
+                        ELSE 'fr' END AS pred_lang
+            FROM hits)
+        SELECT lang, count(*) AS n_docs,
+               CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
+               CAST(sum(CASE WHEN pred_lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_pred_en
+        FROM pred GROUP BY lang ORDER BY lang
+    """,
+    "fingerprint": f"""
+        WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+                   FROM documents),
+        terms AS (
+            SELECT doc_id,
+                   unnest(list_transform(range(1, len(w) + 1),
+                       i -> CAST(('0x' || substr(md5(w[i] || '#' ||
+                                 CAST(i - 1 AS VARCHAR)), 1, 15)) AS BIGINT)
+                            % {1 << _FP_TERM_BITS})) AS term
+            FROM t),
+        fp AS (SELECT doc_id,
+                      CAST(sum(term) % {_FP_MOD} AS BIGINT) AS rolling_hash
+               FROM terms GROUP BY doc_id)
+        SELECT d.doc_id,
+               md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g')) AS content_md5,
+               fp.rolling_hash
+        FROM documents d JOIN fp USING (doc_id) ORDER BY d.doc_id
+    """,
     "repetition_quality": f"""
         WITH w AS (
             SELECT doc_id, lower(unnest(t)) AS term
@@ -368,91 +437,15 @@ ORACLES_LATE: dict[str, str] = {
     """,
 }
 
-QUERIES_LATE = {
-    "vocab_doc_freq": vocab_doc_freq_q,
-    "bigram_counts": bigram_counts_q,
-    "repetition_quality": repetition_quality_q,
-    "pii_redact": pii_redact_q,
-}
-
-
-_STOP_EN = ",".join(f"'{w}'" for w in STOPWORDS["en"])
-
-ORACLES: dict[str, str] = {
-    "token_count": f"""
-        SELECT doc_id,
-               CAST(len({_sql_words()}) AS INT) AS n_words,
-               CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_subword_est,
-               CAST(length(text) AS INT) AS n_chars_actual
-        FROM documents ORDER BY doc_id
-    """,
-    "quality_score": f"""
-        WITH q AS (
-            SELECT doc_id,
-                   CAST(len(w) AS DOUBLE) AS n_words,
-                   CAST(len(list_filter(w, x -> x IN ({_STOP_EN}))) AS DOUBLE) AS stop_hits,
-                   CAST(length(text) AS DOUBLE) AS n_chars
-            FROM (SELECT doc_id, text, {_sql_words()} AS w FROM documents)
-        )
-        SELECT doc_id,
-               CAST(n_words AS INT) AS n_words,
-               round(stop_hits / n_words, 4) AS stopword_ratio,
-               round((n_chars - (n_words - 1)) / n_words, 4) AS mean_word_len,
-               round(0.5 * least(n_words / 200.0, 1.0)
-                     + 0.3 * (1.0 - stop_hits / n_words)
-                     + 0.2 * least(((n_chars - (n_words - 1)) / n_words) / 8.0, 1.0)
-                     + 1e-9, 4)
-                   AS quality_score
-        FROM q ORDER BY doc_id
-    """,
-    "language_id": """
-        WITH w AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS words
-                   FROM documents),
-        hits AS (
-            SELECT doc_id, lang,
-                   len(list_filter(words, x -> x IN ('the','a','of','and','to','in','is'))) AS h_en,
-                   len(list_filter(words, x -> x IN ('der','die','das','und','ist','ein'))) AS h_de,
-                   len(list_filter(words, x -> x IN ('le','la','les','et','est','un'))) AS h_fr,
-                   len(list_filter(words, x -> x IN ('el','la','los','y','es','un'))) AS h_es
-            FROM w),
-        pred AS (
-            SELECT doc_id, lang,
-                   CASE WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'unk'
-                        WHEN h_de = greatest(h_en, h_de, h_fr, h_es) THEN 'de'
-                        WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-                        WHEN h_es = greatest(h_en, h_de, h_fr, h_es) THEN 'es'
-                        ELSE 'fr' END AS pred_lang
-            FROM hits)
-        SELECT lang, count(*) AS n_docs,
-               CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-               CAST(sum(CASE WHEN pred_lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_pred_en
-        FROM pred GROUP BY lang ORDER BY lang
-    """,
-    "fingerprint": f"""
-        WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
-                   FROM documents),
-        terms AS (
-            SELECT doc_id,
-                   unnest(list_transform(range(1, len(w) + 1),
-                       i -> CAST(('0x' || substr(md5(w[i] || '#' ||
-                                 CAST(i - 1 AS VARCHAR)), 1, 15)) AS BIGINT)
-                            % {1 << _FP_TERM_BITS})) AS term
-            FROM t),
-        fp AS (SELECT doc_id,
-                      CAST(sum(term) % {_FP_MOD} AS BIGINT) AS rolling_hash
-               FROM terms GROUP BY doc_id)
-        SELECT d.doc_id,
-               md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g')) AS content_md5,
-               fp.rolling_hash
-        FROM documents d JOIN fp USING (doc_id) ORDER BY d.doc_id
-    """,
-}
-
 QUERIES = {
     "token_count": token_count_q,
     "quality_score": quality_score_q,
     "language_id": language_id_q,
     "fingerprint": fingerprint_q,
+    "vocab_doc_freq": vocab_doc_freq_q,
+    "bigram_counts": bigram_counts_q,
+    "repetition_quality": repetition_quality_q,
+    "pii_redact": pii_redact_q,
 }
 
 
@@ -508,7 +501,7 @@ def unigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["unigram_logprob"] = f"""
+ORACLES["unigram_logprob"] = f"""
     WITH words AS (
         SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
         FROM documents),
@@ -529,7 +522,7 @@ ORACLES_LATE["unigram_logprob"] = f"""
                BETWEEN {NLL_BAND_LO} AND {NLL_BAND_HI} AS keep
     FROM per_doc ORDER BY doc_id
 """
-QUERIES_LATE["unigram_logprob"] = unigram_logprob_q
+QUERIES["unigram_logprob"] = unigram_logprob_q
 
 
 # --------------------------------------------------------------------------
@@ -585,7 +578,7 @@ def tfidf_topterms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["tfidf_topterms"] = f"""
+ORACLES["tfidf_topterms"] = f"""
     WITH w AS (
         SELECT doc_id,
                lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
@@ -608,7 +601,7 @@ ORACLES_LATE["tfidf_topterms"] = f"""
     SELECT doc_id, CAST(rank AS INT) AS rank, term, tf, score_micro
     FROM r WHERE rank <= {TFIDF_TOP} ORDER BY doc_id, rank
 """
-QUERIES_LATE["tfidf_topterms"] = tfidf_topterms_q
+QUERIES["tfidf_topterms"] = tfidf_topterms_q
 
 
 # --------------------------------------------------------------------------
@@ -684,7 +677,7 @@ def gopher_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["gopher_rules"] = f"""
+ORACLES["gopher_rules"] = f"""
     WITH base AS (
         SELECT doc_id, source, {_sql_words()} AS ws, text FROM documents
     ),
@@ -722,7 +715,7 @@ ORACLES_LATE["gopher_rules"] = f"""
     FROM flags
     GROUP BY source ORDER BY source
 """
-QUERIES_LATE["gopher_rules"] = gopher_rules_q
+QUERIES["gopher_rules"] = gopher_rules_q
 
 
 # --------------------------------------------------------------------------
@@ -932,10 +925,10 @@ def _bpe_apply_oracle_sql(k: int) -> str:
     FROM seq{k} GROUP BY 1 ORDER BY n_tokens"""
 
 
-ORACLES_LATE["bpe_merges"] = _bpe_oracle_sql(BPE_MERGES)
-QUERIES_LATE["bpe_merges"] = bpe_merges_q
-ORACLES_LATE["bpe_tokenize_apply"] = _bpe_apply_oracle_sql(BPE_MERGES)
-QUERIES_LATE["bpe_tokenize_apply"] = bpe_tokenize_apply_q
+ORACLES["bpe_merges"] = _bpe_oracle_sql(BPE_MERGES)
+QUERIES["bpe_merges"] = bpe_merges_q
+ORACLES["bpe_tokenize_apply"] = _bpe_apply_oracle_sql(BPE_MERGES)
+QUERIES["bpe_tokenize_apply"] = bpe_tokenize_apply_q
 
 
 # --------------------------------------------------------------------------
@@ -1009,7 +1002,7 @@ def bigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["bigram_logprob"] = f"""
+ORACLES["bigram_logprob"] = f"""
     WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
                FROM documents),
     words AS (SELECT doc_id, unnest(ws) AS w1 FROM t),
@@ -1045,4 +1038,4 @@ ORACLES_LATE["bigram_logprob"] = f"""
                BETWEEN {BIGRAM_NLL_LO} AND {BIGRAM_NLL_HI} AS keep
     FROM per_doc ORDER BY doc_id
 """
-QUERIES_LATE["bigram_logprob"] = bigram_logprob_q
+QUERIES["bigram_logprob"] = bigram_logprob_q

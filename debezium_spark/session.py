@@ -29,9 +29,13 @@ def get_spark(
     - AQE on: runtime coalescing of small shuffle partitions and
       skew-join splitting — the scale path for hot CDC keys.
     - Arrow on: every Pandas-UDF boundary is Arrow-batched.
+    - Sized to the host: `cores` defaults to the CPUs this process may
+      run on and `spark.driver.memory` to half of physical RAM
+      (SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override both).
     """
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cores = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    half_ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(max(int(cores), 8))))
 
@@ -45,7 +49,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{half_ram_mb}m"),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # RAM-backed shuffle/spill: the sandbox's shared disk is the

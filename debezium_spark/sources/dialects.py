@@ -285,7 +285,7 @@ def ibmi_journal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL as _CDC_FLAT_SQL  # noqa: E402
 
-ORACLES_LATE: dict[str, str] = {
+ORACLES: dict[str, str] = {
     "ibmi_journal_roundtrip": _CDC_FLAT_SQL
     + """
         SELECT op, count(*) AS n_events,
@@ -297,7 +297,7 @@ ORACLES_LATE: dict[str, str] = {
     """,
 }
 
-QUERIES_LATE = {
+QUERIES = {
     "ibmi_journal_roundtrip": ibmi_journal_roundtrip_q,
 }
 
@@ -340,7 +340,7 @@ def mysql_binlog_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mysql_binlog_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["mysql_binlog_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events,
            min((seq // 100000) * 10000000000 + seq % 100000) AS min_seq,
            max((seq // 100000) * 10000000000 + seq % 100000) AS max_seq,
@@ -348,7 +348,7 @@ ORACLES_LATE["mysql_binlog_roundtrip"] = _CDC_FLAT_SQL + """
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
 """
-QUERIES_LATE["mysql_binlog_roundtrip"] = mysql_binlog_roundtrip_q
+QUERIES["mysql_binlog_roundtrip"] = mysql_binlog_roundtrip_q
 
 
 def mongo_change_stream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -389,14 +389,14 @@ def mongo_change_stream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mongo_change_stream_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["mongo_change_stream_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events, min(seq) AS min_seq,
            max(seq) AS max_seq,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
 """
-QUERIES_LATE["mongo_change_stream_roundtrip"] = mongo_change_stream_roundtrip_q
+QUERIES["mongo_change_stream_roundtrip"] = mongo_change_stream_roundtrip_q
 
 
 def cassandra_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -429,7 +429,7 @@ def cassandra_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["cassandra_cdc_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["cassandra_cdc_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT CASE WHEN op = 'd' THEN 'd' ELSE 'u' END AS op,
            count(*) AS n_events, count(DISTINCT key) AS n_keys,
            max(seq * 1000) AS max_writetime_us,
@@ -437,7 +437,7 @@ ORACLES_LATE["cassandra_cdc_roundtrip"] = _CDC_FLAT_SQL + """
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY 1 ORDER BY op
 """
-QUERIES_LATE["cassandra_cdc_roundtrip"] = cassandra_cdc_roundtrip_q
+QUERIES["cassandra_cdc_roundtrip"] = cassandra_cdc_roundtrip_q
 
 
 def pg_wal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -475,14 +475,14 @@ def pg_wal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pg_wal_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["pg_wal_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events, min(seq) AS min_lsn,
            max(seq) AS max_lsn,
            CAST(sum(CAST(round(before_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_before_cents
     FROM cdc GROUP BY op ORDER BY op
 """
-QUERIES_LATE["pg_wal_roundtrip"] = pg_wal_roundtrip_q
+QUERIES["pg_wal_roundtrip"] = pg_wal_roundtrip_q
 
 
 def spanner_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -523,14 +523,14 @@ def spanner_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["spanner_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["spanner_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events,
            max(ts_ms * 1000 + seq % 1000) AS max_seq,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
 """
-QUERIES_LATE["spanner_roundtrip"] = spanner_roundtrip_q
+QUERIES["spanner_roundtrip"] = spanner_roundtrip_q
 
 
 def oracle_logminer_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -573,14 +573,14 @@ def oracle_logminer_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["oracle_logminer_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["oracle_logminer_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events, min(seq) AS min_scn,
            max(seq) AS max_scn,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
 """
-QUERIES_LATE["oracle_logminer_roundtrip"] = oracle_logminer_roundtrip_q
+QUERIES["oracle_logminer_roundtrip"] = oracle_logminer_roundtrip_q
 
 
 def vitess_vstream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
@@ -618,14 +618,14 @@ def vitess_vstream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["vitess_vstream_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["vitess_vstream_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT 'commerce' AS keyspace,
            '-' || CAST(key % 4 AS VARCHAR) AS shard, op,
            count(*) AS n_events,
            max((key % 4) * 10000000000 + seq) AS max_seq
     FROM cdc GROUP BY 1, 2, 3 ORDER BY shard, op
 """
-QUERIES_LATE["vitess_vstream_roundtrip"] = vitess_vstream_roundtrip_q
+QUERIES["vitess_vstream_roundtrip"] = vitess_vstream_roundtrip_q
 
 
 # --------------------------------------------------------------------------
@@ -714,7 +714,7 @@ def sqlserver_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["sqlserver_cdc_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["sqlserver_cdc_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events, min(seq) AS min_lsn,
            max(seq) AS max_lsn,
            CAST(sum(CAST(round(before_totalprice * 100 + 1e-9) AS BIGINT))
@@ -723,7 +723,7 @@ ORACLES_LATE["sqlserver_cdc_roundtrip"] = _CDC_FLAT_SQL + """
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
 """
-QUERIES_LATE["sqlserver_cdc_roundtrip"] = sqlserver_cdc_roundtrip_q
+QUERIES["sqlserver_cdc_roundtrip"] = sqlserver_cdc_roundtrip_q
 
 
 # --------------------------------------------------------------------------
@@ -796,7 +796,7 @@ def db2_cd_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["db2_cd_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["db2_cd_roundtrip"] = _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events,
            min((seq // 100000) * 100000 + seq % 100000) AS min_seq,
            max((seq // 100000) * 100000 + seq % 100000) AS max_seq,
@@ -806,7 +806,7 @@ ORACLES_LATE["db2_cd_roundtrip"] = _CDC_FLAT_SQL + """
                 AS BIGINT) AS sum_after_cents
     FROM cdc GROUP BY op ORDER BY op
 """
-QUERIES_LATE["db2_cd_roundtrip"] = db2_cd_roundtrip_q
+QUERIES["db2_cd_roundtrip"] = db2_cd_roundtrip_q
 
 
 # --------------------------------------------------------------------------
@@ -912,7 +912,7 @@ def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["ibmi_commitment_control"] = _CDC_FLAT_SQL + """
+ORACLES["ibmi_commitment_control"] = _CDC_FLAT_SQL + """
     SELECT op, count(*) AS n_events,
            count(DISTINCT seq // 100) AS n_cycles,
            CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
@@ -921,4 +921,4 @@ ORACLES_LATE["ibmi_commitment_control"] = _CDC_FLAT_SQL + """
     WHERE (seq // 100) % 7 <> 3 AND (seq // 100) % 11 <> 5
     GROUP BY op ORDER BY op
 """
-QUERIES_LATE["ibmi_commitment_control"] = ibmi_commitment_control_q
+QUERIES["ibmi_commitment_control"] = ibmi_commitment_control_q

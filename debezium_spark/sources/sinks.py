@@ -274,5 +274,5 @@ BUCKETED_JOIN_ORACLE = """
     GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment
 """
 
-QUERIES_LATE = {"bucketed_join_agg": bucketed_join_agg_q}
-ORACLES_LATE = {"bucketed_join_agg": BUCKETED_JOIN_ORACLE}
+QUERIES = {"bucketed_join_agg": bucketed_join_agg_q}
+ORACLES = {"bucketed_join_agg": BUCKETED_JOIN_ORACLE}

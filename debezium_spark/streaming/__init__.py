@@ -1,6 +1,1 @@
-from debezium_spark.streaming.ingest import (  # noqa: F401
-    ORACLES,
-    ORACLES_LATE,
-    QUERIES,
-    QUERIES_LATE,
-)
+from debezium_spark.streaming.ingest import ORACLES, QUERIES  # noqa: F401

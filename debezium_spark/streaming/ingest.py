@@ -38,6 +38,7 @@ from pyspark.sql.types import StructType
 
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
 from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES
+from debezium_spark.cdc.materialize import latest_state
 from debezium_spark.sources.tables import load_table
 
 
@@ -141,6 +142,27 @@ ORACLES: dict[str, str] = {
         FROM events GROUP BY window_start, event_type
         ORDER BY window_start, event_type
     """,
+    "stream_sessionize": """
+        WITH flags AS (
+            SELECT user_id, ts, event_id,
+                   CASE WHEN lag(ts) OVER w IS NULL
+                          OR epoch(ts) - epoch(lag(ts) OVER w) >= 1800
+                        THEN 1 ELSE 0 END AS new_sess
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        ), sess AS (
+            SELECT user_id, ts,
+                   sum(new_sess) OVER (PARTITION BY user_id
+                                       ORDER BY ts, event_id
+                                       ROWS UNBOUNDED PRECEDING) AS sid
+            FROM flags
+        )
+        SELECT user_id,
+               strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+               count(*) AS n_events
+        FROM sess GROUP BY user_id, sid
+        ORDER BY user_id, session_start
+    """,
 }
 
 QUERIES = {
@@ -165,33 +187,7 @@ def stream_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_start")
 
 
-ORACLES_LATE: dict[str, str] = {
-    "stream_sessionize": """
-        WITH flags AS (
-            SELECT user_id, ts, event_id,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                          OR epoch(ts) - epoch(lag(ts) OVER w) >= 1800
-                        THEN 1 ELSE 0 END AS new_sess
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, ts,
-                   sum(new_sess) OVER (PARTITION BY user_id
-                                       ORDER BY ts, event_id
-                                       ROWS UNBOUNDED PRECEDING) AS sid
-            FROM flags
-        )
-        SELECT user_id,
-               strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-               count(*) AS n_events
-        FROM sess GROUP BY user_id, sid
-        ORDER BY user_id, session_start
-    """,
-}
-
-QUERIES_LATE = {
-    "stream_sessionize": stream_sessionize_q,
-}
+QUERIES["stream_sessionize"] = stream_sessionize_q
 
 
 def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,7 +267,7 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-ORACLES_LATE["stream_stream_join"] = """
+ORACLES["stream_stream_join"] = """
     WITH v AS (SELECT user_id, ts, event_id FROM events
                WHERE event_type = 'view'),
     p AS (SELECT user_id, ts, value FROM events
@@ -288,7 +284,7 @@ ORACLES_LATE["stream_stream_join"] = """
                AS purchase_cents
     FROM j GROUP BY 1 ORDER BY view_hour
 """
-QUERIES_LATE["stream_stream_join"] = stream_stream_join_q
+QUERIES["stream_stream_join"] = stream_stream_join_q
 
 
 def stream_stateful_running_counts_q(
@@ -337,13 +333,13 @@ def stream_stateful_running_counts_q(
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-ORACLES_LATE["stream_stateful_running_counts"] = """
+ORACLES["stream_stateful_running_counts"] = """
     SELECT user_id, count(*) AS n_events,
            CAST(sum(CAST(round(value * 100 + 1e-9) AS BIGINT)) AS BIGINT)
                AS total_cents
     FROM events GROUP BY user_id ORDER BY user_id
 """
-QUERIES_LATE["stream_stateful_running_counts"] = (
+QUERIES["stream_stateful_running_counts"] = (
     stream_stateful_running_counts_q
 )
 
@@ -392,7 +388,7 @@ def stream_dedup_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-ORACLES_LATE["stream_dedup_documents"] = """
+ORACLES["stream_dedup_documents"] = """
     WITH u AS (
         SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
                                            'g')) AS content_md5
@@ -402,7 +398,7 @@ ORACLES_LATE["stream_dedup_documents"] = """
                     % 1000000007) AS BIGINT) AS content_hash_sum
     FROM u
 """
-QUERIES_LATE["stream_dedup_documents"] = stream_dedup_documents_q
+QUERIES["stream_dedup_documents"] = stream_dedup_documents_q
 
 
 def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -447,14 +443,14 @@ def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-ORACLES_LATE["stream_static_enrich"] = """
+ORACLES["stream_static_enrich"] = """
     SELECT c.c_mktsegment, e.event_type, count(*) AS n,
            CAST(sum(CAST(round(e.value * 100 + 1e-9) AS BIGINT))
                 AS BIGINT) AS value_cents
     FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY 1, 2 ORDER BY c_mktsegment, event_type
 """
-QUERIES_LATE["stream_static_enrich"] = stream_static_enrich_q
+QUERIES["stream_static_enrich"] = stream_static_enrich_q
 
 
 def stream_sliding_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -496,7 +492,7 @@ def stream_sliding_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(out.collect(), out.schema)
 
 
-ORACLES_LATE["stream_sliding_counts"] = """
+ORACLES["stream_sliding_counts"] = """
     WITH exploded AS (
         SELECT unnest([
                    make_timestamp((epoch_us(ts) // 3600000000) * 3600000000),
@@ -512,7 +508,7 @@ ORACLES_LATE["stream_sliding_counts"] = """
     GROUP BY w_start, event_type
     ORDER BY window_start, event_type
 """
-QUERIES_LATE["stream_sliding_counts"] = stream_sliding_counts_q
+QUERIES["stream_sliding_counts"] = stream_sliding_counts_q
 
 
 # --------------------------------------------------------------------------
@@ -612,12 +608,7 @@ def _manifest_merge_batch(
                 *[os.path.join(state_root, "data", d) for d in prev_dirs]
             ).filter(F.col("bucket").isin(touched))
             snap = prev.unionByName(b)
-        w = Window.partitionBy(key).orderBy(F.desc(seq))
-        latest = (
-            snap.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = latest_state(snap, key, seq, keep_tombstones=True)
         epoch_dir = f"e{epoch_id}"
         latest.write.mode("overwrite").parquet(
             os.path.join(state_root, "data", epoch_dir)
@@ -782,5 +773,5 @@ def manifest_commit_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle — streaming replay must converge to the same materialization
 ORACLES["stream_cdc_latest_state"] = _MAT_ORACLES["cdc_latest_state"]
 QUERIES["stream_cdc_latest_state"] = stream_cdc_latest_state_q
-ORACLES_LATE["manifest_commit_state"] = _MAT_ORACLES["cdc_latest_state"]
-QUERIES_LATE["manifest_commit_state"] = manifest_commit_state_q
+ORACLES["manifest_commit_state"] = _MAT_ORACLES["cdc_latest_state"]
+QUERIES["manifest_commit_state"] = manifest_commit_state_q

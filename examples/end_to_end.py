@@ -39,7 +39,7 @@ from debezium_spark.sources.sinks import envelope_to_json, sink_to_topics
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("end-to-end-demo", cores=8)
+    spark = get_spark("end-to-end-demo")
 
     # 1-2. journal in, envelope out
     journal = to_ibmi_journal(

@@ -11,7 +11,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
 
 

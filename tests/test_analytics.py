@@ -66,6 +66,42 @@ def test_sessionize_counts(spark, sf_dir):
     assert bad.count() == 0
 
 
+def test_sessionize_sub_second_gap_splits(spark, tmp_path):
+    """A 1800.5 s gap exceeds the 30-minute session gap: two sessions,
+    in Spark and in the DuckDB oracle alike."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from debezium_spark.operators.analytics import ORACLES
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    events = pa.table(
+        {
+            "event_id": pa.array([0, 1], pa.int64()),
+            "ts": pa.array(
+                [t0, t0 + dt.timedelta(seconds=1800.5)], pa.timestamp("us")
+            ),
+            "user_id": pa.array([7, 7], pa.int64()),
+            "event_type": ["view", "view"],
+            "value": [1.0, 2.0],
+            "props": ['{"k": 0}', '{"k": 1}'],
+        }
+    )
+    pq.write_table(events, tmp_path / "events.parquet")
+
+    got = [tuple(r) for r in sessionize_events(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    want = con.execute(ORACLES["sessionize_events"]).fetchall()
+    assert got == [(7, 2, 2)]
+    assert got == want
+
+
 def test_asof_only_past_orders(spark, sf_dir):
     out = asof_purchase_order(spark, sf_dir)
     e = load_table(spark, sf_dir, "events").select("event_id", "ts")

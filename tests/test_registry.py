@@ -1,0 +1,31 @@
+"""The `__spark_entry__` registry: every module's QUERIES/ORACLES
+dicts, unioned. Builds no plans."""
+
+import __spark_entry__ as entry
+
+
+def test_every_query_has_an_oracle():
+    names = set(entry.queries())
+    assert names == set(entry.oracle_sql())
+    assert len(names) == 164
+
+
+def test_no_name_shadows_another():
+    # dict.update would silently drop a duplicate name
+    assert sum(len(m.QUERIES) for m in entry._QUERY_MODULES) == len(
+        entry.queries()
+    )
+    assert sum(len(m.ORACLES) for m in entry._QUERY_MODULES) == len(
+        entry.oracle_sql()
+    )
+
+
+def test_modules_register_in_one_dict_pair():
+    # no second-tier registry dicts (QUERIES_*/ORACLES_* such as the
+    # former late-registration pair) beside QUERIES/ORACLES
+    for mod in entry._QUERY_MODULES:
+        extra = [
+            n for n in vars(mod)
+            if n.startswith(("QUERIES_", "ORACLES_"))
+        ]
+        assert extra == [], (mod.__name__, extra)
