@@ -176,16 +176,6 @@ def _hashed_shingle_rows(
     return out.withColumn("h32", F.pmod(F.col("h"), F.lit(2 ** 32)))
 
 
-def _hashed_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Per-doc packed shingle-hash sets (array column) built from the
-    codegen'd row form."""
-    return (
-        _hashed_shingle_rows(docs, n)
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("sh_set"))
-    )
-
-
 def _minhash_agg_exprs() -> list:
     consts_a, consts_b = _affine_constants()
     return [

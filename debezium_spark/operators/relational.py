@@ -201,20 +201,19 @@ QUERIES["cube_revenue"] = cube_revenue_q
 # exchange, identical plan shape to rollup/cube.
 # --------------------------------------------------------------------------
 def grouping_sets_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "gs_lineitem"
-    )
+    # a DataFrame argument gets a temp view that spark.sql drops on return
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, count(1) AS n,
                CAST(grouping(l_returnflag) AS INT) AS g_flag,
                CAST(grouping(l_linestatus) AS INT) AS g_status,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM gs_lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         ORDER BY g_flag, g_status,
                  l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

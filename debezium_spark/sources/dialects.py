@@ -25,6 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from debezium_spark.cdc.envelope import CDC_FLAT_SQL as _CDC_FLAT_SQL
+from debezium_spark.cdc.envelope import synthesize_cdc_flat
+
 IBMI_OP_MAP = {"PT": "c", "PX": "c", "UP": "u", "DL": "d", "DR": "d"}
 
 
@@ -233,8 +236,6 @@ def ibmi_journal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     normalizer must drop the UB and control rows and recover exactly
     the original stream, so the oracle is the plain synthesized stream
     aggregated per op (prices in integer cents for bit-exact sums)."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     entt = (
         F.when(F.col("op") == "c", "PT")
@@ -283,8 +284,6 @@ def ibmi_journal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-from debezium_spark.cdc.envelope import CDC_FLAT_SQL as _CDC_FLAT_SQL  # noqa: E402
-
 ORACLES: dict[str, str] = {
     "ibmi_journal_roundtrip": _CDC_FLAT_SQL
     + """
@@ -308,8 +307,6 @@ def mysql_binlog_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     (file_seq = seq div 100000, pos = seq mod 100000) and normalized
     back; the flattened global order (file_seq·10^10 + pos) must
     reproduce the oracle's identical arithmetic."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     event_type = (
         F.when(F.col("op") == "c", "WRITE_ROWS")
@@ -357,8 +354,6 @@ def mongo_change_stream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     (operationType + JSON documentKey/fullDocument + clusterTime) and
     normalized back. Exercises the JSON extraction path; Mongo has no
     before image, so only after-side values round-trip."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     op_type = (
         F.when(F.col("op") == "c", "insert")
@@ -405,8 +400,6 @@ def cassandra_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     writetime. Cassandra has no c-vs-u distinction, so creates and
     updates both normalize to 'u' — the oracle folds the op space the
     same way."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     cc = cdc.select(
         F.col("key").alias("partition_key"),
@@ -444,8 +437,6 @@ def pg_wal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     """Postgres logical-decoding normalizer under the external gate:
     action I/U/D rows ordered by LSN, normalized back to the canonical
     envelope."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     action = (
         F.when(F.col("op") == "c", "I")
@@ -489,8 +480,6 @@ def spanner_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     """Spanner change-record normalizer under the external gate:
     mod_type + (commit_timestamp, record_sequence) total order +
     JSON old/new_values images."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     mod = (
         F.when(F.col("op") == "c", "INSERT")
@@ -538,8 +527,6 @@ def oracle_logminer_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     rows plus ROLLBACK=1 compensation rows for every update — the
     normalizer must drop the compensations (Debezium does the same),
     so the oracle sees only the original stream."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     operation = (
         F.when(F.col("op") == "c", "INSERT")
@@ -587,8 +574,6 @@ def vitess_vstream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     """VStream normalizer under the external gate: row events sharded
     by key (4 shards), global order = (shard_order, gtid_seq); the
     keyspace/shard origin columns survive normalization."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     event_type = (
         F.when(F.col("op") == "c", "WRITE_ROWS")
@@ -676,8 +661,6 @@ def sqlserver_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     stream re-encoded as change-table rows (updates split into 3/4
     before/after pairs), folded back, and aggregated — must reproduce
     the original stream exactly."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
 
     def rowset(ops, opcode, val_col, seqval):
@@ -761,8 +744,6 @@ def db2_cd_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     stream re-encoded as CD rows (two-level COMMITSEQ/INTENTSEQ order,
     X-prefixed before images) and normalized back; per-op aggregates
     must reproduce the original stream exactly."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     opc = (
         F.when(F.col("op") == "c", "I")
@@ -861,8 +842,6 @@ def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
     NO control entry (unterminated — held back), the rest get CM.
     The normalizer's per-op output must equal the oracle's closed-form
     filter of the original stream."""
-    from debezium_spark.cdc.envelope import synthesize_cdc_flat
-
     cdc = synthesize_cdc_flat(spark, sf_dir)
     ccid = F.floor(F.col("seq") / 100).cast("long")
     entt = (

@@ -9,11 +9,12 @@ an atomic manifest commit, so replays, crashes between write and
 commit, out-of-order batches and compaction all converge to the same
 state.
 
-The driver-gated wrappers replay the stream to completion with
-`processAllAvailable()` so results are deterministic and comparable to
-the batch oracles — streaming latest-state must equal batch
-latest-state (tested), which is the Debezium at-least-once + idempotent
--consumer contract.
+The oracle-gated stream entries replay a staged topic to completion
+through one gate-only runner, `_replay` (memory sink, batch finish,
+local result), so results are deterministic and comparable to the
+batch oracles — streaming latest-state must equal batch latest-state
+(tested), which is the Debezium at-least-once + idempotent-consumer
+contract.
 
 At scale: a batch reads and rewrites only the state buckets its keys
 hash to; maxFilesPerTrigger bounds per-batch volume.
@@ -29,10 +30,11 @@ import re
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.errors import StreamingQueryException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -40,17 +42,6 @@ from debezium_spark.cdc.envelope import synthesize_cdc_flat
 from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES
 from debezium_spark.cdc.materialize import latest_state
 from debezium_spark.sources.tables import load_table
-
-
-def stage_stream_dir(spark: SparkSession, sf_dir: str, table: str,
-                     workdir: str, n_files: int = 4) -> str:
-    """The file streaming source needs a directory of files (the
-    'topic'); stage the single-parquet table into one."""
-    out = os.path.join(workdir, table)
-    load_table(spark, sf_dir, table).repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(out)
-    return out
 
 
 def _file_stream(spark: SparkSession, topic_dir: str) -> DataFrame:
@@ -63,39 +54,71 @@ def _file_stream(spark: SparkSession, topic_dir: str) -> DataFrame:
     )
 
 
-def read_event_stream(spark: SparkSession, sf_dir: str, workdir: str) -> DataFrame:
-    """File-source stream over the events table (stand-in for Kafka)."""
-    return _file_stream(spark, stage_stream_dir(spark, sf_dir, "events", workdir))
+def _replay(
+    stream: DataFrame, mode: str, finish: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Gate-only: run `stream` to completion into a memory sink in
+    output `mode`, apply the batch `finish` to the sink's rows and
+    return them as a local DataFrame; the sink's view is dropped on
+    the way out. Every row passes through the driver, so this serves
+    the bounded oracle replays only — the manifest sink is the
+    production route."""
+    spark = stream.sparkSession
+    name = f"replay_{uuid.uuid4().hex[:8]}"
+    q = stream.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+        q.stop()  # the sink keeps its rows; stop is idempotent
+        out = finish(spark.table(name))
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
+
+
+def _replay_topic(
+    spark: SparkSession, sf_dir: str, build: Callable[[DataFrame], DataFrame],
+    mode: str, finish: Callable[[DataFrame], DataFrame],
+    table: str = "events", parts: tuple[int, ...] = (4,),
+) -> DataFrame:
+    """Stage `table` as a file 'topic' in a temporary directory (one
+    copy per entry of `parts`, split into that many files) and
+    `_replay` the stream `build` makes of it."""
+    with tempfile.TemporaryDirectory(prefix="topic_") as workdir:
+        topic = os.path.join(workdir, table)
+        rows = load_table(spark, sf_dir, table)
+        for n in parts:
+            rows.repartition(n).write.mode("append").parquet(topic)
+        return _replay(build(_file_stream(spark, topic)), mode, finish)
+
+
+def _window_counts(
+    spark: SparkSession, sf_dir: str, window: Column, watermark: str | None
+) -> DataFrame:
+    """Complete-mode (event-time window, event_type) counts and sums."""
+
+    def build(events: DataFrame) -> DataFrame:
+        events = events.withColumn("ts", F.col("ts").cast("timestamp"))
+        if watermark is not None:
+            events = events.withWatermark("ts", watermark)
+        return events.groupBy(window.alias("w"), "event_type").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+
+    def finish(rows: DataFrame) -> DataFrame:
+        return rows.select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type", "n", "total_value",
+        ).orderBy("window_start", "event_type")
+
+    return _replay_topic(spark, sf_dir, build, "complete", finish)
 
 
 def stream_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-hour aggregation, replayed to completion
     through a memory sink. Deterministic → oracle-checkable."""
-    workdir = tempfile.mkdtemp(prefix="evt_stream_")
-    events = read_event_stream(spark, sf_dir, workdir)
-    agg = (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-    )
-    name = f"win_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
-    out = spark.sql(
-        f"""SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS window_start,
-                   event_type, n, total_value FROM {name}"""
-    ).orderBy("window_start", "event_type")
-    return spark.createDataFrame(out.collect(), out.schema)
+    return _window_counts(spark, sf_dir, F.window("ts", "1 hour"), "1 hour")
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str,
@@ -104,33 +127,24 @@ def stream_session_windows(spark: SparkSession, sf_dir: str,
     session) event counts with a 30-minute inactivity gap — the
     streaming twin of analytics.sessionize_events (equivalence is
     tested)."""
-    workdir = tempfile.mkdtemp(prefix="sess_stream_")
-    events = read_event_stream(spark, sf_dir, workdir)
+
     # no watermark: the replayed 'topic' files arrive in arbitrary
     # order, so a watermark would drop whole files as late. Complete
     # mode keeps all session state. A production unbounded stream
     # (ordered source) adds .withWatermark to bound state.
-    agg = (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
+    def build(events: DataFrame) -> DataFrame:
+        return (
+            events.withColumn("ts", F.col("ts").cast("timestamp"))
+            .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+        )
+
+    return _replay_topic(
+        spark, sf_dir, build, "complete",
+        lambda rows: rows.select(
+            "user_id", F.col("sw.start").alias("session_start"), "n_events"
+        ),
     )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
-    out = spark.sql(
-        f"SELECT user_id, sw.start AS session_start, n_events FROM {name}"
-    )
-    return spark.createDataFrame(out.collect(), out.schema)
 
 
 ORACLES: dict[str, str] = {
@@ -206,12 +220,11 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     late. A live deployment ingesting near-real-time would use the
     tight production delay (minutes–hours); the 1-hour join range
     bound is what sizes the state either way."""
-    workdir = tempfile.mkdtemp(prefix="ssj_stream_")
-    try:
+
+    def build(events: DataFrame) -> DataFrame:
+        events = events.withColumn("ts", F.col("ts").cast("timestamp"))
         views = (
-            read_event_stream(spark, sf_dir, workdir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == "view")
+            events.filter(F.col("event_type") == "view")
             .select(
                 F.col("user_id").alias("v_user"),
                 F.col("ts").alias("v_ts"),
@@ -220,9 +233,7 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withWatermark("v_ts", "31 days")
         )
         purchases = (
-            read_event_stream(spark, sf_dir, workdir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == "purchase")
+            events.filter(F.col("event_type") == "purchase")
             .select(
                 F.col("user_id").alias("p_user"),
                 F.col("ts").alias("p_ts"),
@@ -230,27 +241,17 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withWatermark("p_ts", "31 days")
         )
-        joined = views.join(
+        return views.join(
             purchases,
             (F.col("v_user") == F.col("p_user"))
             & (F.col("p_ts") >= F.col("v_ts"))
             & (F.col("p_ts") <= F.col("v_ts") + F.expr("interval 1 hour")),
             "inner",
         )
-        name = f"ssj_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = (
-            spark.table(name)
-            .groupBy(F.date_format(
+
+    def finish(pairs: DataFrame) -> DataFrame:
+        return (
+            pairs.groupBy(F.date_format(
                 F.date_trunc("hour", F.col("v_ts")),
                 "yyyy-MM-dd HH:mm:ss").alias("view_hour"))
             .agg(
@@ -262,9 +263,8 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("view_hour")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    return _replay_topic(spark, sf_dir, build, "append", finish)
 
 
 ORACLES["stream_stream_join"] = """
@@ -298,28 +298,16 @@ def stream_stateful_running_counts_q(
     bit-exact and oracle-comparable."""
     from debezium_spark.streaming.state import running_user_counts
 
-    workdir = tempfile.mkdtemp(prefix="state_stream_")
-    try:
-        ev = read_event_stream(spark, sf_dir, workdir).withColumn(
+    def build(events: DataFrame) -> DataFrame:
+        return running_user_counts(events.withColumn(
             "value",
             F.round(F.col("value") * 100 + 1e-9).cast("double"),
-        )
-        name = f"st_{uuid.uuid4().hex[:8]}"
-        q = (
-            running_user_counts(ev)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        ))
+
+    def finish(updates: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-        out = (
-            spark.table(name)
-            .withColumn("__rn", F.row_number().over(w))
+        return (
+            updates.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select(
                 "user_id",
@@ -328,9 +316,8 @@ def stream_stateful_running_counts_q(
             )
             .orderBy("user_id")
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    return _replay_topic(spark, sf_dir, build, "update", finish)
 
 
 ORACLES["stream_stateful_running_counts"] = """
@@ -339,9 +326,7 @@ ORACLES["stream_stateful_running_counts"] = """
                AS total_cents
     FROM events GROUP BY user_id ORDER BY user_id
 """
-QUERIES["stream_stateful_running_counts"] = (
-    stream_stateful_running_counts_q
-)
+QUERIES["stream_stateful_running_counts"] = stream_stateful_running_counts_q
 
 
 def stream_dedup_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,38 +339,24 @@ def stream_dedup_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     not. Production streams bound the state with
     dropDuplicatesWithinWatermark; the bounded replay keeps full state
     on purpose."""
-    workdir = tempfile.mkdtemp(prefix="dedup_stream_")
-    try:
-        topic = os.path.join(workdir, "documents")
-        docs = load_table(spark, sf_dir, "documents")
-        docs.repartition(4).write.mode("overwrite").parquet(topic)
-        docs.repartition(3).write.mode("append").parquet(topic)
-        stream = _file_stream(spark, topic)
+
+    def build(docs: DataFrame) -> DataFrame:
         norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-        deduped = stream.select(
+        return docs.select(
             F.md5(norm).alias("content_md5")
         ).dropDuplicates(["content_md5"])
-        name = f"dd_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.table(name).agg(
+
+    def finish(unique: DataFrame) -> DataFrame:
+        return unique.agg(
             F.count(F.lit(1)).alias("n_unique"),
             F.sum(
                 F.conv(F.substring("content_md5", 1, 15), 16, 10)
                 .cast("long") % 1000000007
             ).alias("content_hash_sum"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    return _replay_topic(spark, sf_dir, build, "append", finish,
+                         table="documents", parts=(4, 3))
 
 
 ORACLES["stream_dedup_documents"] = """
@@ -412,35 +383,23 @@ def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day topic against a dimension that fits in executor memory.
     Aggregation runs in complete mode over the enriched stream;
     money sums in integer cents (bit-exact gate)."""
-    workdir = tempfile.mkdtemp(prefix="enrich_stream_")
-    try:
-        events = read_event_stream(spark, sf_dir, workdir)
-        dim = load_table(spark, sf_dir, "customer").select(
-            F.col("c_custkey").alias("user_id"),
-            "c_mktsegment",
-        )
+    dim = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("user_id"), "c_mktsegment"
+    )
+
+    def build(events: DataFrame) -> DataFrame:
         enriched = events.join(F.broadcast(dim), "user_id", "left")
-        agg = enriched.groupBy("c_mktsegment", "event_type").agg(
+        return enriched.groupBy("c_mktsegment", "event_type").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
                 F.round(F.col("value") * 100 + 1e-9).cast("long")
             ).alias("value_cents"),
         )
-        name = f"enr_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        out = spark.table(name).orderBy("c_mktsegment", "event_type")
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+
+    return _replay_topic(
+        spark, sf_dir, build, "complete",
+        lambda rows: rows.orderBy("c_mktsegment", "event_type"),
+    )
 
 
 ORACLES["stream_static_enrich"] = """
@@ -461,35 +420,8 @@ def stream_sliding_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the tumbling case, just with 2× window keys. Replayed to
     completion through a memory sink (deterministic → exact oracle;
     complete mode because the file replay is historical, SURVEY §6)."""
-    workdir = tempfile.mkdtemp(prefix="evt_slide_")
-    events = read_event_stream(spark, sf_dir, workdir)
-    agg = (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(
-            F.window("ts", "2 hours", "1 hour").alias("w"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    name = f"slide_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(workdir, ignore_errors=True)
-    out = spark.sql(
-        f"""SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS window_start,
-                   event_type, n, total_value FROM {name}"""
-    ).orderBy("window_start", "event_type")
-    return spark.createDataFrame(out.collect(), out.schema)
+    slide = F.window("ts", "2 hours", "1 hour")
+    return _window_counts(spark, sf_dir, slide, None)  # no watermark
 
 
 ORACLES["stream_sliding_counts"] = """
@@ -722,11 +654,10 @@ def _stream_cdc_state(
     committing batch 2; the restart replays it, the state is compacted,
     the other half lands and the stream resumes on the same
     checkpoint."""
-    workdir = tempfile.mkdtemp(prefix="cdc_stream_")
-    topic_dir = os.path.join(workdir, "topic")
-    state_root = os.path.join(workdir, "state")
-    ckpt = os.path.join(workdir, "ckpt")
-    try:
+    with tempfile.TemporaryDirectory(prefix="cdc_stream_") as workdir:
+        topic_dir = os.path.join(workdir, "topic")
+        state_root = os.path.join(workdir, "state")
+        ckpt = os.path.join(workdir, "ckpt")
         cdc = synthesize_cdc_flat(spark, sf_dir)
         if not faults:
             cdc.repartition(4, "key").write.parquet(topic_dir)
@@ -747,10 +678,9 @@ def _stream_cdc_state(
                 topic_dir
             )
             run_manifest_stream(_file_stream(spark, topic_dir), state_root, ckpt)
+        # local copy: the state it was read from is deleted on return
         final = _cdc_state_columns(read_manifest_state(spark, state_root))
         return spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def stream_cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -61,10 +61,20 @@ def _unpartitioned_windows(plan: str) -> list[str]:
     return hits
 
 
+def _session_leftovers(spark) -> tuple[set[str], int]:
+    return {t.name for t in spark.catalog.listTables()}, len(spark.streams.active)
+
+
 def test_no_scale_killers_in_any_plan(spark, sf_dir):
-    offenders = {}
+    """Also: no entry may leave a temp view or an active stream behind
+    (building a plan runs the streaming entries to completion)."""
+    offenders, leaks = {}, {}
     for name, fn in entrymod.queries().items():
+        views, streams = _session_leftovers(spark)
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        views_after, streams_after = _session_leftovers(spark)
+        if views_after - views or streams_after > streams:
+            leaks[name] = (sorted(views_after - views), streams_after - streams)
         hits = [b for b in _BANNED if b in plan]
         if name not in _GLOBAL_WINDOW_ALLOWED:
             hits += [f"global-window: {w}" for w in _unpartitioned_windows(plan)]
@@ -72,3 +82,4 @@ def test_no_scale_killers_in_any_plan(spark, sf_dir):
             offenders[name] = hits
         spark.catalog.clearCache()  # builders may cache intermediates
     assert not offenders, f"scale-killer plan nodes: {offenders}"
+    assert not leaks, f"left (new temp views, active streams): {leaks}"

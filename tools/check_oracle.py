@@ -17,10 +17,16 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# Check the checkout this file lives in; Python UDF workers import the
+# package through PYTHONPATH, which must be set before the JVM starts.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb  # noqa: E402
 import pyarrow as pa  # noqa: E402
