@@ -16,9 +16,11 @@ mode.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.functions import vectors
+from debezium_spark.operators import similarity as sim
 from debezium_spark.sources.tables import load_table
 
 NUM_HASHES = 64
@@ -365,8 +367,6 @@ def dedup_embedding_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness oracle; the SCALE path for embedding near-dup is the
     ANN module (hyperplane-LSH bucketing / IVF cells), which bounds
     candidate pairs by bucket instead of slicing."""
-    from debezium_spark.functions import vectors
-
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < PAIR_SLICE
     )
@@ -502,12 +502,6 @@ _SHINGLE_SQL = """
               FROM documents WHERE doc_id < 300)
 """
 
-_DOT_SQL = (
-    "list_reduce(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-    "(acc, x) -> acc + x)"
-)
-
 ORACLES: dict[str, str] = {
     "dedup_exact": """
         SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5,
@@ -532,13 +526,13 @@ ORACLES: dict[str, str] = {
     "dedup_embedding_cosine": f"""
         WITH n AS (
             SELECT vec_id, embedding,
-                   sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
+                   sqrt({sim._DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
             FROM embeddings WHERE vec_id < {PAIR_SLICE})
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               round({_DOT_SQL.format(a='a.embedding', b='b.embedding')}
+               round({sim._DOT_SQL.format(a='a.embedding', b='b.embedding')}
                      / (a.nrm * b.nrm), 4) AS cosine
         FROM n a JOIN n b ON a.vec_id < b.vec_id
-        WHERE {_DOT_SQL.format(a='a.embedding', b='b.embedding')}
+        WHERE {sim._DOT_SQL.format(a='a.embedding', b='b.embedding')}
               / (a.nrm * b.nrm) >= {COSINE_DUP_THRESHOLD}
         ORDER BY vec_a, vec_b
     """,
@@ -678,8 +672,6 @@ _SEG_MOD = 1000000007  # keeps sum-of-hashes far from int64 overflow
 
 def segment_dedup(docs: DataFrame, width: int = SEG_W) -> DataFrame:
     """Per-doc keep/drop report after corpus-wide segment dedup."""
-    from pyspark.sql import Window
-
     words = F.split(F.trim(F.col("text")), r"\s+")
     w = docs.select("doc_id", F.posexplode(words).alias("pos", "word"))
     seg_id = F.floor(F.col("pos") / F.lit(width)).cast("long")
@@ -774,8 +766,6 @@ SPAN_L = 20
 
 
 def substring_span_report(docs: DataFrame, length: int = SPAN_L) -> DataFrame:
-    from pyspark.sql import Window
-
     words = F.split(F.trim(F.col("text")), r"\s+")
     per_doc = docs.select(
         "doc_id",
@@ -895,9 +885,6 @@ def dedup_semantic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors. The within-cell pair join shuffles both sides on the
     cell id once; dropped ids are DISTINCT'd before counting so a
     vector duplicating several cluster-mates is removed once."""
-    from debezium_spark.functions import vectors
-    from debezium_spark.operators import similarity as sim
-
     raw = load_table(spark, sf_dir, "embeddings")
     dim = vectors.infer_dim(raw)
     # materialize the cell assignment once: it feeds BOTH sides of
@@ -939,14 +926,9 @@ def dedup_semantic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_semdedup() -> str:
-    from debezium_spark.operators.similarity import (
-        N_CELLS,
-        _DOT_SQL,
-    )
-
-    dot_nn = _DOT_SQL.format(a="embedding", b="embedding")
-    dot_ns = _DOT_SQL.format(a="n.embedding", b="s.s_emb")
-    dot_ab = _DOT_SQL.format(a="a.embedding", b="b.embedding")
+    dot_nn = sim._DOT_SQL.format(a="embedding", b="embedding")
+    dot_ns = sim._DOT_SQL.format(a="n.embedding", b="s.s_emb")
+    dot_ab = sim._DOT_SQL.format(a="a.embedding", b="b.embedding")
     return f"""
         WITH n AS (SELECT vec_id, embedding, sqrt({dot_nn}) AS nrm
                    FROM embeddings),
@@ -954,7 +936,7 @@ def _sql_semdedup() -> str:
             SELECT vec_id AS seed_id, embedding AS s_emb, nrm AS s_nrm
             FROM n
             ORDER BY (vec_id * 2654435761) % 4294967296, vec_id
-            LIMIT {N_CELLS}),
+            LIMIT {sim.N_CELLS}),
         ranked AS (
             SELECT n.vec_id, s.seed_id,
                    row_number() OVER (

@@ -3,18 +3,30 @@ into the canonical flat envelope (key/op/seq/ts_ms/before_/after_).
 
 Debezium ships one connector per source; the part that differs per
 source is exactly this mapping — how the native log encodes operation
-type, ordering, and before/after images. Re-expressed Spark-first,
-each normalizer is a single narrow projection (no shuffle):
+type, ordering, and before/after images. Ten dialects live here: the
+IBM i journal (the jhc fork's headline connector, with and without
+commitment control), Postgres logical decoding, MySQL binlog, MongoDB
+change streams, Cloud Spanner change records, Oracle LogMiner,
+Cassandra commitlog CDC, Vitess VStream, SQL Server change tables and
+Db2 SQL-Replication CD tables.
 
-- `normalize_ibmi_journal` — IBM i / Db2-for-i journal entries (the
-  jhc fork's headline connector). Public journal semantics: journal
-  code 'R' = record-level entry; entry types PT/PX = put (insert),
-  UP = update after-image, UB = update before-image, DL/DR = delete.
-  Sequence = JOSEQN, timestamp = JOTSTP.
-- `normalize_pg_wal` — Postgres logical-decoding style: action
-  I/U/D ordered by LSN.
-- `normalize_mysql_binlog` — MySQL row-event style: event_type
-  WRITE_ROWS / UPDATE_ROWS / DELETE_ROWS ordered by (file_seq, pos).
+Every dialect with native op codes states them once, in one code
+table (`*_OP_MAP`; Spanner's `SPANNER_MOD_MAP`) from native code to
+canonical c/u/d. That table drives both directions: `_decode_op`
+normalizes through it, and `_encode_op` inverts it (the first code
+listed per op) for the oracle-gated round-trip encoders. Cassandra
+(tombstone flag) and SQL Server (numeric __$operation) have no table.
+
+A row whose native code the table does not list carries no row
+change — IBM i UB before-images and non-record entries, pgoutput
+commit messages, Mongo invalidate events — and is dropped, as
+Debezium skips entry types it does not handle. Decoded instead, it
+would get a NULL op, win max-seq in `latest_state` and delete its key.
+
+Each normalizer is a narrow projection, except two that shuffle:
+`normalize_sqlserver_cdc` folds an update's two change-table rows with
+a groupBy on the LSN, and `normalize_ibmi_journal_commitment` joins
+entries to their committed cycles on JOCCID.
 
 Each emits the same canonical columns, so every SMT/materialization
 operator downstream is source-agnostic — Debezium's core design.
@@ -22,11 +34,51 @@ operator downstream is source-agnostic — Debezium's core design.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL as _CDC_FLAT_SQL
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
+
+
+def _decode_op(codes: dict[str, str], col: str) -> Column:
+    """Canonical op of the native code in `col`, looked up in `codes`.
+    Callers first drop the rows whose code `codes` does not list."""
+    return F.create_map(
+        *[x for k, v in codes.items() for x in (F.lit(k), F.lit(v))]
+    )[F.col(col)]
+
+
+def _encode_op(codes: dict[str, str]) -> Column:
+    """Native code of the canonical `op` column: the first code `codes`
+    lists for c and for u; anything else encodes as the first d code."""
+    # reversed, so the first-listed code per op is written last and wins
+    first = {op: native for native, op in reversed(codes.items())}
+    op = F.col("op")
+    return (
+        F.when(op == "c", first["c"])
+        .when(op == "u", first["u"])
+        .otherwise(first["d"])
+    )
+
+
+def _per_op(env: DataFrame, *aggs: Column) -> DataFrame:
+    """The round-trip check: events per op (n_events), then `aggs`,
+    ordered by op."""
+    return (
+        env.groupBy("op")
+        .agg(F.count(F.lit(1)).alias("n_events"), *aggs)
+        .orderBy("op")
+    )
+
+
+def _sum_cents(side: str) -> Column:
+    """sum_<side>_cents: <side>_totalprice summed in integer cents, so
+    the sum is bit-exact in any reduction order."""
+    return F.sum(
+        F.round(F.col(f"{side}_totalprice") * 100 + 1e-9).cast("long")
+    ).alias(f"sum_{side}_cents")
+
 
 IBMI_OP_MAP = {"PT": "c", "PX": "c", "UP": "u", "DL": "d", "DR": "d"}
 
@@ -36,18 +88,18 @@ def normalize_ibmi_journal(journal: DataFrame) -> DataFrame:
 
     Expects columns: JOCODE (journal code), JOENTT (entry type),
     JOSEQN (sequence), JOTSTP (timestamp ms), JOKEY (record key),
-    before_totalprice / after_totalprice payload images. UB
-    (before-image) rows are folded into the matching UP row upstream,
-    so here they are dropped.
-    """
-    op = F.create_map(
-        *[x for k, v in IBMI_OP_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("JOENTT")]
+    before_totalprice / after_totalprice payload images. Public journal
+    semantics: JOCODE 'R' = record-level entry; PT/PX = put (insert),
+    UP = update after-image, DL/DR = delete. UB (before-image) rows are
+    folded into the matching UP row upstream, so here they are dropped
+    along with every other entry type IBMI_OP_MAP does not list."""
     return (
-        journal.filter((F.col("JOCODE") == "R") & (F.col("JOENTT") != "UB"))
+        journal.filter(
+            (F.col("JOCODE") == "R") & F.col("JOENTT").isin(*IBMI_OP_MAP)
+        )
         .select(
             F.col("JOKEY").alias("key"),
-            op.alias("op"),
+            _decode_op(IBMI_OP_MAP, "JOENTT").alias("op"),
             F.col("JOSEQN").alias("seq"),
             F.col("JOTSTP").alias("ts_ms"),
             F.col("before_totalprice"),
@@ -62,12 +114,9 @@ PG_OP_MAP = {"I": "c", "U": "u", "D": "d"}
 def normalize_pg_wal(wal: DataFrame) -> DataFrame:
     """Postgres logical decoding → canonical envelope (action I/U/D,
     ordering by lsn)."""
-    op = F.create_map(
-        *[x for k, v in PG_OP_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("action")]
-    return wal.select(
+    return wal.filter(F.col("action").isin(*PG_OP_MAP)).select(
         F.col("pkey").alias("key"),
-        op.alias("op"),
+        _decode_op(PG_OP_MAP, "action").alias("op"),
         F.col("lsn").alias("seq"),
         F.col("commit_ts_ms").alias("ts_ms"),
         F.col("before_totalprice"),
@@ -81,12 +130,9 @@ MYSQL_OP_MAP = {"WRITE_ROWS": "c", "UPDATE_ROWS": "u", "DELETE_ROWS": "d"}
 def normalize_mysql_binlog(binlog: DataFrame) -> DataFrame:
     """MySQL binlog row events → canonical envelope; global order is
     (file_seq, pos) flattened into one sequence number."""
-    op = F.create_map(
-        *[x for k, v in MYSQL_OP_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("event_type")]
-    return binlog.select(
+    return binlog.filter(F.col("event_type").isin(*MYSQL_OP_MAP)).select(
         F.col("pkey").alias("key"),
-        op.alias("op"),
+        _decode_op(MYSQL_OP_MAP, "event_type").alias("op"),
         (F.col("file_seq") * F.lit(10_000_000_000) + F.col("pos")).alias("seq"),
         F.col("ts_ms"),
         F.col("before_totalprice"),
@@ -103,12 +149,9 @@ def normalize_mongo_change_stream(cs: DataFrame) -> DataFrame:
     when available) and clusterTime ordering; Debezium's MongoDB
     connector maps these the same way (no before image without
     pre-images enabled)."""
-    op = F.create_map(
-        *[x for k, v in MONGO_OP_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("operationType")]
-    return cs.select(
+    return cs.filter(F.col("operationType").isin(*MONGO_OP_MAP)).select(
         F.get_json_object("documentKey", "$._id").cast("long").alias("key"),
-        op.alias("op"),
+        _decode_op(MONGO_OP_MAP, "operationType").alias("op"),
         F.col("clusterTime").alias("seq"),
         F.col("ts_ms"),
         F.lit(None).cast("double").alias("before_totalprice"),
@@ -125,12 +168,9 @@ def normalize_spanner_change_record(cr: DataFrame) -> DataFrame:
     """Cloud Spanner change streams → canonical envelope: mod_type +
     commit_timestamp + record_sequence give the total order; new_values
     carries the after image."""
-    op = F.create_map(
-        *[x for k, v in SPANNER_MOD_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("mod_type")]
-    return cr.select(
+    return cr.filter(F.col("mod_type").isin(*SPANNER_MOD_MAP)).select(
         F.col("pkey").alias("key"),
-        op.alias("op"),
+        _decode_op(SPANNER_MOD_MAP, "mod_type").alias("op"),
         (F.col("commit_ts_ms") * F.lit(1000) + F.col("record_sequence")).alias(
             "seq"
         ),
@@ -151,14 +191,13 @@ def normalize_oracle_logminer(lm: DataFrame) -> DataFrame:
     """Oracle LogMiner rows → canonical envelope: OPERATION + SCN
     (system change number) + per-row before/after images; ROLLBACK=1
     rows are compensations and are dropped (Debezium does the same)."""
-    op = F.create_map(
-        *[x for k, v in ORACLE_OP_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("OPERATION")]
     return (
-        lm.filter(F.col("ROLLBACK") == 0)
+        lm.filter(
+            (F.col("ROLLBACK") == 0) & F.col("OPERATION").isin(*ORACLE_OP_MAP)
+        )
         .select(
             F.col("pkey").alias("key"),
-            op.alias("op"),
+            _decode_op(ORACLE_OP_MAP, "OPERATION").alias("op"),
             F.col("SCN").alias("seq"),
             F.col("COMMIT_TS_MS").alias("ts_ms"),
             F.col("before_totalprice"),
@@ -192,12 +231,9 @@ def normalize_cassandra_cdc(cc: DataFrame) -> DataFrame:
 def normalize_vitess_vstream(vs: DataFrame) -> DataFrame:
     """Vitess VStream → canonical envelope: row events carry a VGTID
     per shard; global order is (shard_order, gtid_seq)."""
-    op = F.create_map(
-        *[x for k, v in MYSQL_OP_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("event_type")]
-    return vs.select(
+    return vs.filter(F.col("event_type").isin(*MYSQL_OP_MAP)).select(
         F.col("pkey").alias("key"),
-        op.alias("op"),
+        _decode_op(MYSQL_OP_MAP, "event_type").alias("op"),
         (F.col("shard_order") * F.lit(10_000_000_000) + F.col("gtid_seq")).alias(
             "seq"
         ),
@@ -212,14 +248,9 @@ def normalize_vitess_vstream(vs: DataFrame) -> DataFrame:
 def to_ibmi_journal(cdc_flat: DataFrame) -> DataFrame:
     """Inverse mapping (canonical → journal layout) used by tests to
     prove the normalizer round-trips."""
-    entt = (
-        F.when(F.col("op") == "c", "PT")
-        .when(F.col("op") == "u", "UP")
-        .otherwise("DL")
-    )
     return cdc_flat.select(
         F.lit("R").alias("JOCODE"),
-        entt.alias("JOENTT"),
+        _encode_op(IBMI_OP_MAP).alias("JOENTT"),
         F.col("seq").alias("JOSEQN"),
         F.col("ts_ms").alias("JOTSTP"),
         F.col("key").alias("JOKEY"),
@@ -236,51 +267,21 @@ def ibmi_journal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     normalizer must drop the UB and control rows and recover exactly
     the original stream, so the oracle is the plain synthesized stream
     aggregated per op (prices in integer cents for bit-exact sums)."""
-    cdc = synthesize_cdc_flat(spark, sf_dir)
-    entt = (
-        F.when(F.col("op") == "c", "PT")
-        .when(F.col("op") == "u", "UP")
-        .otherwise("DL")
+    journal = to_ibmi_journal(synthesize_cdc_flat(spark, sf_dir))
+    seqn = F.col("JOSEQN") * 2
+    main = journal.withColumn("JOSEQN", seqn)
+    ub = journal.filter(F.col("JOENTT") == "UP").withColumns(
+        {"JOENTT": F.lit("UB"), "JOSEQN": seqn - 1}
     )
-    main = cdc.select(
-        F.lit("R").alias("JOCODE"),
-        entt.alias("JOENTT"),
-        (F.col("seq") * 2).alias("JOSEQN"),
-        F.col("ts_ms").alias("JOTSTP"),
-        F.col("key").alias("JOKEY"),
-        F.col("before_totalprice"),
-        F.col("after_totalprice"),
-    )
-    ub = cdc.filter(F.col("op") == "u").select(
-        F.lit("R").alias("JOCODE"),
-        F.lit("UB").alias("JOENTT"),
-        (F.col("seq") * 2 - 1).alias("JOSEQN"),
-        F.col("ts_ms").alias("JOTSTP"),
-        F.col("key").alias("JOKEY"),
-        F.col("before_totalprice"),
-        F.col("after_totalprice"),
-    )
-    ctl = cdc.filter(F.col("op") == "c").select(
-        F.lit("J").alias("JOCODE"),
-        F.lit("PR").alias("JOENTT"),
-        (F.col("seq") * 2 - 1).alias("JOSEQN"),
-        F.col("ts_ms").alias("JOTSTP"),
-        F.col("key").alias("JOKEY"),
-        F.col("before_totalprice"),
-        F.col("after_totalprice"),
+    ctl = journal.filter(F.col("JOENTT") == "PT").withColumns(
+        {"JOCODE": F.lit("J"), "JOENTT": F.lit("PR"), "JOSEQN": seqn - 1}
     )
     env = normalize_ibmi_journal(main.unionByName(ub).unionByName(ctl))
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("seq").alias("min_joseqn"),
-            F.max("seq").alias("max_joseqn"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        env,
+        F.min("seq").alias("min_joseqn"),
+        F.max("seq").alias("max_joseqn"),
+        _sum_cents("after"),
     )
 
 
@@ -308,32 +309,20 @@ def mysql_binlog_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     back; the flattened global order (file_seq·10^10 + pos) must
     reproduce the oracle's identical arithmetic."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    event_type = (
-        F.when(F.col("op") == "c", "WRITE_ROWS")
-        .when(F.col("op") == "u", "UPDATE_ROWS")
-        .otherwise("DELETE_ROWS")
-    )
     binlog = cdc.select(
         F.col("key").alias("pkey"),
-        event_type.alias("event_type"),
+        _encode_op(MYSQL_OP_MAP).alias("event_type"),
         (F.col("seq") / 100000).cast("long").alias("file_seq"),
         F.pmod(F.col("seq"), F.lit(100000)).alias("pos"),
         F.col("ts_ms"),
         F.col("before_totalprice"),
         F.col("after_totalprice"),
     )
-    env = normalize_mysql_binlog(binlog)
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("seq").alias("min_seq"),
-            F.max("seq").alias("max_seq"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        normalize_mysql_binlog(binlog),
+        F.min("seq").alias("min_seq"),
+        F.max("seq").alias("max_seq"),
+        _sum_cents("after"),
     )
 
 
@@ -355,13 +344,8 @@ def mongo_change_stream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     normalized back. Exercises the JSON extraction path; Mongo has no
     before image, so only after-side values round-trip."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    op_type = (
-        F.when(F.col("op") == "c", "insert")
-        .when(F.col("op") == "u", "update")
-        .otherwise("delete")
-    )
     cs = cdc.select(
-        op_type.alias("operationType"),
+        _encode_op(MONGO_OP_MAP).alias("operationType"),
         F.to_json(F.struct(F.col("key").alias("_id"))).alias("documentKey"),
         F.to_json(
             F.struct(F.col("after_totalprice").alias("o_totalprice"))
@@ -369,18 +353,11 @@ def mongo_change_stream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
         F.col("seq").alias("clusterTime"),
         F.col("ts_ms"),
     )
-    env = normalize_mongo_change_stream(cs)
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("seq").alias("min_seq"),
-            F.max("seq").alias("max_seq"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        normalize_mongo_change_stream(cs),
+        F.min("seq").alias("min_seq"),
+        F.max("seq").alias("max_seq"),
+        _sum_cents("after"),
     )
 
 
@@ -407,18 +384,11 @@ def cassandra_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
         (F.col("seq") * 1000).alias("writetime_us"),
         F.col("after_totalprice").alias("o_totalprice"),
     )
-    env = normalize_cassandra_cdc(cc)
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("key").alias("n_keys"),
-            F.max("seq").alias("max_writetime_us"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        normalize_cassandra_cdc(cc),
+        F.countDistinct("key").alias("n_keys"),
+        F.max("seq").alias("max_writetime_us"),
+        _sum_cents("after"),
     )
 
 
@@ -438,31 +408,19 @@ def pg_wal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     action I/U/D rows ordered by LSN, normalized back to the canonical
     envelope."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    action = (
-        F.when(F.col("op") == "c", "I")
-        .when(F.col("op") == "u", "U")
-        .otherwise("D")
-    )
     wal = cdc.select(
         F.col("key").alias("pkey"),
-        action.alias("action"),
+        _encode_op(PG_OP_MAP).alias("action"),
         F.col("seq").alias("lsn"),
         F.col("ts_ms").alias("commit_ts_ms"),
         F.col("before_totalprice"),
         F.col("after_totalprice"),
     )
-    env = normalize_pg_wal(wal)
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("seq").alias("min_lsn"),
-            F.max("seq").alias("max_lsn"),
-            F.sum(
-                F.round(F.col("before_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_before_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        normalize_pg_wal(wal),
+        F.min("seq").alias("min_lsn"),
+        F.max("seq").alias("max_lsn"),
+        _sum_cents("before"),
     )
 
 
@@ -481,14 +439,9 @@ def spanner_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     mod_type + (commit_timestamp, record_sequence) total order +
     JSON old/new_values images."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    mod = (
-        F.when(F.col("op") == "c", "INSERT")
-        .when(F.col("op") == "u", "UPDATE")
-        .otherwise("DELETE")
-    )
     cr = cdc.select(
         F.col("key").alias("pkey"),
-        mod.alias("mod_type"),
+        _encode_op(SPANNER_MOD_MAP).alias("mod_type"),
         F.col("ts_ms").alias("commit_ts_ms"),
         F.pmod(F.col("seq"), F.lit(1000)).alias("record_sequence"),
         F.to_json(
@@ -498,17 +451,10 @@ def spanner_roundtrip_q(spark, sf_dir: str) -> DataFrame:
             F.struct(F.col("after_totalprice").alias("o_totalprice"))
         ).alias("new_values"),
     )
-    env = normalize_spanner_change_record(cr)
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max("seq").alias("max_seq"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        normalize_spanner_change_record(cr),
+        F.max("seq").alias("max_seq"),
+        _sum_cents("after"),
     )
 
 
@@ -528,14 +474,9 @@ def oracle_logminer_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     normalizer must drop the compensations (Debezium does the same),
     so the oracle sees only the original stream."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    operation = (
-        F.when(F.col("op") == "c", "INSERT")
-        .when(F.col("op") == "u", "UPDATE")
-        .otherwise("DELETE")
-    )
     base = cdc.select(
         F.col("key").alias("pkey"),
-        operation.alias("OPERATION"),
+        _encode_op(ORACLE_OP_MAP).alias("OPERATION"),
         F.col("seq").alias("SCN"),
         F.col("ts_ms").alias("COMMIT_TS_MS"),
         F.col("before_totalprice"),
@@ -545,18 +486,11 @@ def oracle_logminer_roundtrip_q(spark, sf_dir: str) -> DataFrame:
         "ROLLBACK", F.lit(1)
     )
     lm = base.withColumn("ROLLBACK", F.lit(0)).unionByName(rollbacks)
-    env = normalize_oracle_logminer(lm)
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("seq").alias("min_scn"),
-            F.max("seq").alias("max_scn"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        normalize_oracle_logminer(lm),
+        F.min("seq").alias("min_scn"),
+        F.max("seq").alias("max_scn"),
+        _sum_cents("after"),
     )
 
 
@@ -575,15 +509,10 @@ def vitess_vstream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     by key (4 shards), global order = (shard_order, gtid_seq); the
     keyspace/shard origin columns survive normalization."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    event_type = (
-        F.when(F.col("op") == "c", "WRITE_ROWS")
-        .when(F.col("op") == "u", "UPDATE_ROWS")
-        .otherwise("DELETE_ROWS")
-    )
     shard = F.pmod(F.col("key"), F.lit(4))
     vs = cdc.select(
         F.col("key").alias("pkey"),
-        event_type.alias("event_type"),
+        _encode_op(MYSQL_OP_MAP).alias("event_type"),
         shard.alias("shard_order"),
         F.col("seq").alias("gtid_seq"),
         F.col("ts_ms"),
@@ -620,7 +549,7 @@ QUERIES["vitess_vstream_roundtrip"] = vitess_vstream_roundtrip_q
 # __$seqval). The distinct mechanic vs every other dialect: an UPDATE
 # is TWO physical rows (3 then 4) that must be folded into one
 # before+after event. The fold is a single groupBy on the LSN — one
-# key-bounded shuffle; all other dialects are pure projections.
+# key-bounded shuffle.
 # --------------------------------------------------------------------------
 def normalize_sqlserver_cdc(ct: DataFrame) -> DataFrame:
     """Change-table rows -> canonical envelope. Rows sharing a
@@ -679,21 +608,12 @@ def sqlserver_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
         .unionByName(rowset(["u"], 3, "before_totalprice", 0))
         .unionByName(rowset(["u"], 4, "after_totalprice", 1))
     )
-    env = normalize_sqlserver_cdc(ct)
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("seq").alias("min_lsn"),
-            F.max("seq").alias("max_lsn"),
-            F.sum(
-                F.round(F.col("before_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_before_cents"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        normalize_sqlserver_cdc(ct),
+        F.min("seq").alias("min_lsn"),
+        F.max("seq").alias("max_lsn"),
+        _sum_cents("before"),
+        _sum_cents("after"),
     )
 
 
@@ -723,12 +643,9 @@ DB2_OP_MAP = {"I": "c", "U": "u", "D": "d"}
 
 
 def normalize_db2_cd(cd: DataFrame) -> DataFrame:
-    op = F.create_map(
-        *[x for k, v in DB2_OP_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("IBMSNAP_OPERATION")]
-    return cd.select(
+    return cd.filter(F.col("IBMSNAP_OPERATION").isin(*DB2_OP_MAP)).select(
         F.col("key"),
-        op.alias("op"),
+        _decode_op(DB2_OP_MAP, "IBMSNAP_OPERATION").alias("op"),
         # commit order, then intent order within the transaction
         (F.col("IBMSNAP_COMMITSEQ") * F.lit(100000)
          + F.col("IBMSNAP_INTENTSEQ") % F.lit(100000)).alias("seq"),
@@ -745,35 +662,21 @@ def db2_cd_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     X-prefixed before images) and normalized back; per-op aggregates
     must reproduce the original stream exactly."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    opc = (
-        F.when(F.col("op") == "c", "I")
-        .when(F.col("op") == "u", "U")
-        .otherwise("D")
-    )
     cd = cdc.select(
         "key",
-        opc.alias("IBMSNAP_OPERATION"),
+        _encode_op(DB2_OP_MAP).alias("IBMSNAP_OPERATION"),
         (F.col("seq") / 100000).cast("long").alias("IBMSNAP_COMMITSEQ"),
         F.pmod(F.col("seq"), F.lit(100000)).alias("IBMSNAP_INTENTSEQ"),
         F.col("ts_ms"),
         F.col("before_totalprice").alias("XTOTALPRICE"),
         F.col("after_totalprice").alias("TOTALPRICE"),
     )
-    env = normalize_db2_cd(cd)
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("seq").alias("min_seq"),
-            F.max("seq").alias("max_seq"),
-            F.sum(
-                F.round(F.col("before_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_before_cents"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    return _per_op(
+        normalize_db2_cd(cd),
+        F.min("seq").alias("min_seq"),
+        F.max("seq").alias("max_seq"),
+        _sum_cents("before"),
+        _sum_cents("after"),
     )
 
 
@@ -807,31 +710,17 @@ def normalize_ibmi_journal_commitment(journal: DataFrame) -> DataFrame:
 
     Input adds JOCCID (commit cycle id) to the journal columns; C-code
     rows carry the cycle verdict (JOENTT 'CM' commit / 'RB' rollback).
-    R-entries join against the committed-cycle set on JOCCID — a plain
+    Entries join against the committed-cycle set on JOCCID — a plain
     equi-join (cycle count scales with transaction count, so no
     broadcast assumption); rolled-back and unterminated cycles drop
-    out. UB before-images and all control rows are dropped as in
-    normalize_ibmi_journal."""
+    out. The joined entries then go through normalize_ibmi_journal,
+    which drops UB before-images and all control rows."""
     committed = (
         journal.filter((F.col("JOCODE") == "C") & (F.col("JOENTT") == "CM"))
         .select("JOCCID")
         .distinct()
     )
-    op = F.create_map(
-        *[x for k, v in IBMI_OP_MAP.items() for x in (F.lit(k), F.lit(v))]
-    )[F.col("JOENTT")]
-    return (
-        journal.filter((F.col("JOCODE") == "R") & (F.col("JOENTT") != "UB"))
-        .join(committed, "JOCCID")
-        .select(
-            F.col("JOKEY").alias("key"),
-            op.alias("op"),
-            F.col("JOSEQN").alias("seq"),
-            F.col("JOTSTP").alias("ts_ms"),
-            F.col("before_totalprice"),
-            F.col("after_totalprice"),
-        )
-    )
+    return normalize_ibmi_journal(journal.join(committed, "JOCCID"))
 
 
 def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
@@ -842,22 +731,8 @@ def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
     NO control entry (unterminated — held back), the rest get CM.
     The normalizer's per-op output must equal the oracle's closed-form
     filter of the original stream."""
-    cdc = synthesize_cdc_flat(spark, sf_dir)
-    ccid = F.floor(F.col("seq") / 100).cast("long")
-    entt = (
-        F.when(F.col("op") == "c", "PT")
-        .when(F.col("op") == "u", "UP")
-        .otherwise("DL")
-    )
-    rows = cdc.select(
-        F.lit("R").alias("JOCODE"),
-        entt.alias("JOENTT"),
-        ccid.alias("JOCCID"),
-        F.col("seq").alias("JOSEQN"),
-        F.col("ts_ms").alias("JOTSTP"),
-        F.col("key").alias("JOKEY"),
-        F.col("before_totalprice"),
-        F.col("after_totalprice"),
+    rows = to_ibmi_journal(synthesize_cdc_flat(spark, sf_dir)).withColumn(
+        "JOCCID", F.floor(F.col("JOSEQN") / 100).cast("long")
     )
     verdict = F.when(F.pmod(F.col("JOCCID"), F.lit(7)) == 3, "RB").otherwise(
         "CM"
@@ -866,28 +741,15 @@ def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
         rows.select("JOCCID")
         .distinct()
         .filter(F.pmod(F.col("JOCCID"), F.lit(11)) != 5)  # unterminated
-        .select(
-            F.lit("C").alias("JOCODE"),
-            verdict.alias("JOENTT"),
-            "JOCCID",
-            F.lit(None).cast("long").alias("JOSEQN"),
-            F.lit(None).cast("long").alias("JOTSTP"),
-            F.lit(None).cast("long").alias("JOKEY"),
-            F.lit(None).cast("double").alias("before_totalprice"),
-            F.lit(None).cast("double").alias("after_totalprice"),
-        )
+        .select(F.lit("C").alias("JOCODE"), verdict.alias("JOENTT"), "JOCCID")
     )
-    env = normalize_ibmi_journal_commitment(rows.unionByName(ctl))
-    return (
-        env.groupBy("op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct(F.floor(F.col("seq") / 100)).alias("n_cycles"),
-            F.sum(
-                F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("sum_after_cents"),
-        )
-        .orderBy("op")
+    env = normalize_ibmi_journal_commitment(
+        rows.unionByName(ctl, allowMissingColumns=True)
+    )
+    return _per_op(
+        env,
+        F.countDistinct(F.floor(F.col("seq") / 100)).alias("n_cycles"),
+        _sum_cents("after"),
     )
 
 

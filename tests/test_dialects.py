@@ -34,6 +34,7 @@ def test_ibmi_filters_non_record_and_before_images(spark):
             ("R", "UP", 3, 12, 1, 5.0, 6.0),
             ("J", "NR", 4, 13, 1, None, None),  # journal control: dropped
             ("R", "DL", 5, 14, 1, 6.0, None),
+            ("R", "IL", 6, 15, 1, None, None),  # unlisted entry type: dropped
         ],
         "JOCODE string, JOENTT string, JOSEQN long, JOTSTP long, JOKEY long,"
         " before_totalprice double, after_totalprice double",
@@ -43,15 +44,22 @@ def test_ibmi_filters_non_record_and_before_images(spark):
 
 
 def test_pg_wal(spark):
+    from debezium_spark.cdc.materialize import latest_state
+
     wal = spark.createDataFrame(
         [(1, "I", 100, 10, None, 5.0), (1, "U", 101, 11, 5.0, 6.0),
-         (1, "D", 102, 12, 6.0, None)],
+         (1, "D", 102, 12, 6.0, None),
+         # an unlisted action (pgoutput commit message) must not
+         # become the key's latest event and delete it
+         (2, "I", 103, 13, None, 7.0), (2, "C", 104, 14, None, None)],
         "pkey long, action string, lsn long, commit_ts_ms long,"
         " before_totalprice double, after_totalprice double",
     )
     out = normalize_pg_wal(wal).orderBy("seq")
-    assert [r["op"] for r in out.collect()] == ["c", "u", "d"]
-    assert [r["seq"] for r in out.collect()] == [100, 101, 102]
+    assert [r["op"] for r in out.collect()] == ["c", "u", "d", "c"]
+    assert [r["seq"] for r in out.collect()] == [100, 101, 102, 103]
+    cur = latest_state(normalize_pg_wal(wal)).collect()
+    assert [(r["key"], r["after_totalprice"]) for r in cur] == [(2, 7.0)]
 
 
 def test_mongo_change_stream(spark):
