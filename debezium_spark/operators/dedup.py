@@ -258,12 +258,11 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates. The plan is ONE wide aggregation: shuffle the docs by
     doc_id once (the window, the signature groupBy, and the shingle-set
     collect all reuse that partitioning), compute the 64 min-hashes AND
-    the collect_set shingle set in the same groupBy, cache only that
-    per-doc frame (n_docs rows, ~0.5 KB + set), then band self-join and
-    verify against it. No per-shingle distinct (min/collect_set are
-    duplicate-insensitive), no raw-shingle cache. At petabyte scale
-    persist the per-doc frame to parquet instead of memory — same plan
-    shape."""
+    the collect_set shingle set in the same groupBy, then band self-join
+    and verify against that per-doc frame (n_docs rows, ~0.5 KB + set).
+    Nothing is cached: every downstream scan of the per-doc frame reads
+    the one aggregation exchange (a ReusedExchange in the plan). No
+    per-shingle distinct (min/collect_set are duplicate-insensitive)."""
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # the test tables are single parquet files (one scan task) — fan
     # the docs out across cores by doc_id so the shingle window and the
@@ -277,9 +276,6 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = rows.groupBy("doc_id").agg(
         F.collect_set("h").alias("sh_set"), *_minhash_agg_exprs()
     )
-    per_doc = per_doc.cache()
-    per_doc.count()  # materialize once before the 4 downstream scans
-    # (band self-join ×2 + verify ×2 would otherwise race the cache)
     cand = lsh_candidate_pairs(per_doc)
     sets = per_doc.select("doc_id", "sh_set")
     return (

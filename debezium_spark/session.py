@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -32,7 +32,12 @@ def get_spark(
     - Sized to the host: `cores` defaults to the CPUs this process may
       run on and `spark.driver.memory` to half of physical RAM
       (SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override both).
+    - Python UDF workers import this checkout: its root goes on the
+      PYTHONPATH the JVM inherits when it starts.
     """
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, *paths) if p)
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     half_ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21

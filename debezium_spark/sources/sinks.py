@@ -209,11 +209,6 @@ def write_bucketed(
     )
 
 
-def bucketed_join(spark, left_table: str, right_table: str, key: str
-                  ) -> DataFrame:
-    return spark.table(left_table).join(spark.table(right_table), key)
-
-
 def bucketed_join_agg_q(spark, sf_dir: str) -> DataFrame:
     """Bucketed co-located join under the external gate: both sides
     are persisted bucketed+sorted by the join key into a throwaway

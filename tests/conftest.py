@@ -3,12 +3,9 @@ import sys
 
 import pytest
 
-# Test the checkout this file lives in; Python UDF workers import the
-# package through PYTHONPATH, which must be set before the JVM starts.
+# Test the checkout this file lives in.
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from debezium_spark.session import get_spark
 

@@ -159,3 +159,12 @@ def test_semdedup_keep_first_and_counts(spark, sf_dir):
     for r in rows:
         assert r["n_kept"] == r["n_vectors"] - r["n_dropped"]
         assert 0 <= r["n_dropped"] < r["n_vectors"]  # min id survives
+
+
+def test_minhash_lsh_leaves_no_persisted_rdd(spark, sf_dir):
+    from debezium_spark.operators.dedup import dedup_minhash_lsh_q
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    dedup_minhash_lsh_q(spark, sf_dir).collect()
+    assert jsc.getPersistentRDDs().size() == before

@@ -133,7 +133,7 @@ def test_cloudevents_roundtrip(spark, sf_dir):
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     import uuid
 
-    from debezium_spark.sources.sinks import bucketed_join, write_bucketed
+    from debezium_spark.sources.sinks import write_bucketed
     from debezium_spark.sources.tables import load_table
 
     sfx = uuid.uuid4().hex[:8]
@@ -149,7 +149,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
             rt, "custkey", 8, str(tmp_path / rt))
         # bucketed joins need AQE's broadcast demotion out of the way
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = bucketed_join(spark, lt, rt, "custkey")
+        j = spark.table(lt).join(spark.table(rt), "custkey")
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan, plan

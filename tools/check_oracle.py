@@ -21,12 +21,9 @@ import os
 import sys
 import time
 
-# Check the checkout this file lives in; Python UDF workers import the
-# package through PYTHONPATH, which must be set before the JVM starts.
+# Check the checkout this file lives in.
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb  # noqa: E402
 import pyarrow as pa  # noqa: E402
