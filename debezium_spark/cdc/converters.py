@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
 from debezium_spark.cdc.materialize import latest_state
+from debezium_spark.functions.rounding import to_units
 
 UNAVAILABLE = "__debezium_unavailable_value"
 
@@ -86,10 +87,10 @@ DECIMAL_SCALE = 2
 def decimal_modes(df: DataFrame, col: str) -> DataFrame:
     """Emit all three decimal.handling.mode encodings of `col`.
     `precise` = unscaled int64 + scale (Connect Decimal's logical
-    payload); integer-cents scaling (+1e-9 nudge before round) keeps
-    the unscaled value bit-identical across engines (SURVEY §6)."""
+    payload); integer-cents scaling keeps the unscaled value
+    bit-identical across engines (SURVEY §6)."""
     v = F.col(col)
-    cents = F.round(v * (10**DECIMAL_SCALE) + 1e-9).cast("long")
+    cents = to_units(v, DECIMAL_SCALE)
     whole = F.floor(cents / (10**DECIMAL_SCALE)).cast("long")
     frac = F.lpad(
         F.pmod(cents, F.lit(10**DECIMAL_SCALE)).cast("string"),

@@ -22,6 +22,7 @@ from debezium_spark.cdc.envelope import (
     synthesize_cdc_flat,
     synthesize_snapshot_flat,
 )
+from debezium_spark.functions.rounding import round_half_up, to_units
 
 STATE_COLS = ("o_totalprice", "o_custkey", "o_orderstatus", "o_orderpriority")
 
@@ -281,7 +282,7 @@ def cdc_seq_gaps_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_gaps"),
             F.max("gap").alias("max_gap"),
-            F.round(F.avg("gap") + 1e-9, 2).alias("avg_gap"),
+            round_half_up(F.avg("gap"), 2).alias("avg_gap"),
         )
         .orderBy("shard")
     )
@@ -460,9 +461,7 @@ def cdc_truncate_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_keys"),
         F.min("key").alias("min_key"),
         F.max("key").alias("max_key"),
-        F.sum(
-            F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-        ).alias("sum_after_cents"),
+        F.sum(to_units(F.col("after_totalprice"), 2)).alias("sum_after_cents"),
     )
 
 
@@ -754,9 +753,7 @@ def cdc_txn_consistent_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return state.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.max("seq").alias("max_applied_seq"),
-        F.sum(
-            F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-        ).alias("sum_cents"),
+        F.sum(to_units(F.col("after_totalprice"), 2)).alias("sum_cents"),
         F.countDistinct("txn_id").alias("n_txns_in_state"),
     )
 
@@ -831,9 +828,7 @@ def cdc_pit_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_probes"),
             F.count("valid_from_seq").alias("n_existing"),
-            F.sum(
-                F.round(F.col("o_totalprice") * 100 + 1e-9).cast("long")
-            ).alias("price_cents"),
+            F.sum(to_units(F.col("o_totalprice"), 2)).alias("price_cents"),
         )
         .orderBy("off")
     )
@@ -939,8 +934,8 @@ def cdc_incremental_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of base tables (tests assert equality with the direct
     latest-state recompute)."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    after_c = F.round(F.col("after_totalprice") * 100 + 1e-9).cast("long")
-    before_c = F.round(F.col("before_totalprice") * 100 + 1e-9).cast("long")
+    after_c = to_units(F.col("after_totalprice"), 2)
+    before_c = to_units(F.col("before_totalprice"), 2)
     delta_n = (
         F.when(F.col("op") == "c", F.lit(1))
         .when(F.col("op") == "d", F.lit(-1))

@@ -30,19 +30,6 @@ def schema_fingerprint(df: DataFrame) -> str:
     return hashlib.md5(blob.encode()).hexdigest()
 
 
-def diff_schemas(old: DataFrame, new: DataFrame) -> dict:
-    """Added / removed / retyped columns between two versions."""
-    o = dict(schema_signature(old))
-    n = dict(schema_signature(new))
-    return {
-        "added": sorted(set(n) - set(o)),
-        "removed": sorted(set(o) - set(n)),
-        "retyped": sorted(k for k in set(o) & set(n) if o[k] != n[k]),
-        "compatible": not (set(o) - set(n))
-        and all(o[k] == n[k] for k in set(o) & set(n)),
-    }
-
-
 class SchemaHistory:
     """In-memory schema-history log; `to_df` materializes it as the
     history 'topic'."""

@@ -10,8 +10,7 @@ work plan declaratively:
 - execute-snapshot → the chunk set to re-read; joined against the
   snapshot to produce the re-read rows, merged with the live stream
   through the DBLog window de-dup (materialize.incremental_snapshot).
-- pause/resume → seq windows to exclude from delivery.
-- log → passthrough into the notification frame.
+- pause/resume and log → acknowledged in the notification frame.
 
 Signals are synthesized deterministically from arithmetic so the
 driver oracle could verify them; the module's behavior contract is
@@ -47,8 +46,6 @@ def parse_signals(signals: DataFrame) -> DataFrame:
         "type",
         F.get_json_object("data", "$.data-collection").alias("collection"),
         F.get_json_object("data", "$.chunk").cast("long").alias("chunk"),
-        F.get_json_object("data", "$.from-seq").cast("long").alias("from_seq"),
-        F.get_json_object("data", "$.to-seq").cast("long").alias("to_seq"),
         F.col("data"),
     )
 
@@ -83,27 +80,6 @@ def execute_snapshot(
         return snapshot.limit(0)
     chunk = (F.col("key") / chunk_size).cast("long")
     return snapshot.filter(chunk.isin(chunk_ids))
-
-
-def pause_windows(signals: DataFrame) -> DataFrame:
-    """Seq ranges [from_seq, to_seq] covered by pause signals."""
-    return (
-        parse_signals(signals)
-        .filter(F.col("type") == "pause")
-        .select("from_seq", "to_seq")
-    )
-
-
-def apply_pause_windows(stream: DataFrame, signals: DataFrame) -> DataFrame:
-    """Drop events whose seq falls inside any pause window (delivery
-    gating between watermarks)."""
-    windows = pause_windows(signals)
-    joined = stream.join(
-        F.broadcast(windows),
-        (stream.seq >= windows.from_seq) & (stream.seq <= windows.to_seq),
-        "left_anti",
-    )
-    return joined
 
 
 def cdc_signal_snapshot_q(spark: SparkSession, sf_dir: str) -> DataFrame:

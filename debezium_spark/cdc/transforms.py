@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
+from debezium_spark.functions.rounding import round_half_up
 from debezium_spark.sources.tables import load_table
 
 
@@ -720,7 +721,7 @@ def mongo_extract_new_document_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return flat.select(
         "id",
-        F.round(F.col("o_totalprice") + 1e-9, 2).alias("o_totalprice"),
+        round_half_up(F.col("o_totalprice"), 2).alias("o_totalprice"),
         "custkey", "__op", "__ts_ms", "__deleted",
     )
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from debezium_spark.functions.rounding import to_units
+
 
 def salted_sum_count(
     df: DataFrame,
@@ -49,9 +51,7 @@ def salted_hot_key_agg_q(spark, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     cents = e.select(
         "event_type",
-        F.round(F.col("value") * 100 + 1e-9)
-        .cast("long")
-        .alias("value_cents"),
+        to_units(F.col("value"), 2).alias("value_cents"),
     )
     return (
         salted_sum_count(cents, "event_type", "value_cents")
@@ -117,7 +117,7 @@ def salted_skew_join_q(spark, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         "user_id",
-        F.round(F.col("value") * 100 + 1e-9).cast("long").alias("cents"),
+        to_units(F.col("value"), 2).alias("cents"),
     )
     dim = (
         e.groupBy("event_type")

@@ -3,9 +3,7 @@
 Spark-first: every operator is a declarative plan built from window
 functions and joins — no Python in the hot path. The as-of join is the
 composition pattern (equi-join on key + predicate + row_number pick),
-which at 100 TB is one shuffle on the join key; a `merge_asof`-based
-applyInPandas variant exists in streaming/state.py for the genuinely
-range-heavy case.
+which at 100 TB is one shuffle on the join key.
 """
 
 from __future__ import annotations
@@ -13,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.sources.tables import load_table
 
 
@@ -201,44 +200,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# As-of join, cogrouped-Pandas variant: pd.merge_asof per key group.
-# The window-composition version above is the default (all-JVM); this
-# is the escape hatch for genuinely range-dense as-ofs where the
-# equi-join would explode — Arrow-batched, one shuffle per side.
-# --------------------------------------------------------------------------
-def asof_join_pandas(
-    left, right, by: str, left_on: str, right_on: str, right_cols: list[str]
-):
-    import pandas as pd
-
-    out_fields = (
-        [f for f in left.schema.fields]
-        + [right.schema[c] for c in right_cols]
-    )
-    from pyspark.sql import types as T
-
-    schema = T.StructType(out_fields)
-
-    def merge(l_pdf: "pd.DataFrame", r_pdf: "pd.DataFrame") -> "pd.DataFrame":
-        if l_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        l_sorted = l_pdf.sort_values(left_on)
-        r_sorted = r_pdf.sort_values(right_on)[[right_on, *right_cols]]
-        merged = pd.merge_asof(
-            l_sorted, r_sorted, left_on=left_on, right_on=right_on,
-            direction="backward",
-        )
-        keep = [f.name for f in out_fields]
-        return merged[keep]
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(merge, schema)
-    )
-
-
 ORACLES: dict[str, str] = {
     "topk_parts_per_brand": """
         SELECT p_brand, p_partkey, revenue, rank FROM (
@@ -354,7 +315,7 @@ def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (ntile over ties is not)."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    cents = F.round(F.col("o_totalprice") * 100 + 1e-9).cast("long")
+    cents = to_units(F.col("o_totalprice"), 2)
     spend = o.groupBy("o_custkey").agg(
         F.sum(cents).alias("spend_cents"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -369,8 +330,8 @@ def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_orders").cast("long").alias("n_orders"),
             F.row_number().over(w).cast("int").alias("rn"),
             F.ntile(4).over(w).cast("int").alias("quartile"),
-            F.round(F.percent_rank().over(w) + F.lit(1e-9), 6).alias("pr"),
-            F.round(F.cume_dist().over(w) + F.lit(1e-9), 6).alias("cd"),
+            round_half_up(F.percent_rank().over(w), 6).alias("pr"),
+            round_half_up(F.cume_dist().over(w), 6).alias("cd"),
             F.lag("spend_cents", 1, 0).over(w).alias("prev_spend_cents"),
         )
         .orderBy("c_nationkey", "rn")
@@ -417,8 +378,8 @@ def range_join_views_before_purchase(spark: SparkSession, sf_dir: str) -> DataFr
         joined.groupBy("event_id")
         .agg(
             F.sum(in_range.cast("long")).alias("n_views_prior_hour"),
-            F.round(
-                F.max(F.when(in_range, F.col("v_value"))) + F.lit(1e-9), 4
+            round_half_up(
+                F.max(F.when(in_range, F.col("v_value"))), 4
             ).alias("max_view_value"),
         )
         .orderBy("event_id")

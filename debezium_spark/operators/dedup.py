@@ -191,17 +191,6 @@ def _minhash_agg_exprs() -> list:
     ]
 
 
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    # min-of-hash is duplicate-insensitive → skip the distinct shuffle
-    return minhash_signatures_from_rows(
-        _hashed_shingle_rows(docs, distinct=False)
-    )
-
-
-def minhash_signatures_from_rows(sh: DataFrame) -> DataFrame:
-    return sh.groupBy("doc_id").agg(*_minhash_agg_exprs())
-
-
 def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     bands = []
     for b in range(NUM_BANDS):
@@ -304,13 +293,6 @@ def _simhash_bit_sums(docs: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(*bit_sums)
 
 
-def simhash_signatures(docs: DataFrame) -> DataFrame:
-    bits = F.array(
-        *[(F.col(f"b{i}") > 0).cast("int") for i in range(SIMHASH_BITS)]
-    )
-    return _simhash_bit_sums(docs).select("doc_id", bits.alias("simhash_bits"))
-
-
 def simhash_packed(docs: DataFrame) -> DataFrame:
     """Signature packed into one BIGINT (bit i set ⟺ bit-sum i > 0) so
     Hamming distance is a single codegen'd bit_count(a XOR b) instead
@@ -326,8 +308,7 @@ def simhash_packed(docs: DataFrame) -> DataFrame:
 
 def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs with Hamming distance ≤ 8 over a bounded slice; hamming =
-    bit_count(sig_a XOR sig_b) on the packed signatures (same values
-    as the array form, verified by tests/test_dedup.py)."""
+    bit_count(sig_a XOR sig_b) on the packed signatures."""
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < PAIR_SLICE
     )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.sources.tables import load_table
 
 MEDIA_SCHEMA = T.StructType(
@@ -145,7 +146,7 @@ def media_feature_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("payload_bytes").alias("total_bytes"),
-            F.round(F.sum(F.element_at("feature", 1)) + 1e-9, 4).alias("f0_sum"),
+            round_half_up(F.sum(F.element_at("feature", 1)), 4).alias("f0_sum"),
         )
         .orderBy("kind")
     )
@@ -400,7 +401,9 @@ def media_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes. The oracle recomputes every statistic from the pixel/
     sample formulas — decoded means and position-weighted checksums
     must match bit-for-bit, proving the byte-level parsers read the
-    actual file layout (padding, bottom-up rows, chunk offsets)."""
+    actual file layout (padding, bottom-up rows, chunk offsets). The
+    per-doc means are summed as integer micro-units, so the sum does
+    not depend on reduction order."""
     d = load_table(spark, sf_dir, "documents")
     decoded = decode_real_media(encode_real_media(d))
     return (
@@ -409,7 +412,7 @@ def media_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("dim1").cast("long").alias("dim1_sum"),
             F.sum("dim2").cast("long").alias("dim2_sum"),
-            F.round(F.sum("mean_val") + F.lit(1e-9), 4).alias("mean_sum"),
+            F.sum(to_units(F.col("mean_val"), 6)).alias("mean_micro_sum"),
             F.sum("poswt").cast("long").alias("poswt_sum"),
         )
         .orderBy("kind")
@@ -448,17 +451,21 @@ ORACLES["media_decode_stats"] = """
     ),
     per_kind AS (
         SELECT 'image' AS kind, count(*) AS n, sum(w) AS dim1_sum,
-               sum(h) AS dim2_sum, sum(mean_val) AS mean_sum,
+               sum(h) AS dim2_sum,
+               sum(CAST(round(mean_val * 1000000 + 1e-9) AS BIGINT))
+                   AS mean_micro_sum,
                sum(poswt) AS poswt_sum
         FROM idoc
         UNION ALL
-        SELECT 'audio', count(*), sum(n), sum(sr), sum(mean_val), sum(poswt)
+        SELECT 'audio', count(*), sum(n), sum(sr),
+               sum(CAST(round(mean_val * 1000000 + 1e-9) AS BIGINT)),
+               sum(poswt)
         FROM adoc
     )
     SELECT kind, CAST(n AS BIGINT) AS n,
            CAST(dim1_sum AS BIGINT) AS dim1_sum,
            CAST(dim2_sum AS BIGINT) AS dim2_sum,
-           round(mean_sum + 1e-9, 4) AS mean_sum,
+           CAST(mean_micro_sum AS BIGINT) AS mean_micro_sum,
            CAST(poswt_sum AS BIGINT) AS poswt_sum
     FROM per_kind ORDER BY kind
 """

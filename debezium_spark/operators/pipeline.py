@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.materialize import latest_state
+from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.operators.text import STOPWORDS as _LANG_STOPWORDS
 from debezium_spark.operators.text import stopword_hit_count
 from debezium_spark.sources.tables import load_table
@@ -99,7 +100,7 @@ def training_mixture_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").alias("total_tokens"),
-            F.round(F.avg("q") + 1e-9, 4).alias("avg_quality"),
+            round_half_up(F.avg("q"), 4).alias("avg_quality"),
         )
         .orderBy("source")
     )
@@ -256,11 +257,8 @@ def sequence_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_docs").alias("n_docs"),
             F.sum("pack_tokens").alias("total_tokens"),
             F.max("pack_tokens").alias("max_pack_tokens"),
-            F.round(
-                F.sum("pack_tokens")
-                / (F.count(F.lit(1)) * PACK_CONTEXT)
-                + 1e-9,
-                4,
+            round_half_up(
+                F.sum("pack_tokens") / (F.count(F.lit(1)) * PACK_CONTEXT), 4
             ).alias("fill_ratio"),
         )
         .orderBy("source")
@@ -403,9 +401,9 @@ def mixture_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_docs",
             "n_tokens",
-            F.round(share + 1e-9, 4).alias("token_share"),
-            F.round(weight + 1e-9, 4).alias("sample_weight"),
-            F.round(weight / share + 1e-9, 4).alias("upsample_factor"),
+            round_half_up(share, 4).alias("token_share"),
+            round_half_up(weight, 4).alias("sample_weight"),
+            round_half_up(weight / share, 4).alias("upsample_factor"),
         )
         .orderBy("source")
     )
@@ -641,20 +639,17 @@ def dsir_importance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = counts.agg(
         F.sum("c_raw").alias("n_raw"), F.sum("c_tgt").alias("n_tgt")
     )
-    lr_micro = F.round(
-        (
-            F.log(
-                (F.col("c_tgt") + F.lit(1.0))
-                / (F.col("n_tgt") + F.lit(DSIR_BUCKETS))
-            )
-            - F.log(
-                (F.col("c_raw") + F.lit(1.0))
-                / (F.col("n_raw") + F.lit(DSIR_BUCKETS))
-            )
+    lr_micro = to_units(
+        F.log(
+            (F.col("c_tgt") + F.lit(1.0))
+            / (F.col("n_tgt") + F.lit(DSIR_BUCKETS))
         )
-        * 1e6
-        + 1e-9
-    ).cast("long")
+        - F.log(
+            (F.col("c_raw") + F.lit(1.0))
+            / (F.col("n_raw") + F.lit(DSIR_BUCKETS))
+        ),
+        6,
+    )
     ratio = counts.crossJoin(F.broadcast(tot)).select(
         "bucket", lr_micro.alias("lr_micro")
     )

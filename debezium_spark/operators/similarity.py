@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.functions import vectors
+from debezium_spark.functions.rounding import round_half_up
 from debezium_spark.sources.tables import load_table
 
 TOP_K = 10
@@ -357,12 +358,11 @@ QUERIES = {
 # --------------------------------------------------------------------------
 def quantize_int8(df: DataFrame, dim: int) -> DataFrame:
     """Attach `qemb: array<byte>` — int8 quantization of the unit
-    vector. round(+1e-9) keeps decimal ties off the HALF_UP boundary
-    in both engines (SURVEY §6)."""
+    vector, rounded HALF_UP as the oracle does (SURVEY §6)."""
     e = vectors.as_double(F.col("embedding"))
     nrm = F.col("nrm")
     q = F.transform(
-        e, lambda x: F.round(x / nrm * 127 + 1e-9, 0).cast("byte")
+        e, lambda x: round_half_up(x / nrm * 127, 0).cast("byte")
     )
     return df.withColumn("qemb", q)
 

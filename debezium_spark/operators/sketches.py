@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from debezium_spark.functions.rounding import round_half_up
 from debezium_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -120,7 +121,7 @@ def hll_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_zero").cast("long").alias("v_zero"),
         F.col("s_int").cast("long").alias("s_int"),
         F.col("reg_checksum").cast("long").alias("reg_checksum"),
-        F.round(est + F.lit(1e-9), 2).alias("est"),
+        round_half_up(est, 2).alias("est"),
         F.col("exact_distinct").cast("long").alias("exact_distinct"),
     )
 
@@ -714,7 +715,7 @@ def histogram_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_label",
         F.col("target").cast("long").alias("target_rank"),
         F.col("bin").cast("int").alias("bin"),
-        F.round(est + F.lit(1e-9), 6).alias("est_value"),
+        round_half_up(est, 6).alias("est_value"),
     ).orderBy("event_type", "q_label")
 
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.sources.tables import load_table
 
 # Stopword lists for the n-gram/stopword language-ID heuristic. The
@@ -66,12 +67,9 @@ def quality_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_ratio = stop_hits / n_words
     mean_word_len = (F.length("text") - (n_words - 1)) / n_words
     length_signal = F.least(n_words / F.lit(200.0), F.lit(1.0))
-    # +1e-9 before rounding in BOTH engines: keeps decimal-tie values
-    # (x.xxxx5) off the boundary where Spark (binary-exact HALF_UP)
-    # and DuckDB (decimal-repr) round differently.
-    score = F.round(
+    score = round_half_up(
         0.5 * length_signal + 0.3 * (1.0 - stop_ratio) + 0.2
-        * F.least(mean_word_len / F.lit(8.0), F.lit(1.0)) + 1e-9,
+        * F.least(mean_word_len / F.lit(8.0), F.lit(1.0)),
         4,
     )
     return d.select(
@@ -240,12 +238,12 @@ def repetition_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_unique_bigrams"),
     )
     j = per_uni.join(per_bi, "doc_id", "left")
-    top_frac = F.round(F.col("max_c") / F.col("n_words") + 1e-9, 4)
+    top_frac = round_half_up(F.col("max_c") / F.col("n_words"), 4)
     dup_frac = F.when(
         F.col("n_bigrams") > 0,
-        F.round(1.0 - F.col("n_unique_bigrams") / F.col("n_bigrams") + 1e-9, 4),
+        round_half_up(1.0 - F.col("n_unique_bigrams") / F.col("n_bigrams"), 4),
     )
-    ttr = F.round(F.col("n_unique") / F.col("n_words") + 1e-9, 4)
+    ttr = round_half_up(F.col("n_unique") / F.col("n_words"), 4)
     return j.select(
         "doc_id",
         F.col("n_words").cast("long").alias("n_words"),
@@ -472,17 +470,15 @@ def unigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
     tot = vocab.agg(F.sum("cnt").alias("total"))
-    term_micro = F.round(
-        F.log(F.col("total").cast("double") / F.col("cnt")) * 1e6 + 1e-9
-    ).cast("long")
+    term_micro = to_units(
+        F.log(F.col("total").cast("double") / F.col("cnt")), 6
+    )
     per_word = (
         words.join(vocab, "w")
         .crossJoin(F.broadcast(tot))
         .select("doc_id", term_micro.alias("nll_micro"))
     )
-    avg_nll = F.round(
-        F.col("sum_micro") / 1e6 / F.col("n_words") + 1e-9, 4
-    )
+    avg_nll = round_half_up(F.col("sum_micro") / 1e6 / F.col("n_words"), 4)
     return (
         per_word.groupBy("doc_id")
         .agg(
@@ -548,9 +544,9 @@ def tfidf_topterms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = w.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = w.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    idf_micro = F.round(
-        F.log(F.col("n_docs").cast("double") / F.col("df")) * 1e6 + 1e-9
-    ).cast("long")
+    idf_micro = to_units(
+        F.log(F.col("n_docs").cast("double") / F.col("df")), 6
+    )
     scored = (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(nd))
@@ -973,7 +969,7 @@ def bigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(1.0 - BIGRAM_LAMBDA)
         * (F.col("uc").cast("double") / F.col("total").cast("double"))
     )
-    nll_micro = F.round(-F.log(p) * 1e6 + 1e-9).cast("long")
+    nll_micro = to_units(-F.log(p), 6)
     scored = (
         pairs.join(bi, (pairs.w1 == bi.bw1) & (pairs.w2 == bi.bw2))
         .join(ctx, pairs.w1 == ctx.cw)
@@ -981,9 +977,7 @@ def bigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .select("doc_id", nll_micro.alias("nll_micro"))
     )
-    avg_nll = F.round(
-        F.col("sum_micro") / 1e6 / F.col("n_scored") + 1e-9, 4
-    )
+    avg_nll = round_half_up(F.col("sum_micro") / 1e6 / F.col("n_scored"), 4)
     return (
         scored.groupBy("doc_id")
         .agg(

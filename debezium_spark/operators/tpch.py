@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.functions.rounding import round_half_up
 from debezium_spark.sources.tables import load_table
 
 
@@ -404,13 +405,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         vol.groupBy("o_year")
         .agg(
-            F.round(
+            round_half_up(
                 F.sum(
                     F.when(F.col("supp_nation") == "NATION_1", F.col("volume"))
                     .otherwise(0.0)
                 )
-                / F.sum("volume")
-                + 1e-9,
+                / F.sum("volume"),
                 4,
             ).alias("mkt_share")
         )
@@ -478,7 +478,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(avg_qty, l.l_partkey == F.col("ap_key"))
         .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(
-            F.round(F.sum("l_extendedprice") / 7.0 + 1e-9, 2).alias("avg_yearly"),
+            round_half_up(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -850,7 +850,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_name",
             "p_partkey",
             "p_brand",
-            F.round(F.col("supplycost") + 1e-9, 4).alias("supplycost"),
+            round_half_up(F.col("supplycost"), 4).alias("supplycost"),
         )
         .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
         .limit(20)

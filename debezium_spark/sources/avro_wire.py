@@ -22,7 +22,7 @@ The Spark integration is an Arrow-batched pandas UDF pair
 per-row byte codec, which is exactly the case where the guidance says
 to drop to pandas UDFs. On a cluster with the spark-avro jar loaded,
 prefer the native ``pyspark.sql.avro.functions`` (same wire bytes,
-JVM-side); ``native_avro_available(spark)`` probes for that.
+JVM-side).
 """
 
 from __future__ import annotations
@@ -30,8 +30,7 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 # Parsing Canonical Form (field order matters — it IS the wire order)
@@ -218,22 +217,3 @@ def avro_to_envelope(wire: DataFrame) -> DataFrame:
     )
     return wire.mapInPandas(_decode, schema)
 
-
-def native_avro_available(spark: SparkSession) -> bool:
-    """True when the spark-avro connector jar is on the classpath (in
-    which case prefer pyspark.sql.avro.functions.to_avro/from_avro —
-    same wire bytes, JVM-side)."""
-    try:
-        from pyspark.sql.avro.functions import to_avro
-
-        df = spark.range(1).select(F.struct(F.col("id")).alias("s"))
-        df.select(
-            to_avro(
-                "s",
-                '{"type":"record","name":"p","fields":'
-                '[{"name":"id","type":"long"}]}',
-            )
-        ).collect()
-        return True
-    except Exception:
-        return False

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL as _CDC_FLAT_SQL
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
+from debezium_spark.functions.rounding import to_units
 
 
 def _decode_op(codes: dict[str, str], col: str) -> Column:
@@ -75,9 +76,9 @@ def _per_op(env: DataFrame, *aggs: Column) -> DataFrame:
 def _sum_cents(side: str) -> Column:
     """sum_<side>_cents: <side>_totalprice summed in integer cents, so
     the sum is bit-exact in any reduction order."""
-    return F.sum(
-        F.round(F.col(f"{side}_totalprice") * 100 + 1e-9).cast("long")
-    ).alias(f"sum_{side}_cents")
+    return F.sum(to_units(F.col(f"{side}_totalprice"), 2)).alias(
+        f"sum_{side}_cents"
+    )
 
 
 IBMI_OP_MAP = {"PT": "c", "PX": "c", "UP": "u", "DL": "d", "DR": "d"}

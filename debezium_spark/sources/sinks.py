@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_spark.functions.rounding import to_units
+
 
 def sink_to_topics(df: DataFrame, out_dir: str, topic_col: str = "topic") -> None:
     """Partition the sink layout by topic: consumers of one topic scan
@@ -246,9 +248,7 @@ def bucketed_join_agg_q(spark, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),
                 F.countDistinct("custkey").alias("n_customers"),
-                F.sum(
-                    F.round(F.col("o_totalprice") * 100 + 1e-9).cast("long")
-                ).alias("total_cents"),
+                F.sum(to_units(F.col("o_totalprice"), 2)).alias("total_cents"),
             )
             .orderBy("c_mktsegment")
         )

@@ -41,6 +41,7 @@ from pyspark.sql.types import StructType
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
 from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES
 from debezium_spark.cdc.materialize import latest_state
+from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.sources.tables import load_table
 
 
@@ -257,9 +258,7 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count(F.lit(1)).alias("n_pairs"),
                 F.countDistinct("v_user").alias("n_users"),
-                F.sum(
-                    F.round(F.col("p_value") * 100 + 1e-9).cast("long")
-                ).alias("purchase_cents"),
+                F.sum(to_units(F.col("p_value"), 2)).alias("purchase_cents"),
             )
             .orderBy("view_hour")
         )
@@ -300,8 +299,7 @@ def stream_stateful_running_counts_q(
 
     def build(events: DataFrame) -> DataFrame:
         return running_user_counts(events.withColumn(
-            "value",
-            F.round(F.col("value") * 100 + 1e-9).cast("double"),
+            "value", round_half_up(F.col("value") * 100, 0)
         ))
 
     def finish(updates: DataFrame) -> DataFrame:
@@ -391,9 +389,7 @@ def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched = events.join(F.broadcast(dim), "user_id", "left")
         return enriched.groupBy("c_mktsegment", "event_type").agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.round(F.col("value") * 100 + 1e-9).cast("long")
-            ).alias("value_cents"),
+            F.sum(to_units(F.col("value"), 2)).alias("value_cents"),
         )
 
     return _replay_topic(

@@ -135,7 +135,8 @@ def main() -> None:
     print("BPE merges learned:",
           " ".join(f"{r['lhs']}+{r['rhs']}" for r in merges[:5]), "...")
     for r in media_decode_stats_q(spark, sf_dir).collect():
-        print(f"decoded {r['kind']}: n={r['n']} mean_sum={r['mean_sum']}")
+        print(f"decoded {r['kind']}: n={r['n']} "
+              f"mean_micro_sum={r['mean_micro_sum']}")
 
     spark.stop()
 

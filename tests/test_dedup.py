@@ -7,10 +7,11 @@ import pytest
 from debezium_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _exact_jaccard_pairs,
+    _hashed_shingle_rows,
+    _minhash_agg_exprs,
     dedup_exact_q,
     lsh_candidate_pairs,
-    minhash_signatures,
-    simhash_signatures,
+    simhash_packed,
 )
 
 
@@ -35,8 +36,15 @@ def test_exact_jaccard_sane(docs):
     assert pairs.get((0, 3), 0.0) < 0.1              # unrelated
 
 
+def _minhash_signatures(docs):
+    """The signature build `dedup_minhash_lsh_q` runs, minus its
+    shingle-set column."""
+    rows = _hashed_shingle_rows(docs, distinct=False)
+    return rows.groupBy("doc_id").agg(*_minhash_agg_exprs())
+
+
 def test_lsh_candidates_cover_high_jaccard(docs):
-    sigs = minhash_signatures(docs)
+    sigs = _minhash_signatures(docs)
     cand = {(r["doc_a"], r["doc_b"])
             for r in lsh_candidate_pairs(sigs).collect()}
     exact = _exact_jaccard_pairs(docs)
@@ -46,7 +54,7 @@ def test_lsh_candidates_cover_high_jaccard(docs):
 
 
 def test_lsh_verified_subset_of_exact(docs):
-    sigs = minhash_signatures(docs)
+    sigs = _minhash_signatures(docs)
     cand = lsh_candidate_pairs(sigs)
     exact = _exact_jaccard_pairs(docs).select("doc_a", "doc_b", "jaccard")
     verified = cand.join(exact, ["doc_a", "doc_b"]).filter(
@@ -59,12 +67,10 @@ def test_lsh_verified_subset_of_exact(docs):
 
 
 def test_simhash_deterministic_and_discriminative(docs):
-    s1 = {r["doc_id"]: r["simhash_bits"]
-          for r in simhash_signatures(docs).collect()}
-    s2 = {r["doc_id"]: r["simhash_bits"]
-          for r in simhash_signatures(docs).collect()}
+    s1 = {r["doc_id"]: r["sig"] for r in simhash_packed(docs).collect()}
+    s2 = {r["doc_id"]: r["sig"] for r in simhash_packed(docs).collect()}
     assert s1 == s2
-    ham = lambda a, b: sum(x != y for x, y in zip(a, b))  # noqa: E731
+    ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
     assert ham(s1[0], s1[4]) == 0           # exact dup → same signature
     assert ham(s1[0], s1[1]) <= 10          # near dup → close
     assert ham(s1[0], s1[3]) > 10           # unrelated → far

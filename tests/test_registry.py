@@ -1,6 +1,9 @@
 """The `__spark_entry__` registry: every module's QUERIES/ORACLES
 dicts, unioned. Builds no plans."""
 
+import ast
+import pathlib
+
 import __spark_entry__ as entry
 
 
@@ -29,3 +32,17 @@ def test_modules_register_in_one_dict_pair():
             if n.startswith(("QUERIES_", "ORACLES_"))
         ]
         assert extra == [], (mod.__name__, extra)
+
+
+def test_rounding_nudge_lives_in_one_module():
+    # every Spark-side `+ 1e-9` goes through functions/rounding.py;
+    # oracle SQL strings are str constants and do not match
+    pkg = pathlib.Path(entry.__file__).parent / "debezium_spark"
+    sites = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "functions" / "rounding.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and node.value == 1e-9
+    ]
+    assert sites == []

@@ -5,7 +5,6 @@ import pytest
 
 from debezium_spark.cdc.schema_history import (
     SchemaHistory,
-    diff_schemas,
     schema_fingerprint,
 )
 from debezium_spark.sources.tables import load_table
@@ -16,18 +15,6 @@ def test_fingerprint_stable_and_order_sensitive(spark, sf_dir):
     assert schema_fingerprint(o) == schema_fingerprint(o)
     reordered = o.select(*reversed(o.columns))
     assert schema_fingerprint(o) != schema_fingerprint(reordered)
-
-
-def test_diff_schemas(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    evolved = o.withColumn("o_channel", F.lit("web")).drop("o_orderpriority")
-    d = diff_schemas(o, evolved)
-    assert d["added"] == ["o_channel"]
-    assert d["removed"] == ["o_orderpriority"]
-    assert not d["compatible"]
-    widened = o.withColumn("o_totalprice", F.col("o_totalprice").cast("string"))
-    d2 = diff_schemas(o, widened)
-    assert d2["retyped"] == ["o_totalprice"]
 
 
 def test_history_log(spark, sf_dir):

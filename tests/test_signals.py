@@ -3,13 +3,9 @@
 import pyspark.sql.functions as F
 import pytest
 
-from debezium_spark.cdc.envelope import (
-    synthesize_cdc_flat,
-    synthesize_snapshot_flat,
-)
+from debezium_spark.cdc.envelope import synthesize_snapshot_flat
 from debezium_spark.cdc.signals import (
     SIGNAL_SCHEMA,
-    apply_pause_windows,
     execute_snapshot,
     notifications,
     snapshot_chunks_requested,
@@ -41,16 +37,6 @@ def test_execute_snapshot_rereads_only_named_chunks(spark, sf_dir, signals):
     assert all(k < 200 for k in keys)
     expect = snap.filter(F.col("key") < 200).count()
     assert len(keys) == expect
-
-
-def test_pause_window_excludes_range(spark, sf_dir, signals):
-    cdc = synthesize_cdc_flat(spark, sf_dir)
-    gated = apply_pause_windows(cdc, signals)
-    assert gated.filter((F.col("seq") >= 100) & (F.col("seq") <= 500)).count() == 0
-    dropped = cdc.count() - gated.count()
-    assert dropped == cdc.filter(
-        (F.col("seq") >= 100) & (F.col("seq") <= 500)
-    ).count()
 
 
 def test_notifications_ack_every_signal(signals):

@@ -11,13 +11,21 @@ stringified comparison cannot see — exactly the round-3 failure mode
 Floats are compared through repr of round(9) to surface any
 representation drift *before* the real gate does.
 
+Just before the final `N ok, M fail` line it prints one JSON line,
+`{name: {"ok", "rows", "plan"}}`, that two runs can diff: `plan` is the
+first 16 hex digits of the sha256 of the optimized logical plan with
+its run-specific ids, lambda variable suffixes and temp paths blanked.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
 import os
+import re
 import sys
 import time
 
@@ -84,6 +92,22 @@ def canon(rows, cols):
     return out
 
 
+_PLAN_NOISE = (
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"\b([xy])_\d+"), r"\1_"),
+    (re.compile(r"/tmp/[^\s,\]\)]+"), "/tmp/X"),
+)
+
+
+def plan_digest(sdf) -> str:
+    """Run-independent digest of a frame's optimized logical plan."""
+    plan = sdf._jdf.queryExecution().optimizedPlan().toString()
+    for pat, repl in _PLAN_NOISE:
+        plan = pat.sub(repl, plan)
+    return hashlib.sha256(plan.encode()).hexdigest()[:16]
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -96,9 +120,11 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     n_pass = n_fail = 0
+    record = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        record[name] = {"ok": False, "rows": None, "plan": None}
         if name not in oracles:
             print(f"FAIL  {name}: no oracle")
             n_fail += 1
@@ -109,6 +135,7 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            record[name].update(rows=len(srows), plan=plan_digest(sdf))
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
@@ -148,7 +175,9 @@ def main():
             n_fail += 1
         else:
             print(f"OK    {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
+            record[name]["ok"] = True
             n_pass += 1
+    print(json.dumps(record, sort_keys=True))
     print(f"\n{n_pass} ok, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
