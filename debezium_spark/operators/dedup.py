@@ -903,26 +903,10 @@ def dedup_semantic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_semdedup() -> str:
-    dot_nn = sim._DOT_SQL.format(a="embedding", b="embedding")
-    dot_ns = sim._DOT_SQL.format(a="n.embedding", b="s.s_emb")
     dot_ab = sim._DOT_SQL.format(a="a.embedding", b="b.embedding")
     return f"""
-        WITH n AS (SELECT vec_id, embedding, sqrt({dot_nn}) AS nrm
-                   FROM embeddings),
-        seeds AS (
-            SELECT vec_id AS seed_id, embedding AS s_emb, nrm AS s_nrm
-            FROM n
-            ORDER BY (vec_id * 2654435761) % 4294967296, vec_id
-            LIMIT {sim.N_CELLS}),
-        ranked AS (
-            SELECT n.vec_id, s.seed_id,
-                   row_number() OVER (
-                       PARTITION BY n.vec_id
-                       ORDER BY {dot_ns} / (n.nrm * s.s_nrm) DESC,
-                                s.seed_id) AS rn
-            FROM n CROSS JOIN seeds s),
-        c AS (SELECT n.*, r.seed_id AS cell
-              FROM n JOIN ranked r ON n.vec_id = r.vec_id AND r.rn = 1),
+        WITH {sim._NORMS_SQL},
+        {sim._sql_ivf_cells()},
         pairs AS (
             SELECT b.cell, b.vec_id
             FROM c a JOIN c b

@@ -22,6 +22,7 @@ spark.sql.files.maxPartitionBytes, which matters when blobs are MBs.
 
 from __future__ import annotations
 
+import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -228,56 +229,75 @@ QUERIES["media_frame_sample"] = media_frame_sample_q
 # column until a plan touches them.
 # --------------------------------------------------------------------------
 
-import struct
 
-
-def encode_bmp(doc_id: int, n_chars: int) -> bytes:
-    """Build a real 24bpp BI_RGB BMP: 14-byte file header, 40-byte
-    BITMAPINFOHEADER, bottom-up BGR rows padded to 4 bytes."""
-    w = n_chars % 16 + 4
-    h = n_chars % 12 + 4
+def _write_bmp(w: int, h: int, pixel) -> bytes:
+    """The BMP writer: 24bpp BI_RGB with a 14-byte file header, a
+    40-byte BITMAPINFOHEADER and bottom-up BGR rows padded to 4 bytes.
+    `pixel(x, y)` gives (r, g, b) in top-down image coordinates."""
     row_size = (3 * w + 3) // 4 * 4
-    img_size = row_size * h
+    pad = b"\x00" * (row_size - 3 * w)
     data = bytearray()
-    for j in range(h):  # file rows are bottom-up
-        y = h - 1 - j
-        row = bytearray()
+    for y in reversed(range(h)):  # file rows are bottom-up
         for x in range(w):
-            r = (x * 7 + y * 13 + doc_id) % 256
-            g = (x * 3 + y * 5 + 2 * doc_id) % 256
-            b = (x * 11 + y + 3 * doc_id) % 256
-            row += bytes((b, g, r))
-        row += b"\x00" * (row_size - len(row))
-        data += row
-    header = b"BM" + struct.pack("<IHHI", 14 + 40 + img_size, 0, 0, 54)
+            r, g, b = pixel(x, y)
+            data += bytes((b, g, r))
+        data += pad
+    header = b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
     dib = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
+        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
     )
     return bytes(header + dib + data)
 
 
-def decode_bmp(payload: bytes) -> tuple[int, int, float, int]:
-    """Parse a 24bpp BMP: returns (width, height, mean of the R
-    channel, position-weighted R checksum sum((y*w+x)*R) in TOP-DOWN
-    image coordinates — sensitive to bottom-up row order and row
-    padding, which is the point."""
+def encode_bmp(doc_id: int, n_chars: int) -> bytes:
+    """A real BMP whose pixels are closed-form in (x, y, doc_id)."""
+    return _write_bmp(
+        n_chars % 16 + 4,
+        n_chars % 12 + 4,
+        lambda x, y: (
+            (x * 7 + y * 13 + doc_id) % 256,
+            (x * 3 + y * 5 + 2 * doc_id) % 256,
+            (x * 11 + y + 3 * doc_id) % 256,
+        ),
+    )
+
+
+def decode_bmp_pixels(payload: bytes) -> tuple[int, int, list[list[tuple]]]:
+    """The BMP reader: (w, h, rows[y][x] = (r, g, b)) in top-down
+    image coordinates."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload (missing 'BM' magic)")
-    _file_size, _r1, _r2, offset = struct.unpack("<IHHI", payload[2:14])
+    _fs, _r1, _r2, offset = struct.unpack("<IHHI", payload[2:14])
     hdr_size, w, h, _planes, bpp = struct.unpack("<IiiHH", payload[14:30])
     if hdr_size != 40 or bpp != 24 or h <= 0:
         raise ValueError(f"unsupported BMP variant (dib={hdr_size}, bpp={bpp})")
     row_size = (3 * w + 3) // 4 * 4
-    total = 0
-    poswt = 0
+    rows: list[list[tuple]] = [None] * h  # type: ignore[list-item]
     for j in range(h):
-        y = h - 1 - j
         base = offset + j * row_size
-        row = payload[base : base + 3 * w]
-        for x in range(w):
-            r = row[3 * x + 2]  # stored order is B,G,R
+        raw = payload[base : base + 3 * w]
+        rows[h - 1 - j] = [
+            (raw[3 * x + 2], raw[3 * x + 1], raw[3 * x]) for x in range(w)
+        ]
+    return w, h, rows
+
+
+def _red_stats(w: int, rows: list[list[tuple]]) -> tuple[int, int]:
+    """(sum of R, position-weighted checksum sum((y*w+x)*R)) in
+    top-down coordinates — sensitive to bottom-up row order and row
+    padding, which is the point."""
+    total = poswt = 0
+    for y, row in enumerate(rows):
+        for x, (r, _g, _b) in enumerate(row):
             total += r
             poswt += (y * w + x) * r
+    return total, poswt
+
+
+def decode_bmp(payload: bytes) -> tuple[int, int, float, int]:
+    """(width, height, mean of the R channel, R checksum) of a BMP."""
+    w, h, rows = decode_bmp_pixels(payload)
+    total, poswt = _red_stats(w, rows)
     return w, h, total / (w * h), poswt
 
 
@@ -294,10 +314,9 @@ def encode_wav(doc_id: int, n_chars: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def decode_wav(payload: bytes) -> tuple[int, int, float, int]:
-    """Parse a RIFF/WAVE file by walking chunks (not fixed offsets):
-    returns (n_samples, sample_rate, mean sample, position-weighted
-    checksum sum(i * s_i))."""
+def _wav_samples(payload: bytes) -> tuple[int, tuple[int, ...]]:
+    """The WAV reader: walk the RIFF chunks (not fixed offsets) of a
+    PCM16 mono file and return (sample_rate, samples)."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos = 12
@@ -318,6 +337,13 @@ def decode_wav(payload: bytes) -> tuple[int, int, float, int]:
         pos += 8 + sz + (sz & 1)  # chunks are word-aligned
     if sr is None or samples is None:
         raise ValueError("WAV missing fmt or data chunk")
+    return sr, samples
+
+
+def decode_wav(payload: bytes) -> tuple[int, int, float, int]:
+    """(n_samples, sample_rate, mean sample, position-weighted
+    checksum sum(i * s_i)) of a WAV."""
+    sr, samples = _wav_samples(payload)
     n = len(samples)
     poswt = sum(i * v for i, v in enumerate(samples))
     return n, sr, sum(samples) / n, poswt
@@ -488,26 +514,6 @@ _DHASH_COLS = 9  # sampled grid width  (8 comparisons per row)
 _DHASH_ROWS = 7  # sampled grid height (56 bits total)
 
 
-def decode_bmp_pixels(payload: bytes) -> tuple[int, int, list[list[tuple]]]:
-    """Full pixel decode: (w, h, rows[y][x] = (r, g, b)) in top-down
-    image coordinates."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload (missing 'BM' magic)")
-    _fs, _r1, _r2, offset = struct.unpack("<IHHI", payload[2:14])
-    hdr_size, w, h, _planes, bpp = struct.unpack("<IiiHH", payload[14:30])
-    if hdr_size != 40 or bpp != 24 or h <= 0:
-        raise ValueError(f"unsupported BMP variant (dib={hdr_size}, bpp={bpp})")
-    row_size = (3 * w + 3) // 4 * 4
-    rows: list[list[tuple]] = [None] * h  # type: ignore[list-item]
-    for j in range(h):
-        base = offset + j * row_size
-        raw = payload[base : base + 3 * w]
-        rows[h - 1 - j] = [
-            (raw[3 * x + 2], raw[3 * x + 1], raw[3 * x]) for x in range(w)
-        ]
-    return w, h, rows
-
-
 def dhash_pixels(w: int, h: int, rows: list[list[tuple]]) -> int:
     """56-bit dHash: grid sample x_i = i*w//9, y_j = j*h//7; gray =
     (r+g+b)//3; bit(j*8+i) set iff gray(x_{i+1},y_j) > gray(x_i,y_j)."""
@@ -645,23 +651,9 @@ def audio_contour_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             out = {"media_id": [], "n_samples": [], "contour_hash": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                import struct as _s
-
-                raw = bytes(payload)
-                # reuse the validated chunk walker
-                n, _sr, _mean, _poswt = decode_wav(raw)
-                # extract samples again via the walker's data chunk
-                pos, samples = 12, None
-                while pos + 8 <= len(raw):
-                    cid = raw[pos : pos + 4]
-                    sz = _s.unpack("<I", raw[pos + 4 : pos + 8])[0]
-                    if cid == b"data":
-                        samples = _s.unpack(
-                            f"<{sz // 2}h", raw[pos + 8 : pos + 8 + sz // 2 * 2]
-                        )
-                    pos += 8 + sz + (sz & 1)
+                _sr, samples = _wav_samples(bytes(payload))
                 out["media_id"].append(mid)
-                out["n_samples"].append(n)
+                out["n_samples"].append(len(samples))
                 out["contour_hash"].append(audio_contour_hash(samples))
             yield pd.DataFrame(out)
 
@@ -738,27 +730,11 @@ RESIZE_H = 8
 def resize_bmp(payload: bytes, out_w: int = RESIZE_W,
                out_h: int = RESIZE_H) -> bytes:
     """Nearest-neighbor resize: sample x_i = i*w//out_w,
-    y_j = j*h//out_h, re-encode via the same writer layout
-    encode_bmp uses (bottom-up padded BGR rows)."""
+    y_j = j*h//out_h, re-encoded by the BMP writer encode_bmp uses."""
     w, h, rows = decode_bmp_pixels(payload)
-    row_size = (3 * out_w + 3) // 4 * 4
-    img_size = row_size * out_h
-    data = bytearray()
-    for j in range(out_h):  # file rows bottom-up
-        y = (out_h - 1 - j) * h // out_h
-        row = bytearray()
-        for i in range(out_w):
-            x = i * w // out_w
-            r, g, b = rows[y][x]
-            row += bytes((b, g, r))
-        row += b"\x00" * (row_size - len(row))
-        data += row
-    header = b"BM" + struct.pack("<IHHI", 14 + 40 + img_size, 0, 0, 54)
-    dib = struct.pack(
-        "<IiiHHIIiiII", 40, out_w, out_h, 1, 24, 0, img_size, 2835, 2835,
-        0, 0,
+    return _write_bmp(
+        out_w, out_h, lambda i, j: rows[j * h // out_h][i * w // out_w]
     )
-    return bytes(header + dib + data)
 
 
 def media_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -783,14 +759,8 @@ def media_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = {k: [] for k in ("media_id", "out_w", "out_h",
                                    "r_sum", "r_poswt")}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                thumb = resize_bmp(bytes(payload))
-                w, h, rows = decode_bmp_pixels(thumb)
-                r_sum = r_poswt = 0
-                for y in range(h):
-                    for x in range(w):
-                        r = rows[y][x][0]
-                        r_sum += r
-                        r_poswt += (y * w + x) * r
+                w, h, rows = decode_bmp_pixels(resize_bmp(bytes(payload)))
+                r_sum, r_poswt = _red_stats(w, rows)
                 out["media_id"].append(mid)
                 out["out_w"].append(w)
                 out["out_h"].append(h)

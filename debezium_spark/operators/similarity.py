@@ -1,13 +1,20 @@
-"""Similarity search over embedding columns: brute-force cosine top-k
-(the correctness baseline) and IVF/LSH-bucketed approximate nearest
-neighbor (the 100 TB scale path).
+"""Similarity search over embedding columns: exact and approximate
+nearest-neighbor top-k, and random-hyperplane LSH buckets.
+
+The four top-k entries are one 2×2 family built by `_ann_topk` (and
+their oracles by `_sql_ann_topk`) from the `_ANN` table:
+
+- candidates: every vector (exact), or only the vectors in the query's
+  N_PROBE nearest IVF cells, which turns O(n_queries × n_vectors) into
+  O(n_queries × n_vectors × N_PROBE / N_CELLS);
+- score: the float cosine, or the integer dot product of the int8-
+  quantized unit vectors (4× smaller vectors, bit-exact integers);
+- top-k: TOP_K = 10 for exact candidates, IVF_TOP_K = 5 for IVF ones.
 
 Brute force broadcasts the (small) query set and computes the dot
-product as unrolled codegen'd arithmetic (functions/vectors.py) — no
-Python, no shuffle beyond the final top-k window. The IVF variant prunes candidates to the query's
-cell before scoring, turning O(n_queries × n_vectors) into
-O(n_queries × n_vectors / n_cells); random-hyperplane LSH bucketing is
-the fully unsupervised equivalent.
+product as a codegen'd fold (functions/vectors.py): no Python, no
+shuffle beyond the final top-k window. Random-hyperplane LSH bucketing
+is the fully unsupervised equivalent of the IVF cells.
 """
 
 from __future__ import annotations
@@ -20,8 +27,11 @@ from debezium_spark.functions.rounding import round_half_up
 from debezium_spark.sources.tables import load_table
 
 TOP_K = 10
+IVF_TOP_K = 5
 N_QUERIES = 5  # query set: vec_id < 5
 N_HYPERPLANES = 6
+N_CELLS = 16
+N_PROBE = 4  # query-side multi-probe: search the 4 nearest cells
 
 
 def _with_norm(df: DataFrame, dim: int | None = None) -> DataFrame:
@@ -37,44 +47,6 @@ def _with_norm(df: DataFrame, dim: int | None = None) -> DataFrame:
     return df.withColumn(
         "embedding", vectors.as_double(F.col("embedding"))
     ).withColumn("nrm", vectors.norm(F.col("embedding"), dim))
-
-
-def ann_cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force exact top-k: the baseline every ANN variant is
-    measured against."""
-    raw = load_table(spark, sf_dir, "embeddings")
-    dim = vectors.infer_dim(raw)
-    e = _with_norm(raw, dim)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            vectors.dot(F.col("q_emb"), F.col("embedding"), dim)
-            / (F.col("q_nrm") * F.col("nrm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cos", 4).alias("cosine"),
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-N_CELLS = 16
-N_PROBE = 4  # query-side multi-probe: search the 4 nearest cells
 
 
 def ivf_seeds(e: DataFrame) -> DataFrame:
@@ -144,55 +116,143 @@ def ivf_cells(e: DataFrame, dim: int, seeds: DataFrame | None = None) -> DataFra
     )
 
 
-def ann_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF cell-pruned top-k over self-computed cells (hash-seeded
-    centroids, see ivf_cells — no reliance on the dataset's label
-    column). The plan shape — candidates restricted to the query's
-    cell via an equi-join on cell id — is what survives 100×: scoring
-    touches ~1/N_CELLS of the table instead of all of it."""
+# --------------------------------------------------------------------------
+# Int8-quantized scoring: symmetric per-element quantization of the
+# L2-normalized vector to a signed byte (q_i = round(127·v_i/‖v‖)),
+# then integer dot-product ranking. At 100 TB this is the memory/
+# bandwidth scale lever — 4× smaller vectors than float32 (16× vs
+# float64), SIMD-friendly integer math, and the candidate scoring
+# stays fully codegen'd. Ranking is by the *integer* dot product with
+# a vec_id tie-break, so the gate compares bit-exact integers (no
+# float drift surface at all).
+# --------------------------------------------------------------------------
+def quantize_int8(df: DataFrame, dim: int) -> DataFrame:
+    """Attach `qemb: array<byte>` — int8 quantization of the unit
+    vector, rounded HALF_UP as the oracle does (SURVEY §6)."""
+    e = vectors.as_double(F.col("embedding"))
+    nrm = F.col("nrm")
+    q = F.transform(
+        e, lambda x: round_half_up(x / nrm * 127, 0).cast("byte")
+    )
+    return df.withColumn("qemb", q)
+
+
+def int8_dot(a, b, dim: int):
+    """Integer Σ a[i]·b[i] as the HOF fold (see vectors.py — the
+    unrolled 64-term int expression has the same never-JITs problem).
+    Integer addition is associative so there is no fold-order
+    subtlety; max |dot| is 64·127² ≪ 2³¹."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("int") * y.cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _ann_topk(
+    spark: SparkSession, sf_dir: str, ivf: bool, int8: bool
+) -> DataFrame:
+    """Top-k neighbors of each query vector (vec_id < N_QUERIES).
+
+    `ivf` restricts the candidates to the query's N_PROBE nearest
+    cells via an equi-join on cell id — the plan shape that survives
+    100×: scoring touches ~N_PROBE/N_CELLS of the table instead of all
+    of it. Assignment and probing use the float codebook (exact,
+    bit-portable). `int8` ranks by the integer dot product of the
+    quantized vectors (column `qdot`) instead of the float cosine
+    (`cosine`, rounded to 4 places)."""
     raw = load_table(spark, sf_dir, "embeddings")
     dim = vectors.infer_dim(raw)
     en = _with_norm(raw, dim)
-    seeds = ivf_seeds(en)
-    e = ivf_cells(en, dim, seeds)
-    # query-side multi-probe: each query searches its N_PROBE nearest
-    # cells (a few broadcast rows per query — the standard IVF recall
-    # knob; data vectors still live in exactly one cell)
-    probe_w = Window.partitionBy("vec_id").orderBy(
-        F.desc("scos"), F.asc("seed_id")
-    )
-    q = (
-        _seed_cosines(en.filter(F.col("vec_id") < N_QUERIES), seeds, dim)
-        .withColumn("prn", F.row_number().over(probe_w))
-        .filter(F.col("prn") <= N_PROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
+    query_id = F.col("vec_id").alias("query_id")
+    if ivf:
+        seeds = ivf_seeds(en)
+        e = ivf_cells(en, dim, seeds)
+        # query-side multi-probe: each query searches its N_PROBE nearest
+        # cells (a few broadcast rows per query — the standard IVF recall
+        # knob; data vectors still live in exactly one cell)
+        probe_w = Window.partitionBy("vec_id").orderBy(
+            F.desc("scos"), F.asc("seed_id")
+        )
+        q = (
+            _seed_cosines(en.filter(F.col("vec_id") < N_QUERIES), seeds, dim)
+            .withColumn("prn", F.row_number().over(probe_w))
+            .filter(F.col("prn") <= N_PROBE)
+            .select(
+                query_id, "embedding", "nrm", F.col("seed_id").alias("q_cell")
+            )
+        )
+    else:
+        e = en
+        q = en.filter(F.col("vec_id") < N_QUERIES).select(
+            query_id, "embedding", "nrm"
+        )
+    cell, q_cell = (["cell"], ["q_cell"]) if ivf else ([], [])
+    if int8:
+        e = quantize_int8(e, dim).select("vec_id", *cell, "qemb")
+        q = quantize_int8(q, dim).select(
+            "query_id", *q_cell, F.col("qemb").alias("q_qemb")
+        )
+        name, out = "qdot", F.col("qdot")
+        score = int8_dot(F.col("q_qemb"), F.col("qemb"), dim).cast("long")
+    else:
+        q = q.select(
+            "query_id",
             F.col("embedding").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),
-            F.col("seed_id").alias("q_cell"),
+            *q_cell,
         )
-    )
-    scored = (
+        name, out = "cos", F.round("cos", 4).alias("cosine")
+        score = vectors.dot(F.col("q_emb"), F.col("embedding"), dim) / (
+            F.col("q_nrm") * F.col("nrm")
+        )
+    pairs = (
         e.join(F.broadcast(q), e.cell == F.col("q_cell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            vectors.dot(F.col("q_emb"), F.col("embedding"), dim)
-            / (F.col("q_nrm") * F.col("nrm")),
-        )
+        if ivf
+        else e.crossJoin(F.broadcast(q))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).withColumn(
+        name, score
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc(name), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            F.round("cos", 4).alias("cosine"),
-        )
+        .filter(F.col("rank") <= (IVF_TOP_K if ivf else TOP_K))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank", out)
         .orderBy("query_id", "rank")
     )
+
+
+# entry -> (ivf, int8): which candidates are scored, and how
+_ANN = {
+    "ann_cosine_topk": (False, False),
+    "ann_ivf_topk": (True, False),
+    "ann_quantized_topk": (False, True),
+    "ann_ivf_quantized_topk": (True, True),
+}
+
+
+def ann_cosine_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force exact top-k: the baseline every ANN variant is
+    measured against."""
+    return _ann_topk(spark, sf_dir, *_ANN["ann_cosine_topk"])
+
+
+def ann_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF cell-pruned top-k over self-computed cells (see ivf_cells)."""
+    return _ann_topk(spark, sf_dir, *_ANN["ann_ivf_topk"])
+
+
+def ann_quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact candidates ranked by the int8 dot product."""
+    return _ann_topk(spark, sf_dir, *_ANN["ann_quantized_topk"])
+
+
+def ann_ivf_quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF pruning × int8 scoring composed — the full scale path: the
+    index bounds WHICH vectors are scored and quantization bounds the
+    COST of each score."""
+    return _ann_topk(spark, sf_dir, *_ANN["ann_ivf_quantized_topk"])
 
 
 def _hyperplane_signs(n_planes: int, dim: int) -> list[list[int]]:
@@ -254,6 +314,12 @@ _DOT_SQL = (
     "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
     "(acc, x) -> acc + x)"
 )
+_QDOT_SQL = (
+    "list_reduce(list_transform(range(1, len({a}) + 1), "
+    "i -> CAST({a}[i] AS INT) * CAST({b}[i] AS INT)), "
+    "(acc, x) -> acc + x)"
+)
+
 
 def _sql_lsh_buckets(n_planes: int = N_HYPERPLANES, dim: int = 64) -> str:
     """Oracle for the hyperplane bucketing: the ±1 sign matrix is a
@@ -278,31 +344,18 @@ def _sql_lsh_buckets(n_planes: int = N_HYPERPLANES, dim: int = 64) -> str:
     """
 
 
-ORACLES: dict[str, str] = {
-    "ann_cosine_topk": f"""
-        WITH n AS (SELECT vec_id, label, embedding,
-                          sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
-                   FROM embeddings),
-        q AS (SELECT vec_id AS query_id, embedding AS q_emb, nrm AS q_nrm
-              FROM n WHERE vec_id < {N_QUERIES}),
-        scored AS (
-            SELECT q.query_id, n.vec_id,
-                   {_DOT_SQL.format(a='q.q_emb', b='n.embedding')}
-                       / (q.q_nrm * n.nrm) AS cos
-            FROM n CROSS JOIN q WHERE n.vec_id <> q.query_id)
-        SELECT query_id, vec_id AS neighbor_id,
-               CAST(rank AS INT) AS rank, round(cos, 4) AS cosine
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, vec_id) AS rank
-              FROM scored)
-        WHERE rank <= {TOP_K}
-        ORDER BY query_id, rank
-    """,
-    "ann_ivf_topk": f"""
-        WITH n AS (SELECT vec_id, embedding,
-                          sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
-                   FROM embeddings),
-        seeds AS (
+# n(vec_id, embedding, nrm): _with_norm in SQL
+_NORMS_SQL = f"""n AS (SELECT vec_id, embedding,
+                  sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
+           FROM embeddings)"""
+
+
+def _sql_ivf_cells(src: str = "n") -> str:
+    """ivf_seeds/ivf_cells as CTEs over `n`: `seeds`, `ranked` (every
+    vector's seeds by cosine, rn = 1 its own cell, rn <= N_PROBE its
+    probes) and `c`, the rows of `src` (keyed by vec_id) with their
+    cell."""
+    return f"""seeds AS (
             SELECT vec_id AS seed_id, embedding AS s_emb, nrm AS s_nrm
             FROM n
             ORDER BY (vec_id * 2654435761) % 4294967296, vec_id
@@ -315,222 +368,64 @@ ORACLES: dict[str, str] = {
                                 / (n.nrm * s.s_nrm) DESC,
                                 s.seed_id) AS rn
             FROM n CROSS JOIN seeds s),
-        c AS (SELECT n.*, r.seed_id AS cell
-              FROM n JOIN ranked r ON n.vec_id = r.vec_id AND r.rn = 1),
-        q AS (SELECT n.vec_id AS query_id, n.embedding AS q_emb,
-                     n.nrm AS q_nrm, r.seed_id AS q_cell
-              FROM n JOIN ranked r ON n.vec_id = r.vec_id
-              WHERE n.vec_id < {N_QUERIES} AND r.rn <= {N_PROBE}),
-        scored AS (
-            SELECT q.query_id, c.vec_id,
-                   {_DOT_SQL.format(a='q.q_emb', b='c.embedding')}
-                       / (q.q_nrm * c.nrm) AS cos
-            FROM c JOIN q ON c.cell = q.q_cell
-            WHERE c.vec_id <> q.query_id)
-        SELECT query_id, vec_id AS neighbor_id,
-               CAST(rank AS INT) AS rank, round(cos, 4) AS cosine
-        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                           ORDER BY cos DESC, vec_id) AS rank
-              FROM scored)
-        WHERE rank <= 5
-        ORDER BY query_id, rank
-    """,
-}
+        c AS (SELECT d.*, r.seed_id AS cell
+              FROM {src} d JOIN ranked r ON d.vec_id = r.vec_id AND r.rn = 1)"""
 
+
+def _sql_ann_topk(ivf: bool, int8: bool) -> str:
+    """DuckDB twin of `_ann_topk`: the same candidates, scores and
+    (score DESC, vec_id) ranking, recomputed from the stored floats."""
+    ctes = [_NORMS_SQL]
+    if int8:
+        src, q_cols = "qn", "d.qemb AS q_qemb"
+        ctes.append("""qn AS (SELECT vec_id,
+                  list_transform(range(1, len(embedding) + 1),
+                      i -> CAST(round(CAST(embedding[i] AS DOUBLE) / nrm
+                                      * 127 + 1e-9) AS TINYINT)) AS qemb
+           FROM n)""")
+        score = f"CAST({_QDOT_SQL.format(a='q.q_qemb', b='c.qemb')} AS BIGINT)"
+        name, out = "qdot", "qdot"
+    else:
+        src, q_cols = "n", "d.embedding AS q_emb, d.nrm AS q_nrm"
+        score = (
+            f"{_DOT_SQL.format(a='q.q_emb', b='c.embedding')} / (q.q_nrm * c.nrm)"
+        )
+        name, out = "cos", "round(cos, 4) AS cosine"
+    if ivf:
+        ctes += [
+            _sql_ivf_cells(src),
+            f"""q AS (SELECT d.vec_id AS query_id, {q_cols}, r.seed_id AS q_cell
+              FROM {src} d JOIN ranked r ON d.vec_id = r.vec_id
+              WHERE d.vec_id < {N_QUERIES} AND r.rn <= {N_PROBE})""",
+        ]
+        pairs = "c JOIN q ON c.cell = q.q_cell"
+    else:
+        ctes.append(f"""q AS (SELECT d.vec_id AS query_id, {q_cols}
+              FROM {src} d WHERE d.vec_id < {N_QUERIES})""")
+        pairs = f"{src} c CROSS JOIN q"
+    ctes.append(f"""scored AS (
+            SELECT q.query_id, c.vec_id, {score} AS {name}
+            FROM {pairs} WHERE c.vec_id <> q.query_id)""")
+    with_ = ",\n        ".join(ctes)
+    return f"""
+        WITH {with_}
+        SELECT query_id, vec_id AS neighbor_id,
+               CAST(rank AS INT) AS rank, {out}
+        FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                                           ORDER BY {name} DESC, vec_id) AS rank
+              FROM scored)
+        WHERE rank <= {IVF_TOP_K if ivf else TOP_K}
+        ORDER BY query_id, rank
+    """
+
+
+ORACLES = {name: _sql_ann_topk(*flags) for name, flags in _ANN.items()}
 ORACLES["ann_lsh_bucket"] = _sql_lsh_buckets()
 
 QUERIES = {
     "ann_cosine_topk": ann_cosine_topk_q,
     "ann_ivf_topk": ann_ivf_topk_q,
+    "ann_quantized_topk": ann_quantized_topk_q,
+    "ann_ivf_quantized_topk": ann_ivf_quantized_topk_q,
     "ann_lsh_bucket": ann_lsh_bucket_q,
 }
-
-
-# --------------------------------------------------------------------------
-# Int8-quantized ANN: symmetric per-element quantization of the
-# L2-normalized vector to a signed byte (q_i = round(127·v_i/‖v‖)),
-# then integer dot-product ranking. At 100 TB this is the memory/
-# bandwidth scale lever — 4× smaller vectors than float32 (16× vs
-# float64), SIMD-friendly integer math, and the candidate scoring
-# stays fully codegen'd. Ranking is by the *integer* dot product with
-# a vec_id tie-break, so the gate compares bit-exact integers (no
-# float drift surface at all).
-# --------------------------------------------------------------------------
-def quantize_int8(df: DataFrame, dim: int) -> DataFrame:
-    """Attach `qemb: array<byte>` — int8 quantization of the unit
-    vector, rounded HALF_UP as the oracle does (SURVEY §6)."""
-    e = vectors.as_double(F.col("embedding"))
-    nrm = F.col("nrm")
-    q = F.transform(
-        e, lambda x: round_half_up(x / nrm * 127, 0).cast("byte")
-    )
-    return df.withColumn("qemb", q)
-
-
-def int8_dot(a, b, dim: int):
-    """Integer Σ a[i]·b[i] as the HOF fold (see vectors.py — the
-    unrolled 64-term int expression has the same never-JITs problem).
-    Integer addition is associative so there is no fold-order
-    subtlety; max |dot| is 64·127² ≪ 2³¹."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("int") * y.cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-
-
-def ann_quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = load_table(spark, sf_dir, "embeddings")
-    dim = vectors.infer_dim(raw)
-    e = quantize_int8(_with_norm(raw, dim), dim).select("vec_id", "qemb")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("qemb").alias("q_qemb")
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "qdot", int8_dot(F.col("q_qemb"), F.col("qemb"), dim).cast("long")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qdot"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), "rank", "qdot"
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-_QDOT_SQL = (
-    "list_reduce(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS INT) * CAST({b}[i] AS INT)), "
-    "(acc, x) -> acc + x)"
-)
-
-
-ORACLES["ann_quantized_topk"] = f"""
-    WITH n AS (SELECT vec_id, embedding,
-                      sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
-               FROM embeddings),
-    qn AS (SELECT vec_id,
-                  list_transform(range(1, len(embedding) + 1),
-                      i -> CAST(round(CAST(embedding[i] AS DOUBLE) / nrm
-                                      * 127 + 1e-9) AS TINYINT)) AS qemb
-           FROM n),
-    q AS (SELECT vec_id AS query_id, qemb AS q_qemb
-          FROM qn WHERE vec_id < {N_QUERIES}),
-    scored AS (
-        SELECT q.query_id, qn.vec_id,
-               CAST({_QDOT_SQL.format(a='q.q_qemb', b='qn.qemb')} AS BIGINT)
-                   AS qdot
-        FROM qn CROSS JOIN q WHERE qn.vec_id <> q.query_id)
-    SELECT query_id, vec_id AS neighbor_id, CAST(rank AS INT) AS rank, qdot
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY qdot DESC, vec_id) AS rank
-          FROM scored)
-    WHERE rank <= {TOP_K}
-    ORDER BY query_id, rank
-"""
-QUERIES["ann_quantized_topk"] = ann_quantized_topk_q
-
-
-def ann_ivf_quantized_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF pruning × int8 scoring composed — the full scale path: the
-    index bounds WHICH vectors are scored (~1/N_CELLS of the table per
-    probe) and quantization bounds the COST of each score (int8
-    arithmetic over 4×-smaller vectors). Assignment/probing reuse the
-    float codebook (exact, bit-portable); candidate scoring is the
-    integer dot product, so the gate compares exact integers."""
-    raw = load_table(spark, sf_dir, "embeddings")
-    dim = vectors.infer_dim(raw)
-    en = _with_norm(raw, dim)
-    seeds = ivf_seeds(en)
-    cells = ivf_cells(en, dim, seeds)
-    eq = quantize_int8(cells, dim).select("vec_id", "cell", "qemb")
-    probe_w = Window.partitionBy("vec_id").orderBy(
-        F.desc("scos"), F.asc("seed_id")
-    )
-    q = (
-        _seed_cosines(en.filter(F.col("vec_id") < N_QUERIES), seeds, dim)
-        .withColumn("prn", F.row_number().over(probe_w))
-        .filter(F.col("prn") <= N_PROBE)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            F.col("seed_id").alias("q_cell"),
-        )
-    )
-    qq = quantize_int8(
-        q.withColumnRenamed("q_emb", "embedding").withColumnRenamed(
-            "q_nrm", "nrm"
-        ),
-        dim,
-    ).select("query_id", "q_cell", F.col("qemb").alias("q_qemb"))
-    scored = (
-        eq.join(F.broadcast(qq), eq.cell == F.col("q_cell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "qdot", int8_dot(F.col("q_qemb"), F.col("qemb"), dim).cast("long")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qdot"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), "rank", "qdot"
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-ORACLES["ann_ivf_quantized_topk"] = f"""
-    WITH n AS (SELECT vec_id, embedding,
-                      sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm
-               FROM embeddings),
-    seeds AS (
-        SELECT vec_id AS seed_id, embedding AS s_emb, nrm AS s_nrm
-        FROM n
-        ORDER BY (vec_id * 2654435761) % 4294967296, vec_id
-        LIMIT {N_CELLS}),
-    ranked AS (
-        SELECT n.vec_id, s.seed_id,
-               row_number() OVER (
-                   PARTITION BY n.vec_id
-                   ORDER BY {_DOT_SQL.format(a='n.embedding', b='s.s_emb')}
-                            / (n.nrm * s.s_nrm) DESC,
-                            s.seed_id) AS rn
-        FROM n CROSS JOIN seeds s),
-    qn AS (SELECT vec_id,
-                  list_transform(range(1, len(embedding) + 1),
-                      i -> CAST(round(CAST(embedding[i] AS DOUBLE) / nrm
-                                      * 127 + 1e-9) AS TINYINT)) AS qemb
-           FROM n),
-    c AS (SELECT qn.vec_id, qn.qemb, r.seed_id AS cell
-          FROM qn JOIN ranked r ON qn.vec_id = r.vec_id AND r.rn = 1),
-    q AS (SELECT qn.vec_id AS query_id, qn.qemb AS q_qemb,
-                 r.seed_id AS q_cell
-          FROM qn JOIN ranked r ON qn.vec_id = r.vec_id
-          WHERE qn.vec_id < {N_QUERIES} AND r.rn <= {N_PROBE}),
-    scored AS (
-        SELECT q.query_id, c.vec_id,
-               CAST({_QDOT_SQL.format(a='q.q_qemb', b='c.qemb')} AS BIGINT)
-                   AS qdot
-        FROM c JOIN q ON c.cell = q.q_cell
-        WHERE c.vec_id <> q.query_id)
-    SELECT query_id, vec_id AS neighbor_id, CAST(rank AS INT) AS rank, qdot
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY qdot DESC, vec_id) AS rank
-          FROM scored)
-    WHERE rank <= 5
-    ORDER BY query_id, rank
-"""
-QUERIES["ann_ivf_quantized_topk"] = ann_ivf_quantized_topk_q

@@ -23,7 +23,7 @@ layout).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,10 +44,10 @@ def sink_compacted(state: DataFrame, out_dir: str, key: str = "key") -> None:
     ).parquet(out_dir)
 
 
-def envelope_to_json(flat: DataFrame) -> DataFrame:
-    """Serialize the flat envelope to the JSON wire format: (key,
-    value) string pairs, value = the Debezium-style payload object."""
-    payload = F.struct(
+def _payload() -> Column:
+    """The Debezium-style change-event payload both JSON wire formats
+    carry (as the value, or as CloudEvents `data`)."""
+    return F.struct(
         F.struct(
             F.col("before_totalprice").alias("o_totalprice"),
         ).alias("before"),
@@ -61,10 +61,39 @@ def envelope_to_json(flat: DataFrame) -> DataFrame:
         F.col("ts_ms"),
         F.col("seq"),
     )
+
+
+def _to_wire(flat: DataFrame, value: Column) -> DataFrame:
     return flat.select(
         F.to_json(F.struct(F.col("key"))).alias("key"),
-        F.to_json(payload).alias("value"),
+        F.to_json(value).alias("value"),
     )
+
+
+def _from_wire(wire: DataFrame, value_schema: T.StructType, payload: str) -> DataFrame:
+    """Parse (key, value) JSON pairs and flatten the payload struct at
+    `payload` (a path in the parsed value) back to the flat envelope."""
+    parsed = wire.select(
+        F.from_json("key", "struct<key:bigint>").alias("k"),
+        F.from_json("value", value_schema).alias("v"),
+    )
+    return parsed.select(
+        F.col("k.key").alias("key"),
+        F.col(f"{payload}.op").alias("op"),
+        F.col(f"{payload}.seq").alias("seq"),
+        F.col(f"{payload}.ts_ms").alias("ts_ms"),
+        F.col(f"{payload}.before.o_totalprice").alias("before_totalprice"),
+        F.col(f"{payload}.after.o_totalprice").alias("after_totalprice"),
+        F.col(f"{payload}.after.o_custkey").alias("o_custkey"),
+        F.col(f"{payload}.after.o_orderstatus").alias("o_orderstatus"),
+        F.col(f"{payload}.after.o_orderpriority").alias("o_orderpriority"),
+    )
+
+
+def envelope_to_json(flat: DataFrame) -> DataFrame:
+    """Serialize the flat envelope to the JSON wire format: (key,
+    value) string pairs, value = the Debezium-style payload object."""
+    return _to_wire(flat, _payload())
 
 
 JSON_VALUE_SCHEMA = T.StructType(
@@ -93,21 +122,7 @@ JSON_VALUE_SCHEMA = T.StructType(
 
 def json_to_envelope(wire: DataFrame) -> DataFrame:
     """Deserialize the JSON wire format back to the flat envelope."""
-    parsed = wire.select(
-        F.from_json("key", "struct<key:bigint>").alias("k"),
-        F.from_json("value", JSON_VALUE_SCHEMA).alias("v"),
-    )
-    return parsed.select(
-        F.col("k.key").alias("key"),
-        F.col("v.op").alias("op"),
-        F.col("v.seq").alias("seq"),
-        F.col("v.ts_ms").alias("ts_ms"),
-        F.col("v.before.o_totalprice").alias("before_totalprice"),
-        F.col("v.after.o_totalprice").alias("after_totalprice"),
-        F.col("v.after.o_custkey").alias("o_custkey"),
-        F.col("v.after.o_orderstatus").alias("o_orderstatus"),
-        F.col("v.after.o_orderpriority").alias("o_orderpriority"),
-    )
+    return _from_wire(wire, JSON_VALUE_SCHEMA, "v")
 
 
 # --------------------------------------------------------------------------
@@ -124,20 +139,6 @@ def envelope_to_cloudevents(flat: DataFrame) -> DataFrame:
     specversion/id/source/type/time/datacontenttype context attributes,
     change-event payload under `data`. id = '<key>:<seq>' (unique per
     event), time = RFC3339 from ts_ms."""
-    payload = F.struct(
-        F.struct(
-            F.col("before_totalprice").alias("o_totalprice"),
-        ).alias("before"),
-        F.struct(
-            F.col("after_totalprice").alias("o_totalprice"),
-            F.col("o_custkey"),
-            F.col("o_orderstatus"),
-            F.col("o_orderpriority"),
-        ).alias("after"),
-        F.col("op"),
-        F.col("ts_ms"),
-        F.col("seq"),
-    )
     ce = F.struct(
         F.lit("1.0").alias("specversion"),
         F.concat_ws(":", F.col("key"), F.col("seq")).alias("id"),
@@ -148,12 +149,9 @@ def envelope_to_cloudevents(flat: DataFrame) -> DataFrame:
             "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
         ).alias("time"),
         F.lit("application/json").alias("datacontenttype"),
-        payload.alias("data"),
+        _payload().alias("data"),
     )
-    return flat.select(
-        F.to_json(F.struct(F.col("key"))).alias("key"),
-        F.to_json(ce).alias("value"),
-    )
+    return _to_wire(flat, ce)
 
 
 CE_VALUE_SCHEMA = T.StructType(
@@ -173,21 +171,7 @@ def cloudevents_to_envelope(wire: DataFrame) -> DataFrame:
     """Deserialize CloudEvents structured JSON back to the flat
     envelope (inverse of envelope_to_cloudevents; the context
     attributes are derivable, the payload is `data`)."""
-    parsed = wire.select(
-        F.from_json("key", "struct<key:bigint>").alias("k"),
-        F.from_json("value", CE_VALUE_SCHEMA).alias("v"),
-    )
-    return parsed.select(
-        F.col("k.key").alias("key"),
-        F.col("v.data.op").alias("op"),
-        F.col("v.data.seq").alias("seq"),
-        F.col("v.data.ts_ms").alias("ts_ms"),
-        F.col("v.data.before.o_totalprice").alias("before_totalprice"),
-        F.col("v.data.after.o_totalprice").alias("after_totalprice"),
-        F.col("v.data.after.o_custkey").alias("o_custkey"),
-        F.col("v.data.after.o_orderstatus").alias("o_orderstatus"),
-        F.col("v.data.after.o_orderpriority").alias("o_orderpriority"),
-    )
+    return _from_wire(wire, CE_VALUE_SCHEMA, "v.data")
 
 
 # --------------------------------------------------------------------------

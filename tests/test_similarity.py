@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from debezium_spark.operators.similarity import (
     N_PROBE,
     ann_cosine_topk_q,
+    ann_ivf_quantized_topk_q,
     ann_ivf_topk_q,
     ivf_cells,
     ivf_seeds,
@@ -36,9 +37,15 @@ def test_brute_topk_matches_numpy(spark, sf_dir):
         assert mine == expect
 
 
-def test_ivf_neighbors_come_from_probed_cells(spark, sf_dir):
+@pytest.mark.parametrize(
+    "build",
+    [ann_ivf_topk_q, ann_ivf_quantized_topk_q],
+    ids=["ann_ivf_topk", "ann_ivf_quantized_topk"],
+)
+def test_ivf_neighbors_come_from_probed_cells(spark, sf_dir, build):
     """IVF is self-contained (no label column needed): every returned
-    neighbor's cell must be one of the query's N_PROBE probed cells."""
+    neighbor's cell must be one of the query's N_PROBE probed cells,
+    whether the candidates are scored as floats or as int8."""
     import pyspark.sql.functions as F
 
     raw = load_table(spark, sf_dir, "embeddings").drop("label")
@@ -54,7 +61,7 @@ def test_ivf_neighbors_come_from_probed_cells(spark, sf_dir):
     probe_sets = {
         q: {sid for _, sid in sorted(v)[:N_PROBE]} for q, v in probes.items()
     }
-    out = ann_ivf_topk_q(spark, sf_dir).collect()
+    out = build(spark, sf_dir).collect()
     assert out, "ivf returned no rows"
     for r in out:
         assert cells[r["neighbor_id"]] in probe_sets[r["query_id"]]

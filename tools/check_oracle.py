@@ -12,9 +12,11 @@ Floats are compared through repr of round(9) to surface any
 representation drift *before* the real gate does.
 
 Just before the final `N ok, M fail` line it prints one JSON line,
-`{name: {"ok", "rows", "plan"}}`, that two runs can diff: `plan` is the
-first 16 hex digits of the sha256 of the optimized logical plan with
-its run-specific ids, lambda variable suffixes and temp paths blanked.
+`{name: {"ok", "rows", "plan", "oracle"}}`, that two runs can diff:
+`plan` is the first 16 hex digits of the sha256 of the optimized
+logical plan with its run-specific ids, lambda variable suffixes and
+temp paths blanked; `oracle` is the same digest of the entry's oracle
+SQL text.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -100,12 +102,16 @@ _PLAN_NOISE = (
 )
 
 
+def _digest(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
 def plan_digest(sdf) -> str:
     """Run-independent digest of a frame's optimized logical plan."""
     plan = sdf._jdf.queryExecution().optimizedPlan().toString()
     for pat, repl in _PLAN_NOISE:
         plan = pat.sub(repl, plan)
-    return hashlib.sha256(plan.encode()).hexdigest()[:16]
+    return _digest(plan)
 
 
 def main():
@@ -124,11 +130,12 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        record[name] = {"ok": False, "rows": None, "plan": None}
+        record[name] = {"ok": False, "rows": None, "plan": None, "oracle": None}
         if name not in oracles:
             print(f"FAIL  {name}: no oracle")
             n_fail += 1
             continue
+        record[name]["oracle"] = _digest(oracles[name])
         spark.catalog.clearCache()  # builders may cache intermediates
         t0 = time.time()
         try:
