@@ -36,28 +36,26 @@ UNAVAILABLE = "__debezium_unavailable_value"
 # --------------------------------------------------------------------------
 # TOAST / unavailable-value placeholder handling
 # --------------------------------------------------------------------------
-def toast_placeholders(cdc: DataFrame, col: str = "o_orderpriority") -> DataFrame:
+def toast_placeholders(cdc: DataFrame) -> DataFrame:
     """Deterministically re-create the connector-side behavior: every
     update event whose seq ≡ 0 (mod 3) did not rewrite the TOASTed
-    column, so it carries the placeholder."""
+    o_orderpriority column, so it carries the placeholder."""
     return cdc.withColumn(
-        col,
+        "o_orderpriority",
         F.when(
             (F.col("op") == "u") & (F.pmod(F.col("seq"), F.lit(3)) == 0),
             F.lit(UNAVAILABLE),
-        ).otherwise(F.col(col)),
+        ).otherwise(F.col("o_orderpriority")),
     )
 
 
-def unavailable_value_fill(
-    df: DataFrame, cols: list[str], key: str = "key", order: str = "seq"
-) -> DataFrame:
+def unavailable_value_fill(df: DataFrame, cols: list[str]) -> DataFrame:
     """Carry the last real value forward per key: placeholder → NULL,
-    then last(..., ignorenulls) over (key, order). The first event per
+    then last(..., ignorenulls) over (key, seq). The first event per
     key is a create (never TOASTed), so the fill always resolves."""
     w = (
-        Window.partitionBy(key)
-        .orderBy(order)
+        Window.partitionBy("key")
+        .orderBy("seq")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     for c in cols:

@@ -36,22 +36,6 @@ KNUTH_MULT = 2654435761
 DEL_MULT = 40503
 TS_EPOCH_MS = 1700000000000
 
-# Flat (column-per-field) form of the synthesized change stream — the
-# canonical shape for oracle comparison and for SMT/materialization
-# operators.  Struct form below for the API-level envelope.
-FLAT_COLUMNS = (
-    "key",
-    "op",
-    "seq",
-    "ts_ms",
-    "before_totalprice",
-    "after_totalprice",
-    "o_custkey",
-    "o_orderstatus",
-    "o_orderdate",
-    "o_orderpriority",
-)
-
 
 def synthesize_cdc_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The change stream as flat columns: one row per change event."""

@@ -18,13 +18,10 @@ from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import (
     CDC_FLAT_SQL,
-    SNAPSHOT_FLAT_SQL,
     synthesize_cdc_flat,
     synthesize_snapshot_flat,
 )
 from debezium_spark.functions.rounding import round_half_up, to_units
-
-STATE_COLS = ("o_totalprice", "o_custkey", "o_orderstatus", "o_orderpriority")
 
 
 # --------------------------------------------------------------------------
@@ -69,30 +66,28 @@ def cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # collection; only events after the LAST truncate contribute to state
 # (Debezium emits truncate events with null key/images).
 # --------------------------------------------------------------------------
-def latest_state_with_truncate(
-    cdc: DataFrame, key: str = "key", seq: str = "seq"
-) -> DataFrame:
+def latest_state_with_truncate(cdc: DataFrame) -> DataFrame:
     last_trunc = cdc.filter(F.col("op") == "t").agg(
-        F.coalesce(F.max(seq), F.lit(-1)).alias("__trunc_seq")
+        F.coalesce(F.max("seq"), F.lit(-1)).alias("__trunc_seq")
     )
     survivors = cdc.filter(F.col("op") != "t").join(
         F.broadcast(last_trunc)
-    ).filter(F.col(seq) > F.col("__trunc_seq")).drop("__trunc_seq")
-    return latest_state(survivors, key, seq)
+    ).filter(F.col("seq") > F.col("__trunc_seq")).drop("__trunc_seq")
+    return latest_state(survivors)
 
 
 # --------------------------------------------------------------------------
 # SCD2 history: every non-delete event opens a version; the next event
 # on the same key (update OR delete) closes it.
 # --------------------------------------------------------------------------
-def scd2(cdc: DataFrame, key: str = "key", seq: str = "seq") -> DataFrame:
-    w = Window.partitionBy(key).orderBy(seq)
-    versions = cdc.withColumn("valid_to_seq", F.lead(seq).over(w)).filter(
+def scd2(cdc: DataFrame) -> DataFrame:
+    w = Window.partitionBy("key").orderBy("seq")
+    versions = cdc.withColumn("valid_to_seq", F.lead("seq").over(w)).filter(
         F.col("op") != "d"
     )
     return versions.select(
-        F.col(key),
-        F.col(seq).alias("valid_from_seq"),
+        F.col("key"),
+        F.col("seq").alias("valid_from_seq"),
         "valid_to_seq",
         F.col("valid_to_seq").isNull().alias("is_current"),
         F.col("after_totalprice").alias("o_totalprice"),
@@ -515,11 +510,11 @@ QUERIES["cdc_composite_key_state"] = cdc_composite_key_state_q
 # guarantees at-least-once, so a crash/restart redelivers a suffix of
 # the log; the consumer dedupes on the source position (seq/LSN).
 # --------------------------------------------------------------------------
-def dedupe_redelivered(delivered: DataFrame, position: str = "seq") -> DataFrame:
+def dedupe_redelivered(delivered: DataFrame) -> DataFrame:
     """Idempotent-consumer dedup: one hash shuffle on the source
-    position; duplicate envelopes are bit-identical so any survivor
-    is correct."""
-    return delivered.dropDuplicates([position])
+    position (`seq`); duplicate envelopes are bit-identical so any
+    survivor is correct."""
+    return delivered.dropDuplicates(["seq"])
 
 
 def cdc_redelivery_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,23 +633,16 @@ QUERIES["cdc_pk_update_rekey"] = cdc_pk_update_rekey_q
 
 
 # --------------------------------------------------------------------------
-# JDBC sink apply modes (Debezium's official JDBC sink connector,
-# public docs /connectors/jdbc: insert.mode upsert + delete.enabled).
-# With delete.enabled=false the sink IGNORES delete events — the
-# target row keeps the last non-delete image, so a key whose final
-# event is a delete still holds its last upsert. Semantically distinct
-# from latest-state (where the delete removes the key): both are one
+# JDBC sink apply (Debezium's official JDBC sink connector, public
+# docs /connectors/jdbc: insert.mode upsert, delete.enabled=false).
+# The sink IGNORES delete events — the target row keeps the last
+# non-delete image, so a key whose final event is a delete still holds
+# its last upsert. Semantically distinct from latest-state (where the
+# delete removes the key, i.e. delete.enabled=true): both are one
 # pk-shuffle window plans.
 # --------------------------------------------------------------------------
-def jdbc_sink_apply(
-    cdc: DataFrame,
-    key: str = "key",
-    seq: str = "seq",
-    delete_enabled: bool = True,
-) -> DataFrame:
-    if not delete_enabled:
-        cdc = cdc.filter(F.col("op") != "d")
-    return latest_state(cdc, key, seq)
+def jdbc_sink_apply(cdc: DataFrame) -> DataFrame:
+    return latest_state(cdc.filter(F.col("op") != "d"))
 
 
 def cdc_jdbc_sink_soft_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -663,7 +651,7 @@ def cdc_jdbc_sink_soft_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry their last upsert image and a was_deleted flag derived from
     the stream."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
-    state = jdbc_sink_apply(cdc, delete_enabled=False)
+    state = jdbc_sink_apply(cdc)
     deleted = (
         cdc.filter(F.col("op") == "d")
         .select(F.col("key").alias("dkey"))
@@ -712,22 +700,20 @@ QUERIES["cdc_jdbc_sink_soft_delete"] = cdc_jdbc_sink_soft_delete_q
 TXN_BUCKETS = 97  # synthetic txn id: interleaves keys across txns
 
 
-def txn_consistent_apply(
-    cdc: DataFrame, cutoff_seq, txn_col="txn_id", seq: str = "seq"
-) -> DataFrame:
-    """Filter to events of transactions fully delivered by
-    cutoff_seq (a Column or literal)."""
-    delivered = cdc.filter(F.col(seq) <= cutoff_seq)
-    txn_state = delivered.groupBy(txn_col).agg(
+def txn_consistent_apply(cdc: DataFrame, cutoff_seq) -> DataFrame:
+    """Filter to events of `txn_id`s fully delivered by cutoff_seq (a
+    Column or literal)."""
+    delivered = cdc.filter(F.col("seq") <= cutoff_seq)
+    txn_state = delivered.groupBy("txn_id").agg(
         F.count(F.lit(1)).alias("__n_delivered")
     )
-    totals = cdc.groupBy(txn_col).agg(F.count(F.lit(1)).alias("__n_total"))
+    totals = cdc.groupBy("txn_id").agg(F.count(F.lit(1)).alias("__n_total"))
     complete = (
-        txn_state.join(totals, txn_col)
+        txn_state.join(totals, "txn_id")
         .filter(F.col("__n_delivered") == F.col("__n_total"))
-        .select(txn_col)
+        .select("txn_id")
     )
-    return delivered.join(complete, txn_col)
+    return delivered.join(complete, "txn_id")
 
 
 def cdc_txn_consistent_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -796,11 +782,9 @@ QUERIES["cdc_txn_consistent_apply"] = cdc_txn_consistent_apply_q
 # PK at 100 TB (versions-per-key is small and bounded), never a range
 # cross join.
 # --------------------------------------------------------------------------
-def pit_join(
-    history: DataFrame, probes: DataFrame, key: str = "key"
-) -> DataFrame:
+def pit_join(history: DataFrame, probes: DataFrame) -> DataFrame:
     cond = (
-        (history[key] == probes["p_key"])
+        (history["key"] == probes["p_key"])
         & (probes["probe_seq"] >= history["valid_from_seq"])
         & (
             history["valid_to_seq"].isNull()

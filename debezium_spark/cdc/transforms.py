@@ -27,55 +27,26 @@ from debezium_spark.sources.tables import load_table
 # columns (Debezium's `ExtractNewRecordState` with add.fields=op,ts_ms
 # and delete.handling.mode=drop).
 # --------------------------------------------------------------------------
-def extract_new_record_state(
-    cdc: DataFrame,
-    drop_deletes: bool = True,
-    meta_prefix: str = "__",
-    delete_mode: str | None = None,
-) -> DataFrame:
+def extract_new_record_state(cdc: DataFrame, delete_mode: str = "drop") -> DataFrame:
     """delete_mode ∈ {'drop', 'rewrite', 'none'} mirrors Debezium's
     delete.handling.mode: drop removes delete events, rewrite keeps
     them and adds a __deleted flag, none passes them through
-    unchanged. drop_deletes=True is shorthand for 'drop'."""
-    if delete_mode is None:
-        delete_mode = "drop" if drop_deletes else "none"
+    unchanged."""
     out = cdc.select(
         F.col("key"),
         F.col("after_totalprice").alias("o_totalprice"),
         F.col("o_custkey"),
         F.col("o_orderstatus"),
         F.col("o_orderpriority"),
-        F.col("op").alias(f"{meta_prefix}op"),
-        F.col("ts_ms").alias(f"{meta_prefix}ts_ms"),
-        F.lit("orders").alias(f"{meta_prefix}table"),
+        F.col("op").alias("__op"),
+        F.col("ts_ms").alias("__ts_ms"),
+        F.lit("orders").alias("__table"),
     )
     if delete_mode == "drop":
-        return out.filter(F.col(f"{meta_prefix}op") != "d")
+        return out.filter(F.col("__op") != "d")
     if delete_mode == "rewrite":
-        return out.withColumn(
-            f"{meta_prefix}deleted", F.col(f"{meta_prefix}op") == "d"
-        )
+        return out.withColumn("__deleted", F.col("__op") == "d")
     return out
-
-
-def column_filter(df: DataFrame, include: list[str] | None = None,
-                  exclude: list[str] | None = None) -> DataFrame:
-    """column.include.list / column.exclude.list connector configs:
-    project the payload down to the allowed columns (metadata columns
-    prefixed with __ always pass)."""
-    cols = df.columns
-    keep = []
-    for c in cols:
-        if c.startswith("__") or c == "key":
-            keep.append(c)
-        elif include is not None:
-            if c in include:
-                keep.append(c)
-        elif exclude is not None and c in exclude:
-            continue
-        else:
-            keep.append(c)
-    return df.select(*keep)
 
 
 # --------------------------------------------------------------------------
@@ -89,11 +60,9 @@ def filter_smt(cdc: DataFrame, condition: Column) -> DataFrame:
 # --------------------------------------------------------------------------
 # RegexRouter + ContentBasedRouter: compute the destination topic.
 # --------------------------------------------------------------------------
-def regex_router(
-    cdc: DataFrame, pattern: str, replacement: str, topic_col: str = "topic"
-) -> DataFrame:
+def regex_router(cdc: DataFrame, pattern: str, replacement: str) -> DataFrame:
     base_topic = F.concat_ws(".", F.lit("tpch"), F.lit("orders"))
-    return cdc.withColumn(topic_col, F.regexp_replace(base_topic, pattern, replacement))
+    return cdc.withColumn("topic", F.regexp_replace(base_topic, pattern, replacement))
 
 
 def content_based_router(cdc: DataFrame, routes: list[tuple[Column, str]],
@@ -125,13 +94,12 @@ def truncate_columns(df: DataFrame, cols: list[str], length: int) -> DataFrame:
 # Outbox EventRouter: route rows of an outbox table by aggregate type,
 # extracting the payload (Debezium outbox pattern).
 # --------------------------------------------------------------------------
-def outbox_router(outbox: DataFrame, aggregate_type: str = "event_type",
-                  aggregate_id: str = "user_id", payload: str = "props") -> DataFrame:
+def outbox_router(outbox: DataFrame) -> DataFrame:
     return outbox.select(
-        F.concat(F.lit("outbox.event."), F.col(aggregate_type)).alias("topic"),
-        F.col(aggregate_id).cast("string").alias("aggregate_id"),
-        F.col(payload).alias("payload"),
-        F.get_json_object(F.col(payload), "$.k").cast("long").alias("payload_k"),
+        F.concat(F.lit("outbox.event."), F.col("event_type")).alias("topic"),
+        F.col("user_id").cast("string").alias("aggregate_id"),
+        F.col("props").alias("payload"),
+        F.get_json_object(F.col("props"), "$.k").cast("long").alias("payload_k"),
     )
 
 
@@ -141,13 +109,11 @@ def outbox_router(outbox: DataFrame, aggregate_type: str = "event_type",
 # so key collisions across shards stay distinguishable (Debezium's
 # key.field.name behavior).
 # --------------------------------------------------------------------------
-def logical_table_router(
-    shards: list[tuple[str, DataFrame]], logical_name: str = "orders"
-) -> DataFrame:
+def logical_table_router(shards: list[tuple[str, DataFrame]]) -> DataFrame:
     out = None
     for physical_name, df in shards:
         routed = df.withColumn("__physical_table", F.lit(physical_name)) \
-                   .withColumn("__logical_topic", F.lit(f"cdc.{logical_name}"))
+                   .withColumn("__logical_topic", F.lit("cdc.orders"))
         out = routed if out is None else out.unionByName(routed)
     return out
 
@@ -188,10 +154,9 @@ def timezone_converter(df: DataFrame, cols: list[str], tz: str) -> DataFrame:
 # (Debezium PartitionRouting computes partition = hash(key) % N);
 # arithmetic hash so the oracle reproduces it.
 # --------------------------------------------------------------------------
-def partition_router(cdc: DataFrame, num_partitions: int = 16,
-                     key: str = "key") -> DataFrame:
+def partition_router(cdc: DataFrame, num_partitions: int = 16) -> DataFrame:
     shard = F.pmod(
-        F.pmod(F.col(key) * F.lit(2654435761), F.lit(2 ** 32)),
+        F.pmod(F.col("key") * F.lit(2654435761), F.lit(2 ** 32)),
         F.lit(num_partitions),
     )
     return cdc.withColumn("partition", shard)
@@ -301,13 +266,13 @@ def cdc_mask_truncate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cdc_extract_rewrite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExtractNewRecordState with delete.handling.mode=rewrite and a
-    column include list — deletes survive with __deleted=true."""
+    ReplaceField include list — deletes survive with __deleted=true."""
     flat = extract_new_record_state(
         synthesize_cdc_flat(spark, sf_dir), delete_mode="rewrite"
     )
-    return column_filter(
-        flat, include=["o_totalprice", "o_orderstatus"]
-    ).select("key", "o_totalprice", "o_orderstatus", "__op", "__deleted")
+    return replace_field(
+        flat, include=["key", "o_totalprice", "o_orderstatus", "__op", "__deleted"]
+    )
 
 
 def cdc_partition_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,7 +522,7 @@ def cdc_logical_table_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         (f"orders_{i:02d}", cdc.filter(F.pmod(F.col("key"), F.lit(3)) == i))
         for i in range(3)
     ]
-    routed = logical_table_router(shards, "orders")
+    routed = logical_table_router(shards)
     return (
         routed.groupBy("__physical_table", "__logical_topic")
         .agg(
@@ -611,12 +576,10 @@ def insert_field_static(df: DataFrame, name: str, value) -> DataFrame:
     return df.withColumn(name, F.lit(value))
 
 
-def insert_field_offset(
-    df: DataFrame, name: str = "__offset", source_col: str = "seq"
-) -> DataFrame:
-    """InsertField SMT with `offset.field`: stamp the record's source
-    offset (here the synthesized LSN/seq) into the payload."""
-    return df.withColumn(name, F.col(source_col))
+def insert_field_offset(df: DataFrame) -> DataFrame:
+    """InsertField SMT with `offset.field=__offset`: stamp the record's
+    source offset (here the synthesized LSN/seq) into the payload."""
+    return df.withColumn("__offset", F.col("seq"))
 
 
 def cast_fields(df: DataFrame, casts: dict[str, str]) -> DataFrame:
@@ -643,7 +606,7 @@ def cdc_connect_smt_chain_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         exclude=["o_orderdate", "before_totalprice", "ts_ms"],
     )
     out = insert_field_static(out, "source_system", "erp")
-    out = insert_field_offset(out, "__offset", "seq")
+    out = insert_field_offset(out)
     out = cast_fields(out, {"amount": "long", "o_custkey": "string"})
     return out.select(
         "key", "seq", "op", "priority", "amount", "o_custkey",
@@ -745,17 +708,15 @@ QUERIES["mongo_extract_new_document"] = mongo_extract_new_document_q
 # malformed input) — a narrow codegen'd projection; the DLQ split is a
 # filter, so at 100 TB this adds zero shuffles to the ingest stage.
 # --------------------------------------------------------------------------
-def dlq_split(
-    df: DataFrame, payload_col: str = "props", offset_col: str = "event_id"
-) -> DataFrame:
-    """Tag each record ok/dlq. Malformed JSON payloads get
-    __error_reason + the source offset for replay, mirroring Connect's
-    DLQ headers (__connect.errors.*)."""
-    parsed = F.from_json(F.col(payload_col), "map<string,string>")
+def dlq_split(df: DataFrame) -> DataFrame:
+    """Tag each event ok/dlq. Malformed JSON `props` payloads get
+    __error_reason + the source offset (`event_id`) for replay,
+    mirroring Connect's DLQ headers (__connect.errors.*)."""
+    parsed = F.from_json(F.col("props"), "map<string,string>")
     ok = parsed.isNotNull()
     return df.withColumn("__dlq", ~ok).withColumn(
         "__error_reason", F.when(~ok, F.lit("json_parse"))
-    ).withColumn("__error_offset", F.when(~ok, F.col(offset_col)))
+    ).withColumn("__error_offset", F.when(~ok, F.col("event_id")))
 
 
 def cdc_dlq_route_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -862,9 +823,8 @@ QUERIES["cdc_value_to_header"] = cdc_value_to_header_q
 # transaction.id` → __op, __source_seq, __transaction_id). Operates on
 # the STRUCT envelope (the API shape), not the pre-flattened stream.
 # --------------------------------------------------------------------------
-def extract_with_metadata(
-    envelope: DataFrame, add_fields: list[str], delete_mode: str = "drop"
-) -> DataFrame:
+def extract_with_metadata(envelope: DataFrame, add_fields: list[str]) -> DataFrame:
+    """Deletes are dropped (delete.handling.mode=drop)."""
     after_cols = [
         F.col(f"after.{c}").alias(c)
         for c in envelope.select("after.*").columns
@@ -873,10 +833,8 @@ def extract_with_metadata(
         F.col(p).alias("__" + p.replace(".", "_")) for p in add_fields
     ]
     out = envelope.select(*after_cols, *meta)
-    if delete_mode == "drop":
-        return out.filter(F.col("__op") != "d") if "op" in add_fields \
-            else out.filter(envelope["op"] != "d")
-    return out
+    return out.filter(F.col("__op") != "d") if "op" in add_fields \
+        else out.filter(envelope["op"] != "d")
 
 
 def cdc_add_fields_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -982,34 +940,29 @@ QUERIES["cdc_timestamp_router"] = cdc_timestamp_router_q
 # --------------------------------------------------------------------------
 
 
-def predicate_topic_matches(pattern: str, topic_col: str = "topic") -> Column:
-    return F.col(topic_col).rlike(pattern)
+def predicate_topic_matches(pattern: str) -> Column:
+    return F.col("topic").rlike(pattern)
 
 
-def predicate_has_header_key(key: str, headers_col: str = "headers") -> Column:
-    return F.map_contains_key(F.col(headers_col), F.lit(key))
+def predicate_has_header_key(key: str) -> Column:
+    return F.map_contains_key(F.col("headers"), F.lit(key))
 
 
-def predicate_is_tombstone(op_col: str = "op") -> Column:
+def predicate_is_tombstone() -> Column:
     """Tombstone analog in the flattened stream: a delete whose after
     image is empty (Debezium's tombstone follows the delete; in the
     synthesized flat stream the delete row itself carries the null
     after image)."""
-    return F.col(op_col) == "d"
+    return F.col("op") == "d"
 
 
 def apply_smt_guarded(
-    df: DataFrame,
-    pred: Column,
-    replacements: dict[str, Column],
-    negate: bool = False,
+    df: DataFrame, pred: Column, replacements: dict[str, Column]
 ) -> DataFrame:
     """Apply per-column replacement expressions only where `pred`
-    holds (or fails, when negate=True); non-matching rows keep every
+    holds (negate with `~pred`); non-matching rows keep every
     original value. Replacements are expressions over `df` itself —
     one lineage, one narrow projection."""
-    if negate:
-        pred = ~pred
     out = df
     for c, expr in replacements.items():
         out = out.withColumn(c, F.when(pred, expr).otherwise(F.col(c)))
@@ -1074,23 +1027,23 @@ QUERIES["cdc_smt_predicates"] = cdc_smt_predicates_q
 # --------------------------------------------------------------------------
 # Flatten SMT (Connect's org.apache.kafka.connect.transforms.Flatten):
 # recursively hoist nested struct fields to top-level columns joined
-# by a delimiter — the standard bridge from the API-level envelope
+# by an underscore — the standard bridge from the API-level envelope
 # {before{...}, after{...}, source{...}} to sinks that need flat rows.
 # Pure projection: column pruning still reaches the parquet scan
 # because Spark resolves `s.a.b` to a nested-field read.
 # --------------------------------------------------------------------------
 
 
-def flatten_struct_columns(df: DataFrame, delimiter: str = "_") -> DataFrame:
+def flatten_struct_columns(df: DataFrame) -> DataFrame:
     """Recursive struct flatten; non-struct columns pass through in
-    order, struct fields expand depth-first as parent<delim>child."""
+    order, struct fields expand depth-first as parent_child."""
     from pyspark.sql import types as T
 
     cols: list[Column] = []
 
     def rec(path: str, name: str, dtype) -> None:
         full = f"{path}.{name}" if path else name
-        label = full.replace(".", delimiter)
+        label = full.replace(".", "_")
         if isinstance(dtype, T.StructType):
             for sub in dtype.fields:
                 rec(full, sub.name, sub.dataType)
@@ -1104,7 +1057,7 @@ def flatten_struct_columns(df: DataFrame, delimiter: str = "_") -> DataFrame:
 
 def cdc_flatten_envelope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flatten SMT over the API-level nested envelope, under the
-    external gate: dotted paths become delimiter-joined columns and
+    external gate: dotted paths become underscore-joined columns and
     every value (including NULL before/after images on creates/
     deletes) must match the closed-form oracle."""
     from debezium_spark.cdc.envelope import synthesize_cdc_envelope

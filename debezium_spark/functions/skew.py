@@ -10,26 +10,18 @@ an even shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from debezium_spark.functions.rounding import to_units
 
 
-def salted_sum_count(
-    df: DataFrame,
-    key: str,
-    value: str,
-    n_salts: int = 16,
-    salt_col: str = "__salt",
-) -> DataFrame:
+def salted_sum_count(df: DataFrame, key: str, value: str) -> DataFrame:
     """Two-phase sum/count per key via salting. The salt derives from
     a cheap hash of the full row id-space (monotonically varied), so
-    a hot key's rows spread over n_salts reducers."""
-    salted = df.withColumn(
-        salt_col, F.pmod(F.xxhash64(F.col(value)), F.lit(n_salts))
-    )
-    partial = salted.groupBy(key, salt_col).agg(
+    a hot key's rows spread over 16 reducers."""
+    salted = df.withColumn("__salt", F.pmod(F.xxhash64(F.col(value)), F.lit(16)))
+    partial = salted.groupBy(key, "__salt").agg(
         F.sum(value).alias("__psum"), F.count(F.lit(1)).alias("__pcnt")
     )
     return partial.groupBy(key).agg(
@@ -89,23 +81,19 @@ QUERIES = {
 # fallback for known-hot keys and for non-AQE engines.)
 # --------------------------------------------------------------------------
 def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    salt_col: str = "__salt",
+    fact: DataFrame, dim: DataFrame, key: str, n_salts: int = 8
 ) -> DataFrame:
     """Inner-join fact⋈dim on `key` with the shuffle spread over
     (key, salt). Result is row-identical to the plain join."""
     salted_fact = fact.withColumn(
-        salt_col, F.pmod(F.xxhash64(*fact.columns), F.lit(n_salts))
+        "__salt", F.pmod(F.xxhash64(*fact.columns), F.lit(n_salts))
     )
     replicated_dim = dim.withColumn(
-        salt_col,
+        "__salt",
         F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast(
             "array<bigint>")),
     )
-    return salted_fact.join(replicated_dim, [key, salt_col]).drop(salt_col)
+    return salted_fact.join(replicated_dim, [key, "__salt"]).drop("__salt")
 
 
 def salted_skew_join_q(spark, sf_dir: str) -> DataFrame:

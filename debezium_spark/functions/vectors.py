@@ -20,9 +20,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def infer_dim(df: DataFrame, col: str = "embedding") -> int:
-    """Vector width from the first row (driver-side metadata probe)."""
-    row = df.select(F.size(F.col(col)).alias("d")).head()
+def infer_dim(df: DataFrame) -> int:
+    """`embedding` width from the first row (driver-side metadata probe)."""
+    row = df.select(F.size(F.col("embedding")).alias("d")).head()
     if row is None:
         return 0
     return int(row["d"])

@@ -223,12 +223,12 @@ ORACLES: dict[str, str] = {
         WHERE o_custkey < 100
         ORDER BY o_custkey, o_orderdate, o_orderkey
     """,
-    "sessionize_events": """
+    "sessionize_events": f"""
         SELECT user_id, CAST(sum(session_start) AS BIGINT) AS n_sessions, count(*) AS n_events
         FROM (
             SELECT user_id,
                    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                          OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
+                          OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > {SESSION_GAP_MIN * 60}
                         THEN 1 ELSE 0 END AS session_start
             FROM events)
         GROUP BY user_id

@@ -28,11 +28,14 @@ NUM_BANDS = 16
 ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
 JACCARD_THRESHOLD = 0.5
 PAIR_SLICE = 300  # doc_id bound for the O(n²) exact-pair oracles
+SHINGLE_WORDS = 3  # words per shingle (the oracles spell out w[i..i+2])
+CC_MAX_ITERS = 20  # safety rail on connected-components rounds
 
 
-def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
+def _shingles(df: DataFrame) -> DataFrame:
     """Distinct word n-gram shingles per doc (identical construction
     in the DuckDB oracles)."""
+    n = SHINGLE_WORDS
     words = F.split(F.trim(F.col("text")), r"\s+")
     hi = F.size(words) - (n - 1)
     sh = F.when(
@@ -120,9 +123,9 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MINHASH_P = 2305843009213693951  # 2^61 - 1
 
 
-def _affine_constants(n: int = NUM_HASHES) -> tuple[list[int], list[int]]:
+def _affine_constants() -> tuple[list[int], list[int]]:
     a, b, x = [], [], 88172645463325252
-    for _ in range(n):
+    for _ in range(NUM_HASHES):
         x = (x * 6364136223846793005 + 1442695040888963407) % (2 ** 63)
         a.append(x % (2 ** 29 - 1) + 1)
         x = (x * 6364136223846793005 + 1442695040888963407) % (2 ** 63)
@@ -130,9 +133,7 @@ def _affine_constants(n: int = NUM_HASHES) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def _hashed_shingle_rows(
-    docs: DataFrame, n: int = 3, distinct: bool = True
-) -> DataFrame:
+def _hashed_shingle_rows(docs: DataFrame, distinct: bool = True) -> DataFrame:
     """Hashed shingles as ROWS (doc_id, h, h32) via posexplode +
     window lead — deliberately NOT higher-order array functions:
     Spark's HOFs (transform/aggregate/filter lambdas) are
@@ -157,6 +158,7 @@ def _hashed_shingle_rows(
     The shingle hash is the first 60 bits of md5 (h60) — md5 exists
     identically in DuckDB ('0x'||hex cast), which is what lets the
     entire MinHash/LSH/SimHash pipeline be oracle-verified."""
+    n = SHINGLE_WORDS
     words = F.split(F.trim(F.col("text")), r"\s+")
     base = docs.select("doc_id", words.alias("ws")).filter(
         F.size("ws") >= n
@@ -533,16 +535,14 @@ QUERIES = {
 # this step — pairs alone over-drop (dropping the b of every (a,b)
 # removes both ends of a chain a-b, b-c) and under-drop transitively.
 # --------------------------------------------------------------------------
-def connected_components(
-    edges: DataFrame, max_iters: int = 20
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Min-label propagation over an undirected edge list
     (`doc_a`, `doc_b`): every node's component id converges to the
     minimum doc_id reachable from it. Each round is one join + one
     min-groupBy over the DUP GRAPH only — near-dup docs, a small
     fraction of the corpus — never over the corpus itself, and rounds
-    needed = graph diameter (near-dup clusters are shallow; bound
-    max_iters as a safety rail). Convergence is detected by the
+    needed = graph diameter (near-dup clusters are shallow;
+    CC_MAX_ITERS is a safety rail). Convergence is detected by the
     strictly-decreasing sum of labels, a one-scalar action per round.
     At adversarial diameters switch to large-star/small-star (Kiveris
     et al., "Connected Components in MapReduce"), which squares down
@@ -563,7 +563,7 @@ def connected_components(
         .cache()
     )
     prev_sum = None  # one convergence action per round, none up front
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         msgs = sym.join(
             comp, sym["src"] == comp["node"]
         ).select(F.col("dst").alias("node"), "comp")

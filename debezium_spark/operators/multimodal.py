@@ -34,25 +34,6 @@ from pyspark.sql import types as T
 from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.sources.tables import load_table
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                    T.StructField("n_frames", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -122,14 +103,12 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_extract, FEATURE_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plan for video rows: explode frame indices
-    0, n, 2n, … < n_frames. Pure column ops — the decode of each
-    sampled frame would reuse decode_stub downstream."""
+def frame_sample(media: DataFrame) -> DataFrame:
+    """Frame-sampling plan for video rows: explode every 10th frame
+    index 0, 10, 20, … < n_frames. Pure column ops — the decode of
+    each sampled frame would reuse decode_stub downstream."""
     v = media.filter(F.col("kind") == "video")
-    idx = F.sequence(
-        F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_n)
-    )
+    idx = F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(10))
     return v.select(
         "media_id",
         F.explode(idx).alias("frame_idx"),
@@ -188,7 +167,7 @@ def media_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     last index in closed form (floor arithmetic over the synthesized
     n_frames)."""
     media = synthesize_media(spark, sf_dir)
-    s = frame_sample(media, every_n=10)
+    s = frame_sample(media)
     return (
         s.groupBy("media_id", "n_frames")
         .agg(
@@ -727,13 +706,14 @@ RESIZE_W = 8
 RESIZE_H = 8
 
 
-def resize_bmp(payload: bytes, out_w: int = RESIZE_W,
-               out_h: int = RESIZE_H) -> bytes:
-    """Nearest-neighbor resize: sample x_i = i*w//out_w,
-    y_j = j*h//out_h, re-encoded by the BMP writer encode_bmp uses."""
+def resize_bmp(payload: bytes) -> bytes:
+    """Nearest-neighbor resize to RESIZE_W×RESIZE_H: sample
+    x_i = i*w//RESIZE_W, y_j = j*h//RESIZE_H, re-encoded by the BMP
+    writer encode_bmp uses."""
     w, h, rows = decode_bmp_pixels(payload)
     return _write_bmp(
-        out_w, out_h, lambda i, j: rows[j * h // out_h][i * w // out_w]
+        RESIZE_W, RESIZE_H,
+        lambda i, j: rows[j * h // RESIZE_H][i * w // RESIZE_W],
     )
 
 

@@ -268,15 +268,15 @@ def _hyperplane_signs(n_planes: int, dim: int) -> list[list[int]]:
     return planes
 
 
-def lsh_bucket_signatures(e: DataFrame, n_planes: int = N_HYPERPLANES) -> DataFrame:
+def lsh_bucket_signatures(e: DataFrame) -> DataFrame:
     """Random-hyperplane LSH: bucket = sign-bit signature of the
-    projections onto n fixed ±1 hyperplanes. Each projection is the
-    HOF fold from vectors.dot against an inline plane-literal array —
-    the unrolled form's n_planes×dim expression tree never JITs (see
-    vectors.py; measured on this query too)."""
+    projections onto N_HYPERPLANES fixed ±1 hyperplanes. Each
+    projection is the HOF fold from vectors.dot against an inline
+    plane-literal array — the unrolled form's planes×dim expression
+    tree never JITs (see vectors.py; measured on this query too)."""
     dim = vectors.infer_dim(e)
     emb = vectors.as_double(F.col("embedding"))
-    planes = _hyperplane_signs(n_planes, dim)
+    planes = _hyperplane_signs(N_HYPERPLANES, dim)
 
     def _projection(p):
         plane = F.array(*[F.lit(float(v)) for v in planes[p]])
@@ -284,7 +284,7 @@ def lsh_bucket_signatures(e: DataFrame, n_planes: int = N_HYPERPLANES) -> DataFr
 
     sig_bits = [
         (_projection(p) > 0).cast("int") * F.lit(2 ** p)
-        for p in range(n_planes)
+        for p in range(N_HYPERPLANES)
     ]
     bucket = sig_bits[0]
     for b in sig_bits[1:]:
@@ -321,13 +321,15 @@ _QDOT_SQL = (
 )
 
 
-def _sql_lsh_buckets(n_planes: int = N_HYPERPLANES, dim: int = 64) -> str:
-    """Oracle for the hyperplane bucketing: the ±1 sign matrix is a
-    deterministic LCG constant, so it inlines into SQL verbatim —
-    same left-associated summation order as the Spark projection."""
-    planes = _hyperplane_signs(n_planes, dim)
+def _sql_lsh_buckets() -> str:
+    """Oracle for the hyperplane bucketing over the 64-wide embeddings:
+    the ±1 sign matrix is a deterministic LCG constant, so it inlines
+    into SQL verbatim — same left-associated summation order as the
+    Spark projection."""
+    dim = 64
+    planes = _hyperplane_signs(N_HYPERPLANES, dim)
     bucket_terms = []
-    for p in range(n_planes):
+    for p in range(N_HYPERPLANES):
         proj = " + ".join(
             f"CAST(embedding[{i + 1}] AS DOUBLE) * {float(planes[p][i])}"
             for i in range(dim)

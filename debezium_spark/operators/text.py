@@ -30,8 +30,7 @@ def _tokens():
     return F.split(F.trim(F.col("text")), r"\s+")
 
 
-def _sql_words(expr: str = "text") -> str:
-    return f"string_split_regex(trim({expr}), '\\s+')"
+_SQL_WORDS = "string_split_regex(trim(text), '\\s+')"  # oracle twin of _tokens
 
 
 def stopword_hit_count(words, stopwords):
@@ -288,7 +287,7 @@ _STOP_EN = ",".join(f"'{w}'" for w in STOPWORDS["en"])
 ORACLES: dict[str, str] = {
     "token_count": f"""
         SELECT doc_id,
-               CAST(len({_sql_words()}) AS INT) AS n_words,
+               CAST(len({_SQL_WORDS}) AS INT) AS n_words,
                CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_subword_est,
                CAST(length(text) AS INT) AS n_chars_actual
         FROM documents ORDER BY doc_id
@@ -299,7 +298,7 @@ ORACLES: dict[str, str] = {
                    CAST(len(w) AS DOUBLE) AS n_words,
                    CAST(len(list_filter(w, x -> x IN ({_STOP_EN}))) AS DOUBLE) AS stop_hits,
                    CAST(length(text) AS DOUBLE) AS n_chars
-            FROM (SELECT doc_id, text, {_sql_words()} AS w FROM documents)
+            FROM (SELECT doc_id, text, {_SQL_WORDS} AS w FROM documents)
         )
         SELECT doc_id,
                CAST(n_words AS INT) AS n_words,
@@ -356,7 +355,7 @@ ORACLES: dict[str, str] = {
     "repetition_quality": f"""
         WITH w AS (
             SELECT doc_id, lower(unnest(t)) AS term
-            FROM (SELECT doc_id, {_sql_words()} AS t FROM documents)),
+            FROM (SELECT doc_id, {_SQL_WORDS} AS t FROM documents)),
         per_uni AS (
             SELECT doc_id, max(c) AS max_c, CAST(sum(c) AS BIGINT) AS n_words,
                    count(*) AS n_unique
@@ -367,7 +366,7 @@ ORACLES: dict[str, str] = {
             SELECT doc_id,
                    lower(unnest(list_transform(range(1, len(t)),
                        i -> t[i] || ' ' || t[i + 1]))) AS bigram
-            FROM (SELECT doc_id, {_sql_words()} AS t FROM documents)),
+            FROM (SELECT doc_id, {_SQL_WORDS} AS t FROM documents)),
         per_bi AS (
             SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
                    count(*) AS n_unique_bigrams
@@ -675,7 +674,7 @@ def gopher_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES["gopher_rules"] = f"""
     WITH base AS (
-        SELECT doc_id, source, {_sql_words()} AS ws, text FROM documents
+        SELECT doc_id, source, {_SQL_WORDS} AS ws, text FROM documents
     ),
     doc_level AS (
         SELECT doc_id, source, len(ws) AS n_words,
@@ -859,7 +858,7 @@ def _bpe_oracle_sql(k: int) -> str:
         f"""
     WITH toks_raw AS (
         SELECT lower(t) AS word
-        FROM (SELECT unnest({_sql_words()}) AS t FROM documents)
+        FROM (SELECT unnest({_SQL_WORDS}) AS t FROM documents)
         WHERE regexp_full_match(lower(t), '[a-z]+')
     ),
     words AS (SELECT word, count(*) AS freq FROM toks_raw GROUP BY word),

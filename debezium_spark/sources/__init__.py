@@ -1,3 +1,3 @@
-from debezium_spark.sources.tables import TABLES, load_table, register_views
+from debezium_spark.sources.tables import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "register_views"]
+__all__ = ["TABLES", "load_table"]

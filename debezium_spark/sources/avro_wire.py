@@ -27,6 +27,7 @@ JVM-side).
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import pandas as pd
@@ -67,8 +68,11 @@ def _crc64_avro(data: bytes) -> int:
     return fp
 
 
-def schema_fingerprint_bytes(schema_json: str = ENVELOPE_AVRO_SCHEMA) -> bytes:
-    return struct.pack("<Q", _crc64_avro(schema_json.encode("utf-8")))
+@functools.cache
+def schema_fingerprint_bytes() -> bytes:
+    """The envelope schema's CRC-64-AVRO fingerprint, little-endian
+    (computed once: every encoded and decoded row carries it)."""
+    return struct.pack("<Q", _crc64_avro(ENVELOPE_AVRO_SCHEMA.encode("utf-8")))
 
 
 def _zigzag_encode(n: int) -> bytes:

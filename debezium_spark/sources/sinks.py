@@ -30,16 +30,17 @@ from pyspark.sql import types as T
 from debezium_spark.functions.rounding import to_units
 
 
-def sink_to_topics(df: DataFrame, out_dir: str, topic_col: str = "topic") -> None:
-    """Partition the sink layout by topic: consumers of one topic scan
-    one directory (partition pruning), and appends stay per-topic."""
-    df.write.mode("overwrite").partitionBy(topic_col).parquet(out_dir)
+def sink_to_topics(df: DataFrame, out_dir: str) -> None:
+    """Partition the sink layout by `topic`: consumers of one topic
+    scan one directory (partition pruning), and appends stay
+    per-topic."""
+    df.write.mode("overwrite").partitionBy("topic").parquet(out_dir)
 
 
-def sink_compacted(state: DataFrame, out_dir: str, key: str = "key") -> None:
+def sink_compacted(state: DataFrame, out_dir: str) -> None:
     """Compacted-topic sink: one row per key (the latest state),
     bucket-sorted by key for downstream merge-joins."""
-    state.repartition(F.col(key)).sortWithinPartitions(key).write.mode(
+    state.repartition(F.col("key")).sortWithinPartitions("key").write.mode(
         "overwrite"
     ).parquet(out_dir)
 

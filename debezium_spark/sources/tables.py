@@ -23,17 +23,8 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor.
-BROADCAST_DIMS = {"region", "nation", "supplier", "part", "customer"}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple = TABLES) -> None:
-    """Register temp views so operators can use spark.sql(...)."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -42,6 +42,7 @@ from debezium_spark.cdc.envelope import synthesize_cdc_flat
 from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES
 from debezium_spark.cdc.materialize import latest_state
 from debezium_spark.functions.rounding import round_half_up, to_units
+from debezium_spark.operators.analytics import SESSION_GAP_MIN
 from debezium_spark.sources.tables import load_table
 
 
@@ -122,12 +123,11 @@ def stream_windowed_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _window_counts(spark, sf_dir, F.window("ts", "1 hour"), "1 hour")
 
 
-def stream_session_windows(spark: SparkSession, sf_dir: str,
-                           gap: str = "30 minutes") -> DataFrame:
+def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """session_window aggregation over the event stream: per (user,
-    session) event counts with a 30-minute inactivity gap — the
-    streaming twin of analytics.sessionize_events (equivalence is
-    tested)."""
+    session) event counts with analytics.SESSION_GAP_MIN minutes of
+    inactivity closing a session — the streaming twin of
+    analytics.sessionize_events (equivalence is tested)."""
 
     # no watermark: the replayed 'topic' files arrive in arbitrary
     # order, so a watermark would drop whole files as late. Complete
@@ -136,7 +136,10 @@ def stream_session_windows(spark: SparkSession, sf_dir: str,
     def build(events: DataFrame) -> DataFrame:
         return (
             events.withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+            .groupBy(
+                F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("sw"),
+                "user_id",
+            )
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
 
@@ -157,11 +160,11 @@ ORACLES: dict[str, str] = {
         FROM events GROUP BY window_start, event_type
         ORDER BY window_start, event_type
     """,
-    "stream_sessionize": """
+    "stream_sessionize": f"""
         WITH flags AS (
             SELECT user_id, ts, event_id,
                    CASE WHEN lag(ts) OVER w IS NULL
-                          OR epoch(ts) - epoch(lag(ts) OVER w) >= 1800
+                          OR epoch(ts) - epoch(lag(ts) OVER w) >= {SESSION_GAP_MIN * 60}
                         THEN 1 ELSE 0 END AS new_sess
             FROM events
             WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -190,7 +193,7 @@ def stream_sessionize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, start, n_events) rows from the streaming session_window
     must equal the batch lag-gap sessionization. Boundary semantics:
     Spark's session window is [start, last_ts + gap), so a gap of
-    exactly `gap` opens a NEW session — the oracle uses >= on the gap
+    exactly the gap opens a NEW session — the oracle uses >= on the gap
     accordingly."""
     out = stream_session_windows(spark, sf_dir)
     return out.select(
@@ -557,8 +560,6 @@ def run_manifest_stream(
     checkpoint: str,
     crash_before_commit: set[int] | None = None,
     n_buckets: int = 16,
-    key: str = "key",
-    seq: str = "seq",
 ) -> None:
     """Run `stream_df` to completion through the manifest-commit sink.
     The checkpoint gives a restart the same batch ids, which is what
@@ -566,7 +567,7 @@ def run_manifest_stream(
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
         _manifest_merge_batch(
-            batch, epoch_id, state_root, n_buckets, key, seq,
+            batch, epoch_id, state_root, n_buckets, "key", "seq",
             crash_before_commit,
         )
 

@@ -150,9 +150,8 @@ def test_jdbc_sink_soft_delete_keeps_last_upsert(spark):
         ],
         "key long, op string, seq long, after_totalprice double",
     )
-    hard = {r["key"]: r for r in jdbc_sink_apply(cdc).collect()}
-    soft = {r["key"]: r
-            for r in jdbc_sink_apply(cdc, delete_enabled=False).collect()}
+    hard = {r["key"]: r for r in latest_state(cdc).collect()}
+    soft = {r["key"]: r for r in jdbc_sink_apply(cdc).collect()}
     assert 1 not in hard and hard[2]["after_totalprice"] == 7.0
     assert soft[1]["after_totalprice"] == 6.0  # delete ignored
     assert soft[2]["after_totalprice"] == 7.0

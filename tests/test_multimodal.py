@@ -42,7 +42,7 @@ def test_feature_extraction_end_to_end(spark, sf_dir):
 
 def test_frame_sampling(spark, sf_dir):
     m = synthesize_media(spark, sf_dir)
-    fs = frame_sample(m, every_n=10)
+    fs = frame_sample(m)
     got = fs.groupBy("media_id").count().collect()
     meta = {r["media_id"]: r["meta"]["n_frames"] for r in m.collect()}
     for r in got:

@@ -16,7 +16,11 @@ tests can't see (e.g. a join rewrite that silently degrades to a
 cartesian after a column rename).
 """
 
+from pyspark.sql import functions as F
+
 import __spark_entry__ as entrymod
+from debezium_spark.operators.relational import distinct_counts_q
+from tools.check_oracle import plan_digest
 
 _BANNED = ("CartesianProduct", "BatchEvalPython")
 
@@ -83,3 +87,16 @@ def test_no_scale_killers_in_any_plan(spark, sf_dir):
         spark.catalog.clearCache()  # builders may cache intermediates
     assert not offenders, f"scale-killer plan nodes: {offenders}"
     assert not leaks, f"left (new temp views, active streams): {leaks}"
+
+
+def test_plan_digest_ignores_expression_id_order(spark, sf_dir):
+    """`distinct_counts`' two countDistincts plan through an `Expand`
+    whose group order follows the hash of JVM-global expression ids;
+    the gate's plan digest must not move with how many expressions
+    were allocated before the frame was built."""
+    digests = set()
+    for k in range(8):
+        for _ in range(k):
+            F.lit(0).alias("pad")
+        digests.add(plan_digest(distinct_counts_q(spark, sf_dir)))
+    assert len(digests) == 1, digests

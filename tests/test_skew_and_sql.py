@@ -4,7 +4,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from debezium_spark.functions.skew import salted_sum_count
-from debezium_spark.sources.tables import load_table, register_views
+from debezium_spark.sources.tables import load_table
 
 
 def test_salted_agg_matches_plain(spark, sf_dir):
@@ -42,14 +42,14 @@ def test_salted_agg_on_hot_key(spark):
 
 
 def test_sql_api_front_end(spark, sf_dir):
-    """register_views + spark.sql produces the same result as the
+    """spark.sql over a table frame produces the same result as the
     DataFrame plan — the SQL front-end is a first-class entry path."""
-    register_views(spark, sf_dir)
     sql_out = spark.sql(
         """
         SELECT l_returnflag, round(sum(l_extendedprice), 2) AS s, count(*) AS n
-        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-        """
+        FROM {lineitem} GROUP BY l_returnflag ORDER BY l_returnflag
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     ).collect()
     df_out = (
         load_table(spark, sf_dir, "lineitem")

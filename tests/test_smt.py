@@ -41,7 +41,7 @@ def test_extract_new_record_state(tiny):
 
 
 def test_extract_keeps_deletes_when_asked(tiny):
-    out = extract_new_record_state(tiny, drop_deletes=False)
+    out = extract_new_record_state(tiny, delete_mode="none")
     assert out.count() == 4
 
 
@@ -135,7 +135,7 @@ def test_connect_standard_smts(spark):
     assert only.columns == ["key", "p"]
 
     out = insert_field_static(out, "src", "erp")
-    out = insert_field_offset(out, "__offset", "seq")
+    out = insert_field_offset(out)
     out = cast_fields(out, {"amount": "long", "key": "string"})
     row = out.collect()[0]
     assert row["src"] == "erp" and row["__offset"] == 100

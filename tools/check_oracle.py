@@ -15,8 +15,10 @@ Just before the final `N ok, M fail` line it prints one JSON line,
 `{name: {"ok", "rows", "plan", "oracle"}}`, that two runs can diff:
 `plan` is the first 16 hex digits of the sha256 of the optimized
 logical plan with its run-specific ids, lambda variable suffixes and
-temp paths blanked; `oracle` is the same digest of the entry's oracle
-SQL text.
+temp paths blanked, and with each line that carries the group order of
+a distinct-aggregate `Expand` (which follows the hash of JVM-global
+expression ids) reduced to its sorted tokens; `oracle` is the same
+digest of the entry's oracle SQL text.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -106,12 +108,22 @@ def _digest(text: str) -> str:
     return hashlib.sha256(text.encode()).hexdigest()[:16]
 
 
+def _expand_order_free(line: str) -> str:
+    """RewriteDistinctAggregates numbers its distinct groups in the
+    hash order of their expression ids, so the `Expand` projections
+    and the `gid#`-filtered aggregates that read them come out permuted
+    from run to run; such a line is kept as its sorted token multiset."""
+    if "Expand [" in line or "gid#" in line:
+        return " ".join(sorted(line.split()))
+    return line
+
+
 def plan_digest(sdf) -> str:
     """Run-independent digest of a frame's optimized logical plan."""
     plan = sdf._jdf.queryExecution().optimizedPlan().toString()
     for pat, repl in _PLAN_NOISE:
         plan = pat.sub(repl, plan)
-    return _digest(plan)
+    return _digest("\n".join(map(_expand_order_free, plan.split("\n"))))
 
 
 def main():
