@@ -837,8 +837,7 @@ ORACLES["cdc_pit_join"] = CDC_FLAT_SQL + """
     FROM probes LEFT JOIN hist
       ON hist.key = probes.p_key
      AND probes.probe_seq >= hist.valid_from_seq
-     AND (hist.valid_to_seq IS NULL
-          OR probes.probe_seq < hist.valid_to_seq)
+     AND probes.probe_seq < coalesce(hist.valid_to_seq, 9223372036854775807)
     GROUP BY off ORDER BY off
 """
 QUERIES["cdc_pit_join"] = cdc_pit_join_q

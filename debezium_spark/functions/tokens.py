@@ -1,0 +1,63 @@
+"""The one place that turns document text into words and word n-grams.
+
+The words of a document are Spark's `split(trim(text), '\\s+')`. trim
+drops only spaces, so a text that starts or ends with a tab gets an
+empty first or last word. DuckDB's `SQL_WORDS` splits identically,
+edge cases included, so every n-gram, shingle and word count in the
+operators matches its oracle.
+
+`word_ngrams` builds the n-grams as rows with
+posexplode(sequence(1, n_grams)) + element_at into the per-doc words
+array: zero shuffles, zero lambdas, everything codegen'd. Spark's
+higher-order functions (transform/aggregate/filter lambdas) are
+CodegenFallback and run interpreted, which measured 10-30× slower and
+anti-scaled with cores; a posexplode + window-lead form needs a
+partitionBy(doc_id) shuffle + sort, which dominated the whole LSH
+pipeline. sequence() is guarded by a size filter because Spark's
+sequence(1, hi) DESCENDS when hi < 1 instead of returning empty.
+
+`h60` is the first 60 bits of md5 as a non-negative BIGINT: md5 exists
+identically in DuckDB (`CAST('0x' || substr(md5(x), 1, 15) AS
+BIGINT)`), which is what keeps the hash pipelines (MinHash/LSH,
+SimHash and the sketches) value-verifiable.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+SQL_WORDS = "string_split_regex(trim(text), '\\s+')"  # DuckDB twin of words()
+
+
+def words() -> Column:
+    """The words of the `text` column, as an array<string>."""
+    return F.split(F.trim(F.col("text")), r"\s+")
+
+
+def h60(col: Column | str) -> Column:
+    """First 60 bits of md5(col) as a non-negative BIGINT."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def word_ngrams(docs: DataFrame, n: int) -> DataFrame:
+    """One row per word n-gram: docs' columns other than `text`, the
+    0-based word position `pos` the n-gram starts at, and `gram`, its
+    n words joined by single spaces. Docs with fewer than n words
+    yield no rows. `docs` holds no column named ws, i, pos or gram."""
+    keep = [c for c in docs.columns if c != "text"]
+    idx = (
+        docs.select(*keep, words().alias("ws"))
+        .filter(F.size("ws") >= n)
+        .select(
+            *keep,
+            "ws",
+            F.posexplode(F.sequence(F.lit(1), F.size("ws") - (n - 1))).alias(
+                "pos", "i"
+            ),
+        )
+    )
+    gram = F.concat_ws(
+        " ", *[F.element_at("ws", F.col("i") + off) for off in range(n)]
+    )
+    return idx.select(*keep, "pos", gram.alias("gram"))

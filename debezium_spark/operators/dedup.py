@@ -5,12 +5,13 @@ Scale design (the whole point of LSH here): exact all-pairs Jaccard is
 O(n²) and only exists as the small-slice correctness oracle; the scale
 path is MinHash → banded LSH → candidate pairs → verify, where pair
 generation is bounded by band-bucket membership (one groupBy-join on
-band hash, no cross join). Everything is built from higher-order array
-functions + xxhash64 — JVM-side, no Python UDFs.
+band hash, no cross join). Everything is codegen'd column expressions
+over word shingles and their md5-60 hashes (functions/tokens.py) —
+JVM-side, no lambdas, no Python UDFs.
 
-MinHash signatures use k independent xxhash64 streams
-(xxhash64(shingle || '#' || i)) instead of affine (a*h+b) mod p — same
-statistical guarantees, and no int64-overflow interaction with ANSI
+MinHash signatures use the affine family (a*h+b) mod p over a 32-bit
+fold of each shingle's md5-60 hash: one string hash per shingle, and
+constants small enough that no product overflows int64 under ANSI
 mode.
 """
 
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.functions import vectors
+from debezium_spark.functions.tokens import SQL_WORDS, h60, word_ngrams, words
 from debezium_spark.operators import similarity as sim
 from debezium_spark.sources.tables import load_table
 
@@ -35,20 +37,10 @@ CC_MAX_ITERS = 20  # safety rail on connected-components rounds
 def _shingles(df: DataFrame) -> DataFrame:
     """Distinct word n-gram shingles per doc (identical construction
     in the DuckDB oracles)."""
-    n = SHINGLE_WORDS
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    hi = F.size(words) - (n - 1)
-    sh = F.when(
-        hi >= 1,
-        F.transform(
-            F.sequence(F.lit(1), hi),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, i + off) for off in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return df.select(
-        "doc_id", F.explode(F.array_distinct(sh)).alias("shingle")
+    return (
+        word_ngrams(df, SHINGLE_WORDS)
+        .select("doc_id", F.col("gram").alias("shingle"))
+        .distinct()
     )
 
 
@@ -116,7 +108,7 @@ def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Jaccard — at 100 TB this is the only near-dup plan that avoids O(n²).
 # --------------------------------------------------------------------------
 # Affine minhash family g_i(h) = (a_i*h32 + b_i) mod P over the 32-bit
-# fold of one xxhash64 per shingle: one string hash + 64 integer ops
+# fold of one md5-60 hash per shingle: one string hash + 64 integer ops
 # per shingle instead of 64 string hashes. Constants derived from a
 # fixed LCG so signatures are deterministic across sessions; a_i < 2^29
 # keeps a_i*h32 < 2^61 — no int64 overflow under ANSI mode.
@@ -134,47 +126,21 @@ def _affine_constants() -> tuple[list[int], list[int]]:
 
 
 def _hashed_shingle_rows(docs: DataFrame, distinct: bool = True) -> DataFrame:
-    """Hashed shingles as ROWS (doc_id, h, h32) via posexplode +
-    window lead — deliberately NOT higher-order array functions:
-    Spark's HOFs (transform/aggregate/filter lambdas) are
-    CodegenFallback and run interpreted, which measured 10-30× slower
-    and anti-scaled with cores on this workload. Everything here
-    (split, posexplode, lead, md5, conv, pmod) stays inside
-    whole-stage codegen. One shuffle on doc_id, which the downstream
-    signature groupBy reuses (co-partitioned).
+    """Hashed shingles as ROWS (doc_id, h, h32): the md5-60 hash of
+    each word_ngrams shingle. No shuffle of its own, so a doc_id
+    partitioning of `docs` carries through to the downstream
+    signature groupBy.
 
     `distinct=False` skips the per-(doc_id, h) dedup shuffle for
     consumers whose aggregates are duplicate-insensitive anyway
     (min-of-hash signatures, collect_set) — the MinHash path. SimHash
     bit sums ARE duplicate-sensitive, so that path keeps the default.
 
-    Construction is posexplode(sequence(1, n_shingles)) + element_at
-    into the per-doc words array: zero shuffles (an earlier version
-    used posexplode + window-lead, whose partitionBy(doc_id) shuffle +
-    sort dominated the whole LSH pipeline), zero lambdas, everything
-    codegen'd. sequence() is guarded by a size filter because Spark's
-    sequence(1, hi) DESCENDS when hi < 1 instead of returning empty.
-
-    The shingle hash is the first 60 bits of md5 (h60) — md5 exists
-    identically in DuckDB ('0x'||hex cast), which is what lets the
-    entire MinHash/LSH/SimHash pipeline be oracle-verified."""
-    n = SHINGLE_WORDS
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    base = docs.select("doc_id", words.alias("ws")).filter(
-        F.size("ws") >= n
+    h60 exists identically in DuckDB, which is what lets the entire
+    MinHash/LSH/SimHash pipeline be oracle-verified."""
+    out = word_ngrams(docs, SHINGLE_WORDS).select(
+        "doc_id", h60(F.col("gram")).alias("h")
     )
-    idx = base.select(
-        "doc_id",
-        "ws",
-        F.posexplode(
-            F.sequence(F.lit(1), F.size("ws") - (n - 1))
-        ).alias("pos", "i"),
-    )
-    shingle = F.concat_ws(
-        " ", *[F.element_at("ws", F.col("i") + off) for off in range(n)]
-    )
-    h60 = F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("long")
-    out = idx.select("doc_id", h60.alias("h"))
     if distinct:
         out = out.distinct()
     return out.withColumn("h32", F.pmod(F.col("h"), F.lit(2 ** 32)))
@@ -247,8 +213,8 @@ def verify_candidates(sets: DataFrame, cand: DataFrame) -> DataFrame:
 def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full LSH pipeline with exact-Jaccard verification of the
     candidates. The plan is ONE wide aggregation: shuffle the docs by
-    doc_id once (the window, the signature groupBy, and the shingle-set
-    collect all reuse that partitioning), compute the 64 min-hashes AND
+    doc_id once (the signature groupBy and the shingle-set collect
+    both reuse that partitioning), compute the 64 min-hashes AND
     the collect_set shingle set in the same groupBy, then band self-join
     and verify against that per-doc frame (n_docs rows, ~0.5 KB + set).
     Nothing is cached: every downstream scan of the per-doc frame reads
@@ -256,7 +222,7 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shingle distinct (min/collect_set are duplicate-insensitive)."""
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # the test tables are single parquet files (one scan task) — fan
-    # the docs out across cores by doc_id so the shingle window and the
+    # the docs out across cores by doc_id so the shingle rows and the
     # signature groupBy reuse one exchange; on a multi-file 100 TB
     # table the scan is already parallel and this stays a single
     # hash-partition pass.
@@ -390,7 +356,7 @@ def _sql_h60_shingles(where: str = "") -> str:
                 SELECT doc_id,
                        unnest(list_transform(range(1, greatest(len(w) - 1, 1)),
                               i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
-                FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+                FROM (SELECT doc_id, {SQL_WORDS} AS w
                       FROM documents {where})
             )
         ), shh AS (SELECT doc_id, h, h % 4294967296 AS h32 FROM sh)
@@ -473,11 +439,11 @@ def _sql_simhash() -> str:
     """
 
 
-_SHINGLE_SQL = """
+_SHINGLE_SQL = f"""
         SELECT doc_id, unnest(list_distinct(
                    list_transform(range(1, greatest(len(w) - 1, 1)),
                                   i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+        FROM (SELECT doc_id, {SQL_WORDS} AS w
               FROM documents WHERE doc_id < 300)
 """
 
@@ -649,8 +615,7 @@ _SEG_MOD = 1000000007  # keeps sum-of-hashes far from int64 overflow
 
 def segment_dedup(docs: DataFrame, width: int = SEG_W) -> DataFrame:
     """Per-doc keep/drop report after corpus-wide segment dedup."""
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    w = docs.select("doc_id", F.posexplode(words).alias("pos", "word"))
+    w = docs.select("doc_id", F.posexplode(words()).alias("pos", "word"))
     seg_id = F.floor(F.col("pos") / F.lit(width)).cast("long")
     parts = [
         F.max(F.when(F.col("pos") % width == r, F.col("word"))).alias(
@@ -673,10 +638,7 @@ def segment_dedup(docs: DataFrame, width: int = SEG_W) -> DataFrame:
         Window.partitionBy(F.md5("segment")).orderBy("doc_id", "seg_id")
     )
     ranked = segs.withColumn("keep", keep_rank == 1)
-    h60m = (
-        F.conv(F.substring(F.md5("segment"), 1, 15), 16, 10).cast("long")
-        % _SEG_MOD
-    )
+    h60m = h60(F.col("segment")) % _SEG_MOD
     return (
         ranked.groupBy("doc_id")
         .agg(
@@ -702,7 +664,7 @@ ORACLES["dedup_segments"] = f"""
         SELECT doc_id,
                unnest(range(len(arr))) AS pos,
                unnest(arr) AS word
-        FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS arr
+        FROM (SELECT doc_id, {SQL_WORDS} AS arr
               FROM documents) t
     ), segs AS (
         SELECT doc_id, pos // {SEG_W} AS seg_id,
@@ -735,35 +697,24 @@ QUERIES["dedup_segments"] = dedup_segments_q
 # is a duplicated span position. Per doc we report the duplicated-
 # window count and the longest duplicated span (consecutive dup
 # windows merge: run of r windows = span of r+L-1 tokens).
-# Scale: windows come from one posexplode + (L-1) lead() expressions
-# sharing a single doc_id shuffle; dup detection is one shuffle on the
-# window hash; run-length is a per-doc window — no O(n²) anywhere.
+# Scale: windows are word_ngrams rows (no shuffle); dup detection is
+# one shuffle on the window hash; run-length is a per-doc window — no
+# O(n²) anywhere.
 # --------------------------------------------------------------------------
 SPAN_L = 20
 
 
 def substring_span_report(docs: DataFrame, length: int = SPAN_L) -> DataFrame:
-    words = F.split(F.trim(F.col("text")), r"\s+")
     per_doc = docs.select(
         "doc_id",
-        F.greatest(F.size(words) - (length - 1), F.lit(0))
+        F.greatest(F.size(words()) - (length - 1), F.lit(0))
         .cast("long")
         .alias("n_windows"),
     )
-    w = docs.select("doc_id", F.posexplode(words).alias("pos", "word"))
-    dw = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("word")] + [
-        F.lead("word", i).over(dw) for i in range(1, length)
-    ]
-    last = F.lead("word", length - 1).over(dw)
-    wins = (
-        w.select(
-            "doc_id", "pos", F.concat_ws(" ", *parts).alias("wt"),
-            last.alias("_last"),
-        )
-        .filter(F.col("_last").isNotNull())
-        .drop("_last")
+    wins = word_ngrams(docs, length).select(
+        "doc_id", "pos", F.col("gram").alias("wt")
     )
+    dw = Window.partitionBy("doc_id").orderBy("pos")
     rn = F.row_number().over(
         Window.partitionBy(F.md5("wt")).orderBy("doc_id", "pos")
     )
@@ -801,7 +752,7 @@ def dedup_substring_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES["dedup_substring_spans"] = f"""
     WITH toks AS (
-        SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+        SELECT doc_id, {SQL_WORDS} AS w
         FROM documents),
     w_pos AS (
         SELECT doc_id, w,

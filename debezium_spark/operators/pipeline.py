@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from debezium_spark.cdc.materialize import latest_state
 from debezium_spark.functions.rounding import round_half_up, to_units
+from debezium_spark.functions.tokens import SQL_WORDS, h60, word_ngrams, words
 from debezium_spark.operators.text import STOPWORDS as _LANG_STOPWORDS
 from debezium_spark.operators.text import stopword_hit_count
 from debezium_spark.sources.tables import load_table
@@ -25,9 +26,9 @@ PREFIX_BUCKETS = 64
 
 def training_mixture_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    n_words = F.size(words)
-    stop_hits = stopword_hit_count(words, STOPWORDS)
+    ws = words()
+    n_words = F.size(ws)
+    stop_hits = stopword_hit_count(ws, STOPWORDS)
     mean_word_len = (F.length("text") - (n_words - 1)) / n_words
     quality = (
         0.5 * F.least(n_words / F.lit(200.0), F.lit(1.0))
@@ -119,14 +120,13 @@ def stratified_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(2 ** 32)),
         F.lit(100),
     )
-    words = F.split(F.trim(F.col("text")), r"\s+")
     return (
         d.withColumn("coin", coin)
         .filter(F.col("coin") < SAMPLE_PCT)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_sampled"),
-            F.sum(F.size(words)).alias("sampled_tokens"),
+            F.sum(F.size(words())).alias("sampled_tokens"),
             F.min("doc_id").alias("first_doc"),
         )
         .orderBy("source")
@@ -144,24 +144,6 @@ DECON_N = 3
 EVAL_MOD = 97  # doc_id % 97 == 0 -> held-out eval document
 
 
-def _word_ngrams(d: DataFrame, n: int) -> DataFrame:
-    """(doc_id, ngram) pairs via posexplode + (n-1) leads over the
-    per-doc position order — the same shuffle-bounded shingle shape as
-    the LSH dedup (one hash exchange on doc_id, no array HOFs)."""
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    w = d.select("doc_id", F.posexplode(words).alias("pos", "w0"))
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    cols = [F.col("w0")] + [
-        F.lead("w0", i).over(win) for i in range(1, n)
-    ]
-    return (
-        w.select("doc_id", F.concat_ws(" ", *cols).alias("ngram"),
-                 *[c.alias(f"_w{i}") for i, c in enumerate(cols[1:], 1)])
-        .filter(F.col(f"_w{n - 1}").isNotNull())
-        .select("doc_id", F.lower("ngram").alias("ngram"))
-    )
-
-
 def decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per training doc: how many distinct word n-grams it shares with
     the eval split, and the contaminated verdict. The eval n-gram set
@@ -171,10 +153,13 @@ def decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     is_eval = F.pmod(F.col("doc_id"), F.lit(EVAL_MOD)) == 0
     train = d.filter(~is_eval)
+    ngram = F.lower("gram").alias("ngram")
     eval_ngrams = (
-        _word_ngrams(d.filter(is_eval), DECON_N).select("ngram").distinct()
+        word_ngrams(d.filter(is_eval), DECON_N).select(ngram).distinct()
     )
-    train_ngrams = _word_ngrams(train, DECON_N).distinct()
+    train_ngrams = (
+        word_ngrams(train, DECON_N).select("doc_id", ngram).distinct()
+    )
     hits = (
         train_ngrams.join(F.broadcast(eval_ngrams), "ngram")
         .groupBy("doc_id")
@@ -209,12 +194,11 @@ def sequence_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket subtotals via a bounded triangular join, offsets broadcast
     back — so no WindowExec ever sees a whole source in one task."""
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.col("text")), r"\s+")
     mx = int(d.agg(F.max("doc_id")).head()[0])
     t = d.select(
         "doc_id",
         "source",
-        F.size(words).cast("long").alias("n_tokens"),
+        F.size(words()).cast("long").alias("n_tokens"),
         F.floor(F.col("doc_id") * PREFIX_BUCKETS / F.lit(mx + 1))
         .cast("int")
         .alias("bucket"),
@@ -268,7 +252,7 @@ def sequence_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES: dict[str, str] = {
     "stratified_sample": f"""
         SELECT source, count(*) AS n_sampled,
-               CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS sampled_tokens,
+               CAST(sum(len({SQL_WORDS})) AS BIGINT) AS sampled_tokens,
                min(doc_id) AS first_doc
         FROM documents
         WHERE (doc_id * 2654435761) % 4294967296 % 100 < {SAMPLE_PCT}
@@ -284,7 +268,7 @@ ORACLES: dict[str, str] = {
                    + 0.2 * least(((length(text) - (len(w) - 1)) * 1.0 / len(w)) / 8.0, 1.0)
                        AS q,
                    md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5
-            FROM (SELECT *, string_split_regex(trim(text), '\\s+') AS w FROM documents)
+            FROM (SELECT *, {SQL_WORDS} AS w FROM documents)
         ), filtered AS (
             SELECT * FROM scored WHERE q >= {QUALITY_THRESHOLD}
         ), canonical AS (
@@ -307,7 +291,7 @@ ORACLES: dict[str, str] = {
     """,
     "decontaminate_ngram_overlap": f"""
         WITH toks AS (
-            SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+            SELECT doc_id, {SQL_WORDS} AS w
             FROM documents),
         ngrams AS (
             SELECT doc_id,
@@ -333,7 +317,7 @@ ORACLES: dict[str, str] = {
     "sequence_pack": f"""
         WITH t AS (
             SELECT doc_id, source,
-                   CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
+                   CAST(len({SQL_WORDS}) AS BIGINT)
                        AS n_tokens
             FROM documents),
         c AS (
@@ -378,7 +362,7 @@ MIX_ALPHA = 0.7
 
 def mixture_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    toks = F.size(words()).cast("long")
     per = (
         d.select("source", toks.alias("n_toks"))
         .groupBy("source")
@@ -412,7 +396,7 @@ def mixture_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["mixture_weights"] = f"""
     WITH per AS (
         SELECT source, count(*) AS n_docs,
-               CAST(sum(len(string_split_regex(trim(text), '\\s+')))
+               CAST(sum(len({SQL_WORDS}))
                     AS BIGINT) AS n_tokens
         FROM documents GROUP BY source),
     w AS (SELECT *, pow(CAST(n_tokens AS DOUBLE), {MIX_ALPHA}) AS w_raw
@@ -479,7 +463,7 @@ def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     live = latest_state(cdc, "doc_id").select(
         "doc_id", "source", F.col("after_text").alias("text")
     )
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    toks = F.size(words()).cast("long")
     return (
         live.select("source", toks.alias("n_toks"),
                     F.length("text").cast("long").alias("n_chars"))
@@ -493,7 +477,7 @@ def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cdc_document_pipeline"] = """
+ORACLES["cdc_document_pipeline"] = f"""
     WITH base AS (
         SELECT doc_id, source, text,
                1 + (doc_id * 2654435761) % 3 AS nv,
@@ -520,7 +504,7 @@ ORACLES["cdc_document_pipeline"] = """
         WHERE rn = 1 AND op <> 'd')
     SELECT source,
            CAST(count(*) AS BIGINT) AS n_live_docs,
-           CAST(sum(len(string_split_regex(trim(text), '\\s+')))
+           CAST(sum(len({SQL_WORDS}))
                 AS BIGINT) AS total_tokens,
            CAST(sum(length(text)) AS BIGINT) AS total_chars
     FROM live GROUP BY source ORDER BY source
@@ -545,12 +529,12 @@ CHUNK_STRIDE = 48
 
 
 def chunk_documents(d: DataFrame) -> DataFrame:
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    n = F.size(words)
+    ws = words()
+    n = F.size(ws)
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)),
                         F.lit(CHUNK_STRIDE))
     ch = d.select(
-        "doc_id", "source", words.alias("w"), n.alias("n_words"),
+        "doc_id", "source", ws.alias("w"), n.alias("n_words"),
         F.posexplode(starts).alias("chunk_id", "start"),
     ).filter(
         (F.col("start") == 0)
@@ -573,7 +557,7 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["chunk_documents"] = f"""
-    WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+    WITH t AS (SELECT doc_id, {SQL_WORDS} AS w
                FROM documents),
     s AS (SELECT doc_id, w, len(w) AS n_words,
                  unnest(range(0, greatest(len(w), 1), {CHUNK_STRIDE}))
@@ -618,13 +602,8 @@ DSIR_TARGET_LANG = "en"
 
 def dsir_importance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    h60 = F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
-    wb = d.select(
-        "doc_id",
-        "lang",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
-    ).select(
-        "doc_id", "lang", F.pmod(h60, F.lit(DSIR_BUCKETS)).alias("bucket")
+    wb = d.select("doc_id", "lang", F.explode(words()).alias("w")).select(
+        "doc_id", "lang", F.pmod(h60("w"), F.lit(DSIR_BUCKETS)).alias("bucket")
     )
     # one pass builds BOTH distributions (raw count + filtered target
     # count per bucket); corpus totals then come from the 256-row
@@ -671,7 +650,7 @@ ORACLES["dsir_importance"] = f"""
                CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)
                    % {DSIR_BUCKETS} AS bucket
         FROM (SELECT doc_id, lang,
-                     unnest(string_split_regex(trim(text), '\\s+')) AS t
+                     unnest({SQL_WORDS}) AS t
               FROM documents)),
     counts AS (SELECT bucket, count(*) AS c_raw,
                       count(*) FILTER (lang = '{DSIR_TARGET_LANG}')

@@ -15,8 +15,7 @@ pipeline leans on when exact global state is too big to shuffle:
   sort materialization, no driver-side collect.
 
 Everything is deterministic and oracle-verified: hashes are the
-repo-standard portable 60-bit md5 prefix (Spark
-`conv(substr(md5(x),1,15),16,10)` ≡ DuckDB
+repo-standard portable 60-bit md5 prefix (Spark `tokens.h60(x)` ≡ DuckDB
 `CAST('0x'||substr(md5(x),1,15) AS BIGINT)`), and the HLL register
 math is kept in INTEGER space (Σ 2^(53-ρ) as a BIGINT) so the sketch
 state matches the oracle bit-for-bit; floats appear only in the final
@@ -31,30 +30,20 @@ builder brief.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debezium_spark.functions.rounding import round_half_up
+from debezium_spark.functions.tokens import SQL_WORDS, h60, word_ngrams
 from debezium_spark.sources.tables import load_table
-
-# --------------------------------------------------------------------------
-# shared portable hash
-# --------------------------------------------------------------------------
-
-
-def _h60(col: Column) -> Column:
-    """First 60 bits of md5 as a non-negative BIGINT — expressible
-    identically in DuckDB, which is what keeps sketch internals
-    value-verifiable (same pattern as dedup.py's shingle hash)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
 
 # --------------------------------------------------------------------------
 # HyperLogLog distinct count (p=8, m=256 registers)
 # --------------------------------------------------------------------------
 
-_HLL_M = 256  # 2^8 registers
+_HLL_P = 8
+_HLL_M = 1 << _HLL_P  # 256 registers
 # alpha_m * m^2 * 2^53 assembled from the same literals in both
 # engines (see ORACLES) so the double arithmetic is bit-identical.
 
@@ -76,12 +65,10 @@ def hll_distinct_users_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw estimate ≤ 2.5m and empty registers exist.
     """
     e = load_table(spark, sf_dir, "events").select("user_id")
-    h = _h60(F.concat(F.lit("u"), F.col("user_id").cast("string")))
+    h = h60(F.concat(F.lit("u"), F.col("user_id").cast("string")))
     hashed = e.select(
         F.pmod(h, F.lit(_HLL_M)).alias("bucket"),
-        F.expr(
-            f"CAST(conv(substring(md5(concat('u', CAST(user_id AS STRING))), 1, 15), 16, 10) AS BIGINT) div {_HLL_M}"
-        ).alias("q"),
+        F.shiftright(h, _HLL_P).alias("q"),  # h div m: h is non-negative
     )
     rho = F.when(F.col("q") == 0, F.lit(53)).otherwise(
         F.lit(53) - F.length(F.bin(F.col("q")))
@@ -136,29 +123,6 @@ _BLOOM_NGRAM = 6  # word n-gram size
 _BENCH_MOD = 23  # doc_id % 23 == 0 → benchmark (contamination) set
 
 
-def _word_ngrams(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, source, gram) rows via sequence+element_at — all
-    codegen, no shuffle, no HOF lambdas (PLANS.md: interpreted HOFs
-    measured 10-30× slower). sequence() is size-guarded because Spark
-    descends when hi < lo instead of returning empty."""
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    base = docs.select("doc_id", "source", words.alias("ws")).filter(
-        F.size("ws") >= n
-    )
-    idx = base.select(
-        "doc_id",
-        "source",
-        "ws",
-        F.posexplode(F.sequence(F.lit(1), F.size("ws") - (n - 1))).alias(
-            "pos", "i"
-        ),
-    )
-    gram = F.concat_ws(
-        " ", *[F.element_at("ws", F.col("i") + off) for off in range(n)]
-    )
-    return idx.select("doc_id", "source", gram.alias("gram"))
-
-
 def bloom_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination pre-filter: build a Bloom filter over the
     benchmark set's word 6-grams, probe every corpus gram, and report
@@ -183,14 +147,14 @@ def bloom_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Distinct per doc: a gram repeated inside one document is one
     # membership question, and dedup keeps the count==k bloom test
     # well-defined after the position explode.
-    grams = _word_ngrams(docs, _BLOOM_NGRAM).distinct()
+    grams = word_ngrams(docs, _BLOOM_NGRAM).drop("pos").distinct()
     bench = grams.filter(F.col("doc_id") % _BENCH_MOD == 0)
     corpus = grams.filter(F.col("doc_id") % _BENCH_MOD != 0)
 
     def positions(g: DataFrame) -> DataFrame:
         pos_cols = [
             F.pmod(
-                _h60(F.concat_ws(",", F.lit(f"b{i}"), F.col("gram"))),
+                h60(F.concat_ws(",", F.lit(f"b{i}"), F.col("gram"))),
                 F.lit(_BLOOM_BITS),
             )
             for i in range(1, _BLOOM_K + 1)
@@ -201,7 +165,7 @@ def bloom_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bloom_bits = positions(bench).select("p").distinct()
     bench_gram_set = bench.select(
-        _h60(F.col("gram")).alias("gh")
+        h60(F.col("gram")).alias("gh")
     ).distinct()
 
     probe = positions(corpus).join(
@@ -214,7 +178,7 @@ def bloom_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with_truth = per_gram.join(
         F.broadcast(bench_gram_set).withColumn("true_hit", F.lit(1)),
-        _h60(F.col("gram")) == F.col("gh"),
+        h60(F.col("gram")) == F.col("gh"),
         "left",
     ).select(
         "doc_id",
@@ -274,7 +238,7 @@ def weighted_priority_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     u = (
-        _h60(F.concat(F.lit("ws"), F.col("doc_id").cast("string")))
+        h60(F.concat(F.lit("ws"), F.col("doc_id").cast("string")))
         + F.lit(1)
     ).cast("double") / F.lit(_TWO60)
     key = -F.log(u) / F.col("n_chars").cast("double")
@@ -355,7 +319,7 @@ ORACLES: dict[str, str] = {
                        i -> {" || ' ' || ".join(f"w[i+{o}]" for o in range(_BLOOM_NGRAM))}
                    )) AS gram
             FROM (SELECT doc_id, source,
-                         string_split_regex(trim(text), '\\s+') AS w
+                         {SQL_WORDS} AS w
                   FROM documents)
             WHERE len(w) >= {_BLOOM_NGRAM}
         ),
@@ -531,7 +495,7 @@ def cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.struct(
                 F.lit(r).alias("r"),
                 F.pmod(
-                    _h60(
+                    h60(
                         F.concat(
                             F.lit(f"cms{r}:"),
                             F.col("user_id").cast("string"),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.functions.rounding import round_half_up, to_units
+from debezium_spark.functions.tokens import SQL_WORDS, h60, word_ngrams, words
 from debezium_spark.sources.tables import load_table
 
 # Stopword lists for the n-gram/stopword language-ID heuristic. The
@@ -25,13 +26,6 @@ STOPWORDS = {
     "fr": ("le", "la", "les", "et", "est", "un"),
     "es": ("el", "la", "los", "y", "es", "un"),
 }
-
-def _tokens():
-    return F.split(F.trim(F.col("text")), r"\s+")
-
-
-_SQL_WORDS = "string_split_regex(trim(text), '\\s+')"  # oracle twin of _tokens
-
 
 def stopword_hit_count(words, stopwords):
     """Duplicate-preserving count of stopword occurrences in a words
@@ -47,10 +41,9 @@ def token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokens plus a BPE-ish subword estimate (ceil of
     chars/4 — the common 'one token ≈ 4 chars' heuristic)."""
     d = load_table(spark, sf_dir, "documents")
-    words = _tokens()
     return d.select(
         "doc_id",
-        F.size(words).alias("n_words"),
+        F.size(words()).alias("n_words"),
         F.ceil(F.length("text") / 4).cast("long").alias("n_subword_est"),
         F.length("text").alias("n_chars_actual"),
     ).orderBy("doc_id")
@@ -60,9 +53,9 @@ def quality_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length / stopword-ratio / mean-word-length quality signals and
     a composite score in [0,1]."""
     d = load_table(spark, sf_dir, "documents")
-    words = _tokens()
-    n_words = F.size(words)
-    stop_hits = stopword_hit_count(words, STOPWORDS["en"])
+    ws = words()
+    n_words = F.size(ws)
+    stop_hits = stopword_hit_count(ws, STOPWORDS["en"])
     stop_ratio = stop_hits / n_words
     mean_word_len = (F.length("text") - (n_words - 1)) / n_words
     length_signal = F.least(n_words / F.lit(200.0), F.lit(1.0))
@@ -85,9 +78,9 @@ def language_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax with 'unk' when nothing hits; compare against the labeled
     lang column (accuracy by label)."""
     d = load_table(spark, sf_dir, "documents")
-    words = _tokens()
+    ws = words()
     hits = {
-        lang: stopword_hit_count(words, sw) for lang, sw in STOPWORDS.items()
+        lang: stopword_hit_count(ws, sw) for lang, sw in STOPWORDS.items()
     }
     best = F.greatest(*hits.values())
     pred = F.when(best == 0, "unk")
@@ -129,13 +122,10 @@ def fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row (measured 10× the whole operator's cost). Aggregate the
     # rolling hash on doc_id alone, then join the per-doc md5 back —
     # same shape as the DuckDB oracle.
-    words = d.select("doc_id", F.posexplode(_tokens()).alias("pos", "w"))
+    ws = d.select("doc_id", F.posexplode(words()).alias("pos", "w"))
     keyed = F.concat_ws("#", F.col("w"), F.col("pos").cast("string"))
-    term = F.pmod(
-        F.conv(F.substring(F.md5(keyed), 1, 15), 16, 10).cast("long"),
-        F.lit(1 << _FP_TERM_BITS),
-    )
-    fp = words.groupBy("doc_id").agg(
+    term = F.pmod(h60(keyed), F.lit(1 << _FP_TERM_BITS))
+    fp = ws.groupBy("doc_id").agg(
         F.pmod(F.sum(term), F.lit(_FP_MOD)).alias("rolling_hash")
     )
     return (
@@ -157,7 +147,7 @@ def vocab_doc_freq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered (orderBy+limit — no global window), so at 100 TB it
     runs at scan speed with a single shuffle on the term key."""
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.explode(_tokens()).alias("t0")).select(
+    w = d.select("doc_id", F.explode(words()).alias("t0")).select(
         "doc_id", F.lower("t0").alias("term")
     )
     return (
@@ -173,19 +163,12 @@ def vocab_doc_freq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bigram_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adjacent-token pair statistics (the merge-candidate counts a
-    BPE-style tokenizer trains on): posexplode + per-doc lead — the
-    same shuffle-bounded shingle shape as dedup — then one pair-key
-    groupBy and a bounded TakeOrdered."""
+    BPE-style tokenizer trains on): word bigram rows — the same
+    shuffle-free shingle shape as dedup — then one pair-key groupBy
+    and a bounded TakeOrdered."""
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.posexplode(_tokens()).alias("pos", "w1"))
-    nxt = F.lead("w1").over(Window.partitionBy("doc_id").orderBy("pos"))
-    pairs = (
-        w.withColumn("w2", nxt)
-        .filter(F.col("w2").isNotNull())
-        .select(
-            "doc_id",
-            F.lower(F.concat_ws(" ", "w1", "w2")).alias("bigram"),
-        )
+    pairs = word_ngrams(d, 2).select(
+        "doc_id", F.lower("gram").alias("bigram")
     )
     return (
         pairs.groupBy("bigram")
@@ -216,7 +199,7 @@ def repetition_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id; no window over the corpus, so at 100 TB it scales with
     the shuffle like any word count."""
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.posexplode(_tokens()).alias("pos", "w1"))
+    w = d.select("doc_id", F.explode(words()).alias("w1"))
     uni = w.groupBy("doc_id", F.lower("w1").alias("term")).agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -225,11 +208,8 @@ def repetition_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").alias("n_words"),
         F.count(F.lit(1)).alias("n_unique"),
     )
-    nxt = F.lead("w1").over(Window.partitionBy("doc_id").orderBy("pos"))
-    pairs = (
-        w.withColumn("w2", nxt)
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", F.lower(F.concat_ws(" ", "w1", "w2")).alias("bigram"))
+    pairs = word_ngrams(d, 2).select(
+        "doc_id", F.lower("gram").alias("bigram")
     )
     bi = pairs.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("c"))
     per_bi = bi.groupBy("doc_id").agg(
@@ -287,7 +267,7 @@ _STOP_EN = ",".join(f"'{w}'" for w in STOPWORDS["en"])
 ORACLES: dict[str, str] = {
     "token_count": f"""
         SELECT doc_id,
-               CAST(len({_SQL_WORDS}) AS INT) AS n_words,
+               CAST(len({SQL_WORDS}) AS INT) AS n_words,
                CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_subword_est,
                CAST(length(text) AS INT) AS n_chars_actual
         FROM documents ORDER BY doc_id
@@ -298,7 +278,7 @@ ORACLES: dict[str, str] = {
                    CAST(len(w) AS DOUBLE) AS n_words,
                    CAST(len(list_filter(w, x -> x IN ({_STOP_EN}))) AS DOUBLE) AS stop_hits,
                    CAST(length(text) AS DOUBLE) AS n_chars
-            FROM (SELECT doc_id, text, {_SQL_WORDS} AS w FROM documents)
+            FROM (SELECT doc_id, text, {SQL_WORDS} AS w FROM documents)
         )
         SELECT doc_id,
                CAST(n_words AS INT) AS n_words,
@@ -311,8 +291,8 @@ ORACLES: dict[str, str] = {
                    AS quality_score
         FROM q ORDER BY doc_id
     """,
-    "language_id": """
-        WITH w AS (SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS words
+    "language_id": f"""
+        WITH w AS (SELECT doc_id, lang, {SQL_WORDS} AS words
                    FROM documents),
         hits AS (
             SELECT doc_id, lang,
@@ -335,7 +315,7 @@ ORACLES: dict[str, str] = {
         FROM pred GROUP BY lang ORDER BY lang
     """,
     "fingerprint": f"""
-        WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+        WITH t AS (SELECT doc_id, {SQL_WORDS} AS w
                    FROM documents),
         terms AS (
             SELECT doc_id,
@@ -355,7 +335,7 @@ ORACLES: dict[str, str] = {
     "repetition_quality": f"""
         WITH w AS (
             SELECT doc_id, lower(unnest(t)) AS term
-            FROM (SELECT doc_id, {_SQL_WORDS} AS t FROM documents)),
+            FROM (SELECT doc_id, {SQL_WORDS} AS t FROM documents)),
         per_uni AS (
             SELECT doc_id, max(c) AS max_c, CAST(sum(c) AS BIGINT) AS n_words,
                    count(*) AS n_unique
@@ -366,7 +346,7 @@ ORACLES: dict[str, str] = {
             SELECT doc_id,
                    lower(unnest(list_transform(range(1, len(t)),
                        i -> t[i] || ' ' || t[i + 1]))) AS bigram
-            FROM (SELECT doc_id, {_SQL_WORDS} AS t FROM documents)),
+            FROM (SELECT doc_id, {SQL_WORDS} AS t FROM documents)),
         per_bi AS (
             SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
                    count(*) AS n_unique_bigrams
@@ -413,7 +393,7 @@ ORACLES: dict[str, str] = {
     "vocab_doc_freq": f"""
         WITH w AS (
             SELECT doc_id,
-                   lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
+                   lower(unnest({SQL_WORDS})) AS term
             FROM documents)
         SELECT term, count(*) AS term_freq,
                count(DISTINCT doc_id) AS doc_freq
@@ -421,7 +401,7 @@ ORACLES: dict[str, str] = {
         ORDER BY term_freq DESC, term LIMIT {VOCAB_TOP}
     """,
     "bigram_counts": f"""
-        WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS w
+        WITH t AS (SELECT doc_id, {SQL_WORDS} AS w
                    FROM documents),
         p AS (SELECT doc_id,
                      lower(unnest(list_transform(range(1, len(w)),
@@ -464,16 +444,14 @@ NLL_BAND_HI = 6.0
 
 def unigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
-    )
-    vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
+    ws = d.select("doc_id", F.explode(words()).alias("w"))
+    vocab = ws.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
     tot = vocab.agg(F.sum("cnt").alias("total"))
     term_micro = to_units(
         F.log(F.col("total").cast("double") / F.col("cnt")), 6
     )
     per_word = (
-        words.join(vocab, "w")
+        ws.join(vocab, "w")
         .crossJoin(F.broadcast(tot))
         .select("doc_id", term_micro.alias("nll_micro"))
     )
@@ -498,7 +476,7 @@ def unigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES["unigram_logprob"] = f"""
     WITH words AS (
-        SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
+        SELECT doc_id, unnest({SQL_WORDS}) AS w
         FROM documents),
     vocab AS (SELECT w, count(*) AS cnt FROM words GROUP BY w),
     tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM vocab),
@@ -537,7 +515,7 @@ TFIDF_TOP = 3
 
 def tfidf_topterms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.explode(_tokens()).alias("t0")).select(
+    w = d.select("doc_id", F.explode(words()).alias("t0")).select(
         "doc_id", F.lower("t0").alias("term")
     )
     tf = w.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -576,7 +554,7 @@ def tfidf_topterms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["tfidf_topterms"] = f"""
     WITH w AS (
         SELECT doc_id,
-               lower(unnest(string_split_regex(trim(text), '\\s+'))) AS term
+               lower(unnest({SQL_WORDS})) AS term
         FROM documents),
     tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
            FROM w GROUP BY doc_id, term),
@@ -622,11 +600,11 @@ def gopher_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combinable. All output columns are BIGINT counts, so the
     gate is exact."""
     d = load_table(spark, sf_dir, "documents")
-    words = _tokens()
-    n_words = F.size(words)
+    ws = words()
+    n_words = F.size(ws)
     mwl = (F.length("text") - (n_words - 1)) / n_words
     n_stop_distinct = sum(
-        (F.array_contains(words, w).cast("int"))
+        (F.array_contains(ws, w).cast("int"))
         for w in STOPWORDS["en"]
     )
     doc_level = d.select(
@@ -637,7 +615,7 @@ def gopher_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_stop_distinct.alias("n_stop"),
     )
     top_frac = (
-        d.select("doc_id", F.explode(words).alias("word"))
+        d.select("doc_id", F.explode(ws).alias("word"))
         .groupBy("doc_id", "word")
         .count()
         .groupBy("doc_id")
@@ -674,7 +652,7 @@ def gopher_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES["gopher_rules"] = f"""
     WITH base AS (
-        SELECT doc_id, source, {_SQL_WORDS} AS ws, text FROM documents
+        SELECT doc_id, source, {SQL_WORDS} AS ws, text FROM documents
     ),
     doc_level AS (
         SELECT doc_id, source, len(ws) AS n_words,
@@ -744,14 +722,14 @@ def _bpe_word_seqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, freq, seq) — the word-frequency table with initial
     character-level symbol sequences plus the '</w>' end marker."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(_tokens()).alias("t0"))
+    vocab = (
+        d.select(F.explode(words()).alias("t0"))
         .select(F.lower("t0").alias("word"))
         .filter(F.col("word").rlike("^[a-z]+$"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    return words.withColumn(
+    return vocab.withColumn(
         "seq", F.concat(F.regexp_replace("word", "(.)", "<$1>"), F.lit("</w>"))
     )
 
@@ -858,7 +836,7 @@ def _bpe_oracle_sql(k: int) -> str:
         f"""
     WITH toks_raw AS (
         SELECT lower(t) AS word
-        FROM (SELECT unnest({_SQL_WORDS}) AS t FROM documents)
+        FROM (SELECT unnest({SQL_WORDS}) AS t FROM documents)
         WHERE regexp_full_match(lower(t), '[a-z]+')
     ),
     words AS (SELECT word, count(*) AS freq FROM toks_raw GROUP BY word),
@@ -936,7 +914,7 @@ QUERIES["bpe_tokenize_apply"] = bpe_tokenize_apply_q
 # proof, the repo's standard trick), and the interpolation arithmetic
 # is written with the identical operation order in both engines so
 # the doubles agree bit-for-bit before quantization.
-# Scale: one doc-keyed window for adjacency, one groupBy per n-gram
+# Scale: shuffle-free bigram rows for adjacency, one groupBy per n-gram
 # order (both partial-agg friendly, vocab-bounded), two vocab joins
 # back, one per-doc agg. No O(n²), no HOFs, no collect.
 # --------------------------------------------------------------------------
@@ -947,12 +925,13 @@ BIGRAM_NLL_HI = 7.0
 
 def bigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.posexplode(_tokens()).alias("pos", "w1"))
-    nxt = F.lead("w1").over(Window.partitionBy("doc_id").orderBy("pos"))
-    pairs = (
-        w.withColumn("w2", nxt)
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", "w1", "w2")
+    w = d.select("doc_id", F.explode(words()).alias("w1"))
+    # words hold no whitespace, so a bigram's first and last word are
+    # the text before its first and after its last space
+    pairs = word_ngrams(d, 2).select(
+        "doc_id",
+        F.substring_index("gram", " ", 1).alias("w1"),
+        F.substring_index("gram", " ", -1).alias("w2"),
     )
     uni = w.groupBy(F.col("w1").alias("uw")).agg(
         F.count(F.lit(1)).alias("uc")
@@ -996,7 +975,7 @@ def bigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["bigram_logprob"] = f"""
-    WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
+    WITH t AS (SELECT doc_id, {SQL_WORDS} AS ws
                FROM documents),
     words AS (SELECT doc_id, unnest(ws) AS w1 FROM t),
     pairs AS (

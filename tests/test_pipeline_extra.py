@@ -7,6 +7,7 @@ from debezium_spark.cdc.converters import (
     apply_schema_evolution,
     cdc_schema_evolution_q,
 )
+from debezium_spark.functions.tokens import words
 from debezium_spark.operators.pipeline import (
     PACK_CONTEXT,
     decontaminate_q,
@@ -44,12 +45,11 @@ def test_sequence_pack_matches_naive_window(spark, sf_dir):
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.col("text")), r"\s+")
     w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     naive = (
-        d.select("doc_id", "source", F.size(words).cast("long").alias("n"))
+        d.select("doc_id", "source", F.size(words()).cast("long").alias("n"))
         .withColumn("cum", F.sum("n").over(w))
         .withColumn("pack_id", F.floor((F.col("cum") - F.col("n")) / PACK_CONTEXT))
         .groupBy("source")

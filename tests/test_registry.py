@@ -46,3 +46,25 @@ def test_rounding_nudge_lives_in_one_module():
         if isinstance(node, ast.Constant) and node.value == 1e-9
     ]
     assert sites == []
+
+
+def test_tokenizer_and_hash_live_in_one_module():
+    # the Spark tokenizer, its DuckDB twin and the md5-60 hash are
+    # written once, in functions/tokens.py
+    pkg = pathlib.Path(entry.__file__).parent / "debezium_spark"
+    spellings = {
+        "spark tokenizer": ("F.split(F.trim(",),
+        "sql tokenizer": ("string_split_regex(trim(text)",),
+        "md5-60": ("F.conv(F.substring(F.md5(", "conv(substring(md5("),
+    }
+    for what, needles in spellings.items():
+        sites = [
+            f"{path.relative_to(pkg)}:{n}"
+            for path in sorted(pkg.rglob("*.py"))
+            for n, line in enumerate(path.read_text().splitlines(), 1)
+            if any(s in line for s in needles)
+        ]
+        assert sites, what
+        assert all(s.startswith("functions/tokens.py:") for s in sites), (
+            what, sites,
+        )

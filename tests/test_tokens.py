@@ -1,0 +1,52 @@
+"""`word_ngrams` against the DuckDB construction the oracles use, on
+the edge cases of the tokenizer: empty text, fewer words than n,
+exactly n words, runs of spaces, leading/trailing spaces and tabs."""
+
+from collections import Counter
+
+import duckdb
+import pytest
+
+from debezium_spark.functions.tokens import SQL_WORDS, word_ngrams
+
+LONG = " ".join(f"w{i % 7}" for i in range(25))  # repeated grams
+DOCS = [
+    (0, ""),
+    (1, "one"),
+    (2, "a b"),
+    (3, "a b c"),
+    (4, " ".join(f"t{i}" for i in range(20))),
+    (5, "a  b   c    d"),
+    (6, "   lead and trail   "),
+    (7, "tab\tseparated\t\twords here"),
+    (8, "\tleading tab and trailing tab\t"),
+    (9, LONG),
+    (10, " ".join([LONG] * 2)),
+]
+
+
+def _duckdb_ngrams(n: int) -> Counter:
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", DOCS)
+    rows = con.execute(f"""
+        SELECT doc_id, pos - 1 AS pos,
+               array_to_string(w[pos:pos + {n - 1}], ' ') AS gram
+        FROM (SELECT doc_id, w, unnest(range(1, len(w) - {n - 2})) AS pos
+              FROM (SELECT doc_id, {SQL_WORDS} AS w FROM docs))
+    """).fetchall()
+    return Counter(rows)
+
+
+@pytest.mark.parametrize("n", [2, 3, 20])
+def test_word_ngrams_match_duckdb(spark, n):
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    got = word_ngrams(docs, n)
+    assert got.columns == ["doc_id", "pos", "gram"]
+    spark_rows = Counter(
+        (r["doc_id"], r["pos"], r["gram"]) for r in got.collect()
+    )
+    expected = _duckdb_ngrams(n)
+    assert spark_rows == expected
+    # docs shorter than n give no rows; the rest give len - n + 1
+    assert {d for d, _, _ in expected} >= {4, 9, 10}
