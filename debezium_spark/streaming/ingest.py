@@ -3,11 +3,12 @@
 Re-expresses Debezium's delivery loop in Spark terms: a file-source
 change stream (stand-in for the Kafka topic), watermarked windowed
 aggregation for event-time analytics, and one latest-state sink — the
-exactly-once manifest-commit sink below. Each microbatch is merged
-max-seq-wins per key into a hash-bucketed state and made visible by
-an atomic manifest commit, so replays, crashes between write and
-commit, out-of-order batches and compaction all converge to the same
-state.
+exactly-once manifest-commit sink below. Its state is merge-on-read:
+each microbatch is appended as one delta file, the deltas are folded
+max-seq-wins per key into a new base once their bytes reach the
+base's, and every epoch is made visible by an atomic manifest commit,
+so replays, crashes between write and commit, out-of-order batches and
+compaction all converge to the same state.
 
 The oracle-gated stream entries replay a staged topic to completion
 through one gate-only runner, `_replay` (memory sink, batch finish,
@@ -16,8 +17,9 @@ batch oracles — streaming latest-state must equal batch latest-state
 (tested), which is the Debezium at-least-once + idempotent-consumer
 contract.
 
-At scale: a batch reads and rewrites only the state buckets its keys
-hash to; maxFilesPerTrigger bounds per-batch volume.
+At scale: a delta epoch costs its batch, not the state, and a fold
+rewrites the state only after about as many bytes have arrived as it
+holds; maxFilesPerTrigger bounds per-batch volume.
 applyInPandasWithState carries per-key running aggregates where
 event-time windows can't express the semantics.
 """
@@ -29,9 +31,9 @@ import os
 import re
 import shutil
 import tempfile
+import time
 import uuid
-from collections.abc import Callable
-from functools import reduce
+from collections.abc import Callable, Iterable
 
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -443,42 +445,57 @@ QUERIES["stream_sliding_counts"] = stream_sliding_counts_q
 
 
 # --------------------------------------------------------------------------
-# Exactly-once manifest-commit latest-state sink.
+# Exactly-once manifest-commit latest-state sink, merge-on-read.
 #
-# State is hash-bucketed by key and made atomic across buckets by the
-# commit idea of Delta Lake's _delta_log and Iceberg's metadata
-# pointer, reduced to a JSON manifest committed by atomic rename:
+# The state is one base plus the deltas not yet folded into it, made
+# atomic by the commit idea of Delta Lake's _delta_log and Iceberg's
+# metadata pointer, reduced to a JSON manifest committed by atomic
+# rename:
 #
 #   state_root/data/e<batchId>/         immutable per-batch parquet
 #   state_root/_manifests/manifest-<batchId>.json
-#       {"epoch": N, "schema": {...}, "buckets": {"<bucket>": "<dir>"}}
+#       {"epoch": N, "key": "<col>", "seq": "<col>", "schema": {...},
+#        "buckets": {"<bucket>": "<base dir>"},
+#        "deltas": ["<dir>", ...],                       oldest first
+#        "kind": "delta" | "fold", "bytes_written": B, "merge_ms": T}
 #
-# A manifest is named after the last batch id it applied. A batch
-# merges the buckets it touches (max-seq-wins per key; tombstones
-# op='d' stay in state so a lower-seq replay cannot resurrect a delete,
-# and consumers filter them) into a new dir, then commits a manifest
-# mapping every bucket to its current dir — touched buckets point at
-# the new dir, untouched ones carry forward. Readers resolve the latest
-# manifest and read exactly the (dir, bucket) pairs it references, so a
-# crash between data write and rename leaves the torn batch invisible.
-# On restart Structured Streaming replays the same batch id: an id at
-# or below the latest manifest's was applied and is skipped wholesale,
-# a higher one is rewritten in place and committed. Compaction rewrites
-# the state into one dir and replaces the latest manifest in place, so
-# it never claims a batch id the stream has yet to run.
+# A manifest is named after the last batch id it applied. The base
+# holds one max-seq-wins row per key; tombstones (op='d') stay in it so
+# a lower-seq replay cannot resurrect a delete, and consumers filter
+# them. A delta epoch writes its raw batch as one file and appends it
+# to `deltas`, reading no prior state. Once the pending deltas' parquet
+# bytes reach the base's (an empty sink has 0 >= 0), the epoch folds
+# base, deltas and batch into a new base, points every bucket at it and
+# empties `deltas`. The 1:1 ratio keeps a read to about twice the base
+# and writes each received byte about twice. Readers read exactly the dirs the latest manifest
+# references, so a crash between data write and rename leaves the torn
+# batch invisible. On restart Structured Streaming replays the same
+# batch id: an id at or below the latest manifest's was applied and is
+# skipped wholesale, a higher one is rewritten in place and committed.
+# Compaction folds the state into one dir and replaces the latest
+# manifest in place, so it never claims a batch id the stream has yet
+# to run.
 # --------------------------------------------------------------------------
 
 
-def _latest_manifest(state_root: str) -> tuple[str | None, int]:
+def _manifest_paths(state_root: str) -> dict[int, str]:
+    """Batch id -> path of every committed manifest."""
     mdir = os.path.join(state_root, "_manifests")
-    best, best_e = None, -1
-    if os.path.isdir(mdir):
-        for f in os.listdir(mdir):
-            m = re.fullmatch(r"manifest-(\d+)\.json", f)
-            if m and int(m.group(1)) > best_e:
-                best_e = int(m.group(1))
-                best = os.path.join(mdir, f)
-    return best, best_e
+    if not os.path.isdir(mdir):
+        return {}
+    return {
+        int(m.group(1)): os.path.join(mdir, f)
+        for f in os.listdir(mdir)
+        if (m := re.fullmatch(r"manifest-(\d+)\.json", f))
+    }
+
+
+def _latest_manifest(state_root: str) -> tuple[str | None, int]:
+    paths = _manifest_paths(state_root)
+    if not paths:
+        return None, -1
+    epoch = max(paths)
+    return paths[epoch], epoch
 
 
 def _load_latest_manifest(state_root: str) -> dict:
@@ -500,6 +517,38 @@ def _commit_manifest(state_root: str, manifest: dict) -> None:
     os.replace(tmp, mpath)  # the atomic commit point
 
 
+def _dir_bytes(state_root: str, dirs: Iterable[str]) -> int:
+    """Parquet bytes in the given data dirs."""
+    total = 0
+    for d in dirs:
+        with os.scandir(os.path.join(state_root, "data", d)) as entries:
+            total += sum(
+                e.stat().st_size for e in entries if e.name.endswith(".parquet")
+            )
+    return total
+
+
+def _read_state(
+    spark: SparkSession, state_root: str, manifest: dict,
+    extra: DataFrame | None = None,
+) -> DataFrame:
+    """The state `manifest` commits, with `extra` as one more delta:
+    base and deltas are read with the manifest's schema (no inference
+    job) and resolved max-seq-wins per key only when a delta is
+    pending."""
+    dirs = sorted(set(manifest["buckets"].values())) + manifest["deltas"]
+    state = spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(
+        *[os.path.join(state_root, "data", d) for d in dirs]
+    )
+    if extra is not None:
+        state = state.unionByName(extra)
+    if manifest["deltas"] or extra is not None:
+        state = latest_state(
+            state, manifest["key"], manifest["seq"], keep_tombstones=True
+        )
+    return state
+
+
 def _manifest_merge_batch(
     batch: DataFrame,
     epoch_id: int,
@@ -509,49 +558,49 @@ def _manifest_merge_batch(
     seq: str,
     crash_before_commit: set[int] | None,
 ) -> None:
-    """One epoch of the manifest protocol: merge touched buckets into
-    a new immutable epoch dir, then atomically commit the manifest.
-    `crash_before_commit`: epoch ids at which to raise AFTER the data
-    write but BEFORE the manifest rename — the crash-injection hook
-    the kill/restart test uses to prove torn epochs stay invisible."""
-    sess = batch.sparkSession
+    """One epoch of the manifest protocol: write the batch as a new
+    delta dir, or fold base, deltas and batch into a new base dir once
+    the deltas' bytes reach the base's; then atomically commit the
+    manifest. `crash_before_commit`: epoch ids at which to raise AFTER
+    the data write but BEFORE the manifest rename — the crash-injection
+    hook the kill/restart test uses to prove torn epochs stay
+    invisible."""
+    t0 = time.perf_counter()
     os.makedirs(os.path.join(state_root, "_manifests"), exist_ok=True)
     prev_manifest, last_epoch = _latest_manifest(state_root)
     if epoch_id <= last_epoch:
         return  # batch already applied — replay skips wholesale
-    pointers: dict[str, str] = {}
-    if prev_manifest is not None:
-        with open(prev_manifest) as fh:
-            pointers = json.load(fh)["buckets"]
     b = batch.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
     )
-    touched = sorted(
-        r["bucket"] for r in b.select("bucket").distinct().collect()
+    man = {"epoch": epoch_id, "key": key, "seq": seq,
+           "schema": b.schema.jsonValue(), "buckets": {}, "deltas": []}
+    if prev_manifest is not None:
+        with open(prev_manifest) as fh:
+            prev = json.load(fh)
+        man["buckets"], man["deltas"] = prev["buckets"], prev["deltas"]
+    epoch_dir = f"e{epoch_id}"
+    fold = _dir_bytes(state_root, man["deltas"]) >= _dir_bytes(
+        state_root, set(man["buckets"].values())
     )
-    if touched:
-        prev_dirs = sorted(
-            {pointers[str(t)] for t in touched if str(t) in pointers}
-        )
-        snap = b
-        if prev_dirs:
-            prev = sess.read.parquet(
-                *[os.path.join(state_root, "data", d) for d in prev_dirs]
-            ).filter(F.col("bucket").isin(touched))
-            snap = prev.unionByName(b)
-        latest = latest_state(snap, key, seq, keep_tombstones=True)
-        epoch_dir = f"e{epoch_id}"
-        latest.write.mode("overwrite").parquet(
-            os.path.join(state_root, "data", epoch_dir)
-        )
-        for t in touched:
-            pointers[str(t)] = epoch_dir
+    if fold:
+        out = _read_state(batch.sparkSession, state_root, man, extra=b)
+        man["buckets"] = {str(i): epoch_dir for i in range(n_buckets)}
+        man["deltas"] = []
+    else:
+        out = b.coalesce(1)
+        man["deltas"] = man["deltas"] + [epoch_dir]
+    out.write.mode("overwrite").parquet(
+        os.path.join(state_root, "data", epoch_dir)
+    )
     if crash_before_commit and epoch_id in crash_before_commit:
         raise RuntimeError(f"injected crash before commit of epoch {epoch_id}")
-    _commit_manifest(
-        state_root,
-        {"epoch": epoch_id, "schema": b.schema.jsonValue(), "buckets": pointers},
-    )
+    _commit_manifest(state_root, {
+        **man,
+        "kind": "fold" if fold else "delta",
+        "bytes_written": _dir_bytes(state_root, [epoch_dir]),
+        "merge_ms": (time.perf_counter() - t0) * 1000,
+    })
 
 
 def run_manifest_stream(
@@ -584,44 +633,49 @@ def run_manifest_stream(
 
 
 def read_manifest_state(spark: SparkSession, state_root: str) -> DataFrame:
-    """Resolve the latest committed manifest and read exactly the
-    (epoch dir, bucket) pairs it references — stale copies of a
-    bucket in older epoch dirs are excluded by construction. A
-    manifest that references no bucket (only empty batches so far)
-    reads as zero rows with the state columns."""
-    man = _load_latest_manifest(state_root)
-    by_dir: dict[str, list[int]] = {}
-    for bk, d in man["buckets"].items():
-        by_dir.setdefault(d, []).append(int(bk))
-    parts = [
-        spark.read.parquet(os.path.join(state_root, "data", d)).filter(
-            F.col("bucket").isin(bs)
-        )
-        for d, bs in sorted(by_dir.items())
-    ]
-    if not parts:
-        return spark.createDataFrame([], StructType.fromJson(man["schema"]))
-    return reduce(DataFrame.unionByName, parts)
+    """The state the latest committed manifest references: its base,
+    with any pending deltas resolved max-seq-wins per key. Dirs of
+    older or torn epochs are excluded by construction; a sink that has
+    seen only empty batches reads as zero rows with the state
+    columns."""
+    return _read_state(spark, state_root, _load_latest_manifest(state_root))
+
+
+def sink_history(spark: SparkSession, state_root: str) -> DataFrame:
+    """One row per retained manifest, oldest first, in the manner of
+    Delta's DESCRIBE HISTORY: the batch id, whether the epoch wrote a
+    `delta` or a `fold`, the parquet bytes it wrote, its merge time
+    before the commit, and the deltas its manifest leaves pending."""
+    rows = []
+    for epoch, path in sorted(_manifest_paths(state_root).items()):
+        with open(path) as fh:
+            m = json.load(fh)
+        rows.append((epoch, m["kind"], m["bytes_written"],
+                     float(m["merge_ms"]), len(m["deltas"])))
+    return spark.createDataFrame(
+        rows,
+        "epoch long, kind string, bytes_written long, merge_ms double, "
+        "pending_deltas int",
+    )
 
 
 def compact_manifest_state(spark: SparkSession, state_root: str) -> str:
-    """Compaction for the manifest layout: rewrite the current state
-    into one consolidated dir, atomically replace the latest manifest
-    with one pointing each of its buckets at that dir, and delete the
-    data dirs no longer referenced. The manifest keeps its batch id, so
-    a stream resuming afterwards applies its next batch normally.
-    Bounds the O(epochs) dir growth of a long-running stream;
+    """Compaction for the manifest layout: fold the current state into
+    one consolidated dir, atomically replace the latest manifest with
+    one pointing each of its buckets at that dir and no delta, and
+    delete the data dirs no longer referenced. The manifest keeps its
+    batch id, so a stream resuming afterwards applies its next batch
+    normally. Bounds the O(epochs) dir growth of a long-running stream;
     correctness never depends on it. Assumes no concurrent reader: one
     still scanning the dirs of the replaced manifest loses them."""
     man = _load_latest_manifest(state_root)
     compact_dir = f"compact-{man['epoch']}-{uuid.uuid4().hex[:8]}"
-    read_manifest_state(spark, state_root).write.mode("overwrite").parquet(
+    _read_state(spark, state_root, man).write.mode("overwrite").parquet(
         os.path.join(state_root, "data", compact_dir)
     )
-    _commit_manifest(
-        state_root,
-        {**man, "buckets": {b: compact_dir for b in man["buckets"]}},
-    )
+    _commit_manifest(state_root, {
+        **man, "buckets": {b: compact_dir for b in man["buckets"]}, "deltas": [],
+    })
     data_dir = os.path.join(state_root, "data")
     for d in os.listdir(data_dir):
         if d != compact_dir:

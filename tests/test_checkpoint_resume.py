@@ -96,12 +96,14 @@ def test_manifest_sink_crash_consistent_resume(spark, sf_dir):
         _, committed_epoch = _latest_manifest(state_root)
         assert committed_epoch == 1  # epoch 2's data write is torn
         # the torn epoch dir may exist on disk but is NOT referenced
-        # by any committed manifest — readers cannot see it
+        # by any committed manifest, as base or as delta — readers
+        # cannot see it
         import json as _json
 
         mpath, _ = _latest_manifest(state_root)
         with open(mpath) as fh:
-            assert "e2" not in set(_json.load(fh)["buckets"].values())
+            man = _json.load(fh)
+        assert "e2" not in set(man["buckets"].values()) | set(man["deltas"])
         assert read_manifest_state(spark, state_root).count() > 0
 
         # run 2: same checkpoint — epoch 2 replays, commits, stream
@@ -309,8 +311,8 @@ def test_manifest_sink_random_fault_sequences(spark, staged_chunks,
 
 
 def test_manifest_empty_first_file_reads_as_empty_state(spark, staged_chunks):
-    """A zero-row file landing first commits a manifest with no bucket;
-    it must read back as zero rows with the state columns."""
+    """A zero-row file landing first commits a fold of no rows; it
+    must read back as zero rows with the state columns."""
     from debezium_spark.streaming.ingest import (
         _file_stream,
         _latest_manifest,

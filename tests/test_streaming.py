@@ -1,6 +1,8 @@
 """Streaming ↔ batch convergence: the core correctness property of
 the CDC ingest loop."""
 
+import glob
+import json
 import os
 import tempfile
 
@@ -142,78 +144,101 @@ def test_stateful_running_counts(spark, sf_dir):
         assert final.count() == want.count()
 
 
-def test_bucketed_state_rewrites_only_touched_buckets(spark, sf_dir):
-    """Batch 1 seeds all buckets; batch 2 touches a narrow key range —
-    only its k buckets may be rewritten (the manifest of batch 2 points
-    just those at its dir), and the final state must still equal
-    max-seq-wins over both batches."""
-    import json
-    import shutil
+def _manifest(state_root, epoch):
+    with open(os.path.join(state_root, "_manifests", f"manifest-{epoch}.json")) as fh:
+        return json.load(fh)
 
+
+def test_merge_on_read_delta_and_fold_epochs(spark):
+    """Epoch 0 folds the empty sink into a base. Epoch 1 only appends
+    its raw batch as a delta: its dir holds exactly the batch's rows
+    and no bucket pointer moves, yet its delete of key 7 hides that
+    key's base row. Epoch 2 finds the delta outgrowing the base and
+    folds base, delta and batch into one new base."""
     from debezium_spark.streaming.ingest import (
+        _manifest_merge_batch,
         read_manifest_state,
-        run_manifest_stream,
     )
 
-    workdir = tempfile.mkdtemp(prefix="bucket_state_")
-    topic, state = os.path.join(workdir, "t"), os.path.join(workdir, "s")
-    try:
-        seed = spark.range(200).select(
-            F.col("id").alias("key"),
-            F.lit("c").alias("op"),
-            F.lit(1).alias("seq"),
-            (F.col("id") * 1.0).alias("val"),
-        )
-        update = spark.range(5).select(
-            F.col("id").alias("key"),
-            F.lit("u").alias("op"),
-            F.lit(2).alias("seq"),
-            (F.col("id") * 10.0).alias("val"),
-        )
-        os.makedirs(topic)
-        seed.coalesce(1).write.parquet(os.path.join(topic, "f1.parquet"))
-        update.coalesce(1).write.parquet(os.path.join(topic, "f2.parquet"))
-        stream = (
-            spark.readStream.schema(seed.schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(topic + "/*/")
-        )
+    cols = ["key", "op", "seq", "val"]
+    seed = spark.range(200).select(
+        F.col("id").alias("key"),
+        F.lit("c").alias("op"),
+        F.lit(1).cast("long").alias("seq"),
+        (F.col("id") * 1.0).alias("val"),
+    )
+    # 25 updates per key (seq 2..26); key 7's last event is a delete
+    updates = spark.range(5000).select(
+        (F.col("id") % 200).alias("key"),
+        F.when((F.col("id") % 200 == 7) & (F.col("id") >= 4800), "d")
+        .otherwise("u").alias("op"),
+        ((F.col("id") / 200).cast("long") + 2).alias("seq"),
+        (F.col("id") * 1.5).alias("val"),
+    )
+    last = seed.limit(1).withColumn("seq", F.lit(27).cast("long"))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(cols).collect())
+
+    with tempfile.TemporaryDirectory() as state:
+        _manifest_merge_batch(seed, 0, state, 16, "key", "seq", None)
+        _manifest_merge_batch(updates, 1, state, 16, "key", "seq", None)
+        m0, m1 = _manifest(state, 0), _manifest(state, 1)
+        assert (m0["kind"], m0["deltas"]) == ("fold", [])
+        assert m0["buckets"] == {str(b): "e0" for b in range(16)}
+        assert (m1["kind"], m1["deltas"]) == ("delta", ["e1"])
+        assert m1["buckets"] == m0["buckets"]
+        e1 = spark.read.parquet(os.path.join(state, "data", "e1"))
+        assert rows(e1) == rows(updates)
+        live = read_manifest_state(spark, state).filter("op != 'd'")
+        assert live.filter("key = 7").count() == 0
+        assert rows(live) == rows(latest_state(seed.unionByName(updates)))
+
+        _manifest_merge_batch(last, 2, state, 16, "key", "seq", None)
+        m2 = _manifest(state, 2)
+        assert (m2["kind"], m2["deltas"]) == ("fold", [])
+        assert m2["buckets"] == {str(b): "e2" for b in range(16)}
+        want = rows(latest_state(
+            seed.unionByName(updates).unionByName(last), keep_tombstones=True))
+        e2 = spark.read.parquet(os.path.join(state, "data", "e2"))
+        assert rows(e2) == want  # one row per key, key 7's tombstone kept
+        assert rows(read_manifest_state(spark, state)) == want
+
+
+def test_sink_history_explains_every_epoch(spark, sf_dir):
+    """sink_history has one row per epoch of a short stream, and each
+    row's kind follows from the bytes of the rows before it: an epoch
+    folds exactly when the pending deltas' bytes reach the base's."""
+    from debezium_spark.streaming.ingest import (
+        _file_stream,
+        run_manifest_stream,
+        sink_history,
+    )
+
+    cdc = synthesize_cdc_flat(spark, sf_dir)
+    with tempfile.TemporaryDirectory() as workdir:
+        topic = os.path.join(workdir, "topic")
+        state = os.path.join(workdir, "state")
+        cdc.repartition(6, "key").write.parquet(topic)
         run_manifest_stream(
-            stream, state, os.path.join(workdir, "c"), n_buckets=16
+            _file_stream(spark, topic), state, os.path.join(workdir, "ckpt")
         )
-        mdir = os.path.join(state, "_manifests")
-        assert sorted(os.listdir(mdir)) == ["manifest-0.json", "manifest-1.json"]
-
-        def pointers(epoch):
-            with open(os.path.join(mdir, f"manifest-{epoch}.json")) as fh:
-                return json.load(fh)["buckets"]
-
-        first, second = (
-            sorted(b for b, d in pointers(e).items() if d == f"e{e}")
-            for e in (0, 1)
-        )
-        # 200 spread keys hit every bucket; 5 keys hit at most 5
-        assert len(first) == 16
-        assert 1 <= len(second) <= 5
-        # batch 2 wrote only its touched buckets; the rest still point
-        # at batch 1's dir
-        rewritten = spark.read.parquet(os.path.join(state, "data", "e1"))
-        assert sorted(
-            str(r["bucket"]) for r in rewritten.select("bucket").distinct().collect()
-        ) == second
-        assert all(
-            d == "e0" for b, d in pointers(1).items() if b not in second
-        )
-        back = read_manifest_state(spark, state)
-        assert back.count() == 200
-        upd = {r["key"]: r for r in back.filter("key < 5").collect()}
-        assert all(upd[k]["seq"] == 2 and upd[k]["val"] == k * 10.0
-                   for k in range(5))
-        untouched = back.filter("key >= 5").filter("seq != 1")
-        assert untouched.count() == 0
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        hist = sink_history(spark, state).collect()
+        assert [r["epoch"] for r in hist] == list(range(6))
+        base_bytes, pending = 0, []
+        for r in hist:
+            written = sum(os.path.getsize(f) for f in glob.glob(
+                os.path.join(state, "data", f"e{r['epoch']}", "*.parquet")))
+            assert r["bytes_written"] == written > 0
+            assert r["merge_ms"] > 0
+            fold = sum(pending) >= base_bytes
+            assert r["kind"] == ("fold" if fold else "delta"), (r, pending)
+            if fold:
+                base_bytes, pending = written, []
+            else:
+                pending.append(written)
+            assert r["pending_deltas"] == len(pending)
+        assert {r["kind"] for r in hist} == {"fold", "delta"}
 
 
 def test_stream_stream_join_equals_batch(spark, sf_dir):
