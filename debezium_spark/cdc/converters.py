@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
-from debezium_spark.cdc.materialize import latest_state
-from debezium_spark.functions.rounding import to_units
+from debezium_spark.cdc.materialize import latest_state, sql_latest_state
+from debezium_spark.functions.rounding import sql_to_units, to_units
 
 UNAVAILABLE = "__debezium_unavailable_value"
 
@@ -177,17 +177,13 @@ def cdc_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES: dict[str, str] = {
     "cdc_schema_evolution": CDC_FLAT_SQL
-    + """
+    + f"""
         , evolved AS (
             SELECT key, seq, op, o_orderstatus,
                    CASE WHEN seq % 10 >= 2 THEN key % 7 END AS o_discount_pct
-            FROM cdc),
-        latest AS (
-            SELECT *, row_number() OVER (PARTITION BY key
-                                         ORDER BY seq DESC) AS rn
-            FROM evolved)
+            FROM cdc)
         SELECT key, seq AS last_seq, o_orderstatus, o_discount_pct
-        FROM latest WHERE rn = 1 AND op <> 'd' ORDER BY key
+        FROM {sql_latest_state("evolved")} ORDER BY key
     """,
     "cdc_unavailable_value_fill": CDC_FLAT_SQL
     + f"""
@@ -209,8 +205,7 @@ ORACLES: dict[str, str] = {
     + f"""
         , cents AS (
             SELECT key, seq, after_totalprice AS v,
-                   CAST(round(after_totalprice * {10**DECIMAL_SCALE} + 1e-9)
-                        AS BIGINT) AS u
+                   {sql_to_units("after_totalprice", DECIMAL_SCALE)} AS u
             FROM cdc WHERE op <> 'd')
         SELECT key, seq,
                CASE WHEN v IS NOT NULL THEN u END AS price_unscaled,

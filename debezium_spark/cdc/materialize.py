@@ -22,15 +22,18 @@ from debezium_spark.cdc.envelope import (
     synthesize_snapshot_flat,
 )
 from debezium_spark.functions.rounding import round_half_up, to_units
+from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 
 
 # --------------------------------------------------------------------------
 # Latest-state materialization (log compaction): the row each key has
 # after replaying the log; keys whose final event is a delete vanish.
 # This is the engine's one max-seq-wins kernel: every materializer and
-# sink calls it. The window form plans as WindowGroupLimit on both
-# sides of the key exchange, so each map task already cuts a key to
-# its top row before the shuffle.
+# sink calls it, and every oracle calls its DuckDB twin
+# `sql_latest_state`, so this module owns both spellings of the rule.
+# The window form plans as WindowGroupLimit on both sides of the key
+# exchange, so each map task already cuts a key to its top row before
+# the shuffle.
 # --------------------------------------------------------------------------
 def latest_state(
     cdc: DataFrame,
@@ -47,6 +50,22 @@ def latest_state(
     if not keep_tombstones:
         top = top & (F.col("op") != "d")
     return cdc.withColumn("__rn", F.row_number().over(w)).filter(top).drop("__rn")
+
+
+def sql_latest_state(
+    src: str, key: str | list[str] = "key", keep_tombstones: bool = False
+) -> str:
+    """DuckDB twin of `latest_state`, as a parenthesized subquery over
+    `src` (a relation name or a parenthesized query) with `src`'s
+    columns."""
+    keys = ", ".join([key] if isinstance(key, str) else key)
+    top = (
+        f"SELECT * FROM {src} QUALIFY row_number() OVER "
+        f"(PARTITION BY {keys} ORDER BY seq DESC) = 1"
+    )
+    if keep_tombstones:
+        return f"({top})"
+    return f"(SELECT * FROM ({top}) WHERE op <> 'd')"
 
 
 def cdc_latest_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,12 +327,10 @@ def cdc_heartbeat_lag_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES: dict[str, str] = {
     "cdc_latest_state": CDC_FLAT_SQL
-    + """
+    + f"""
         SELECT key, after_totalprice AS o_totalprice, o_custkey,
                o_orderstatus, o_orderpriority, seq
-        FROM (SELECT *, row_number() OVER (PARTITION BY key ORDER BY seq DESC) AS rn
-              FROM cdc)
-        WHERE rn = 1 AND op <> 'd'
+        FROM {sql_latest_state("cdc")}
     """,
     "cdc_scd2": CDC_FLAT_SQL
     + """
@@ -331,7 +348,7 @@ ORACLES: dict[str, str] = {
         FROM cdc WHERE op = 'd'
     """,
     "cdc_snapshot_merge": CDC_FLAT_SQL
-    + """
+    + f"""
         , snap_base AS (
             SELECT o_orderkey AS key,
                    o_totalprice + 1 + (o_orderkey * 2654435761) % 3 AS after_totalprice,
@@ -343,13 +360,11 @@ ORACLES: dict[str, str] = {
             SELECT key, op, seq, after_totalprice FROM snap_base
         )
         SELECT op, count(*) AS n, round(sum(after_totalprice), 2) AS sum_totalprice
-        FROM (SELECT *, row_number() OVER (PARTITION BY key ORDER BY seq DESC) AS rn
-              FROM unioned)
-        WHERE rn = 1 AND op <> 'd'
+        FROM {sql_latest_state("unioned")}
         GROUP BY op ORDER BY op
     """,
     "cdc_incremental_snapshot": CDC_FLAT_SQL
-    + """
+    + f"""
         , snap_base AS (
             SELECT o_orderkey AS key,
                    o_totalprice + 1 + (o_orderkey * 2654435761) % 3 AS o_totalprice
@@ -358,9 +373,7 @@ ORACLES: dict[str, str] = {
             SELECT key, max(seq) AS max_seq FROM cdc GROUP BY key
         ), live AS (
             SELECT key, after_totalprice AS o_totalprice
-            FROM (SELECT *, row_number() OVER (PARTITION BY key ORDER BY seq DESC) AS rn
-                  FROM cdc)
-            WHERE rn = 1 AND op <> 'd'
+            FROM {sql_latest_state("cdc")}
         ), merged AS (
             SELECT s.key, s.o_totalprice, 'snapshot' AS origin
             FROM snap_base s LEFT JOIN stream_max m ON s.key = m.key
@@ -396,9 +409,9 @@ ORACLES: dict[str, str] = {
         FROM bounds
     """,
     "cdc_seq_gaps": CDC_FLAT_SQL
-    + """
+    + f"""
         SELECT shard, count(*) AS n_gaps, max(gap) AS max_gap,
-               round(avg(gap) + 1e-9, 2) AS avg_gap
+               {sql_round_half_up("avg(gap)", 2)} AS avg_gap
         FROM (SELECT key % 4 AS shard, seq,
                      seq - lag(seq) OVER (PARTITION BY key % 4 ORDER BY seq) AS gap
               FROM cdc)
@@ -462,14 +475,9 @@ def cdc_truncate_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES["cdc_truncate_state"] = CDC_FLAT_SQL + f"""
         , surv AS (SELECT * FROM cdc WHERE seq > {TRUNC_SEQ}),
-        latest AS (
-            SELECT * FROM (
-                SELECT *, row_number() OVER (PARTITION BY key
-                                             ORDER BY seq DESC) AS rn
-                FROM surv)
-            WHERE rn = 1 AND op <> 'd')
+        latest AS {sql_latest_state("surv")}
         SELECT count(*) AS n_keys, min(key) AS min_key, max(key) AS max_key,
-               CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
+               CAST(sum({sql_to_units("after_totalprice", 2)})
                     AS BIGINT) AS sum_after_cents
         FROM latest
     """
@@ -493,14 +501,11 @@ def cdc_composite_key_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cdc_composite_key_state"] = CDC_FLAT_SQL + """
+ORACLES["cdc_composite_key_state"] = CDC_FLAT_SQL + f"""
     SELECT o_custkey, o_orderpriority, key, seq,
            after_totalprice AS o_totalprice
-    FROM (SELECT *, row_number() OVER (
-              PARTITION BY o_custkey, o_orderpriority
-              ORDER BY seq DESC) AS rn
-          FROM cdc WHERE op <> 'd')
-    WHERE rn = 1
+    FROM {sql_latest_state("(SELECT * FROM cdc WHERE op <> 'd')",
+                           ["o_custkey", "o_orderpriority"])}
 """
 QUERIES["cdc_composite_key_state"] = cdc_composite_key_state_q
 
@@ -619,12 +624,7 @@ ORACLES["cdc_pk_update_rekey"] = CDC_FLAT_SQL + f"""
                after_totalprice
         FROM marked
         WHERE key % {REKEY_MOD} = 0 AND NOT is_del AND v = nv),
-    latest AS (
-        SELECT * FROM (
-            SELECT *, row_number() OVER (PARTITION BY key
-                                         ORDER BY seq DESC) AS rn
-            FROM rekeyed)
-        WHERE rn = 1 AND op <> 'd')
+    latest AS {sql_latest_state("rekeyed")}
     SELECT key AS new_key, key - {REKEY_OFFSET} AS orig_key,
            seq AS last_seq, after_totalprice AS o_totalprice
     FROM latest WHERE key >= {REKEY_OFFSET} ORDER BY new_key
@@ -670,16 +670,13 @@ def cdc_jdbc_sink_soft_delete_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cdc_jdbc_sink_soft_delete"] = CDC_FLAT_SQL + """
-    , ranked AS (
-        SELECT key, after_totalprice, o_orderstatus, seq,
-               row_number() OVER (PARTITION BY key ORDER BY seq DESC) AS rn
-        FROM cdc WHERE op <> 'd'),
+ORACLES["cdc_jdbc_sink_soft_delete"] = CDC_FLAT_SQL + f"""
+    , state AS {sql_latest_state("(SELECT * FROM cdc WHERE op <> 'd')")},
     deleted AS (SELECT DISTINCT key FROM cdc WHERE op = 'd')
     SELECT r.key, r.after_totalprice AS o_totalprice, r.o_orderstatus,
            r.seq, d.key IS NOT NULL AS was_deleted
-    FROM ranked r LEFT JOIN deleted d ON r.key = d.key
-    WHERE r.rn = 1 ORDER BY r.key
+    FROM state r LEFT JOIN deleted d ON r.key = d.key
+    ORDER BY r.key
 """
 QUERIES["cdc_jdbc_sink_soft_delete"] = cdc_jdbc_sink_soft_delete_q
 
@@ -755,15 +752,10 @@ ORACLES["cdc_txn_consistent_apply"] = CDC_FLAT_SQL + f"""
         SELECT t.* FROM t CROSS JOIN cut
         WHERE t.seq <= cut.c
           AND t.txn_id IN (SELECT txn_id FROM complete)),
-    state AS (
-        SELECT * FROM (
-            SELECT *, row_number() OVER (PARTITION BY key
-                                         ORDER BY seq DESC) AS rn
-            FROM applied)
-        WHERE rn = 1 AND op <> 'd')
+    state AS {sql_latest_state("applied")}
     SELECT CAST(count(*) AS BIGINT) AS n_keys,
            max(seq) AS max_applied_seq,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
+           CAST(sum({sql_to_units("after_totalprice", 2)})
                 AS BIGINT) AS sum_cents,
            count(DISTINCT txn_id) AS n_txns_in_state
     FROM state
@@ -818,7 +810,7 @@ def cdc_pit_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cdc_pit_join"] = CDC_FLAT_SQL + """
+ORACLES["cdc_pit_join"] = CDC_FLAT_SQL + f"""
     , hist AS (
         SELECT key, seq AS valid_from_seq,
                lead(seq) OVER (PARTITION BY key ORDER BY seq)
@@ -832,7 +824,7 @@ ORACLES["cdc_pit_join"] = CDC_FLAT_SQL + """
     )
     SELECT off, count(*) AS n_probes,
            count(valid_from_seq) AS n_existing,
-           CAST(sum(CAST(round(o_totalprice * 100 + 1e-9) AS BIGINT))
+           CAST(sum({sql_to_units("o_totalprice", 2)})
                 AS BIGINT) AS price_cents
     FROM probes LEFT JOIN hist
       ON hist.key = probes.p_key
@@ -881,12 +873,9 @@ def cdc_compact_retention_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cdc_compact_retention"] = CDC_FLAT_SQL + """
-    , latest AS (
-        SELECT key, seq, op, after_totalprice, ts_ms
-        FROM cdc
-        QUALIFY row_number() OVER (PARTITION BY key ORDER BY seq DESC) = 1
-    ), bounds AS (
+ORACLES["cdc_compact_retention"] = CDC_FLAT_SQL + f"""
+    , latest AS {sql_latest_state("cdc", keep_tombstones=True)},
+    bounds AS (
         SELECT max(ts_ms) AS wm,
                CAST((max(ts_ms) - min(ts_ms)) // 2 AS BIGINT) AS ret
         FROM cdc
@@ -940,12 +929,12 @@ def cdc_incremental_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cdc_incremental_agg"] = CDC_FLAT_SQL + """
+ORACLES["cdc_incremental_agg"] = CDC_FLAT_SQL + f"""
     SELECT o_custkey,
            CAST(sum(CASE op WHEN 'c' THEN 1 WHEN 'd' THEN -1 ELSE 0 END)
                 AS BIGINT) AS n_live_orders,
-           CAST(sum(coalesce(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT), 0)
-                    - coalesce(CAST(round(before_totalprice * 100 + 1e-9) AS BIGINT), 0))
+           CAST(sum(coalesce({sql_to_units("after_totalprice", 2)}, 0)
+                    - coalesce({sql_to_units("before_totalprice", 2)}, 0))
                 AS BIGINT) AS live_total_cents,
            CAST(count(*) AS BIGINT) AS n_changes_applied
     FROM cdc

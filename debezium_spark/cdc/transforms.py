@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
-from debezium_spark.functions.rounding import round_half_up
+from debezium_spark.functions.rounding import round_half_up, sql_round_half_up
 from debezium_spark.sources.tables import load_table
 
 
@@ -689,10 +689,10 @@ def mongo_extract_new_document_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["mongo_extract_new_document"] = CDC_FLAT_SQL + """
+ORACLES["mongo_extract_new_document"] = CDC_FLAT_SQL + f"""
     SELECT key AS id,
            CASE WHEN op <> 'd'
-                THEN round(after_totalprice + 1e-9, 2) END AS o_totalprice,
+                THEN {sql_round_half_up("after_totalprice", 2)} END AS o_totalprice,
            CASE WHEN op <> 'd' THEN o_custkey END AS custkey,
            op AS __op, ts_ms AS __ts_ms, op = 'd' AS __deleted
     FROM cdc WHERE key < 2000

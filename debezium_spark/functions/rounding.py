@@ -8,8 +8,9 @@ boundary. Sums of money and other fractional amounts go through
 integer units (cents, micro-units) so that the order in which a
 shuffle adds them cannot change the last bit of the result.
 
-The oracle SQL spells the same rule out as `round(x + 1e-9, d)` and
-`CAST(round(x * 10^scale + 1e-9) AS BIGINT)`.
+This module owns both twins of the rule: each Spark helper has a
+DuckDB string builder beside it (`sql_round_half_up`, `sql_to_units`)
+that every oracle calls, so the nudge is written nowhere else.
 """
 
 from __future__ import annotations
@@ -28,3 +29,13 @@ def round_half_up(col: Column, digits: int) -> Column:
 def to_units(col: Column, scale: int) -> Column:
     """`col` as a BIGINT count of 10**-scale units (scale 2: cents)."""
     return F.round(col * 10**scale + _NUDGE).cast("long")
+
+
+def sql_round_half_up(expr: str, digits: int) -> str:
+    """DuckDB twin of `round_half_up` over the SQL expression `expr`."""
+    return f"round({expr} + {_NUDGE!r}, {digits})"
+
+
+def sql_to_units(expr: str, scale: int) -> str:
+    """DuckDB twin of `to_units` over the SQL expression `expr`."""
+    return f"CAST(round(({expr}) * {10**scale} + {_NUDGE!r}) AS BIGINT)"

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from debezium_spark.functions.rounding import to_units
+from debezium_spark.functions.rounding import sql_to_units, to_units
 
 
 def salted_sum_count(df: DataFrame, key: str, value: str) -> DataFrame:
@@ -57,10 +57,9 @@ def salted_hot_key_agg_q(spark, sf_dir: str) -> DataFrame:
 
 
 ORACLES: dict[str, str] = {
-    "salted_hot_key_agg": """
+    "salted_hot_key_agg": f"""
         SELECT event_type,
-               CAST(sum(CAST(round(value * 100 + 1e-9) AS BIGINT)) AS BIGINT)
-                   AS sum_cents,
+               CAST(sum({sql_to_units("value", 2)}) AS BIGINT) AS sum_cents,
                count(*) AS n
         FROM events GROUP BY event_type ORDER BY event_type
     """,
@@ -124,9 +123,9 @@ def salted_skew_join_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["salted_skew_join"] = """
+ORACLES["salted_skew_join"] = f"""
     WITH e AS (SELECT event_type, user_id,
-                      CAST(round(value * 100 + 1e-9) AS BIGINT) AS cents
+                      {sql_to_units("value", 2)} AS cents
                FROM events),
     dim AS (SELECT event_type, min(user_id) AS first_user,
                    upper(event_type) AS type_tag

@@ -17,9 +17,12 @@ pipeline. sequence() is guarded by a size filter because Spark's
 sequence(1, hi) DESCENDS when hi < 1 instead of returning empty.
 
 `h60` is the first 60 bits of md5 as a non-negative BIGINT: md5 exists
-identically in DuckDB (`CAST('0x' || substr(md5(x), 1, 15) AS
-BIGINT)`), which is what keeps the hash pipelines (MinHash/LSH,
-SimHash and the sketches) value-verifiable.
+identically in DuckDB, which is what keeps the hash pipelines
+(MinHash/LSH, SimHash and the sketches) value-verifiable.
+
+This module owns both twins of each rule: `SQL_WORDS` and `sql_h60`
+are the DuckDB spellings of `words()` and `h60`, and every oracle
+uses them, so neither is written anywhere else.
 """
 
 from __future__ import annotations
@@ -38,6 +41,11 @@ def words() -> Column:
 def h60(col: Column | str) -> Column:
     """First 60 bits of md5(col) as a non-negative BIGINT."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def sql_h60(expr: str) -> str:
+    """DuckDB twin of `h60` over the SQL expression `expr`."""
+    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 def word_ngrams(docs: DataFrame, n: int) -> DataFrame:

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.functions.rounding import round_half_up, to_units
+from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 from debezium_spark.sources.tables import load_table
 
 
@@ -409,28 +410,29 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["window_rank_suite"] = """
+ORACLES["window_rank_suite"] = f"""
         WITH spend AS (
             SELECT o_custkey AS custkey,
-                   CAST(sum(CAST(round(o_totalprice * 100 + 1e-9) AS BIGINT)) AS BIGINT) AS spend_cents,
+                   CAST(sum({sql_to_units("o_totalprice", 2)}) AS BIGINT)
+                       AS spend_cents,
                    CAST(count(*) AS BIGINT) AS n_orders
             FROM orders GROUP BY o_custkey
         )
         SELECT c_nationkey, custkey, spend_cents, n_orders,
                CAST(row_number() OVER w AS INT) AS rn,
                CAST(ntile(4) OVER w AS INT) AS quartile,
-               round(percent_rank() OVER w + 1e-9, 6) AS pr,
-               round(cume_dist() OVER w + 1e-9, 6) AS cd,
+               {sql_round_half_up("percent_rank() OVER w", 6)} AS pr,
+               {sql_round_half_up("cume_dist() OVER w", 6)} AS cd,
                coalesce(lag(spend_cents, 1) OVER w, 0) AS prev_spend_cents
         FROM spend JOIN customer ON custkey = c_custkey
         WINDOW w AS (PARTITION BY c_nationkey ORDER BY spend_cents, custkey)
         ORDER BY c_nationkey, rn
     """
 
-ORACLES["range_join_views_before_purchase"] = """
+ORACLES["range_join_views_before_purchase"] = f"""
         SELECT p.event_id,
                CAST(count(v.v_us) AS BIGINT) AS n_views_prior_hour,
-               round(max(v.v_value) + 1e-9, 4) AS max_view_value
+               {sql_round_half_up("max(v.v_value)", 4)} AS max_view_value
         FROM (SELECT event_id, user_id, epoch_us(ts) AS p_us
               FROM events WHERE event_type = 'purchase') p
         LEFT JOIN (SELECT user_id AS v_user, epoch_us(ts) AS v_us,

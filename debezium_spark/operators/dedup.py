@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.functions import vectors
-from debezium_spark.functions.tokens import SQL_WORDS, h60, word_ngrams, words
+from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
 from debezium_spark.operators import similarity as sim
 from debezium_spark.sources.tables import load_table
 
@@ -351,7 +351,7 @@ def _sql_h60_shingles(where: str = "") -> str:
     return f"""
         sh AS (
             SELECT DISTINCT doc_id,
-                   CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) AS h
+                   {sql_h60("s")} AS h
             FROM (
                 SELECT doc_id,
                        unnest(list_transform(range(1, greatest(len(w) - 1, 1)),
@@ -681,9 +681,8 @@ ORACLES["dedup_segments"] = f"""
            CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
            CAST(sum(CASE WHEN keep THEN length(segment) ELSE 0 END)
                 AS BIGINT) AS kept_chars,
-           CAST(sum(CASE WHEN keep THEN
-                    CAST(('0x' || substr(md5(segment), 1, 15)) AS BIGINT)
-                    % {_SEG_MOD} ELSE 0 END) AS BIGINT) AS kept_hash_sum
+           CAST(sum(CASE WHEN keep THEN {sql_h60("segment")} % {_SEG_MOD}
+                    ELSE 0 END) AS BIGINT) AS kept_hash_sum
     FROM ranked GROUP BY doc_id ORDER BY doc_id
 """
 QUERIES["dedup_segments"] = dedup_segments_q

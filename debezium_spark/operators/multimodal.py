@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from debezium_spark.functions.rounding import round_half_up, to_units
+from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 from debezium_spark.sources.tables import load_table
 
 FEATURE_SCHEMA = T.StructType(
@@ -152,7 +153,8 @@ def _sql_media_stats() -> str:
         )
         SELECT kind, count(*) AS n,
                count(*) * 32 AS total_bytes,
-               round(sum(({bucket0}) * 1.0 / ({all_bytes})) + 1e-9, 4) AS f0_sum
+               {sql_round_half_up(f"sum(({bucket0}) * 1.0 / ({all_bytes}))", 4)}
+                   AS f0_sum
         FROM m GROUP BY kind ORDER BY kind
     """
 
@@ -424,7 +426,7 @@ def media_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["media_decode_stats"] = """
+ORACLES["media_decode_stats"] = f"""
     WITH img AS (
         SELECT doc_id, n_chars % 16 + 4 AS w, n_chars % 12 + 4 AS h
         FROM documents WHERE doc_id % 3 = 0
@@ -457,13 +459,12 @@ ORACLES["media_decode_stats"] = """
     per_kind AS (
         SELECT 'image' AS kind, count(*) AS n, sum(w) AS dim1_sum,
                sum(h) AS dim2_sum,
-               sum(CAST(round(mean_val * 1000000 + 1e-9) AS BIGINT))
-                   AS mean_micro_sum,
+               sum({sql_to_units("mean_val", 6)}) AS mean_micro_sum,
                sum(poswt) AS poswt_sum
         FROM idoc
         UNION ALL
         SELECT 'audio', count(*), sum(n), sum(sr),
-               sum(CAST(round(mean_val * 1000000 + 1e-9) AS BIGINT)),
+               sum({sql_to_units("mean_val", 6)}),
                sum(poswt)
         FROM adoc
     )

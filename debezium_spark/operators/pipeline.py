@@ -11,9 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from debezium_spark.cdc.materialize import latest_state
+from debezium_spark.cdc.materialize import latest_state, sql_latest_state
 from debezium_spark.functions.rounding import round_half_up, to_units
-from debezium_spark.functions.tokens import SQL_WORDS, h60, word_ngrams, words
+from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
+from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
 from debezium_spark.operators.text import STOPWORDS as _LANG_STOPWORDS
 from debezium_spark.operators.text import stopword_hit_count
 from debezium_spark.sources.tables import load_table
@@ -286,7 +287,7 @@ ORACLES: dict[str, str] = {
             WHERE cum_tokens <= {TOKEN_BUDGET}
         )
         SELECT source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-               round(avg(q) + 1e-9, 4) AS avg_quality
+               {sql_round_half_up("avg(q)", 4)} AS avg_quality
         FROM kept GROUP BY source ORDER BY source
     """,
     "decontaminate_ngram_overlap": f"""
@@ -337,8 +338,9 @@ ORACLES: dict[str, str] = {
                CAST(sum(n_docs) AS BIGINT) AS n_docs,
                CAST(sum(pack_tokens) AS BIGINT) AS total_tokens,
                max(pack_tokens) AS max_pack_tokens,
-               round(sum(pack_tokens) * 1.0
-                     / (count(*) * {PACK_CONTEXT}) + 1e-9, 4) AS fill_ratio
+               {sql_round_half_up(
+                   f"sum(pack_tokens) * 1.0 / (count(*) * {PACK_CONTEXT})", 4
+               )} AS fill_ratio
         FROM per_pack GROUP BY source ORDER BY source
     """,
 }
@@ -404,10 +406,11 @@ ORACLES["mixture_weights"] = f"""
     tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot_tokens,
                    sum(w_raw) AS tot_w FROM w)
     SELECT source, n_docs, n_tokens,
-           round(n_tokens * 1.0 / tot_tokens + 1e-9, 4) AS token_share,
-           round(w_raw / tot_w + 1e-9, 4) AS sample_weight,
-           round((w_raw / tot_w) / (n_tokens * 1.0 / tot_tokens) + 1e-9, 4)
-               AS upsample_factor
+           {sql_round_half_up("n_tokens * 1.0 / tot_tokens", 4)} AS token_share,
+           {sql_round_half_up("w_raw / tot_w", 4)} AS sample_weight,
+           {sql_round_half_up(
+               "(w_raw / tot_w) / (n_tokens * 1.0 / tot_tokens)", 4
+           )} AS upsample_factor
     FROM w CROSS JOIN tot ORDER BY source
 """
 QUERIES["mixture_weights"] = mixture_weights_q
@@ -498,10 +501,7 @@ ORACLES["cdc_document_pipeline"] = f"""
         FROM versions WHERE v <= nv OR is_del),
     live AS (
         SELECT doc_id, source, after_text AS text
-        FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-                                           ORDER BY seq DESC) AS rn
-              FROM cdc)
-        WHERE rn = 1 AND op <> 'd')
+        FROM {sql_latest_state("cdc", "doc_id")})
     SELECT source,
            CAST(count(*) AS BIGINT) AS n_live_docs,
            CAST(sum(len({SQL_WORDS}))
@@ -647,8 +647,7 @@ def dsir_importance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["dsir_importance"] = f"""
     WITH w AS (
         SELECT doc_id, lang,
-               CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT)
-                   % {DSIR_BUCKETS} AS bucket
+               {sql_h60("t")} % {DSIR_BUCKETS} AS bucket
         FROM (SELECT doc_id, lang,
                      unnest({SQL_WORDS}) AS t
               FROM documents)),
@@ -660,11 +659,10 @@ ORACLES["dsir_importance"] = f"""
                    CAST(sum(c_tgt) AS BIGINT) AS n_tgt
             FROM counts),
     r AS (SELECT bucket,
-                 CAST(round((ln((c_tgt + 1.0)
-                                / (n_tgt + {DSIR_BUCKETS}))
-                             - ln((c_raw + 1.0)
-                                  / (n_raw + {DSIR_BUCKETS}))) * 1e6
-                            + 1e-9) AS BIGINT) AS lr_micro
+                 {sql_to_units(
+                     f"ln((c_tgt + 1.0) / (n_tgt + {DSIR_BUCKETS}))"
+                     f" - ln((c_raw + 1.0) / (n_raw + {DSIR_BUCKETS}))", 6
+                 )} AS lr_micro
           FROM counts CROSS JOIN tot)
     SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
            CAST(sum(lr_micro) AS BIGINT) AS weight_micro

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.functions import vectors
-from debezium_spark.functions.rounding import round_half_up
+from debezium_spark.functions.rounding import round_half_up, sql_round_half_up
 from debezium_spark.sources.tables import load_table
 
 TOP_K = 10
@@ -380,10 +380,10 @@ def _sql_ann_topk(ivf: bool, int8: bool) -> str:
     ctes = [_NORMS_SQL]
     if int8:
         src, q_cols = "qn", "d.qemb AS q_qemb"
-        ctes.append("""qn AS (SELECT vec_id,
+        q = sql_round_half_up("CAST(embedding[i] AS DOUBLE) / nrm * 127", 0)
+        ctes.append(f"""qn AS (SELECT vec_id,
                   list_transform(range(1, len(embedding) + 1),
-                      i -> CAST(round(CAST(embedding[i] AS DOUBLE) / nrm
-                                      * 127 + 1e-9) AS TINYINT)) AS qemb
+                      i -> CAST({q} AS TINYINT)) AS qemb
            FROM n)""")
         score = f"CAST({_QDOT_SQL.format(a='q.q_qemb', b='c.qemb')} AS BIGINT)"
         name, out = "qdot", "qdot"

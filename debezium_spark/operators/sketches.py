@@ -15,8 +15,8 @@ pipeline leans on when exact global state is too big to shuffle:
   sort materialization, no driver-side collect.
 
 Everything is deterministic and oracle-verified: hashes are the
-repo-standard portable 60-bit md5 prefix (Spark `tokens.h60(x)` ≡ DuckDB
-`CAST('0x'||substr(md5(x),1,15) AS BIGINT)`), and the HLL register
+repo-standard portable 60-bit md5 prefix (`tokens.h60` in Spark, its
+twin `tokens.sql_h60` in the oracles), and the HLL register
 math is kept in INTEGER space (Σ 2^(53-ρ) as a BIGINT) so the sketch
 state matches the oracle bit-for-bit; floats appear only in the final
 scalar estimate, computed by the identical literal formula in both
@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from debezium_spark.functions.rounding import round_half_up
-from debezium_spark.functions.tokens import SQL_WORDS, h60, word_ngrams
+from debezium_spark.functions.rounding import round_half_up, sql_round_half_up
+from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams
 from debezium_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -271,10 +271,16 @@ QUERIES = {
     "weighted_priority_sample": weighted_priority_sample_q,
 }
 
+# the _BLOOM_K salted positions of `gram`, as `positions` computes them
+_SQL_BLOOM_POS = ", ".join(
+    sql_h60(f"'b{i},' || gram") + f" % {_BLOOM_BITS}"
+    for i in range(1, _BLOOM_K + 1)
+)
+
 ORACLES: dict[str, str] = {
     "hll_distinct_users": f"""
         WITH hashed AS (
-            SELECT CAST(('0x' || substr(md5('u' || CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+            SELECT {sql_h60("'u' || CAST(user_id AS VARCHAR)")} AS h
             FROM events
         ),
         ranks AS (
@@ -300,14 +306,14 @@ ORACLES: dict[str, str] = {
             FROM events
         )
         SELECT CAST({_HLL_M} AS INT) AS m, v_zero, s_int, reg_checksum,
-               round(
-                 CASE WHEN (0.7213 / (1.0 + 1.079 / 256.0) * 65536.0
-                            * 9007199254740992.0 / CAST(s_int AS DOUBLE)) <= 640.0
-                           AND v_zero > 0
-                      THEN 256.0 * ln(256.0 / CAST(v_zero AS DOUBLE))
-                      ELSE 0.7213 / (1.0 + 1.079 / 256.0) * 65536.0
-                           * 9007199254740992.0 / CAST(s_int AS DOUBLE)
-                 END + 1e-9, 2) AS est,
+               {sql_round_half_up(
+                   "CASE WHEN (0.7213 / (1.0 + 1.079 / 256.0) * 65536.0"
+                   " * 9007199254740992.0 / CAST(s_int AS DOUBLE)) <= 640.0"
+                   " AND v_zero > 0"
+                   " THEN 256.0 * ln(256.0 / CAST(v_zero AS DOUBLE))"
+                   " ELSE 0.7213 / (1.0 + 1.079 / 256.0) * 65536.0"
+                   " * 9007199254740992.0 / CAST(s_int AS DOUBLE) END", 2
+               )} AS est,
                exact_distinct
         FROM folded, exact
     """,
@@ -326,25 +332,15 @@ ORACLES: dict[str, str] = {
         bench AS (SELECT DISTINCT * FROM grams WHERE doc_id % {_BENCH_MOD} = 0),
         corpus AS (SELECT DISTINCT * FROM grams WHERE doc_id % {_BENCH_MOD} != 0),
         bloom_bits AS (
-            SELECT DISTINCT
-                   unnest([
-                       CAST(('0x' || substr(md5('b1,' || gram), 1, 15)) AS BIGINT) % {_BLOOM_BITS},
-                       CAST(('0x' || substr(md5('b2,' || gram), 1, 15)) AS BIGINT) % {_BLOOM_BITS},
-                       CAST(('0x' || substr(md5('b3,' || gram), 1, 15)) AS BIGINT) % {_BLOOM_BITS}
-                   ]) AS p
+            SELECT DISTINCT unnest([{_SQL_BLOOM_POS}]) AS p
             FROM bench
         ),
         bench_gram_set AS (
-            SELECT DISTINCT CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) AS gh
+            SELECT DISTINCT {sql_h60("gram")} AS gh
             FROM bench
         ),
         corpus_pos AS (
-            SELECT doc_id, source, gram,
-                   unnest([
-                       CAST(('0x' || substr(md5('b1,' || gram), 1, 15)) AS BIGINT) % {_BLOOM_BITS},
-                       CAST(('0x' || substr(md5('b2,' || gram), 1, 15)) AS BIGINT) % {_BLOOM_BITS},
-                       CAST(('0x' || substr(md5('b3,' || gram), 1, 15)) AS BIGINT) % {_BLOOM_BITS}
-                   ]) AS p
+            SELECT doc_id, source, gram, unnest([{_SQL_BLOOM_POS}]) AS p
             FROM corpus
         ),
         per_gram AS (
@@ -359,7 +355,7 @@ ORACLES: dict[str, str] = {
                    CASE WHEN s.gh IS NULL THEN 0 ELSE 1 END AS true_hit
             FROM per_gram g
             LEFT JOIN bench_gram_set s
-              ON s.gh = CAST(('0x' || substr(md5(g.gram), 1, 15)) AS BIGINT)
+              ON s.gh = {sql_h60("g.gram")}
         ),
         per_doc AS (
             SELECT doc_id, source, count(*) AS n_grams,
@@ -379,7 +375,7 @@ ORACLES: dict[str, str] = {
     "weighted_priority_sample": f"""
         WITH keyed AS (
             SELECT doc_id, CAST(n_chars AS BIGINT) AS weight,
-                   -ln((CAST(('0x' || substr(md5('ws' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) + 1)
+                   -ln(({sql_h60("'ws' || CAST(doc_id AS VARCHAR)")} + 1)
                        / {_TWO60!r}) / CAST(n_chars AS DOUBLE) AS k_full
             FROM documents
         ),
@@ -556,8 +552,8 @@ def cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CMS_CELL_SQL = (
-    "CAST(('0x' || substr(md5('cms' || CAST({r} AS VARCHAR) || ':' "
-    "|| CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) % {w}"
+    sql_h60("'cms' || CAST({r} AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)")
+    + " % {w}"
 )
 
 ORACLES["cms_heavy_hitters"] = f"""
@@ -716,11 +712,12 @@ ORACLES["histogram_quantiles"] = f"""
     SELECT event_type, q_label,
            CAST(target AS BIGINT) AS target_rank,
            CAST(bin AS INT) AS bin,
-           round(mn + ((CAST(bin AS DOUBLE)
-                        + (CAST(target AS DOUBLE) - CAST(cum - cnt AS DOUBLE))
-                          / CAST(cnt AS DOUBLE))
-                       * ((mx - mn) / {float(_HIST_BINS)!r})) + 1e-9,
-                 6) AS est_value
+           {sql_round_half_up(
+               "mn + ((CAST(bin AS DOUBLE)"
+               " + (CAST(target AS DOUBLE) - CAST(cum - cnt AS DOUBLE))"
+               " / CAST(cnt AS DOUBLE))"
+               f" * ((mx - mn) / {float(_HIST_BINS)!r}))", 6
+           )} AS est_value
     FROM hit WHERE rn = 1
     ORDER BY event_type, q_label
 """

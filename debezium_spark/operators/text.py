@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.functions.rounding import round_half_up, to_units
-from debezium_spark.functions.tokens import SQL_WORDS, h60, word_ngrams, words
+from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
+from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
 from debezium_spark.sources.tables import load_table
 
 # Stopword lists for the n-gram/stopword language-ID heuristic. The
@@ -284,11 +285,12 @@ ORACLES: dict[str, str] = {
                CAST(n_words AS INT) AS n_words,
                round(stop_hits / n_words, 4) AS stopword_ratio,
                round((n_chars - (n_words - 1)) / n_words, 4) AS mean_word_len,
-               round(0.5 * least(n_words / 200.0, 1.0)
-                     + 0.3 * (1.0 - stop_hits / n_words)
-                     + 0.2 * least(((n_chars - (n_words - 1)) / n_words) / 8.0, 1.0)
-                     + 1e-9, 4)
-                   AS quality_score
+               {sql_round_half_up(
+                   "0.5 * least(n_words / 200.0, 1.0)"
+                   " + 0.3 * (1.0 - stop_hits / n_words)"
+                   " + 0.2 * least(((n_chars - (n_words - 1)) / n_words) / 8.0, 1.0)",
+                   4,
+               )} AS quality_score
         FROM q ORDER BY doc_id
     """,
     "language_id": f"""
@@ -320,8 +322,7 @@ ORACLES: dict[str, str] = {
         terms AS (
             SELECT doc_id,
                    unnest(list_transform(range(1, len(w) + 1),
-                       i -> CAST(('0x' || substr(md5(w[i] || '#' ||
-                                 CAST(i - 1 AS VARCHAR)), 1, 15)) AS BIGINT)
+                       i -> {sql_h60("w[i] || '#' || CAST(i - 1 AS VARCHAR)")}
                             % {1 << _FP_TERM_BITS})) AS term
             FROM t),
         fp AS (SELECT doc_id,
@@ -355,11 +356,13 @@ ORACLES: dict[str, str] = {
             GROUP BY doc_id),
         j AS (
             SELECT u.doc_id, u.n_words,
-                   round(u.max_c * 1.0 / u.n_words + 1e-9, 4) AS top_unigram_frac,
-                   CASE WHEN b.n_bigrams > 0 THEN
-                       round(1.0 - b.n_unique_bigrams * 1.0 / b.n_bigrams + 1e-9, 4)
-                   END AS dup_bigram_frac,
-                   round(u.n_unique * 1.0 / u.n_words + 1e-9, 4) AS type_token_ratio
+                   {sql_round_half_up("u.max_c * 1.0 / u.n_words", 4)}
+                       AS top_unigram_frac,
+                   CASE WHEN b.n_bigrams > 0 THEN {sql_round_half_up(
+                       "1.0 - b.n_unique_bigrams * 1.0 / b.n_bigrams", 4
+                   )} END AS dup_bigram_frac,
+                   {sql_round_half_up("u.n_unique * 1.0 / u.n_words", 4)}
+                       AS type_token_ratio
             FROM per_uni u LEFT JOIN per_bi b USING (doc_id))
         SELECT doc_id, n_words, top_unigram_frac, dup_bigram_frac,
                type_token_ratio,
@@ -482,16 +485,15 @@ ORACLES["unigram_logprob"] = f"""
     tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM vocab),
     per_word AS (
         SELECT doc_id,
-               CAST(round(ln(CAST(total AS DOUBLE) / cnt) * 1e6 + 1e-9)
-                    AS BIGINT) AS nll_micro
+               {sql_to_units("ln(CAST(total AS DOUBLE) / cnt)", 6)} AS nll_micro
         FROM words JOIN vocab USING (w) CROSS JOIN tot),
     per_doc AS (
         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
                CAST(sum(nll_micro) AS BIGINT) AS sum_micro
         FROM per_word GROUP BY doc_id)
     SELECT doc_id, n_words,
-           round(sum_micro / 1e6 / n_words + 1e-9, 4) AS avg_nll,
-           round(sum_micro / 1e6 / n_words + 1e-9, 4)
+           {sql_round_half_up("sum_micro / 1e6 / n_words", 4)} AS avg_nll,
+           {sql_round_half_up("sum_micro / 1e6 / n_words", 4)}
                BETWEEN {NLL_BAND_LO} AND {NLL_BAND_HI} AS keep
     FROM per_doc ORDER BY doc_id
 """
@@ -563,8 +565,7 @@ ORACLES["tfidf_topterms"] = f"""
     nd AS (SELECT count(*) AS n_docs FROM documents),
     scored AS (
         SELECT tf.doc_id, tf.term, tf.tf,
-               CAST(tf.tf * CAST(round(ln(CAST(n_docs AS DOUBLE) / df)
-                                       * 1e6 + 1e-9) AS BIGINT)
+               CAST(tf.tf * {sql_to_units("ln(CAST(n_docs AS DOUBLE) / df)", 6)}
                     AS BIGINT) AS score_micro
         FROM tf JOIN dfreq USING (term) CROSS JOIN nd),
     r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
@@ -990,11 +991,12 @@ ORACLES["bigram_logprob"] = f"""
            FROM pr GROUP BY w1, w2),
     scored AS (
         SELECT doc_id,
-               CAST(round(-ln({BIGRAM_LAMBDA!r}
-                              * (CAST(bc AS DOUBLE) / CAST(cc AS DOUBLE))
-                              + {1.0 - BIGRAM_LAMBDA!r}
-                              * (CAST(uc AS DOUBLE) / CAST(total AS DOUBLE)))
-                          * 1e6 + 1e-9) AS BIGINT) AS nll_micro
+               {sql_to_units(
+                   f"-ln({BIGRAM_LAMBDA!r}"
+                   " * (CAST(bc AS DOUBLE) / CAST(cc AS DOUBLE))"
+                   f" + {1.0 - BIGRAM_LAMBDA!r}"
+                   " * (CAST(uc AS DOUBLE) / CAST(total AS DOUBLE)))", 6
+               )} AS nll_micro
         FROM pr
         JOIN bi ON pr.w1 = bi.bw1 AND pr.w2 = bi.bw2
         JOIN (SELECT uw AS cw, uc AS cc FROM uni) c ON pr.w1 = c.cw
@@ -1005,8 +1007,8 @@ ORACLES["bigram_logprob"] = f"""
                CAST(sum(nll_micro) AS BIGINT) AS sum_micro
         FROM scored GROUP BY doc_id)
     SELECT doc_id, n_scored,
-           round(sum_micro / 1e6 / n_scored + 1e-9, 4) AS avg_nll,
-           round(sum_micro / 1e6 / n_scored + 1e-9, 4)
+           {sql_round_half_up("sum_micro / 1e6 / n_scored", 4)} AS avg_nll,
+           {sql_round_half_up("sum_micro / 1e6 / n_scored", 4)}
                BETWEEN {BIGRAM_NLL_LO} AND {BIGRAM_NLL_HI} AS keep
     FROM per_doc ORDER BY doc_id
 """

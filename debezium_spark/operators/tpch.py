@@ -23,19 +23,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from debezium_spark.functions.rounding import round_half_up
+from debezium_spark.functions.rounding import round_half_up, sql_round_half_up
 from debezium_spark.sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --------------------------------------------------------------------------
 # Q1: pricing summary report
 # --------------------------------------------------------------------------
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -59,11 +55,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q3: shipping priority — top 10 unshipped-revenue orders
 # --------------------------------------------------------------------------
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
     )
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
     )
     return (
@@ -92,11 +90,11 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineitem shipped after the order date.
 # --------------------------------------------------------------------------
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     late = o.join(
         l,
         (o.o_orderkey == l.l_orderkey) & (l.l_shipdate > o.o_orderdate),
@@ -113,15 +111,15 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q5: local-supplier volume
 # --------------------------------------------------------------------------
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
@@ -144,7 +142,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # must reach the parquet scan (PushedFilters).
 # --------------------------------------------------------------------------
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -167,16 +165,16 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nation flows)
 # --------------------------------------------------------------------------
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n1 = _t(spark, sf_dir, "nation").select(
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")
     )
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
@@ -214,11 +212,11 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q9-style: product-type profit by nation and year (PROMO parts)
 # --------------------------------------------------------------------------
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
@@ -249,13 +247,13 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q10: returned-item reporting — top 20 customers by lost revenue
 # --------------------------------------------------------------------------
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -276,8 +274,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shipmode column in the synthetic schema)
 # --------------------------------------------------------------------------
 def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-01-01").cast("timestamp"))
     )
@@ -297,8 +295,8 @@ def q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q14: promotion effect — % of revenue from PROMO parts
 # --------------------------------------------------------------------------
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    p = load_table(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
@@ -320,9 +318,9 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q18: large-volume customers
 # --------------------------------------------------------------------------
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("total_qty"))
@@ -348,8 +346,8 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q19: discounted revenue over disjunctive brand/size/qty predicates
 # --------------------------------------------------------------------------
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
     joined = l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
     cond = (
         (
@@ -380,12 +378,12 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q8: national market share — NATION_1's share of ASIA revenue by year
 # --------------------------------------------------------------------------
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
     n_supp = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -422,8 +420,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q13: customer order-count distribution (zero-order customers included)
 # --------------------------------------------------------------------------
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     )
     per_cust = (
@@ -442,8 +440,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q15: top supplier by quarterly revenue (ties kept via max-join)
 # --------------------------------------------------------------------------
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
@@ -468,8 +466,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # part's average quantity
 # --------------------------------------------------------------------------
 def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
+    l = load_table(spark, sf_dir, "lineitem")
     avg_qty = l.groupBy(F.col("l_partkey").alias("ap_key")).agg(
         F.avg("l_quantity").alias("avg_qty")
     )
@@ -489,9 +487,9 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (adapted — no commit/receipt dates in the synthetic schema)
 # --------------------------------------------------------------------------
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    l = _t(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    l = load_table(spark, sf_dir, "lineitem")
     li = l.join(o, l.l_orderkey == o.o_orderkey).select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -519,8 +517,8 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by nation bucket (adapted — no phone column)
 # --------------------------------------------------------------------------
 def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp")
     )
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
@@ -687,13 +685,13 @@ ORACLES: dict[str, str] = {
         ORDER BY o_totalprice DESC, o_orderkey
         LIMIT 100
     """,
-    "q8_market_share": """
+    "q8_market_share": f"""
         SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-               round(sum(CASE WHEN n2.n_name = 'NATION_1'
-                              THEN l_extendedprice * (1 - l_discount)
-                              ELSE 0.0 END)
-                     / sum(l_extendedprice * (1 - l_discount)) + 1e-9, 4)
-                   AS mkt_share
+               {sql_round_half_up(
+                   "sum(CASE WHEN n2.n_name = 'NATION_1'"
+                   " THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END)"
+                   " / sum(l_extendedprice * (1 - l_discount))", 4
+               )} AS mkt_share
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -727,8 +725,8 @@ ORACLES: dict[str, str] = {
         WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
         ORDER BY s_suppkey
     """,
-    "q17_small_quantity": """
-        SELECT round(sum(l_extendedprice) / 7.0 + 1e-9, 2) AS avg_yearly,
+    "q17_small_quantity": f"""
+        SELECT {sql_round_half_up("sum(l_extendedprice) / 7.0", 2)} AS avg_yearly,
                count(*) AS n_items
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
@@ -816,15 +814,15 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelation Catalyst itself applies to the scalar subquery).
     Unit prices are identical IEEE doubles in both engines, so the
     min-equality join is exact."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     ps = l.groupBy("l_partkey", "l_suppkey").agg(
         F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
             "supplycost"
         )
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eligible = (
         ps.join(F.broadcast(s), ps.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -834,7 +832,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mc = eligible.groupBy("l_partkey").agg(
         F.min("supplycost").alias("min_cost")
     ).select(F.col("l_partkey").alias("mc_partkey"), "min_cost")
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") <= 15) & (F.col("p_type") == "STANDARD")
     )
     return (
@@ -866,9 +864,9 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate HAVING-compared against a global scalar. Values are
     integer cents (per-item round, then integer sum) so the threshold
     comparison is reorder-proof in both engines."""
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
     cents = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
     ).cast("long")
@@ -897,12 +895,12 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16 shape: distinct supplier counts per (brand, type, size)
     over the derived part-supplier pairs, excluding a 'complaints'
     supplier set via NOT IN (planned as a broadcast anti-join)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     pairs = l.select("l_partkey", "l_suppkey").distinct()
-    complaints = _t(spark, sf_dir, "supplier").filter(
+    complaints = load_table(spark, sf_dir, "supplier").filter(
         F.col("s_suppkey") % 13 == 0
     ).select("s_suppkey")
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & (F.col("p_size").isin(*Q16_SIZES))
@@ -930,10 +928,10 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped quantity → distinct supplier semi-join → nation filter).
     Quantities are integral doubles, so sums are exact in both
     engines."""
-    red = _t(spark, sf_dir, "part").filter(
+    red = load_table(spark, sf_dir, "part").filter(
         F.col("p_name").like("red%")
     ).select("p_partkey")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
@@ -946,8 +944,8 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 2)
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 2)
     return (
         s.join(heavy, s.s_suppkey == heavy.l_suppkey, "left_semi")
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey, "left_semi")
@@ -956,7 +954,7 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q2_min_cost_supplier"] = """
+ORACLES["q2_min_cost_supplier"] = f"""
     WITH ps AS (
         SELECT l_partkey, l_suppkey,
                min(l_extendedprice / l_quantity) AS supplycost
@@ -971,7 +969,7 @@ ORACLES["q2_min_cost_supplier"] = """
     mc AS (SELECT l_partkey, min(supplycost) AS min_cost
            FROM eligible GROUP BY 1)
     SELECT e.s_acctbal, e.s_name, e.n_name, p.p_partkey, p.p_brand,
-           round(e.supplycost + 1e-9, 4) AS supplycost
+           {sql_round_half_up("e.supplycost", 4)} AS supplycost
     FROM eligible e
     JOIN mc ON e.l_partkey = mc.l_partkey AND e.supplycost = mc.min_cost
     JOIN part p ON e.l_partkey = p.p_partkey

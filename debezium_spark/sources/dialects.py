@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL as _CDC_FLAT_SQL
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
-from debezium_spark.functions.rounding import to_units
+from debezium_spark.functions.rounding import sql_to_units, to_units
 
 
 def _decode_op(codes: dict[str, str], col: str) -> Column:
@@ -79,6 +79,12 @@ def _sum_cents(side: str) -> Column:
     return F.sum(to_units(F.col(f"{side}_totalprice"), 2)).alias(
         f"sum_{side}_cents"
     )
+
+
+def _sql_sum_cents(side: str) -> str:
+    """DuckDB twin of `_sum_cents`."""
+    units = sql_to_units(f"{side}_totalprice", 2)
+    return f"CAST(sum({units}) AS BIGINT) AS sum_{side}_cents"
 
 
 IBMI_OP_MAP = {"PT": "c", "PX": "c", "UP": "u", "DL": "d", "DR": "d"}
@@ -288,12 +294,11 @@ def ibmi_journal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
 
 ORACLES: dict[str, str] = {
     "ibmi_journal_roundtrip": _CDC_FLAT_SQL
-    + """
+    + f"""
         SELECT op, count(*) AS n_events,
                min(seq * 2) AS min_joseqn,
                max(seq * 2) AS max_joseqn,
-               CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                    AS BIGINT) AS sum_after_cents
+               {_sql_sum_cents("after")}
         FROM cdc GROUP BY op ORDER BY op
     """,
 }
@@ -327,12 +332,11 @@ def mysql_binlog_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["mysql_binlog_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["mysql_binlog_roundtrip"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events,
            min((seq // 100000) * 10000000000 + seq % 100000) AS min_seq,
            max((seq // 100000) * 10000000000 + seq % 100000) AS max_seq,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_after_cents
+           {_sql_sum_cents("after")}
     FROM cdc GROUP BY op ORDER BY op
 """
 QUERIES["mysql_binlog_roundtrip"] = mysql_binlog_roundtrip_q
@@ -362,11 +366,10 @@ def mongo_change_stream_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["mongo_change_stream_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["mongo_change_stream_roundtrip"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events, min(seq) AS min_seq,
            max(seq) AS max_seq,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_after_cents
+           {_sql_sum_cents("after")}
     FROM cdc GROUP BY op ORDER BY op
 """
 QUERIES["mongo_change_stream_roundtrip"] = mongo_change_stream_roundtrip_q
@@ -393,12 +396,11 @@ def cassandra_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cassandra_cdc_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["cassandra_cdc_roundtrip"] = _CDC_FLAT_SQL + f"""
     SELECT CASE WHEN op = 'd' THEN 'd' ELSE 'u' END AS op,
            count(*) AS n_events, count(DISTINCT key) AS n_keys,
            max(seq * 1000) AS max_writetime_us,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_after_cents
+           {_sql_sum_cents("after")}
     FROM cdc GROUP BY 1 ORDER BY op
 """
 QUERIES["cassandra_cdc_roundtrip"] = cassandra_cdc_roundtrip_q
@@ -425,11 +427,10 @@ def pg_wal_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["pg_wal_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["pg_wal_roundtrip"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events, min(seq) AS min_lsn,
            max(seq) AS max_lsn,
-           CAST(sum(CAST(round(before_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_before_cents
+           {_sql_sum_cents("before")}
     FROM cdc GROUP BY op ORDER BY op
 """
 QUERIES["pg_wal_roundtrip"] = pg_wal_roundtrip_q
@@ -459,11 +460,10 @@ def spanner_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["spanner_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["spanner_roundtrip"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events,
            max(ts_ms * 1000 + seq % 1000) AS max_seq,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_after_cents
+           {_sql_sum_cents("after")}
     FROM cdc GROUP BY op ORDER BY op
 """
 QUERIES["spanner_roundtrip"] = spanner_roundtrip_q
@@ -495,11 +495,10 @@ def oracle_logminer_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["oracle_logminer_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["oracle_logminer_roundtrip"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events, min(seq) AS min_scn,
            max(seq) AS max_scn,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_after_cents
+           {_sql_sum_cents("after")}
     FROM cdc GROUP BY op ORDER BY op
 """
 QUERIES["oracle_logminer_roundtrip"] = oracle_logminer_roundtrip_q
@@ -618,13 +617,11 @@ def sqlserver_cdc_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["sqlserver_cdc_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["sqlserver_cdc_roundtrip"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events, min(seq) AS min_lsn,
            max(seq) AS max_lsn,
-           CAST(sum(CAST(round(before_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_before_cents,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_after_cents
+           {_sql_sum_cents("before")},
+           {_sql_sum_cents("after")}
     FROM cdc GROUP BY op ORDER BY op
 """
 QUERIES["sqlserver_cdc_roundtrip"] = sqlserver_cdc_roundtrip_q
@@ -681,14 +678,12 @@ def db2_cd_roundtrip_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["db2_cd_roundtrip"] = _CDC_FLAT_SQL + """
+ORACLES["db2_cd_roundtrip"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events,
            min((seq // 100000) * 100000 + seq % 100000) AS min_seq,
            max((seq // 100000) * 100000 + seq % 100000) AS max_seq,
-           CAST(sum(CAST(round(before_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_before_cents,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_after_cents
+           {_sql_sum_cents("before")},
+           {_sql_sum_cents("after")}
     FROM cdc GROUP BY op ORDER BY op
 """
 QUERIES["db2_cd_roundtrip"] = db2_cd_roundtrip_q
@@ -754,11 +749,10 @@ def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["ibmi_commitment_control"] = _CDC_FLAT_SQL + """
+ORACLES["ibmi_commitment_control"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events,
            count(DISTINCT seq // 100) AS n_cycles,
-           CAST(sum(CAST(round(after_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS sum_after_cents
+           {_sql_sum_cents("after")}
     FROM cdc
     WHERE (seq // 100) % 7 <> 3 AND (seq // 100) % 11 <> 5
     GROUP BY op ORDER BY op

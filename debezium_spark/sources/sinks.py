@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from debezium_spark.functions.rounding import to_units
+from debezium_spark.functions.rounding import sql_to_units, to_units
 
 
 def sink_to_topics(df: DataFrame, out_dir: str) -> None:
@@ -244,12 +244,11 @@ def bucketed_join_agg_q(spark, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-BUCKETED_JOIN_ORACLE = """
+BUCKETED_JOIN_ORACLE = f"""
     SELECT c.c_mktsegment,
            count(*) AS n_orders,
            count(DISTINCT o.o_custkey) AS n_customers,
-           CAST(sum(CAST(round(o.o_totalprice * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS total_cents
+           CAST(sum({sql_to_units("o.o_totalprice", 2)}) AS BIGINT) AS total_cents
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment
 """

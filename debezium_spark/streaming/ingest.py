@@ -43,7 +43,7 @@ from pyspark.sql.types import StructType
 from debezium_spark.cdc.envelope import synthesize_cdc_flat
 from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES
 from debezium_spark.cdc.materialize import latest_state
-from debezium_spark.functions.rounding import round_half_up, to_units
+from debezium_spark.functions.rounding import round_half_up, sql_to_units, to_units
 from debezium_spark.operators.analytics import SESSION_GAP_MIN
 from debezium_spark.sources.tables import load_table
 
@@ -271,7 +271,7 @@ def stream_stream_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _replay_topic(spark, sf_dir, build, "append", finish)
 
 
-ORACLES["stream_stream_join"] = """
+ORACLES["stream_stream_join"] = f"""
     WITH v AS (SELECT user_id, ts, event_id FROM events
                WHERE event_type = 'view'),
     p AS (SELECT user_id, ts, value FROM events
@@ -284,8 +284,7 @@ ORACLES["stream_stream_join"] = """
                AS view_hour,
            count(*) AS n_pairs,
            count(DISTINCT user_id) AS n_users,
-           CAST(sum(CAST(round(value * 100 + 1e-9) AS BIGINT)) AS BIGINT)
-               AS purchase_cents
+           CAST(sum({sql_to_units("value", 2)}) AS BIGINT) AS purchase_cents
     FROM j GROUP BY 1 ORDER BY view_hour
 """
 QUERIES["stream_stream_join"] = stream_stream_join_q
@@ -323,10 +322,9 @@ def stream_stateful_running_counts_q(
     return _replay_topic(spark, sf_dir, build, "update", finish)
 
 
-ORACLES["stream_stateful_running_counts"] = """
+ORACLES["stream_stateful_running_counts"] = f"""
     SELECT user_id, count(*) AS n_events,
-           CAST(sum(CAST(round(value * 100 + 1e-9) AS BIGINT)) AS BIGINT)
-               AS total_cents
+           CAST(sum({sql_to_units("value", 2)}) AS BIGINT) AS total_cents
     FROM events GROUP BY user_id ORDER BY user_id
 """
 QUERIES["stream_stateful_running_counts"] = stream_stateful_running_counts_q
@@ -403,10 +401,9 @@ def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["stream_static_enrich"] = """
+ORACLES["stream_static_enrich"] = f"""
     SELECT c.c_mktsegment, e.event_type, count(*) AS n,
-           CAST(sum(CAST(round(e.value * 100 + 1e-9) AS BIGINT))
-                AS BIGINT) AS value_cents
+           CAST(sum({sql_to_units("e.value", 2)}) AS BIGINT) AS value_cents
     FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY 1, 2 ORDER BY c_mktsegment, event_type
 """
@@ -570,11 +567,8 @@ def _manifest_merge_batch(
     prev_manifest, last_epoch = _latest_manifest(state_root)
     if epoch_id <= last_epoch:
         return  # batch already applied — replay skips wholesale
-    b = batch.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
-    )
     man = {"epoch": epoch_id, "key": key, "seq": seq,
-           "schema": b.schema.jsonValue(), "buckets": {}, "deltas": []}
+           "schema": batch.schema.jsonValue(), "buckets": {}, "deltas": []}
     if prev_manifest is not None:
         with open(prev_manifest) as fh:
             prev = json.load(fh)
@@ -584,11 +578,11 @@ def _manifest_merge_batch(
         state_root, set(man["buckets"].values())
     )
     if fold:
-        out = _read_state(batch.sparkSession, state_root, man, extra=b)
+        out = _read_state(batch.sparkSession, state_root, man, extra=batch)
         man["buckets"] = {str(i): epoch_dir for i in range(n_buckets)}
         man["deltas"] = []
     else:
-        out = b.coalesce(1)
+        out = batch.coalesce(1)
         man["deltas"] = man["deltas"] + [epoch_dir]
     out.write.mode("overwrite").parquet(
         os.path.join(state_root, "data", epoch_dir)

@@ -153,15 +153,12 @@ def test_manifest_compaction_preserves_state(spark, sf_dir):
         )
         run_manifest_stream(stream, state_root, ckpt)
         before = {
-            tuple(r)
-            for r in read_manifest_state(spark, state_root)
-            .drop("bucket")
-            .collect()
+            tuple(r) for r in read_manifest_state(spark, state_root).collect()
         }
         n_dirs_before = len(os.listdir(os.path.join(state_root, "data")))
         compact_manifest_state(spark, state_root)
         after_df = read_manifest_state(spark, state_root)
-        after = {tuple(r) for r in after_df.drop("bucket").collect()}
+        after = {tuple(r) for r in after_df.collect()}
         assert before == after
         assert len(os.listdir(os.path.join(state_root, "data"))) == 1
         assert n_dirs_before > 1
@@ -329,15 +326,17 @@ def test_manifest_empty_first_file_reads_as_empty_state(spark, staged_chunks):
         run_manifest_stream(stream, state_root, os.path.join(workdir, "ckpt"))
         assert _latest_manifest(state_root)[1] == 0
         state = read_manifest_state(spark, state_root)
-        assert state.columns == stream.columns + ["bucket"]
+        assert state.columns == stream.columns
         assert state.count() == 0
 
 
 def test_manifest_compaction_keeps_every_bucket(spark, sf_dir):
     """Compaction takes its bucket set from the manifest, so a sink run
-    with more buckets than the default keeps all of its state."""
+    with more buckets than the default keeps all of its state and all
+    of its bucket pointers."""
     from debezium_spark.streaming.ingest import (
         _file_stream,
+        _load_latest_manifest,
         compact_manifest_state,
         read_manifest_state,
         run_manifest_stream,
@@ -352,8 +351,11 @@ def test_manifest_compaction_keeps_every_bucket(spark, sf_dir):
             _file_stream(spark, topic), state_root,
             os.path.join(workdir, "ckpt"), n_buckets=32,
         )
+        all_buckets = {str(b) for b in range(32)}
+        assert set(_load_latest_manifest(state_root)["buckets"]) == all_buckets
         before = {tuple(r) for r in read_manifest_state(spark, state_root).collect()}
-        assert {r[-1] for r in before} == set(range(32))
+        assert before
         compact_manifest_state(spark, state_root)
+        assert set(_load_latest_manifest(state_root)["buckets"]) == all_buckets
         after = {tuple(r) for r in read_manifest_state(spark, state_root).collect()}
         assert after == before

@@ -4,12 +4,18 @@ Python replay, SCD2 versions partition each key's timeline, and
 compaction is idempotent.
 """
 
+import duckdb
 import pyspark.sql.functions as F
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from debezium_spark.cdc.materialize import latest_state, scd2, tombstones
+from debezium_spark.cdc.materialize import (
+    latest_state,
+    scd2,
+    sql_latest_state,
+    tombstones,
+)
 
 # a key's life: create, then 0..4 updates, optionally a delete
 key_life = st.tuples(
@@ -61,6 +67,31 @@ def test_latest_state_equals_reference_replay(spark, d):
         for r in latest_state(df).collect()
     }
     assert got == reference_replay(rows)
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(d=logs)
+def test_sql_latest_state_matches_spark(spark, d):
+    # the oracles' DuckDB twin keeps the same rows, tombstones or not
+    rows, df = build_log(spark, d)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE log (key BIGINT, op VARCHAR, seq BIGINT, v DOUBLE)"
+    )
+    con.executemany("INSERT INTO log VALUES (?, ?, ?, ?)", rows)
+    for keep in (False, True):
+        want = {
+            tuple(r)
+            for r in latest_state(df, keep_tombstones=keep)
+            .select("key", "op", "seq", "after_totalprice")
+            .collect()
+        }
+        got = set(con.execute(
+            "SELECT key, op, seq, v FROM "
+            + sql_latest_state("log", keep_tombstones=keep)
+        ).fetchall())
+        assert got == want
 
 
 @settings(max_examples=10, deadline=None,

@@ -1,11 +1,16 @@
-"""The Spark-side rounding helpers agree with the oracle SQL's
-spelling of the same rule on decimal ties."""
+"""The Spark-side rounding helpers agree with their DuckDB twins, the
+builders every oracle calls, on decimal ties."""
 
 import duckdb
 import pyspark.sql.functions as F
 import pytest
 
-from debezium_spark.functions.rounding import round_half_up, to_units
+from debezium_spark.functions.rounding import (
+    round_half_up,
+    sql_round_half_up,
+    sql_to_units,
+    to_units,
+)
 
 # (value, its cents): 1.005 is stored as 1.00499999..., so without the
 # nudge it would round to 100 cents
@@ -26,8 +31,8 @@ def test_spark_and_duckdb_round_ties_alike(spark, x, cents):
         round_half_up(F.col("x"), 2).alias("r2"),
     ).first()
     want = duckdb.sql(
-        "SELECT CAST(round(x * 100 + 1e-9) AS BIGINT) AS cents,"
-        " round(x + 1e-9, 2) AS r2"
+        f"SELECT {sql_to_units('x', 2)} AS cents,"
+        f" {sql_round_half_up('x', 2)} AS r2"
         f" FROM (SELECT CAST({x!r} AS DOUBLE) AS x)"
     ).fetchone()
     assert (got["cents"], got["r2"]) == want

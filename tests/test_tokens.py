@@ -7,7 +7,7 @@ from collections import Counter
 import duckdb
 import pytest
 
-from debezium_spark.functions.tokens import SQL_WORDS, word_ngrams
+from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams
 
 LONG = " ".join(f"w{i % 7}" for i in range(25))  # repeated grams
 DOCS = [
@@ -50,3 +50,20 @@ def test_word_ngrams_match_duckdb(spark, n):
     assert spark_rows == expected
     # docs shorter than n give no rows; the rest give len - n + 1
     assert {d for d, _, _ in expected} >= {4, 9, 10}
+
+
+def test_h60_matches_duckdb(spark):
+    texts = ["", "a", "the quick brown fox", "h\u00e9llo w\u00f6rld", "x" * 1000]
+    rows = list(enumerate(texts))
+    got = {
+        r["i"]: r["h"]
+        for r in spark.createDataFrame(rows, "i long, t string")
+        .select("i", h60("t").alias("h"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i BIGINT, t VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = dict(con.execute(f"SELECT i, {sql_h60('t')} FROM t").fetchall())
+    assert got == want
+    assert all(0 <= h < 1 << 60 for h in got.values())

@@ -12,13 +12,18 @@ Floats are compared through repr of round(9) to surface any
 representation drift *before* the real gate does.
 
 Just before the final `N ok, M fail` line it prints one JSON line,
-`{name: {"ok", "rows", "plan", "oracle"}}`, that two runs can diff:
+`{name: {"ok", "rows", "plan", "oracle", "result"}}`, that two runs can
+diff:
 `plan` is the first 16 hex digits of the sha256 of the optimized
 logical plan with its run-specific ids, lambda variable suffixes and
 temp paths blanked, and with each line that carries the group order of
 a distinct-aggregate `Expand` (which follows the hash of JVM-global
 expression ids) reduced to its sorted tokens; `oracle` is the same
-digest of the entry's oracle SQL text.
+digest of the entry's oracle SQL text; `result` is the same digest of
+what that SQL returned: its Arrow schema and its canonical rows (the
+sorted, normalized cells the value comparison uses). So a rewrite of
+an oracle's text shows as a changed `oracle` beside an unchanged
+`result`.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -142,7 +147,10 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        record[name] = {"ok": False, "rows": None, "plan": None, "oracle": None}
+        record[name] = {
+            "ok": False, "rows": None, "plan": None, "oracle": None,
+            "result": None,
+        }
         if name not in oracles:
             print(f"FAIL  {name}: no oracle")
             n_fail += 1
@@ -166,6 +174,10 @@ def main():
                 tuple(otbl.column(c)[i].as_py() for c in ocols)
                 for i in range(otbl.num_rows)
             ]
+            oc = canon(orows, ocols)
+            record[name]["result"] = _digest(json.dumps(
+                [[f"{f.name}:{f.type}" for f in otbl.schema], oc]
+            ))
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             n_fail += 1
@@ -183,7 +195,7 @@ def main():
         if sorted(scols) != sorted(ocols):
             problems.append(f"cols spark={sorted(scols)} duck={sorted(ocols)}")
         if not problems:
-            sc, oc = canon(srows, scols), canon(orows, ocols)
+            sc = canon(srows, scols)
             if sc != oc:
                 diffs = [
                     (a, b) for a, b in zip(sc, oc) if a != b
