@@ -8,19 +8,3 @@ Public-semantics parity targets (Debezium v2.x docs, debezium.io):
 - incremental snapshot (DBLog watermark windows)
 - tombstones, transaction metadata, heartbeats
 """
-
-from debezium_spark.cdc.envelope import (
-    synthesize_cdc_flat,
-    synthesize_cdc_envelope,
-    synthesize_snapshot_flat,
-    CDC_FLAT_SQL,
-    SNAPSHOT_FLAT_SQL,
-)
-
-__all__ = [
-    "synthesize_cdc_flat",
-    "synthesize_cdc_envelope",
-    "synthesize_snapshot_flat",
-    "CDC_FLAT_SQL",
-    "SNAPSHOT_FLAT_SQL",
-]

@@ -15,7 +15,7 @@ UDFs: the whole synthesis is a narrow, codegen'd projection + one
 shuffles.
 
 Generation rule per source row with key k = o_orderkey:
-  nv(k)     = 1 + (k * 2654435761) % 3          -- 1..3 row versions
+  nv(k)     = 1 + (k * KNUTH_MULT) % 3          -- 1..3 row versions
   is_del(k) = (k * 40503) % 10 == 0              -- ~10% keys deleted
   events    = v in 1..nv  -> op 'c' (v=1) else 'u'
               plus v = nv+1 -> op 'd' when is_del
@@ -23,27 +23,62 @@ Generation rule per source row with key k = o_orderkey:
   ts_ms     = 1700000000000 + seq
   after.o_totalprice = o_totalprice + v  (NULL for deletes)
   before.o_totalprice = previous version's value (NULL for creates)
+  txn(seq)  = seq div 100                        -- transaction.id
+
+This module owns both twins of each rule: `n_versions`, `is_deleted`
+and `txn_id` have their DuckDB builders (`sql_*`) beside them, which
+every oracle uses, so no rule is written anywhere else.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debezium_spark.functions.tokens import KNUTH_MULT
 from debezium_spark.sources.tables import load_table
 
-KNUTH_MULT = 2654435761
 DEL_MULT = 40503
 TS_EPOCH_MS = 1700000000000
+
+
+def n_versions(k: Column) -> Column:
+    """How many row versions key `k` gets, 1..3."""
+    return F.lit(1) + (k * F.lit(KNUTH_MULT)) % F.lit(3)
+
+
+def is_deleted(k: Column) -> Column:
+    """Whether key `k` is deleted after its last version (~10% of keys)."""
+    return (k * F.lit(DEL_MULT)) % F.lit(10) == F.lit(0)
+
+
+def txn_id(seq: Column) -> Column:
+    """The transaction of the event at `seq`: 100 seqs per transaction."""
+    return F.floor(seq / 100).cast("long")
+
+
+def sql_n_versions(k: str) -> str:
+    """DuckDB twin of `n_versions` over the SQL expression `k` (a sum)."""
+    return f"1 + ({k} * {KNUTH_MULT}) % 3"
+
+
+def sql_is_deleted(k: str) -> str:
+    """DuckDB twin of `is_deleted` over the SQL expression `k`."""
+    return f"(({k} * {DEL_MULT}) % 10 = 0)"
+
+
+def sql_txn_id(seq: str) -> str:
+    """DuckDB twin of `txn_id` over the SQL expression `seq` (> 0, so
+    integer division floors)."""
+    return f"{seq} // 100"
 
 
 def synthesize_cdc_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The change stream as flat columns: one row per change event."""
     o = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    nv = F.lit(1) + (k * F.lit(KNUTH_MULT)) % F.lit(3)
-    is_del = (k * F.lit(DEL_MULT)) % F.lit(10) == F.lit(0)
-    total = nv + F.when(is_del, F.lit(1)).otherwise(F.lit(0))
+    nv = n_versions(k)
+    total = nv + F.when(is_deleted(k), F.lit(1)).otherwise(F.lit(0))
 
     df = (
         o.withColumn("nv", nv)
@@ -83,17 +118,15 @@ def synthesize_snapshot_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     events — snapshot precedes streaming, Debezium 'initial' mode)."""
     o = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
-    nv = F.lit(1) + (k * F.lit(KNUTH_MULT)) % F.lit(3)
-    is_del = (k * F.lit(DEL_MULT)) % F.lit(10) == F.lit(0)
     return (
-        o.filter(~is_del)
+        o.filter(~is_deleted(k))
         .select(
             k.alias("key"),
             F.lit("r").alias("op"),
             (k * F.lit(10)).alias("seq"),
             (F.lit(TS_EPOCH_MS) + k * F.lit(10)).alias("ts_ms"),
             F.lit(None).cast("double").alias("before_totalprice"),
-            (F.col("o_totalprice") + nv).alias("after_totalprice"),
+            (F.col("o_totalprice") + n_versions(k)).alias("after_totalprice"),
             F.col("o_custkey"),
             F.col("o_orderstatus"),
             F.col("o_orderdate"),
@@ -138,7 +171,7 @@ def synthesize_cdc_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("op"),
         F.col("ts_ms"),
         F.struct(
-            F.floor(F.col("seq") / 100).cast("long").alias("id"),
+            txn_id(F.col("seq")).alias("id"),
         ).alias("transaction"),
         F.col("key"),
         F.col("seq"),
@@ -149,12 +182,12 @@ def synthesize_cdc_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB-side synthesis (identical arithmetic) — used as a CTE prefix
 # by every CDC oracle query.
 # ---------------------------------------------------------------------------
-CDC_FLAT_SQL = """
+CDC_FLAT_SQL = f"""
     WITH cdc_base AS (
         SELECT o_orderkey AS key, o_custkey, o_orderstatus, o_orderdate,
                o_orderpriority, o_totalprice,
-               1 + (o_orderkey * 2654435761) % 3 AS nv,
-               ((o_orderkey * 40503) % 10 = 0) AS is_del
+               {sql_n_versions("o_orderkey")} AS nv,
+               {sql_is_deleted("o_orderkey")} AS is_del
         FROM orders
     ), cdc_ev AS (
         SELECT *, unnest(generate_series(CAST(1 AS BIGINT),
@@ -164,7 +197,7 @@ CDC_FLAT_SQL = """
         SELECT key,
                CASE WHEN v = 1 THEN 'c' WHEN v <= nv THEN 'u' ELSE 'd' END AS op,
                key * 10 + v AS seq,
-               1700000000000 + key * 10 + v AS ts_ms,
+               {TS_EPOCH_MS} + key * 10 + v AS ts_ms,
                CASE WHEN v = 1 THEN NULL
                     WHEN v > nv THEN o_totalprice + nv
                     ELSE o_totalprice + v - 1 END AS before_totalprice,
@@ -175,19 +208,20 @@ CDC_FLAT_SQL = """
     )
 """
 
-SNAPSHOT_FLAT_SQL = """
-    WITH snap_base AS (
+# The initial snapshot as the CTEs `snap_base` and `snap` without a
+# WITH, so an oracle can list them among its own; `snap` has the
+# columns of `synthesize_snapshot_flat`.
+SNAPSHOT_CTE_SQL = f"""snap_base AS (
         SELECT o_orderkey AS key, o_custkey, o_orderstatus, o_orderdate,
                o_orderpriority, o_totalprice,
-               1 + (o_orderkey * 2654435761) % 3 AS nv
+               {sql_n_versions("o_orderkey")} AS nv
         FROM orders
-        WHERE (o_orderkey * 40503) % 10 <> 0
+        WHERE NOT {sql_is_deleted("o_orderkey")}
     ), snap AS (
         SELECT key, 'r' AS op, key * 10 AS seq,
-               1700000000000 + key * 10 AS ts_ms,
+               {TS_EPOCH_MS} + key * 10 AS ts_ms,
                NULL AS before_totalprice,
                o_totalprice + nv AS after_totalprice,
                o_custkey, o_orderstatus, o_orderdate, o_orderpriority
         FROM snap_base
-    )
-"""
+    )"""

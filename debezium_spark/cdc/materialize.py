@@ -16,11 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from debezium_spark.cdc.envelope import (
-    CDC_FLAT_SQL,
-    synthesize_cdc_flat,
-    synthesize_snapshot_flat,
-)
+from debezium_spark.cdc.envelope import CDC_FLAT_SQL, SNAPSHOT_CTE_SQL, TS_EPOCH_MS
+from debezium_spark.cdc.envelope import synthesize_cdc_flat, synthesize_snapshot_flat
+from debezium_spark.cdc.envelope import is_deleted, n_versions, txn_id
+from debezium_spark.cdc.envelope import sql_is_deleted, sql_n_versions, sql_txn_id
 from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 
@@ -224,10 +223,10 @@ def cdc_incremental_snapshot_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Transaction metadata (Debezium transaction topic: BEGIN/END with
-# event counts per data collection): txn_id = seq/100.
+# event counts per data collection), per envelope.txn_id.
 # --------------------------------------------------------------------------
 def txn_boundaries(cdc: DataFrame) -> DataFrame:
-    txn = cdc.withColumn("txn_id", F.floor(F.col("seq") / 100).cast("long"))
+    txn = cdc.withColumn("txn_id", txn_id(F.col("seq")))
     return (
         txn.groupBy("txn_id")
         .agg(
@@ -250,7 +249,7 @@ def cdc_txn_boundaries_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-collection event count.
 # --------------------------------------------------------------------------
 def transaction_topic(cdc: DataFrame) -> DataFrame:
-    txn = cdc.withColumn("txn_id", F.floor(F.col("seq") / 100).cast("long"))
+    txn = cdc.withColumn("txn_id", txn_id(F.col("seq")))
     bounds = txn.groupBy("txn_id").agg(
         F.min("seq").alias("begin_seq"),
         F.max("seq").alias("end_seq"),
@@ -349,15 +348,10 @@ ORACLES: dict[str, str] = {
     """,
     "cdc_snapshot_merge": CDC_FLAT_SQL
     + f"""
-        , snap_base AS (
-            SELECT o_orderkey AS key,
-                   o_totalprice + 1 + (o_orderkey * 2654435761) % 3 AS after_totalprice,
-                   'r' AS op, o_orderkey * 10 AS seq
-            FROM orders WHERE (o_orderkey * 40503) % 10 <> 0
-        ), unioned AS (
+        , {SNAPSHOT_CTE_SQL}, unioned AS (
             SELECT key, op, seq, after_totalprice FROM cdc
             UNION ALL
-            SELECT key, op, seq, after_totalprice FROM snap_base
+            SELECT key, op, seq, after_totalprice FROM snap
         )
         SELECT op, count(*) AS n, round(sum(after_totalprice), 2) AS sum_totalprice
         FROM {sql_latest_state("unioned")}
@@ -365,18 +359,14 @@ ORACLES: dict[str, str] = {
     """,
     "cdc_incremental_snapshot": CDC_FLAT_SQL
     + f"""
-        , snap_base AS (
-            SELECT o_orderkey AS key,
-                   o_totalprice + 1 + (o_orderkey * 2654435761) % 3 AS o_totalprice
-            FROM orders WHERE (o_orderkey * 40503) % 10 <> 0
-        ), stream_max AS (
+        , {SNAPSHOT_CTE_SQL}, stream_max AS (
             SELECT key, max(seq) AS max_seq FROM cdc GROUP BY key
         ), live AS (
             SELECT key, after_totalprice AS o_totalprice
             FROM {sql_latest_state("cdc")}
         ), merged AS (
-            SELECT s.key, s.o_totalprice, 'snapshot' AS origin
-            FROM snap_base s LEFT JOIN stream_max m ON s.key = m.key
+            SELECT s.key, s.after_totalprice AS o_totalprice, 'snapshot' AS origin
+            FROM snap s LEFT JOIN stream_max m ON s.key = m.key
             WHERE m.max_seq IS NULL
                OR m.max_seq < (s.key // 1000) * 10000 + 5000
             UNION ALL
@@ -388,16 +378,16 @@ ORACLES: dict[str, str] = {
         FROM merged GROUP BY origin ORDER BY origin
     """,
     "cdc_txn_boundaries": CDC_FLAT_SQL
-    + """
-        SELECT seq // 100 AS txn_id, count(*) AS event_count,
+    + f"""
+        SELECT {sql_txn_id("seq")} AS txn_id, count(*) AS event_count,
                min(seq) AS begin_seq, max(seq) AS end_seq,
                count(DISTINCT key) AS n_keys
         FROM cdc GROUP BY txn_id ORDER BY txn_id
     """,
     "cdc_transaction_topic": CDC_FLAT_SQL
-    + """
+    + f"""
         , bounds AS (
-            SELECT seq // 100 AS txn_id, min(seq) AS begin_seq,
+            SELECT {sql_txn_id("seq")} AS txn_id, min(seq) AS begin_seq,
                    max(seq) AS end_seq, count(*) AS event_count
             FROM cdc GROUP BY txn_id
         )
@@ -457,7 +447,7 @@ def cdc_truncate_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if c == "op"
                 else F.lit(TRUNC_SEQ).cast("long")
                 if c == "seq"
-                else F.lit(1700000000000 + TRUNC_SEQ).cast("long")
+                else F.lit(TS_EPOCH_MS + TRUNC_SEQ).cast("long")
                 if c == "ts_ms"
                 else F.lit(None).cast(types[c])
             ).alias(c)
@@ -571,10 +561,10 @@ def cdc_pk_update_rekey_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — nothing new at scale."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
     k = F.col("key")
-    nv = F.lit(1) + F.pmod(k * F.lit(2654435761), F.lit(3))
-    is_del = F.pmod(k * F.lit(40503), F.lit(10)) == 0
     v = F.col("seq") - k * 10
-    rekey = (F.pmod(k, F.lit(REKEY_MOD)) == 0) & (~is_del) & (v == nv)
+    rekey = (
+        (F.pmod(k, F.lit(REKEY_MOD)) == 0) & (~is_deleted(k)) & (v == n_versions(k))
+    )
 
     passthrough = cdc.filter(~rekey).withColumn("seq", F.col("seq") * 2)
     old_del = (
@@ -607,8 +597,8 @@ def cdc_pk_update_rekey_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["cdc_pk_update_rekey"] = CDC_FLAT_SQL + f"""
     , marked AS (
         SELECT *,
-               1 + (key * 2654435761) % 3 AS nv,
-               (key * 40503) % 10 = 0 AS is_del,
+               {sql_n_versions("key")} AS nv,
+               {sql_is_deleted("key")} AS is_del,
                seq - key * 10 AS v
         FROM cdc),
     rekeyed AS (
@@ -967,7 +957,7 @@ def cdc_txn_event_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     txn = cdc.select(
         "key",
         "seq",
-        F.floor(F.col("seq") / 100).cast("long").alias("txn_id"),
+        txn_id(F.col("seq")).alias("txn_id"),
         F.concat(
             F.lit("orders_"), F.pmod(F.col("key"), F.lit(3)).cast("string")
         ).alias("collection"),
@@ -984,12 +974,12 @@ def cdc_txn_event_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("seq")
 
 
-ORACLES["cdc_txn_event_order"] = CDC_FLAT_SQL + """
-    SELECT key, seq, seq // 100 AS txn_id,
+ORACLES["cdc_txn_event_order"] = CDC_FLAT_SQL + f"""
+    SELECT key, seq, {sql_txn_id("seq")} AS txn_id,
            'orders_' || CAST(key % 3 AS VARCHAR) AS collection,
-           CAST(row_number() OVER (PARTITION BY seq // 100
+           CAST(row_number() OVER (PARTITION BY {sql_txn_id("seq")}
                                    ORDER BY seq) AS BIGINT) AS total_order,
-           CAST(row_number() OVER (PARTITION BY seq // 100, key % 3
+           CAST(row_number() OVER (PARTITION BY {sql_txn_id("seq")}, key % 3
                                    ORDER BY seq) AS BIGINT)
                AS data_collection_order
     FROM cdc ORDER BY seq

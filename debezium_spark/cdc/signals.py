@@ -24,11 +24,11 @@ from pyspark.sql import functions as F
 
 SIGNAL_SCHEMA = "signal_id string, type string, data string"
 
-from debezium_spark.cdc.envelope import SNAPSHOT_FLAT_SQL  # noqa: E402
+from debezium_spark.cdc.envelope import SNAPSHOT_CTE_SQL  # noqa: E402
 
 ORACLES: dict[str, str] = {
-    "cdc_signal_snapshot": SNAPSHOT_FLAT_SQL
-    + """
+    "cdc_signal_snapshot": f"""
+    WITH {SNAPSHOT_CTE_SQL}
         SELECT key // 1000 AS chunk, count(*) AS n,
                round(sum(after_totalprice), 2) AS sum_totalprice
         FROM snap

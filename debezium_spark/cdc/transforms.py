@@ -18,7 +18,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, synthesize_cdc_flat
+from debezium_spark.cdc.envelope import SNAPSHOT_CTE_SQL, sql_txn_id
 from debezium_spark.functions.rounding import round_half_up, sql_round_half_up
+from debezium_spark.functions.tokens import knuth32, sql_knuth32
 from debezium_spark.sources.tables import load_table
 
 
@@ -155,10 +157,7 @@ def timezone_converter(df: DataFrame, cols: list[str], tz: str) -> DataFrame:
 # arithmetic hash so the oracle reproduces it.
 # --------------------------------------------------------------------------
 def partition_router(cdc: DataFrame, num_partitions: int = 16) -> DataFrame:
-    shard = F.pmod(
-        F.pmod(F.col("key") * F.lit(2654435761), F.lit(2 ** 32)),
-        F.lit(num_partitions),
-    )
+    shard = F.pmod(knuth32(F.col("key")), F.lit(num_partitions))
     return cdc.withColumn("partition", shard)
 
 
@@ -383,8 +382,8 @@ ORACLES: dict[str, str] = {
         FROM cdc
     """,
     "cdc_partition_route": CDC_FLAT_SQL
-    + """
-        SELECT (key * 2654435761) % 4294967296 % 16 AS partition,
+    + f"""
+        SELECT {sql_knuth32("key")} % 16 AS partition,
                count(*) AS n, min(seq) AS min_seq, max(seq) AS max_seq
         FROM cdc GROUP BY partition ORDER BY partition
     """,
@@ -490,10 +489,8 @@ def cdc_snapshot_modes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("mode")
 
 
-ORACLES["cdc_snapshot_modes"] = CDC_FLAT_SQL + """
-    , snap AS (
-        SELECT o_orderkey AS key, 'r' AS op
-        FROM orders WHERE (o_orderkey * 40503) % 10 <> 0),
+ORACLES["cdc_snapshot_modes"] = CDC_FLAT_SQL + f"""
+    , {SNAPSHOT_CTE_SQL},
     both_src AS (
         SELECT key, op FROM snap UNION ALL SELECT key, op FROM cdc),
     m AS (
@@ -856,12 +853,10 @@ def cdc_add_fields_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Spark's double→long cast truncates toward zero; seq > 0 so floor()
-# reproduces it in DuckDB (a bare CAST would round half-even).
-ORACLES["cdc_add_fields"] = CDC_FLAT_SQL + """
+ORACLES["cdc_add_fields"] = CDC_FLAT_SQL + f"""
     SELECT op AS __op, 'orders' AS __source_table, count(*) AS n,
            min(seq) AS min_seq, max(seq) AS max_seq,
-           count(DISTINCT CAST(floor(seq / 100.0) AS BIGINT)) AS n_txn
+           count(DISTINCT {sql_txn_id("seq")}) AS n_txn
     FROM cdc WHERE op <> 'd' GROUP BY op ORDER BY op
 """
 QUERIES["cdc_add_fields"] = cdc_add_fields_q
@@ -1076,13 +1071,13 @@ def cdc_flatten_envelope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("key", "seq")
 
 
-ORACLES["cdc_flatten_envelope"] = CDC_FLAT_SQL + """
+ORACLES["cdc_flatten_envelope"] = CDC_FLAT_SQL + f"""
     SELECT key, seq, op,
            before_totalprice AS before_o_totalprice,
            after_totalprice AS after_o_totalprice,
            'orders' AS source_table,
            seq AS source_seq,
-           seq // 100 AS transaction_id
+           {sql_txn_id("seq")} AS transaction_id
     FROM cdc WHERE key < 3000 ORDER BY key, seq
 """
 QUERIES["cdc_flatten_envelope"] = cdc_flatten_envelope_q

@@ -18,11 +18,12 @@ sequence(1, hi) DESCENDS when hi < 1 instead of returning empty.
 
 `h60` is the first 60 bits of md5 as a non-negative BIGINT: md5 exists
 identically in DuckDB, which is what keeps the hash pipelines
-(MinHash/LSH, SimHash and the sketches) value-verifiable.
+(MinHash/LSH, SimHash and the sketches) value-verifiable, as are the
+exact-duplicate key `content_md5` and the Knuth hash `knuth32`.
 
-This module owns both twins of each rule: `SQL_WORDS` and `sql_h60`
-are the DuckDB spellings of `words()` and `h60`, and every oracle
-uses them, so neither is written anywhere else.
+This module owns both twins of each rule: `SQL_WORDS` and the `sql_*`
+builders are the DuckDB spellings of `words()`, `h60`, `content_md5`
+and `knuth32`; every oracle uses them, so none is written elsewhere.
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SQL_WORDS = "string_split_regex(trim(text), '\\s+')"  # DuckDB twin of words()
+KNUTH_MULT = 2654435761
 
 
 def words() -> Column:
@@ -46,6 +48,26 @@ def h60(col: Column | str) -> Column:
 def sql_h60(expr: str) -> str:
     """DuckDB twin of `h60` over the SQL expression `expr`."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+
+
+def content_md5(col: Column) -> Column:
+    """md5 of `col` trimmed, lower-cased, whitespace runs as one space."""
+    return F.md5(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "))
+
+
+def sql_content_md5(expr: str) -> str:
+    """DuckDB twin of `content_md5` over the SQL expression `expr`."""
+    return f"md5(regexp_replace(lower(trim({expr})), '\\s+', ' ', 'g'))"
+
+
+def knuth32(col: Column) -> Column:
+    """Knuth's multiplicative hash of the integer `col`, mod 2^32."""
+    return F.pmod(col * F.lit(KNUTH_MULT), F.lit(2**32))
+
+
+def sql_knuth32(expr: str) -> str:
+    """DuckDB twin of `knuth32` over the SQL expression `expr`."""
+    return f"({expr} * {KNUTH_MULT}) % {2**32}"
 
 
 def word_ngrams(docs: DataFrame, n: int) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from debezium_spark.functions import vectors
 from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
+from debezium_spark.functions.tokens import content_md5, sql_content_md5
 from debezium_spark.operators import similarity as sim
 from debezium_spark.sources.tables import load_table
 
@@ -49,9 +50,8 @@ def _shingles(df: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return (
-        d.select("doc_id", F.md5(norm).alias("content_md5"))
+        d.select("doc_id", content_md5(F.col("text")).alias("content_md5"))
         .groupBy("content_md5")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -448,8 +448,8 @@ _SHINGLE_SQL = f"""
 """
 
 ORACLES: dict[str, str] = {
-    "dedup_exact": """
-        SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5,
+    "dedup_exact": f"""
+        SELECT {sql_content_md5("text")} AS content_md5,
                count(*) AS n_docs, min(doc_id) AS canonical_doc_id
         FROM documents
         GROUP BY content_md5
@@ -577,23 +577,24 @@ def dedup_cluster_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# connected_components' CC_MAX_ITERS rounds unrolled (a round past
+# convergence changes nothing); without MATERIALIZED pairs DuckDB
+# re-runs the LSH pipeline in every round.
+_CC_ROUNDS = ",".join(f"""
+    l{i} AS MATERIALIZED (SELECT node, min(comp) AS comp FROM (
+        SELECT node, comp FROM l{i - 1} UNION ALL
+        SELECT e.dst, l.comp FROM l{i - 1} l JOIN edges e ON e.src = l.node)
+        GROUP BY node)""" for i in range(1, CC_MAX_ITERS + 1))
 ORACLES["dedup_cluster_components"] = f"""
-    WITH RECURSIVE pairs AS ({_sql_minhash_lsh()}),
-    nodes AS (
-        SELECT doc_a AS node FROM pairs
-        UNION SELECT doc_b FROM pairs),
-    edges AS (
+    WITH pairs AS MATERIALIZED ({_sql_minhash_lsh()}),
+    edges AS MATERIALIZED (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
         UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
-    walk(node, comp) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT e.dst, w.comp FROM walk w JOIN edges e ON e.src = w.node),
-    comps AS (SELECT node, min(comp) AS comp FROM walk GROUP BY node)
+    l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS comp FROM edges),{_CC_ROUNDS}
     SELECT comp AS cluster_id, count(*) AS n_docs,
            string_agg(CAST(node AS VARCHAR), ',' ORDER BY node) AS members,
            count(*) - 1 AS n_dropped
-    FROM comps GROUP BY comp HAVING count(*) >= 2 ORDER BY cluster_id
+    FROM l{CC_MAX_ITERS} GROUP BY comp HAVING count(*) >= 2 ORDER BY cluster_id
 """
 QUERIES["dedup_cluster_components"] = dedup_cluster_components_q
 

@@ -11,10 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from debezium_spark.cdc.envelope import is_deleted, n_versions
+from debezium_spark.cdc.envelope import sql_is_deleted, sql_n_versions
 from debezium_spark.cdc.materialize import latest_state, sql_latest_state
 from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
+from debezium_spark.functions.tokens import content_md5, knuth32
+from debezium_spark.functions.tokens import sql_content_md5, sql_knuth32
 from debezium_spark.operators.text import STOPWORDS as _LANG_STOPWORDS
 from debezium_spark.operators.text import stopword_hit_count
 from debezium_spark.sources.tables import load_table
@@ -36,14 +40,13 @@ def training_mixture_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         + 0.3 * (1.0 - stop_hits / n_words)
         + 0.2 * F.least(mean_word_len / F.lit(8.0), F.lit(1.0))
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
 
     scored = d.select(
         "doc_id",
         "source",
         n_words.alias("n_tokens"),
         quality.alias("q"),
-        F.md5(norm).alias("content_md5"),
+        content_md5(F.col("text")).alias("content_md5"),
     ).filter(F.col("q") >= QUALITY_THRESHOLD)
 
     dedup_w = Window.partitionBy("content_md5").orderBy("doc_id")
@@ -117,10 +120,7 @@ def stratified_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data pipeline needs for resumable sampling), reported
     per source stratum."""
     d = load_table(spark, sf_dir, "documents")
-    coin = F.pmod(
-        F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(2 ** 32)),
-        F.lit(100),
-    )
+    coin = F.pmod(knuth32(F.col("doc_id")), F.lit(100))
     return (
         d.withColumn("coin", coin)
         .filter(F.col("coin") < SAMPLE_PCT)
@@ -256,7 +256,7 @@ ORACLES: dict[str, str] = {
                CAST(sum(len({SQL_WORDS})) AS BIGINT) AS sampled_tokens,
                min(doc_id) AS first_doc
         FROM documents
-        WHERE (doc_id * 2654435761) % 4294967296 % 100 < {SAMPLE_PCT}
+        WHERE {sql_knuth32("doc_id")} % 100 < {SAMPLE_PCT}
         GROUP BY source ORDER BY source
     """,
     "training_mixture": f"""
@@ -268,7 +268,7 @@ ORACLES: dict[str, str] = {
                          ('the','a','of','and','to','in','is'))) * 1.0 / len(w))
                    + 0.2 * least(((length(text) - (len(w) - 1)) * 1.0 / len(w)) / 8.0, 1.0)
                        AS q,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_md5
+                   {sql_content_md5("text")} AS content_md5
             FROM (SELECT *, {SQL_WORDS} AS w FROM documents)
         ), filtered AS (
             SELECT * FROM scored WHERE q >= {QUALITY_THRESHOLD}
@@ -429,12 +429,9 @@ QUERIES["mixture_weights"] = mixture_weights_q
 def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    # same generation law as the orders stream (envelope.py): 1-3
-    # versions per key, ~10% of keys deleted afterwards
-    nv = F.lit(1) + (k * F.lit(2654435761)) % F.lit(3)
-    is_del = (k * F.lit(40503)) % F.lit(10) == 0
     versions = d.select(
-        "doc_id", "source", "text", nv.alias("nv"), is_del.alias("is_del")
+        "doc_id", "source", "text", n_versions(k).alias("nv"),
+        is_deleted(k).alias("is_del"),
     ).select(
         "doc_id",
         "source",
@@ -483,8 +480,8 @@ def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["cdc_document_pipeline"] = f"""
     WITH base AS (
         SELECT doc_id, source, text,
-               1 + (doc_id * 2654435761) % 3 AS nv,
-               (doc_id * 40503) % 10 = 0 AS is_del
+               {sql_n_versions("doc_id")} AS nv,
+               {sql_is_deleted("doc_id")} AS is_del
         FROM documents),
     versions AS (
         SELECT doc_id, source, text, nv, is_del,

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from debezium_spark.functions import vectors
 from debezium_spark.functions.rounding import round_half_up, sql_round_half_up
+from debezium_spark.functions.tokens import knuth32, sql_knuth32
 from debezium_spark.sources.tables import load_table
 
 TOP_K = 10
@@ -59,9 +60,7 @@ def ivf_seeds(e: DataFrame) -> DataFrame:
     probes) re-executes the full seed-selection scan."""
     sub = (
         e.select("vec_id", "embedding", "nrm")
-        .withColumn(
-            "sh", F.pmod(F.col("vec_id") * F.lit(2654435761), F.lit(2 ** 32))
-        )
+        .withColumn("sh", knuth32(F.col("vec_id")))
         .orderBy("sh", "vec_id")
         .limit(N_CELLS)
         .select(
@@ -360,7 +359,7 @@ def _sql_ivf_cells(src: str = "n") -> str:
     return f"""seeds AS (
             SELECT vec_id AS seed_id, embedding AS s_emb, nrm AS s_nrm
             FROM n
-            ORDER BY (vec_id * 2654435761) % 4294967296, vec_id
+            ORDER BY {sql_knuth32("vec_id")}, vec_id
             LIMIT {N_CELLS}),
         ranked AS (
             SELECT n.vec_id, s.seed_id,

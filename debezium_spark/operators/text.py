@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
+from debezium_spark.functions.tokens import content_md5, sql_content_md5
 from debezium_spark.sources.tables import load_table
 
 # Stopword lists for the n-gram/stopword language-ID heuristic. The
@@ -116,7 +117,6 @@ def fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier version used (HOFs are CodegenFallback). Per-term 2^45
     bound ⇒ overflow-free for docs up to 2^18 words under ANSI mode."""
     d = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     # content_md5 deliberately stays OUT of the exploded branch:
     # Catalyst collapses projections above Generate, so a per-doc
     # md5 carried through posexplode is re-evaluated once per WORD
@@ -130,7 +130,7 @@ def fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.sum(term), F.lit(_FP_MOD)).alias("rolling_hash")
     )
     return (
-        d.select("doc_id", F.md5(norm).alias("content_md5"))
+        d.select("doc_id", content_md5(F.col("text")).alias("content_md5"))
         .join(fp, "doc_id")
         .select("doc_id", "content_md5", "rolling_hash")
         .orderBy("doc_id")
@@ -329,7 +329,7 @@ ORACLES: dict[str, str] = {
                       CAST(sum(term) % {_FP_MOD} AS BIGINT) AS rolling_hash
                FROM terms GROUP BY doc_id)
         SELECT d.doc_id,
-               md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g')) AS content_md5,
+               {sql_content_md5("d.text")} AS content_md5,
                fp.rolling_hash
         FROM documents d JOIN fp USING (doc_id) ORDER BY d.doc_id
     """,
@@ -832,7 +832,9 @@ def bpe_tokenize_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _bpe_oracle_sql(k: int) -> str:
+def _bpe_train_sql(k: int) -> str:
+    """K unrolled training CTEs (merge i+1 is best{i}; seq{k} holds the
+    words after all K), to which each BPE oracle appends its SELECT."""
     parts = [
         f"""
     WITH toks_raw AS (
@@ -873,25 +875,24 @@ def _bpe_oracle_sql(k: int) -> str:
                        '<' || x.a || x.b || '>') AS seq
         FROM seq{i} s CROSS JOIN best{i} x
     )""")
+    return "".join(parts)
+
+
+def _bpe_oracle_sql(k: int) -> str:
     union = "\n    UNION ALL ".join(
         f"SELECT {i + 1} AS merge_rank, a AS lhs, b AS rhs, a || b AS merged, "
         f"CAST(pf AS BIGINT) AS pair_freq FROM best{i}"
         for i in range(k)
     )
-    parts.append(f"""
+    return _bpe_train_sql(k) + f"""
     SELECT CAST(merge_rank AS INT) AS merge_rank, lhs, rhs, merged, pair_freq
     FROM ({union})
-    ORDER BY merge_rank""")
-    return "".join(parts)
+    ORDER BY merge_rank"""
 
 
 def _bpe_apply_oracle_sql(k: int) -> str:
-    """Same K unrolled training CTEs, final select = the tokens-per-
-    word histogram over seq{k} (the applied tokenization)."""
-    train = _bpe_oracle_sql(k)
-    # reuse the generator up to the last seq CTE, swap the final select
-    cut = train.rindex("\n    SELECT CAST(merge_rank")
-    return train[:cut] + f"""
+    """The tokens-per-word histogram of the applied tokenization."""
+    return _bpe_train_sql(k) + f"""
     SELECT CAST(len(string_split(substr(seq, 2, length(seq)-2), '><'))
                 AS INT) AS n_tokens,
            CAST(count(*) AS BIGINT) AS n_types,

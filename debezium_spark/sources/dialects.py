@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL as _CDC_FLAT_SQL
-from debezium_spark.cdc.envelope import synthesize_cdc_flat
+from debezium_spark.cdc.envelope import sql_txn_id, synthesize_cdc_flat, txn_id
 from debezium_spark.functions.rounding import sql_to_units, to_units
 
 
@@ -721,14 +721,15 @@ def normalize_ibmi_journal_commitment(journal: DataFrame) -> DataFrame:
 
 def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
     """Commitment-control gate for the headline connector: the
-    canonical stream is journal-encoded with commit cycles of 100
-    JOSEQN each; cycles with ccid % 7 == 3 get an RB control entry
-    (their row entries must vanish), cycles with ccid % 11 == 5 get
-    NO control entry (unterminated — held back), the rest get CM.
+    canonical stream is journal-encoded with one commit cycle per
+    transaction (ccid = txn_id(JOSEQN)); cycles with ccid % 7 == 3 get
+    an RB control entry (their row entries must vanish), cycles with
+    ccid % 11 == 5 get NO control entry (unterminated — held back), the
+    rest get CM.
     The normalizer's per-op output must equal the oracle's closed-form
     filter of the original stream."""
     rows = to_ibmi_journal(synthesize_cdc_flat(spark, sf_dir)).withColumn(
-        "JOCCID", F.floor(F.col("JOSEQN") / 100).cast("long")
+        "JOCCID", txn_id(F.col("JOSEQN"))
     )
     verdict = F.when(F.pmod(F.col("JOCCID"), F.lit(7)) == 3, "RB").otherwise(
         "CM"
@@ -744,17 +745,17 @@ def ibmi_commitment_control_q(spark, sf_dir: str) -> DataFrame:
     )
     return _per_op(
         env,
-        F.countDistinct(F.floor(F.col("seq") / 100)).alias("n_cycles"),
+        F.countDistinct(txn_id(F.col("seq"))).alias("n_cycles"),
         _sum_cents("after"),
     )
 
 
 ORACLES["ibmi_commitment_control"] = _CDC_FLAT_SQL + f"""
     SELECT op, count(*) AS n_events,
-           count(DISTINCT seq // 100) AS n_cycles,
+           count(DISTINCT {sql_txn_id("seq")}) AS n_cycles,
            {_sql_sum_cents("after")}
     FROM cdc
-    WHERE (seq // 100) % 7 <> 3 AND (seq // 100) % 11 <> 5
+    WHERE ({sql_txn_id("seq")}) % 7 <> 3 AND ({sql_txn_id("seq")}) % 11 <> 5
     GROUP BY op ORDER BY op
 """
 QUERIES["ibmi_commitment_control"] = ibmi_commitment_control_q

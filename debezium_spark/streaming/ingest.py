@@ -44,6 +44,7 @@ from debezium_spark.cdc.envelope import synthesize_cdc_flat
 from debezium_spark.cdc.materialize import ORACLES as _MAT_ORACLES
 from debezium_spark.cdc.materialize import latest_state
 from debezium_spark.functions.rounding import round_half_up, sql_to_units, to_units
+from debezium_spark.functions.tokens import content_md5, sql_content_md5
 from debezium_spark.operators.analytics import SESSION_GAP_MIN
 from debezium_spark.sources.tables import load_table
 
@@ -342,9 +343,8 @@ def stream_dedup_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     on purpose."""
 
     def build(docs: DataFrame) -> DataFrame:
-        norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
         return docs.select(
-            F.md5(norm).alias("content_md5")
+            content_md5(F.col("text")).alias("content_md5")
         ).dropDuplicates(["content_md5"])
 
     def finish(unique: DataFrame) -> DataFrame:
@@ -360,10 +360,9 @@ def stream_dedup_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                          table="documents", parts=(4, 3))
 
 
-ORACLES["stream_dedup_documents"] = """
+ORACLES["stream_dedup_documents"] = f"""
     WITH u AS (
-        SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                           'g')) AS content_md5
+        SELECT DISTINCT {sql_content_md5("text")} AS content_md5
         FROM documents)
     SELECT CAST(count(*) AS BIGINT) AS n_unique,
            CAST(sum(CAST(('0x' || substr(content_md5, 1, 15)) AS BIGINT)

@@ -1,12 +1,19 @@
 """Envelope synthesis + materialization invariants (SURVEY §5)."""
 
+import duckdb
 import pyspark.sql.functions as F
 import pytest
 
 from debezium_spark.cdc.envelope import (
+    is_deleted,
+    n_versions,
+    sql_is_deleted,
+    sql_n_versions,
+    sql_txn_id,
     synthesize_cdc_envelope,
     synthesize_cdc_flat,
     synthesize_snapshot_flat,
+    txn_id,
 )
 from debezium_spark.cdc.materialize import (
     incremental_snapshot_merge,
@@ -28,6 +35,29 @@ def test_event_counts_match_generation_rule(cdc, spark, sf_dir):
     assert per_key.count() == n_orders  # every key emits events
     counts = {r["count"] for r in per_key.collect()}
     assert counts <= {1, 2, 3, 4}  # 1..3 versions + optional delete
+
+
+def test_generation_law_matches_duckdb(spark):
+    # each rule of the law against its DuckDB twin, up to keys whose
+    # product with the Knuth multiplier nears the BIGINT limit
+    keys = [1, 2, 3, 7, 99, 100, 101, 199, 10**6 + 3, 3 * 10**9 + 11]
+    rows = [(k,) for k in keys]
+    k = F.col("k")
+    got = sorted(
+        tuple(r)
+        for r in spark.createDataFrame(rows, "k long")
+        .select("k", n_versions(k), is_deleted(k), txn_id(k))
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (k BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?)", rows)
+    want = con.execute(
+        f"SELECT k, {sql_n_versions('k')}, {sql_is_deleted('k')},"
+        f" {sql_txn_id('k')} FROM t ORDER BY k"
+    ).fetchall()
+    assert got == want
+    assert {nv for _, nv, _, _ in got} == {1, 2, 3}
 
 
 def test_ops_well_formed(cdc):

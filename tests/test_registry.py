@@ -5,22 +5,48 @@ import ast
 import pathlib
 import re
 
+import pytest
+
 import __spark_entry__ as entry
 
 PKG = pathlib.Path(entry.__file__).parent / "debezium_spark"
 
 
-def _sites(pattern: str) -> list[str]:
-    """`path:line` of every match of the regex `pattern` in the package
-    source, code, comments and SQL strings alike; `\\s+` in it also
-    spans line breaks."""
+def _sites(needle: str | float) -> list[str]:
+    """`path:line` of every match of `needle` in the package source: a
+    float matches equal number literals, a string is a regex matched
+    against code, comments and SQL strings alike (`\\s+` in it also
+    spans line breaks)."""
     out = []
     for path in sorted(PKG.rglob("*.py")):
         text = path.read_text()
-        for m in re.finditer(pattern, text):
-            line = text.count("\n", 0, m.start()) + 1
-            out.append(f"{path.relative_to(PKG)}:{line}")
+        if isinstance(needle, float):
+            lines = [
+                node.lineno for node in ast.walk(ast.parse(text))
+                if isinstance(node, ast.Constant) and node.value == needle
+            ]
+        else:
+            lines = [
+                text.count("\n", 0, m.start()) + 1
+                for m in re.finditer(needle, text)
+            ]
+        out.extend(f"{path.relative_to(PKG)}:{n}" for n in lines)
     return out
+
+
+def _lines_of(owner: str) -> set[str]:
+    """`path:line` of every line of `owner`, a module path or a
+    `path::function` of that module."""
+    path, _, fn = owner.partition("::")
+    text = (PKG / path).read_text()
+    span = range(1, text.count("\n") + 2)
+    if fn:
+        node = next(
+            n for n in ast.parse(text).body
+            if isinstance(n, ast.FunctionDef) and n.name == fn
+        )
+        span = range(node.lineno, node.end_lineno + 1)
+    return {f"{path}:{n}" for n in span}
 
 
 def test_every_query_has_an_oracle():
@@ -50,52 +76,39 @@ def test_modules_register_in_one_dict_pair():
         assert extra == [], (mod.__name__, extra)
 
 
-def test_rounding_nudge_lives_in_one_module():
-    # both twins of the nudge, the Spark helpers and the DuckDB builders
-    # every oracle calls, are written once, in functions/rounding.py:
-    # no other module holds it as a number or inside SQL text
-    literals = [
-        f"{path.relative_to(PKG)}:{node.lineno}"
-        for path in sorted(PKG.rglob("*.py"))
-        for node in ast.walk(ast.parse(path.read_text()))
-        if isinstance(node, ast.Constant) and node.value == 1e-9
-    ]
-    sites = literals + _sites(r"1e-0?9")
-    assert sites
-    assert all(s.startswith("functions/rounding.py:") for s in sites), sites
-
-
-def test_tokenizer_and_hash_live_in_one_module():
-    # the Spark tokenizer, its DuckDB twin and the md5-60 hash are
-    # written once, in functions/tokens.py
-    spellings = {
-        "spark tokenizer": ("F.split(F.trim(",),
-        "sql tokenizer": ("string_split_regex(trim(text)",),
-        "md5-60": (
-            "F.conv(F.substring(F.md5(",
-            "conv(substring(md5(",
-            "'0x' || substr(md5(",
+# Every rule both engines must compute alike is written once, by one
+# owner that holds its Spark side and its DuckDB twin: (needles, owner).
+# A string needle is a regex over code, comments and SQL text alike.
+RULES = {
+    "rounding-nudge": ((1e-9, r"1e-0?9"), "functions/rounding.py"),
+    "tokenizer-md5-60": (
+        (
+            re.escape("F.split(F.trim("),
+            re.escape("string_split_regex(trim(text)"),
+            r"(F\.)?conv\((F\.)?substring\((F\.)?md5\(",
+            re.escape("'0x' || substr(md5("),
         ),
-    }
-    for what, needles in spellings.items():
-        sites = _sites("|".join(map(re.escape, needles)))
-        assert sites, what
-        assert all(s.startswith("functions/tokens.py:") for s in sites), (
-            what, sites,
-        )
+        "functions/tokens.py",
+    ),
+    "latest-state": (
+        (r"(?i)ORDER\s+BY\s+seq\s+DESC",),
+        "cdc/materialize.py::sql_latest_state",
+    ),
+    "generation-law": ((r"40503", r"1700000000000"), "cdc/envelope.py"),
+    "knuth32": ((r"2654435761",), "functions/tokens.py"),
+    "content-md5": (
+        (re.escape("F.lower(F.trim("), re.escape("lower(trim(")),
+        "functions/tokens.py",
+    ),
+    "txn-id": ((r"//\s*100\b", r"/\s*100\)"), "cdc/envelope.py"),
+}
 
 
-def test_latest_state_rule_lives_in_one_function():
-    # the max-seq-wins order is spelled in SQL once, by
-    # materialize.sql_latest_state; every oracle calls it
-    path = PKG / "cdc" / "materialize.py"
-    fn = next(
-        node for node in ast.parse(path.read_text()).body
-        if isinstance(node, ast.FunctionDef) and node.name == "sql_latest_state"
-    )
-    own = {
-        f"cdc/materialize.py:{n}" for n in range(fn.lineno, fn.end_lineno + 1)
-    }
-    sites = _sites(r"(?i)ORDER\s+BY\s+seq\s+DESC")
-    assert sites
-    assert set(sites) <= own, sites
+@pytest.mark.parametrize("rule", RULES)
+def test_rule_has_one_owner(rule):
+    needles, owner = RULES[rule]
+    own = _lines_of(owner)
+    for needle in needles:
+        sites = _sites(needle)
+        assert sites, needle
+        assert set(sites) <= own, (needle, sites)

@@ -7,7 +7,11 @@ from collections import Counter
 import duckdb
 import pytest
 
+from pyspark.sql import functions as F
+
 from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams
+from debezium_spark.functions.tokens import content_md5, knuth32
+from debezium_spark.functions.tokens import sql_content_md5, sql_knuth32
 
 LONG = " ".join(f"w{i % 7}" for i in range(25))  # repeated grams
 DOCS = [
@@ -67,3 +71,31 @@ def test_h60_matches_duckdb(spark):
     want = dict(con.execute(f"SELECT i, {sql_h60('t')} FROM t").fetchall())
     assert got == want
     assert all(0 <= h < 1 << 60 for h in got.values())
+
+
+def test_content_md5_and_knuth32_match_duckdb(spark):
+    rows = [(i, t) for i, t in DOCS] + [
+        (2**31 + 5, "  Same\tText  "), (3 * 10**9 + 11, "same text"),
+    ]
+    got = {
+        r["i"]: (r["md5"], r["k32"])
+        for r in spark.createDataFrame(rows, "i long, text string")
+        .select(
+            "i",
+            content_md5(F.col("text")).alias("md5"),
+            knuth32(F.col("i")).alias("k32"),
+        )
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (i BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    want = {
+        i: (m, k)
+        for i, m, k in con.execute(
+            f"SELECT i, {sql_content_md5('text')}, {sql_knuth32('i')} FROM docs"
+        ).fetchall()
+    }
+    assert got == want
+    assert got[2**31 + 5][0] == got[3 * 10**9 + 11][0]  # case, tabs, runs
+    assert all(0 <= k < 2**32 for _, k in got.values())

@@ -12,8 +12,8 @@ Floats are compared through repr of round(9) to surface any
 representation drift *before* the real gate does.
 
 Just before the final `N ok, M fail` line it prints one JSON line,
-`{name: {"ok", "rows", "plan", "oracle", "result"}}`, that two runs can
-diff:
+`{name: {"ok", "rows", "plan", "oracle", "result", "persisted"}}`, that
+two runs can diff:
 `plan` is the first 16 hex digits of the sha256 of the optimized
 logical plan with its run-specific ids, lambda variable suffixes and
 temp paths blanked, and with each line that carries the group order of
@@ -23,7 +23,10 @@ digest of the entry's oracle SQL text; `result` is the same digest of
 what that SQL returned: its Arrow schema and its canonical rows (the
 sorted, normalized cells the value comparison uses). So a rewrite of
 an oracle's text shows as a changed `oracle` beside an unchanged
-`result`.
+`result`. `persisted` is the number of RDDs still persisted once the
+entry's rows are collected, read before the next entry's
+`clearCache()`, so a cache an entry leaks shows in the record instead
+of being wiped unseen.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -149,7 +152,7 @@ def main():
             continue
         record[name] = {
             "ok": False, "rows": None, "plan": None, "oracle": None,
-            "result": None,
+            "result": None, "persisted": None,
         }
         if name not in oracles:
             print(f"FAIL  {name}: no oracle")
@@ -162,7 +165,10 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            record[name].update(rows=len(srows), plan=plan_digest(sdf))
+            record[name].update(
+                rows=len(srows), plan=plan_digest(sdf),
+                persisted=spark.sparkContext._jsc.getPersistentRDDs().size(),
+            )
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
