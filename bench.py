@@ -15,7 +15,9 @@ The next-to-last stdout line is the layer record, `{"layers": {sf:
 the second trial's shuffle-write and spill bytes, and the RDDs still
 persisted once both trials ran (cleared before the next query). The
 last line is the summary: `value` is the sum over the queries of the
-best trial's `build_s + exec_s` at $SPARK_GRAFT_SF_DIR.
+best trial's `build_s + exec_s` at $SPARK_GRAFT_SF_DIR, with the run's
+`cores`, its `peak_rss_mb` (driver JVM plus this process, read before
+the session stops) and the driver's collector names (`gc`).
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ import json
 import os
 import time
 
-from perfbench.probes import StageMeter, catalyst_ms, noop, wait_jit_idle
+from perfbench.probes import StageMeter, catalyst_ms, noop, peak_rss_mb, wait_jit_idle
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -115,11 +117,19 @@ def record(spark, query, sf_dir: str) -> dict:
     return rec
 
 
-def summary(records: dict, sf: float, cores: int) -> dict:
+def run_info(spark) -> dict:
+    """The session's cores, peak RSS so far and driver collectors."""
+    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    return {"cores": spark.sparkContext.defaultParallelism,
+            "peak_rss_mb": round(peak_rss_mb(spark)),
+            "gc": sorted(bean.getName() for bean in beans)}
+
+
+def summary(records: dict, sf: float, run: dict) -> dict:
     times = {name: round(min(map(sum, zip(rec["build_s"], rec["exec_s"]))), 3)
              for name, rec in records.items()}
     return {"metric": "total_runtime", "value": round(sum(times.values()), 3),
-            "unit": "sec", "queries": times, "sf": sf, "cores": cores}
+            "unit": "sec", "queries": times, "sf": sf, **run}
 
 
 def main() -> None:
@@ -139,10 +149,10 @@ def main() -> None:
     for name in HEADLINE:
         for sf, d in dirs.items():
             layers[sf][name] = record(spark, qs[name], d)
-    cores = spark.sparkContext.defaultParallelism
+    run = run_info(spark)
     spark.stop()
     print(json.dumps({"layers": layers}))
-    print(json.dumps(summary(layers[str(sf_of(sf_dir))], sf_of(sf_dir), cores)))
+    print(json.dumps(summary(layers[str(sf_of(sf_dir))], sf_of(sf_dir), run)))
 
 
 if __name__ == "__main__":

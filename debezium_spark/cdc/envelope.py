@@ -25,9 +25,10 @@ Generation rule per source row with key k = o_orderkey:
   before.o_totalprice = previous version's value (NULL for creates)
   txn(seq)  = seq div 100                        -- transaction.id
 
-This module owns both twins of each rule: `n_versions`, `is_deleted`
-and `txn_id` have their DuckDB builders (`sql_*`) beside them, which
-every oracle uses, so no rule is written anywhere else.
+This module owns both twins of each rule: `n_versions`, `is_deleted`,
+`event_seq` (with its inverse `seq_version`) and `txn_id` have their
+DuckDB builders (`sql_*`) beside them, which every oracle uses, so no
+rule is written anywhere else.
 """
 
 from __future__ import annotations
@@ -52,6 +53,16 @@ def is_deleted(k: Column) -> Column:
     return (k * F.lit(DEL_MULT)) % F.lit(10) == F.lit(0)
 
 
+def event_seq(k: Column, v: Column) -> Column:
+    """The sequence number (LSN) of version `v` of key `k`."""
+    return k * F.lit(10) + v
+
+
+def seq_version(seq: Column, k: Column) -> Column:
+    """Inverse of `event_seq`: the version of key `k`'s event at `seq`."""
+    return seq - k * F.lit(10)
+
+
 def txn_id(seq: Column) -> Column:
     """The transaction of the event at `seq`: 100 seqs per transaction."""
     return F.floor(seq / 100).cast("long")
@@ -65,6 +76,16 @@ def sql_n_versions(k: str) -> str:
 def sql_is_deleted(k: str) -> str:
     """DuckDB twin of `is_deleted` over the SQL expression `k`."""
     return f"(({k} * {DEL_MULT}) % 10 = 0)"
+
+
+def sql_event_seq(k: str, v: str) -> str:
+    """DuckDB twin of `event_seq` over the SQL expressions `k` and `v`."""
+    return f"{k} * 10 + {v}"
+
+
+def sql_seq_version(seq: str, k: str) -> str:
+    """DuckDB twin of `seq_version` over the SQL expressions `seq` and `k`."""
+    return f"{seq} - {k} * 10"
 
 
 def sql_txn_id(seq: str) -> str:
@@ -92,7 +113,7 @@ def synthesize_cdc_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(v <= nvc, F.lit("u"))
         .otherwise(F.lit("d"))
     )
-    seq = k * F.lit(10) + v
+    seq = event_seq(k, v)
     return df.select(
         k.alias("key"),
         op.alias("op"),
@@ -196,8 +217,8 @@ CDC_FLAT_SQL = f"""
     ), cdc AS (
         SELECT key,
                CASE WHEN v = 1 THEN 'c' WHEN v <= nv THEN 'u' ELSE 'd' END AS op,
-               key * 10 + v AS seq,
-               {TS_EPOCH_MS} + key * 10 + v AS ts_ms,
+               {sql_event_seq("key", "v")} AS seq,
+               {TS_EPOCH_MS} + {sql_event_seq("key", "v")} AS ts_ms,
                CASE WHEN v = 1 THEN NULL
                     WHEN v > nv THEN o_totalprice + nv
                     ELSE o_totalprice + v - 1 END AS before_totalprice,

@@ -13,13 +13,14 @@ from primitives (the test image has no Delta jars).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from debezium_spark.cdc.envelope import CDC_FLAT_SQL, SNAPSHOT_CTE_SQL, TS_EPOCH_MS
 from debezium_spark.cdc.envelope import synthesize_cdc_flat, synthesize_snapshot_flat
-from debezium_spark.cdc.envelope import is_deleted, n_versions, txn_id
-from debezium_spark.cdc.envelope import sql_is_deleted, sql_n_versions, sql_txn_id
+from debezium_spark.cdc.envelope import event_seq, is_deleted, n_versions, seq_version, txn_id
+from debezium_spark.cdc.envelope import sql_event_seq, sql_is_deleted, sql_n_versions
+from debezium_spark.cdc.envelope import sql_seq_version, sql_txn_id
 from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 
@@ -164,15 +165,31 @@ def cdc_snapshot_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # when the live log already produced an event for that key inside the
 # window (seq >= W(c)) — the stream is authoritative there.
 #   chunk(k) = k / 1000,  W(c) = c*10000 + 5000
+# The chunk builders and their DuckDB twins below are the rule's only
+# spelling; cdc/signals.py's chunk re-read uses them too.
 # --------------------------------------------------------------------------
 CHUNK_SIZE = 1000
 CHUNK_SEQ_SPAN = 10000
 WATERMARK_OFFSET = 5000
 
 
+def chunk_of(key: Column) -> Column:
+    """The snapshot chunk of `key`."""
+    return (key / CHUNK_SIZE).cast("long")
+
+
+def sql_chunk_of(key: str) -> str:
+    """DuckDB twin of `chunk_of` over the SQL expression `key` (> 0)."""
+    return f"{key} // {CHUNK_SIZE}"
+
+
+def sql_watermark(key: str) -> str:
+    """DuckDB twin of the watermark W(chunk_of(key))."""
+    return f"({sql_chunk_of(key)}) * {CHUNK_SEQ_SPAN} + {WATERMARK_OFFSET}"
+
+
 def incremental_snapshot_merge(snapshot: DataFrame, stream: DataFrame) -> DataFrame:
-    chunk = (F.col("key") / CHUNK_SIZE).cast("long")
-    watermark = chunk * CHUNK_SEQ_SPAN + WATERMARK_OFFSET
+    watermark = chunk_of(F.col("key")) * CHUNK_SEQ_SPAN + WATERMARK_OFFSET
 
     # single aggregation pass over the stream: per-key high watermark
     # + last state via max_by — ONE shuffle total (the old shape was a
@@ -368,11 +385,11 @@ ORACLES: dict[str, str] = {
             SELECT s.key, s.after_totalprice AS o_totalprice, 'snapshot' AS origin
             FROM snap s LEFT JOIN stream_max m ON s.key = m.key
             WHERE m.max_seq IS NULL
-               OR m.max_seq < (s.key // 1000) * 10000 + 5000
+               OR m.max_seq < {sql_watermark("s.key")}
             UNION ALL
             SELECT l.key, l.o_totalprice, 'stream' AS origin
             FROM live l JOIN stream_max m ON l.key = m.key
-            WHERE m.max_seq >= (l.key // 1000) * 10000 + 5000
+            WHERE m.max_seq >= {sql_watermark("l.key")}
         )
         SELECT origin, count(*) AS n, round(sum(o_totalprice), 2) AS sum_totalprice
         FROM merged GROUP BY origin ORDER BY origin
@@ -515,10 +532,11 @@ def dedupe_redelivered(delivered: DataFrame) -> DataFrame:
 def cdc_redelivery_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simulated at-least-once redelivery, then position-keyed dedup:
     per op, the delivered count vs the effectively-once count.
-    Redelivery predicate is seq % 5 == 1: seq = key*10 + v with
-    v ∈ 1..4, so seq % 5 == v % 5 — the original % 5 == 0 predicate
-    could NEVER fire (a vacuous simulation caught by the round-5
-    invariant test); % 5 == 1 redelivers every create event."""
+    Redelivery predicate is seq % 5 == 1: seq = event_seq(key, v) is
+    a multiple of 10 plus v ∈ 1..4, so seq % 5 == v % 5 — the original
+    % 5 == 0 predicate could NEVER fire (a vacuous simulation caught by
+    the round-5 invariant test); % 5 == 1 redelivers every create
+    event."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
     delivered = cdc.unionByName(cdc.filter(F.pmod(F.col("seq"), F.lit(5)) == 1))
     deduped = dedupe_redelivered(delivered)
@@ -561,7 +579,7 @@ def cdc_pk_update_rekey_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — nothing new at scale."""
     cdc = synthesize_cdc_flat(spark, sf_dir)
     k = F.col("key")
-    v = F.col("seq") - k * 10
+    v = seq_version(F.col("seq"), k)
     rekey = (
         (F.pmod(k, F.lit(REKEY_MOD)) == 0) & (~is_deleted(k)) & (v == n_versions(k))
     )
@@ -599,7 +617,7 @@ ORACLES["cdc_pk_update_rekey"] = CDC_FLAT_SQL + f"""
         SELECT *,
                {sql_n_versions("key")} AS nv,
                {sql_is_deleted("key")} AS is_del,
-               seq - key * 10 AS v
+               {sql_seq_version("seq", "key")} AS v
         FROM cdc),
     rekeyed AS (
         SELECT key, op, seq * 2 AS seq, after_totalprice
@@ -787,7 +805,7 @@ def cdc_pit_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = o.select(
         F.col("o_orderkey").alias("p_key"),
         F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("off"),
-    ).withColumn("probe_seq", F.col("p_key") * 10 + F.col("off"))
+    ).withColumn("probe_seq", event_seq(F.col("p_key"), F.col("off")))
     j = pit_join(hist, probes)
     return (
         j.groupBy("off")
@@ -809,7 +827,7 @@ ORACLES["cdc_pit_join"] = CDC_FLAT_SQL + f"""
         FROM cdc QUALIFY op <> 'd'
     ), probes AS (
         SELECT o_orderkey AS p_key, unnest([1, 2, 3]) AS off,
-               o_orderkey * 10 + unnest([1, 2, 3]) AS probe_seq
+               {sql_event_seq("o_orderkey", "unnest([1, 2, 3])")} AS probe_seq
         FROM orders
     )
     SELECT off, count(*) AS n_probes,

@@ -19,20 +19,21 @@ covered by tests (signal parsing is metadata-scale work).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SIGNAL_SCHEMA = "signal_id string, type string, data string"
 
 from debezium_spark.cdc.envelope import SNAPSHOT_CTE_SQL  # noqa: E402
+from debezium_spark.cdc.materialize import chunk_of, sql_chunk_of  # noqa: E402
 
 ORACLES: dict[str, str] = {
     "cdc_signal_snapshot": f"""
     WITH {SNAPSHOT_CTE_SQL}
-        SELECT key // 1000 AS chunk, count(*) AS n,
+        SELECT {sql_chunk_of("key")} AS chunk, count(*) AS n,
                round(sum(after_totalprice), 2) AS sum_totalprice
         FROM snap
-        WHERE key // 1000 IN (0, 2)
+        WHERE {sql_chunk_of("key")} IN (0, 2)
         GROUP BY chunk ORDER BY chunk
     """,
 }
@@ -60,9 +61,7 @@ def snapshot_chunks_requested(signals: DataFrame) -> DataFrame:
     )
 
 
-def execute_snapshot(
-    snapshot: DataFrame, signals: DataFrame, chunk_size: int = 1000
-) -> DataFrame:
+def execute_snapshot(snapshot: DataFrame, signals: DataFrame) -> DataFrame:
     """Re-read exactly the snapshot chunks named by the signals
     (Debezium ad-hoc incremental snapshot).
 
@@ -78,8 +77,7 @@ def execute_snapshot(
     chunk_ids = sorted({r["chunk"] for r in chunk_rows})
     if not chunk_ids:
         return snapshot.limit(0)
-    chunk = (F.col("key") / chunk_size).cast("long")
-    return snapshot.filter(chunk.isin(chunk_ids))
+    return snapshot.filter(chunk_of(F.col("key")).isin(chunk_ids))
 
 
 def cdc_signal_snapshot_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,9 +94,9 @@ def cdc_signal_snapshot_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         SIGNAL_SCHEMA,
     )
     snap = synthesize_snapshot_flat(spark, sf_dir)
-    reread = execute_snapshot(snap, signals, chunk_size=1000)
+    reread = execute_snapshot(snap, signals)
     return (
-        reread.withColumn("chunk", (F.col("key") / 1000).cast("long"))
+        reread.withColumn("chunk", chunk_of(F.col("key")))
         .groupBy("chunk")
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -11,8 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from debezium_spark.cdc.envelope import is_deleted, n_versions
-from debezium_spark.cdc.envelope import sql_is_deleted, sql_n_versions
+from debezium_spark.cdc.envelope import event_seq, is_deleted, n_versions
+from debezium_spark.cdc.envelope import sql_event_seq, sql_is_deleted, sql_n_versions
 from debezium_spark.cdc.materialize import latest_state, sql_latest_state
 from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
@@ -447,7 +447,7 @@ def cdc_document_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("v") <= F.col("nv"), "u")
         .otherwise("d")
         .alias("op"),
-        (F.col("doc_id") * 10 + F.col("v")).alias("seq"),
+        event_seq(F.col("doc_id"), F.col("v")).alias("seq"),
         # edits append a revision marker so each version's token
         # count differs — NULL image on deletes
         F.when(
@@ -491,7 +491,7 @@ ORACLES["cdc_document_pipeline"] = f"""
         SELECT doc_id, source,
                CASE WHEN v = 1 THEN 'c'
                     WHEN v <= nv THEN 'u' ELSE 'd' END AS op,
-               doc_id * 10 + v AS seq,
+               {sql_event_seq("doc_id", "v")} AS seq,
                CASE WHEN v <= nv
                     THEN text || ' rev' || CAST(v AS VARCHAR) END
                    AS after_text

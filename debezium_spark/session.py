@@ -5,11 +5,21 @@ be correct under `local[N]` *and* on a real cluster — AQE owns runtime
 partition coalescing and skew-join splitting, so the static
 `shuffle.partitions` is only an upper bound; broadcast threshold is
 left at Spark's default so dimension tables broadcast automatically.
+
+The driver JVM runs the Parallel ("throughput") collector unless the
+caller picks one. The JDK's default, G1, sizes its young generation to
+meet a pause-time goal: in a `cdc_stream_upsert` benchmark run (4
+cores, 3 GB heap) it grew young to ≈1.6 GB and the JVM peaked at ≈2.9
+GB RSS, so peak RSS followed eden rather than the CDC state. Under
+Parallel, which fixes the young generation at a third of the heap, the
+same run kept at most 165 MB in the old generation and the JVM peaked
+at ≈1.6 GB. Batch jobs do not need G1's short pauses.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -34,6 +44,13 @@ def get_spark(
       (SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override both).
     - Python UDF workers import this checkout: its root goes on the
       PYTHONPATH the JVM inherits when it starts.
+    - The driver JVM gets `-XX:+UseParallelGC` through
+      `spark.driver.defaultJavaOptions`, which Spark puts in front of
+      `spark.driver.extraJavaOptions`, unless the caller's
+      `spark.driver.extraJavaOptions` (in `extra_conf`) or
+      JAVA_TOOL_OPTIONS already select a collector: a JVM given two
+      will not start, and the caller's choice wins. A caller's own
+      `spark.driver.defaultJavaOptions` replaces this one.
     """
     paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
     if ROOT not in paths:
@@ -60,14 +77,19 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # RAM-backed shuffle/spill: the sandbox's shared disk is the
-        # contention point under local[32]; on a real cluster this
-        # maps to NVMe-backed local dirs per executor.
+        # RAM-backed shuffle/spill keeps the local-mode exchange off a
+        # shared disk; on a real cluster this maps to NVMe-backed local
+        # dirs per executor.
         .config(
             "spark.local.dir",
             os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    java_opts = " ".join((extra_conf.get("spark.driver.extraJavaOptions", ""),
+                          os.environ.get("JAVA_TOOL_OPTIONS", "")))
+    if not re.search(r"-XX:\+Use\w*GC\b", java_opts):
+        builder = builder.config("spark.driver.defaultJavaOptions", "-XX:+UseParallelGC")
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

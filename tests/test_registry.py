@@ -101,6 +101,15 @@ RULES = {
         "functions/tokens.py",
     ),
     "txn-id": ((r"//\s*100\b", r"/\s*100\)"), "cdc/envelope.py"),
+    "seq-law": (
+        (r"\*\s*(F\.lit\()?10\)?\s*\+", r"-\s*\S+\s*\*\s*(F\.lit\()?10\b"),
+        "cdc/envelope.py",
+    ),
+    "snapshot-chunk": (
+        (r"//\s*(1000\b|\{CHUNK_SIZE\})", r'key"?\)?\s*/\s*(1000|CHUNK_SIZE)\b',
+         r"\b5000\b"),
+        "cdc/materialize.py",
+    ),
 }
 
 

@@ -31,11 +31,11 @@ def test_snapshot_chunks_parsed(signals):
 
 def test_execute_snapshot_rereads_only_named_chunks(spark, sf_dir, signals):
     snap = synthesize_snapshot_flat(spark, sf_dir)
-    out = execute_snapshot(snap, signals, chunk_size=100)
+    out = execute_snapshot(snap, signals)
     keys = [r["key"] for r in out.collect()]
-    assert keys  # chunk 0/1 with size 100 → keys < 200
-    assert all(k < 200 for k in keys)
-    expect = snap.filter(F.col("key") < 200).count()
+    assert keys  # chunks 0/1 of CHUNK_SIZE 1000 → keys < 2000
+    assert all(k < 2000 for k in keys)
+    expect = snap.filter(F.col("key") < 2000).count()
     assert len(keys) == expect
 
 
