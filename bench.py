@@ -17,7 +17,9 @@ persisted once both trials ran (cleared before the next query). The
 last line is the summary: `value` is the sum over the queries of the
 best trial's `build_s + exec_s` at $SPARK_GRAFT_SF_DIR, with the run's
 `cores`, its `peak_rss_mb` (driver JVM plus this process, read before
-the session stops) and the driver's collector names (`gc`).
+the session stops), the driver's collector names (`gc`) and, per
+collector, its collections (`gc_collections`) and their summed time
+in ms (`gc_ms`) over the whole run.
 """
 
 from __future__ import annotations
@@ -118,11 +120,14 @@ def record(spark, query, sf_dir: str) -> dict:
 
 
 def run_info(spark) -> dict:
-    """The session's cores, peak RSS so far and driver collectors."""
+    """The session's cores, peak RSS so far, driver collectors and
+    each collector's collection count and total pause ms so far."""
     beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
     return {"cores": spark.sparkContext.defaultParallelism,
             "peak_rss_mb": round(peak_rss_mb(spark)),
-            "gc": sorted(bean.getName() for bean in beans)}
+            "gc": sorted(bean.getName() for bean in beans),
+            "gc_collections": {bean.getName(): bean.getCollectionCount() for bean in beans},
+            "gc_ms": {bean.getName(): bean.getCollectionTime() for bean in beans}}
 
 
 def summary(records: dict, sf: float, run: dict) -> dict:

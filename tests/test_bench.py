@@ -17,8 +17,10 @@ def test_record_and_summary(spark, sf_dir):
     line = bench.summary({"q6_forecast_revenue": rec}, bench.sf_of(sf_dir),
                          bench.run_info(spark))
     assert set(line) == {"metric", "value", "unit", "queries", "sf", "cores",
-                         "peak_rss_mb", "gc"}
+                         "peak_rss_mb", "gc", "gc_collections", "gc_ms"}
     assert line["peak_rss_mb"] > 0
     assert line["gc"] == ["PS MarkSweep", "PS Scavenge"]
+    for key in ("gc_collections", "gc_ms"):
+        assert sorted(line[key]) == line["gc"] and min(line[key].values()) >= 0
     assert line["sf"] == 0.001
     assert line["value"] == round(min(b + e for b, e in zip(rec["build_s"], rec["exec_s"])), 3)
