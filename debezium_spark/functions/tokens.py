@@ -22,8 +22,9 @@ identically in DuckDB, which is what keeps the hash pipelines
 exact-duplicate key `content_md5` and the Knuth hash `knuth32`.
 
 This module owns both twins of each rule: `SQL_WORDS` and the `sql_*`
-builders are the DuckDB spellings of `words()`, `h60`, `content_md5`
-and `knuth32`; every oracle uses them, so none is written elsewhere.
+builders are the DuckDB spellings of `words()`, `h60`, `content_md5`,
+`knuth32` and `word_ngrams` (`sql_word_ngrams`); every oracle uses
+them, so none is written elsewhere.
 """
 
 from __future__ import annotations
@@ -91,3 +92,15 @@ def word_ngrams(docs: DataFrame, n: int) -> DataFrame:
         " ", *[F.element_at("ws", F.col("i") + off) for off in range(n)]
     )
     return idx.select(*keep, "pos", gram.alias("gram"))
+
+
+def sql_word_ngrams(n: int, keep: str = "doc_id", source: str = "documents") -> str:
+    """DuckDB twin of `word_ngrams`: a SELECT of the `keep` columns, the
+    0-based `pos` and `gram` over the docs in the FROM clause `source`
+    (a table, optionally with a WHERE). Docs with fewer than n words
+    yield no rows."""
+    gram = " || ' ' || ".join(f"ws[pos + {off}]" for off in range(n))
+    return f"""
+        SELECT {keep}, pos - 1 AS pos, {gram} AS gram
+        FROM (SELECT {keep}, ws, unnest(range(1, len(ws) - {n - 1} + 1)) AS pos
+              FROM (SELECT {keep}, {SQL_WORDS} AS ws FROM {source}))"""

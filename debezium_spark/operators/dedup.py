@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from debezium_spark.functions import vectors
 from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
+from debezium_spark.functions.tokens import sql_word_ngrams
 from debezium_spark.functions.tokens import content_md5, sql_content_md5
 from debezium_spark.operators import similarity as sim
 from debezium_spark.sources.tables import load_table
@@ -31,7 +32,7 @@ NUM_BANDS = 16
 ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
 JACCARD_THRESHOLD = 0.5
 PAIR_SLICE = 300  # doc_id bound for the O(n²) exact-pair oracles
-SHINGLE_WORDS = 3  # words per shingle (the oracles spell out w[i..i+2])
+SHINGLE_WORDS = 3  # words per shingle
 CC_MAX_ITERS = 20  # safety rail on connected-components rounds
 
 
@@ -347,18 +348,11 @@ def dedup_embedding_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # md5/integer arithmetic present in both engines, so even the LSH
 # pipelines are fully oracle-verified (not rows-only).
 # ---------------------------------------------------------------------------
-def _sql_h60_shingles(where: str = "") -> str:
+def _sql_h60_shingles(source: str = "documents") -> str:
     return f"""
         sh AS (
-            SELECT DISTINCT doc_id,
-                   {sql_h60("s")} AS h
-            FROM (
-                SELECT doc_id,
-                       unnest(list_transform(range(1, greatest(len(w) - 1, 1)),
-                              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
-                FROM (SELECT doc_id, {SQL_WORDS} AS w
-                      FROM documents {where})
-            )
+            SELECT DISTINCT doc_id, {sql_h60("gram")} AS h
+            FROM ({sql_word_ngrams(SHINGLE_WORDS, source=source)})
         ), shh AS (SELECT doc_id, h, h % 4294967296 AS h32 FROM sh)
     """
 
@@ -420,7 +414,7 @@ def _sql_simhash() -> str:
         for i in range(SIMHASH_BITS)
     )
     return f"""
-        WITH {_sql_h60_shingles(f"WHERE doc_id < {PAIR_SLICE}")},
+        WITH {_sql_h60_shingles(f"documents WHERE doc_id < {PAIR_SLICE}")},
         sums AS (
             SELECT doc_id,
                {bit_sums}
@@ -440,11 +434,10 @@ def _sql_simhash() -> str:
 
 
 _SHINGLE_SQL = f"""
-        SELECT doc_id, unnest(list_distinct(
-                   list_transform(range(1, greatest(len(w) - 1, 1)),
-                                  i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS shingle
-        FROM (SELECT doc_id, {SQL_WORDS} AS w
-              FROM documents WHERE doc_id < 300)
+        SELECT DISTINCT doc_id, gram AS shingle
+        FROM ({sql_word_ngrams(
+            SHINGLE_WORDS, source=f"documents WHERE doc_id < {PAIR_SLICE}"
+        )})
 """
 
 ORACLES: dict[str, str] = {
@@ -754,14 +747,9 @@ ORACLES["dedup_substring_spans"] = f"""
     WITH toks AS (
         SELECT doc_id, {SQL_WORDS} AS w
         FROM documents),
-    w_pos AS (
-        SELECT doc_id, w,
-               unnest(range(1, len(w) - {SPAN_L - 2})) AS pos
-        FROM toks),
     wins AS (
-        SELECT doc_id, pos,
-               array_to_string(w[pos:pos + {SPAN_L - 1}], ' ') AS wt
-        FROM w_pos),
+        SELECT doc_id, pos, gram AS wt
+        FROM ({sql_word_ngrams(SPAN_L)})),
     ranked AS (
         SELECT doc_id, pos,
                row_number() OVER (PARTITION BY md5(wt)

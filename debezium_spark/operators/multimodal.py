@@ -13,6 +13,13 @@ Two decode paths exist:
   decode; swapping it for a PIL/librosa call is the only change
   needed in production.
 
+Every quantity the synthetic media derive from a document (kind,
+frame count, image size and pixels, clip length, sample rate and
+samples) is one formula of `MEDIA_LAW`: `MEDIA_FN` holds it as a
+Python function (of ints in the encoders, of Columns in
+`synthesize_media`) and `sql_media`/`sql_media_kind`/`sql_media_docs`
+are its DuckDB twins, so the oracles spell none of it out.
+
 Scale notes: media blobs ride in their own column so Parquet column
 pruning skips them unless the plan touches them; mapInPandas streams
 Arrow batches (no per-row pickling) and the decode stage is a narrow
@@ -22,6 +29,7 @@ spark.sql.files.maxPartitionBytes, which matters when blobs are MBs.
 
 from __future__ import annotations
 
+import re
 import struct
 from collections.abc import Iterator
 
@@ -44,14 +52,66 @@ FEATURE_SCHEMA = T.StructType(
     ]
 )
 
+# The synthetic-media law, each formula written once. They use only the
+# integer arithmetic Python and DuckDB share (+, -, *, % and // over
+# non-negative operands, with the same precedence), so one text serves
+# both engines.
+MEDIA_KINDS = ("image", "audio", "video")  # indexed by the "kind" formula
+MEDIA_LAW = {
+    "kind": "doc_id % 3",
+    "n_frames": "n_chars % 100 + 1",  # video
+    "width": "n_chars % 16 + 4",  # BMP image
+    "height": "n_chars % 12 + 4",
+    "red": "(x * 7 + y * 13 + doc_id) % 256",
+    "green": "(x * 3 + y * 5 + 2 * doc_id) % 256",
+    "blue": "(x * 11 + y + 3 * doc_id) % 256",
+    "n_samples": "n_chars % 256 + 16",  # PCM16 WAV clip
+    "sample_rate": "8000 + n_chars % 8 * 500",
+    "sample": "(i * 37 + doc_id * 11) % 65536 - 32768",
+}
+_VAR = r"[a-z_]+"  # a variable of a MEDIA_LAW formula
+# Each formula as a Python function of its variables, passed by keyword
+# (ints, or Spark Columns).
+MEDIA_FN = {
+    name: eval(f"lambda *, {', '.join(set(re.findall(_VAR, f)))}: {f}")
+    for name, f in MEDIA_LAW.items()
+}
+_CHANNELS = ("red", "green", "blue")
+
+
+def media_kind(doc_id: int) -> str:
+    """The kind of media a document is synthesized as."""
+    return MEDIA_KINDS[MEDIA_FN["kind"](doc_id=doc_id)]
+
+
+def sql_media(name: str, **exprs: str) -> str:
+    """DuckDB twin of `MEDIA_FN`: MEDIA_LAW[name] over the SQL `exprs`
+    given for its variables; any other variable is the column of its
+    name."""
+    sql = re.sub(_VAR, lambda m: f"({exprs.get(m[0], m[0])})", MEDIA_LAW[name])
+    return f"({sql})"
+
+
+def sql_media_kind() -> str:
+    """DuckDB twin of `media_kind` over the `doc_id` column."""
+    kinds = ", ".join(f"'{k}'" for k in MEDIA_KINDS)
+    return f"[{kinds}][{sql_media('kind')} + 1]"
+
+
+def sql_media_docs(kind: str, **cols: str) -> str:
+    """DuckDB twin of the documents synthesized as `kind`: doc_id and,
+    as INT, the MEDIA_LAW quantity each of `cols` (alias=name) names."""
+    sel = "".join(f", CAST({sql_media(q)} AS INT) AS {a}" for a, q in cols.items())
+    return f"SELECT doc_id{sel} FROM documents WHERE {sql_media_kind()} = '{kind}'"
+
 
 def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fake media table derived from documents: payload
     = md5-stretched bytes of the text, metadata from doc stats."""
     d = load_table(spark, sf_dir, "documents")
     kind = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
+        F.array(*map(F.lit, MEDIA_KINDS)),
+        (MEDIA_FN["kind"](doc_id=F.col("doc_id")) + 1).cast("int"),
     )
     return d.select(
         F.col("doc_id").alias("media_id"),
@@ -61,7 +121,9 @@ def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_chars") % 640 + 1).cast("int").alias("width"),
             (F.col("n_chars") % 480 + 1).cast("int").alias("height"),
             F.lit(16000).alias("sample_rate"),
-            (F.col("n_chars") % 100 + 1).cast("int").alias("n_frames"),
+            MEDIA_FN["n_frames"](n_chars=F.col("n_chars"))
+            .cast("int")
+            .alias("n_frames"),
         ).alias("meta"),
     )
 
@@ -147,7 +209,7 @@ def _sql_media_stats() -> str:
     return f"""
         WITH m AS (
             SELECT doc_id,
-                   ['image','audio','video'][(doc_id % 3) + 1] AS kind,
+                   {sql_media_kind()} AS kind,
                    md5(text) AS h
             FROM documents
         )
@@ -181,13 +243,12 @@ def media_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["media_frame_sample"] = """
-        SELECT doc_id AS media_id,
-               CAST(n_chars % 100 + 1 AS INT) AS n_frames,
-               CAST((n_chars % 100) // 10 + 1 AS BIGINT) AS n_sampled,
+ORACLES["media_frame_sample"] = f"""
+        SELECT doc_id AS media_id, n_frames,
+               CAST((n_frames - 1) // 10 + 1 AS BIGINT) AS n_sampled,
                CAST(0 AS INT) AS first_idx,
-               CAST(((n_chars % 100) // 10) * 10 AS INT) AS last_idx
-        FROM documents WHERE doc_id % 3 = 2
+               CAST((n_frames - 1) // 10 * 10 AS INT) AS last_idx
+        FROM ({sql_media_docs("video", n_frames="n_frames")})
         ORDER BY media_id
     """
 QUERIES["media_frame_sample"] = media_frame_sample_q
@@ -232,14 +293,11 @@ def _write_bmp(w: int, h: int, pixel) -> bytes:
 
 def encode_bmp(doc_id: int, n_chars: int) -> bytes:
     """A real BMP whose pixels are closed-form in (x, y, doc_id)."""
+    channels = [MEDIA_FN[c] for c in _CHANNELS]
     return _write_bmp(
-        n_chars % 16 + 4,
-        n_chars % 12 + 4,
-        lambda x, y: (
-            (x * 7 + y * 13 + doc_id) % 256,
-            (x * 3 + y * 5 + 2 * doc_id) % 256,
-            (x * 11 + y + 3 * doc_id) % 256,
-        ),
+        MEDIA_FN["width"](n_chars=n_chars),
+        MEDIA_FN["height"](n_chars=n_chars),
+        lambda x, y: [f(x=x, y=y, doc_id=doc_id) for f in channels],
     )
 
 
@@ -285,9 +343,10 @@ def decode_bmp(payload: bytes) -> tuple[int, int, float, int]:
 def encode_wav(doc_id: int, n_chars: int) -> bytes:
     """Build a real RIFF/WAVE file: fmt chunk (PCM, mono, 16-bit) +
     data chunk of little-endian int16 samples."""
-    n = n_chars % 256 + 16
-    sr = 8000 + (n_chars % 8) * 500
-    samples = [((i * 37 + doc_id * 11) % 65536) - 32768 for i in range(n)]
+    n = MEDIA_FN["n_samples"](n_chars=n_chars)
+    sr = MEDIA_FN["sample_rate"](n_chars=n_chars)
+    sample = MEDIA_FN["sample"]
+    samples = [sample(i=i, doc_id=doc_id) for i in range(n)]
     data = struct.pack(f"<{n}h", *samples)
     fmt = struct.pack("<HHIIHH", 1, 1, sr, sr * 2, 2, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
@@ -344,21 +403,19 @@ _DECODE_SCHEMA = T.StructType(
 
 def encode_real_media(docs: DataFrame) -> DataFrame:
     """documents(doc_id, n_chars) -> (media_id, kind, payload) with
-    genuine BMP/WAV bytes. doc_id % 3 == 0 -> image, == 1 -> audio
-    (the same kind mapping synthesize_media uses); video rows are out
-    of scope for the byte-level decoders and excluded here."""
-    src = docs.filter(F.col("doc_id") % 3 < 2).select("doc_id", "n_chars")
+    genuine BMP/WAV bytes for the image and audio documents (the kinds
+    synthesize_media gives them); video rows are out of scope for the
+    byte-level decoders and excluded here."""
+    kind = MEDIA_FN["kind"](doc_id=F.col("doc_id"))
+    src = docs.filter(kind < MEDIA_KINDS.index("video")).select("doc_id", "n_chars")
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             kinds, payloads = [], []
             for d, c in zip(pdf["doc_id"], pdf["n_chars"]):
-                if d % 3 == 0:
-                    kinds.append("image")
-                    payloads.append(encode_bmp(int(d), int(c)))
-                else:
-                    kinds.append("audio")
-                    payloads.append(encode_wav(int(d), int(c)))
+                kinds.append(media_kind(int(d)))
+                encode = encode_bmp if kinds[-1] == "image" else encode_wav
+                payloads.append(encode(int(d), int(c)))
             yield pd.DataFrame(
                 {"media_id": pdf["doc_id"], "kind": kinds, "payload": payloads}
             )
@@ -427,27 +484,20 @@ def media_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["media_decode_stats"] = f"""
-    WITH img AS (
-        SELECT doc_id, n_chars % 16 + 4 AS w, n_chars % 12 + 4 AS h
-        FROM documents WHERE doc_id % 3 = 0
-    ),
+    WITH img AS ({sql_media_docs("image", w="width", h="height")}),
     ir1 AS (SELECT doc_id, w, h, unnest(range(0, h)) AS y FROM img),
     ipx AS (SELECT doc_id, w, h, y, unnest(range(0, w)) AS x FROM ir1),
+    ired AS (SELECT doc_id, w, h, y, x, {sql_media("red")} AS r FROM ipx),
     idoc AS (
         SELECT doc_id, w, h,
-               sum((x*7 + y*13 + doc_id) % 256) * 1.0 / (w * h) AS mean_val,
-               sum((y*w + x) * ((x*7 + y*13 + doc_id) % 256)) AS poswt
-        FROM ipx GROUP BY doc_id, w, h
+               sum(r) * 1.0 / (w * h) AS mean_val,
+               sum((y*w + x) * r) AS poswt
+        FROM ired GROUP BY doc_id, w, h
     ),
-    aud AS (
-        SELECT doc_id, n_chars % 256 + 16 AS n,
-               8000 + (n_chars % 8) * 500 AS sr
-        FROM documents WHERE doc_id % 3 = 1
-    ),
+    aud AS ({sql_media_docs("audio", n="n_samples", sr="sample_rate")}),
     ar1 AS (SELECT doc_id, n, sr, unnest(range(0, n)) AS i FROM aud),
     smp AS (
-        SELECT doc_id, n, sr, i,
-               ((i*37 + doc_id*11) % 65536) - 32768 AS v
+        SELECT doc_id, n, sr, i, {sql_media("sample")} AS v
         FROM ar1
     ),
     adoc AS (
@@ -542,11 +592,7 @@ def image_dhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["image_dhash"] = f"""
-    WITH img AS (
-        SELECT doc_id, CAST(n_chars % 16 + 4 AS INT) AS w,
-               CAST(n_chars % 12 + 4 AS INT) AS h
-        FROM documents WHERE doc_id % 3 = 0
-    ),
+    WITH img AS ({sql_media_docs("image", w="width", h="height")}),
     g1 AS (SELECT doc_id, w, h, unnest(range(0, {_DHASH_ROWS})) AS j FROM img),
     g2 AS (SELECT doc_id, w, h, j, unnest(range(0, {_DHASH_COLS - 1})) AS i
            FROM g1),
@@ -559,12 +605,10 @@ ORACLES["image_dhash"] = f"""
     ),
     graybits AS (
         SELECT doc_id, w, h, j, i,
-               (((xa*7 + y*13 + doc_id) % 256)
-                + ((xa*3 + y*5 + 2*doc_id) % 256)
-                + ((xa*11 + y + 3*doc_id) % 256)) // 3 AS ga,
-               (((xb*7 + y*13 + doc_id) % 256)
-                + ((xb*3 + y*5 + 2*doc_id) % 256)
-                + ((xb*11 + y + 3*doc_id) % 256)) // 3 AS gb
+               ({" + ".join(sql_media(c, x="xa") for c in _CHANNELS)})
+                   // 3 AS ga,
+               ({" + ".join(sql_media(c, x="xb") for c in _CHANNELS)})
+                   // 3 AS gb
         FROM bits
     )
     SELECT doc_id AS media_id, w, h,
@@ -641,21 +685,10 @@ def audio_contour_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["audio_contour"] = f"""
-    WITH aud AS (
-        SELECT doc_id, CAST(n_chars % 256 + 16 AS INT) AS n
-        FROM documents WHERE doc_id % 3 = 1
-    ),
+    WITH aud AS ({sql_media_docs("audio", n="n_samples")}),
     smp1 AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM aud),
     smp AS (
-        SELECT doc_id, n, i,
-               abs(((i*37 + doc_id*11) % 65536) - 32768) AS a,
-               -- window index of sample i: the w with w*n//17 <= i <
-               -- (w+1)*n//17; since bounds are floor(w*n/17), w =
-               -- (i*17 + 16) // n  does NOT hold in general — use
-               -- the direct inverse: w such that i >= w*n//17 is
-               -- w = (17*i + 17 - 1) ... instead compute per (w,i)
-               -- membership below
-               i AS idx
+        SELECT doc_id, n, i, abs({sql_media("sample")}) AS a
         FROM smp1
     ),
     wins AS (SELECT unnest(range(0, {_AHASH_WINDOWS})) AS w),
@@ -667,8 +700,8 @@ ORACLES["audio_contour"] = f"""
     segagg AS (
         SELECT s.doc_id, s.n, ws.w, sum(s.a) AS e, count(*) AS len
         FROM smp s JOIN wins ws
-          ON s.idx >= (ws.w * s.n) // {_AHASH_WINDOWS}
-         AND s.idx < ((ws.w + 1) * s.n) // {_AHASH_WINDOWS}
+          ON s.i >= (ws.w * s.n) // {_AHASH_WINDOWS}
+         AND s.i < ((ws.w + 1) * s.n) // {_AHASH_WINDOWS}
         GROUP BY s.doc_id, s.n, ws.w
     ),
     seg AS (
@@ -685,7 +718,7 @@ ORACLES["audio_contour"] = f"""
         FROM seg a JOIN seg b
           ON a.doc_id = b.doc_id AND b.w = a.w + 1
     )
-    SELECT doc_id AS media_id, CAST(n AS INT) AS n_samples,
+    SELECT doc_id AS media_id, n AS n_samples,
            CAST(sum(bit) AS INT) AS contour_hash
     FROM bits GROUP BY doc_id, n ORDER BY media_id
 """
@@ -753,17 +786,14 @@ def media_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["media_resize"] = f"""
-    WITH img AS (
-        SELECT doc_id, CAST(n_chars % 16 + 4 AS INT) AS w,
-               CAST(n_chars % 12 + 4 AS INT) AS h
-        FROM documents WHERE doc_id % 3 = 0
-    ),
+    WITH img AS ({sql_media_docs("image", w="width", h="height")}),
     g1 AS (SELECT doc_id, w, h, unnest(range(0, {RESIZE_H})) AS j FROM img),
     g2 AS (SELECT doc_id, w, h, j, unnest(range(0, {RESIZE_W})) AS i FROM g1),
     px AS (
         SELECT doc_id,
-               ((i * w) // {RESIZE_W} * 7
-                + (j * h) // {RESIZE_H} * 13 + doc_id) % 256 AS r,
+               {sql_media(
+                   "red", x=f"(i * w) // {RESIZE_W}", y=f"(j * h) // {RESIZE_H}"
+               )} AS r,
                j * {RESIZE_W} + i AS pos
         FROM g2
     )

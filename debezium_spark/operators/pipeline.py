@@ -17,6 +17,7 @@ from debezium_spark.cdc.materialize import latest_state, sql_latest_state
 from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
+from debezium_spark.functions.tokens import sql_word_ngrams
 from debezium_spark.functions.tokens import content_md5, knuth32
 from debezium_spark.functions.tokens import sql_content_md5, sql_knuth32
 from debezium_spark.operators.text import STOPWORDS as _LANG_STOPWORDS
@@ -291,14 +292,9 @@ ORACLES: dict[str, str] = {
         FROM kept GROUP BY source ORDER BY source
     """,
     "decontaminate_ngram_overlap": f"""
-        WITH toks AS (
-            SELECT doc_id, {SQL_WORDS} AS w
-            FROM documents),
-        ngrams AS (
-            SELECT doc_id,
-                   lower(unnest(list_transform(range(1, len(w) - {DECON_N - 2}),
-                       i -> w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]))) AS ngram
-            FROM toks),
+        WITH ngrams AS (
+            SELECT doc_id, lower(gram) AS ngram
+            FROM ({sql_word_ngrams(DECON_N)})),
         eval_ng AS (
             SELECT DISTINCT ngram FROM ngrams WHERE doc_id % {EVAL_MOD} = 0),
         train_ng AS (

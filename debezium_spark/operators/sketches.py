@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from debezium_spark.functions.rounding import round_half_up, sql_round_half_up
-from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams
+from debezium_spark.functions.tokens import h60, sql_h60, word_ngrams
+from debezium_spark.functions.tokens import sql_word_ngrams
 from debezium_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -319,15 +320,8 @@ ORACLES: dict[str, str] = {
     """,
     "bloom_decontaminate": f"""
         WITH grams AS (
-            SELECT doc_id, source,
-                   unnest(list_transform(
-                       range(1, len(w) - {_BLOOM_NGRAM} + 2),
-                       i -> {" || ' ' || ".join(f"w[i+{o}]" for o in range(_BLOOM_NGRAM))}
-                   )) AS gram
-            FROM (SELECT doc_id, source,
-                         {SQL_WORDS} AS w
-                  FROM documents)
-            WHERE len(w) >= {_BLOOM_NGRAM}
+            SELECT doc_id, source, gram
+            FROM ({sql_word_ngrams(_BLOOM_NGRAM, keep="doc_id, source")})
         ),
         bench AS (SELECT DISTINCT * FROM grams WHERE doc_id % {_BENCH_MOD} = 0),
         corpus AS (SELECT DISTINCT * FROM grams WHERE doc_id % {_BENCH_MOD} != 0),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from debezium_spark.functions.rounding import round_half_up, to_units
 from debezium_spark.functions.rounding import sql_round_half_up, sql_to_units
 from debezium_spark.functions.tokens import SQL_WORDS, h60, sql_h60, word_ngrams, words
+from debezium_spark.functions.tokens import sql_word_ngrams
 from debezium_spark.functions.tokens import content_md5, sql_content_md5
 from debezium_spark.sources.tables import load_table
 
@@ -344,10 +345,8 @@ ORACLES: dict[str, str] = {
                   GROUP BY doc_id, term)
             GROUP BY doc_id),
         p AS (
-            SELECT doc_id,
-                   lower(unnest(list_transform(range(1, len(t)),
-                       i -> t[i] || ' ' || t[i + 1]))) AS bigram
-            FROM (SELECT doc_id, {SQL_WORDS} AS t FROM documents)),
+            SELECT doc_id, lower(gram) AS bigram
+            FROM ({sql_word_ngrams(2)})),
         per_bi AS (
             SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
                    count(*) AS n_unique_bigrams
@@ -404,12 +403,8 @@ ORACLES: dict[str, str] = {
         ORDER BY term_freq DESC, term LIMIT {VOCAB_TOP}
     """,
     "bigram_counts": f"""
-        WITH t AS (SELECT doc_id, {SQL_WORDS} AS w
-                   FROM documents),
-        p AS (SELECT doc_id,
-                     lower(unnest(list_transform(range(1, len(w)),
-                         i -> w[i] || ' ' || w[i + 1]))) AS bigram
-              FROM t)
+        WITH p AS (SELECT doc_id, lower(gram) AS bigram
+                   FROM ({sql_word_ngrams(2)}))
         SELECT bigram, count(*) AS pair_freq,
                count(DISTINCT doc_id) AS doc_freq
         FROM p GROUP BY bigram
@@ -977,15 +972,11 @@ def bigram_logprob_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["bigram_logprob"] = f"""
-    WITH t AS (SELECT doc_id, {SQL_WORDS} AS ws
-               FROM documents),
-    words AS (SELECT doc_id, unnest(ws) AS w1 FROM t),
-    pairs AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(ws)),
-                   i -> {{'w1': ws[i], 'w2': ws[i + 1]}})) AS p
-        FROM t WHERE len(ws) >= 2),
-    pr AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2 FROM pairs),
+    WITH words AS (SELECT doc_id, unnest({SQL_WORDS}) AS w1 FROM documents),
+    pr AS (
+        SELECT doc_id, split_part(gram, ' ', 1) AS w1,
+               split_part(gram, ' ', 2) AS w2
+        FROM ({sql_word_ngrams(2)})),
     uni AS (SELECT w1 AS uw, count(*) AS uc FROM words GROUP BY w1),
     tot AS (SELECT CAST(sum(uc) AS BIGINT) AS total FROM uni),
     bi AS (SELECT w1 AS bw1, w2 AS bw2, count(*) AS bc

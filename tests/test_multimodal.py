@@ -191,3 +191,50 @@ def test_resize_reencode_roundtrip():
     for j in range(th):
         for i in range(tw):
             assert trows[j][i] == rows[j * h // th][i * w // tw]
+
+
+@pytest.mark.parametrize("n_chars", [0, 11, 12, 15, 255, 256])
+def test_media_law_sql_twins_match_encoders(n_chars):
+    """The DuckDB twins of the media law, run through DuckDB, give the
+    geometry, pixels, clip, samples and kind the encoders write."""
+    import duckdb
+
+    from debezium_spark.operators.multimodal import (
+        _wav_samples,
+        decode_bmp_pixels,
+        encode_bmp,
+        encode_wav,
+        media_kind,
+        sql_media,
+        sql_media_kind,
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, n_chars BIGINT)")
+    for doc_id in (0, 1, 2, 7, 2**31 + 5):
+        con.execute("DELETE FROM documents")
+        con.execute("INSERT INTO documents VALUES (?, ?)", [doc_id, n_chars])
+        w, h, rows = decode_bmp_pixels(encode_bmp(doc_id, n_chars))
+        sr, samples = _wav_samples(encode_wav(doc_id, n_chars))
+        points = [(x, y) for x in (0, w // 2, w - 1) for y in (0, h // 2, h - 1)]
+        pixels = ", ".join(
+            "[" + ", ".join(
+                sql_media(c, x=str(x), y=str(y)) for c in ("red", "green", "blue")
+            ) + "]"
+            for x, y in points
+        )
+        got = con.execute(f"""
+            SELECT {sql_media("width")}, {sql_media("height")}, [{pixels}],
+                   {sql_media("sample_rate")}, {sql_media_kind()}
+            FROM documents
+        """).fetchone()
+        assert got == (
+            w, h, [list(rows[y][x]) for x, y in points], sr, media_kind(doc_id)
+        ), doc_id
+        got_samples = con.execute(f"""
+            SELECT {sql_media("sample")} FROM (
+                SELECT doc_id, unnest(range(0, {sql_media("n_samples")})) AS i
+                FROM documents)
+            ORDER BY i
+        """).fetchall()
+        assert [v for (v,) in got_samples] == list(samples), doc_id

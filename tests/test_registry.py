@@ -36,14 +36,16 @@ def _sites(needle: str | float) -> list[str]:
 
 def _lines_of(owner: str) -> set[str]:
     """`path:line` of every line of `owner`, a module path or a
-    `path::function` of that module."""
-    path, _, fn = owner.partition("::")
+    `path::name` of a function or a module-level assignment in it."""
+    path, _, name = owner.partition("::")
     text = (PKG / path).read_text()
     span = range(1, text.count("\n") + 2)
-    if fn:
+    if name:
         node = next(
             n for n in ast.parse(text).body
-            if isinstance(n, ast.FunctionDef) and n.name == fn
+            if getattr(n, "name", None) == name
+            or any(getattr(t, "id", None) == name
+                   for t in getattr(n, "targets", ()))
         )
         span = range(node.lineno, node.end_lineno + 1)
     return {f"{path}:{n}" for n in span}
@@ -109,6 +111,22 @@ RULES = {
         (r"//\s*(1000\b|\{CHUNK_SIZE\})", r'key"?\)?\s*/\s*(1000|CHUNK_SIZE)\b',
          r"\b5000\b"),
         "cdc/materialize.py",
+    ),
+    "word-ngrams": (
+        (r"\|\|\s*' '\s*\|\||array_to_string\(\w+\[",),
+        "functions/tokens.py::sql_word_ngrams",
+    ),
+    "media-law": (
+        (
+            r"doc_id\W*%\s*3\b",  # kind
+            r"%\s*100\s*\+\s*1\b",  # frame count
+            r"%\s*1[26]\s*\+\s*4\b",  # image size
+            r"\*\s*13\s*\+", r"\*\s*5\s*\+", r"\*\s*11\s*\+",  # pixels
+            r"%\s*256\s*\+\s*16\b",  # clip length
+            r"8000\s*\+",  # sample rate
+            r"\*\s*37\s*\+",  # samples
+        ),
+        "operators/multimodal.py::MEDIA_LAW",
     ),
 }
 
